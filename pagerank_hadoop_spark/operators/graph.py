@@ -21,7 +21,11 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, functions as F
 
 from pagerank_hadoop_spark import runtime_counters
-from pagerank_hadoop_spark.operators.pagerank import pagerank_with_n
+from pagerank_hadoop_spark.operators.pagerank import (
+    loop_partitions,
+    pagerank_with_n,
+    shuffle_partitions,
+)
 
 
 class PregelNotConverged(RuntimeError):
@@ -51,13 +55,7 @@ def _edge_partitions(edges: DataFrame, doubled: bool = True) -> int:
     size estimates run low, so the divisor is deliberately tight);
     the estimate only needs the right order of magnitude (small
     graph → few tasks, big graph → all)."""
-    spark = edges.sparkSession
-    try:
-        shuffle_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    except (ValueError, TypeError):  # e.g. "auto" on auto-tuning platforms
-        shuffle_parts = 32
+    shuffle_parts = shuffle_partitions(edges.sparkSession)
     try:
         size = int(
             edges._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -66,8 +64,7 @@ def _edge_partitions(edges: DataFrame, doubled: bool = True) -> int:
         return shuffle_parts
     if doubled:
         size *= 2  # symmetrized edge list
-    need = max(1, size // (1 << 20))
-    return max(1, min(shuffle_parts, need)) if need < shuffle_parts else shuffle_parts
+    return loop_partitions(size // (1 << 20), shuffle_parts)
 
 
 @contextmanager
@@ -119,30 +116,20 @@ def _loop_shuffle_scope(spark, parts: int | None):
     # stats-derived condition that says "this graph is small" says
     # "these rules cannot pay here". At production scale parts >=
     # current, the scope is a no-op, and AQE skew-splitting + runtime
-    # filters stay on. Both knobs are physical-only; the loops
-    # admitted to this scope aggregate order-insensitively (min /
-    # count / mode / bool-or), so results cannot move.
+    # filters stay on.
     # (A/B evidence, interleaved same-box 2x2 at sf0.1: scc 7.7/8.4 s
     # lean vs 13.0/10.4 s session-AQE, sssp 7.8/8.4 vs 12.5/8.6,
-    # k_truss_precore 3.8/4.4 vs 7.1/4.5; mis/lpa neutral.
-    # SPARK_GRAFT_LOOP_LEAN=0 restores session AQE/bloom inside the
-    # narrowed scope — the measurement toggle behind those numbers.)
-    import os as _os
-
-    lean = _os.environ.get("SPARK_GRAFT_LOOP_LEAN", "1") != "0"
-    # r16: in the SAME narrowed regime, also stop PLANNING broadcast
-    # joins. A lazy localCheckpoint's toRdd blocks on every
-    # BroadcastExchange build in the round's plan (driver collect +
-    # rebroadcast, ~2 driver round trips per join per round — the
-    # measured per-round floor of the r15 dissection), while a
-    # shuffle join over 1-3-partition loop state is a tiny exchange
-    # that executes lazily inside the round's one counting job. Join
-    # STRATEGY cannot move results (same rows either way; these loops
-    # aggregate order-insensitively — min/count/mode/bool-or — which
-    # is the same condition that admits them to this scope). At
-    # production width the scope is a no-op and broadcast planning
-    # stays on. SPARK_GRAFT_LOOP_NOBCAST=0 is the A/B toggle.
-    nobcast = lean and _os.environ.get("SPARK_GRAFT_LOOP_NOBCAST", "1") != "0"
+    # k_truss_precore 3.8/4.4 vs 7.1/4.5; mis/lpa neutral.)
+    # The same regime also stops PLANNING broadcast joins. A lazy
+    # localCheckpoint's toRdd blocks on every BroadcastExchange build
+    # in the round's plan (driver collect + rebroadcast, ~2 driver
+    # round trips per join per round), while a shuffle join over
+    # 1-3-partition loop state is a tiny exchange that executes
+    # lazily inside the round's one counting job.
+    # All three knobs are physical-only: join strategy and AQE cannot
+    # change which rows meet, and the loops admitted to this scope
+    # aggregate order-insensitively (min / count / mode / bool-or),
+    # so results cannot move.
     aqe_key = "spark.sql.adaptive.enabled"
     bloom_key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
     bcast_key = "spark.sql.autoBroadcastJoinThreshold"
@@ -154,11 +141,9 @@ def _loop_shuffle_scope(spark, parts: int | None):
     # above) instead of leaving the session narrowed for its lifetime
     try:
         spark.conf.set(key, str(parts))
-        if lean:
-            spark.conf.set(aqe_key, "false")
-            spark.conf.set(bloom_key, "false")
-        if nobcast:
-            spark.conf.set(bcast_key, "-1")
+        spark.conf.set(aqe_key, "false")
+        spark.conf.set(bloom_key, "false")
+        spark.conf.set(bcast_key, "-1")
         yield
     finally:
         spark.conf.set(key, str(current))
@@ -355,11 +340,9 @@ def connected_components(
     # which the per-vertex min() absorbs — a distinct here would cost
     # a full shuffle of the doubled edge list every bit as large as
     # one propagation round.
-    shuffle_parts = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    shuffle_parts = shuffle_partitions(edges.sparkSession)
     # Right-size the per-round task count to the edge count (see
-    # pagerank._iter_partitions): a small graph over 32 partitions
+    # pagerank.loop_partitions): a small graph over 32 partitions
     # makes every round 32 near-empty tasks. The count is a
     # column-pruned scan of the (not yet doubled) edge frame.
     parts = _edge_partitions(edges)
@@ -1002,11 +985,12 @@ def bipartite_project(
             .where(F.col("__deg") <= max_degree)
             .select("dst")
         )
-        # no second _wide: a semi-join preserves its probe side's
-        # partitioning, and e is already spread — the repartition here
-        # was a pure extra exchange paid inside the checkpoint
+        # no second _wide: when ``ok`` broadcasts, the semi-join keeps
+        # e's (already spread) layout, and the repartition here was a
+        # pure extra exchange paid inside the checkpoint
         # materialization (measured: 5.6 → 2.7-3.2 s on the sf0.1
-        # projection, identical output hash)
+        # projection, identical output hash). If ``ok`` is too big to
+        # broadcast, the shuffled semi-join re-lays e by dst anyway.
         e = e.join(ok, "dst", "left_semi").localCheckpoint(eager=True)
     a = e.select(F.col("src").alias("src_a"), "dst")
     b = e.select(F.col("src").alias("src_b"), "dst")

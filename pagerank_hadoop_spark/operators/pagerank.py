@@ -1,11 +1,11 @@
-"""Iterative PageRank as a DataFrame fixed-point loop.
+"""Iterative PageRank as one DataFrame fixed-point loop.
 
-Reference semantics (``/root/reference/src/PageRank/PageRank.java``):
+Reference semantics (the reference's ``PageRank.java``):
 
 * 8 fixed iterations driven from ``main`` (``PageRank.java:473-488``);
   each Hadoop iteration re-reads and rewrites the full graph+rank state
   from/to HDFS. Here the loop body is a lazy
-  ``join → explode → groupBy.agg`` plan over cached DataFrames — state
+  ``join → explode → groupBy.agg`` plan over a cached adjacency — state
   never leaves memory; ``localCheckpoint`` every few iterations bounds
   lineage/plan growth (the Spark-idiomatic replacement for the
   reference's per-iteration disk materialization).
@@ -20,6 +20,25 @@ Reference semantics (``/root/reference/src/PageRank/PageRank.java``):
   outlinks is LOST (never redistributed), so ranks do not sum to 1.
   ``parity=False`` redistributes dangling mass uniformly (textbook
   PageRank; ranks sum to 1).
+
+One loop, four variants (the shape of GraphX's single
+``runWithOptions``): :func:`_laid_out` lays the static adjacency out
+once and :func:`_rank_loop` runs the rounds — seeding, the
+rank ⋈ adjacency join, round counting and the checkpoint cadence. Each
+variant supplies only its ``step``, which keeps its exact float
+expression:
+
+* uniform (parity): ``rank/outdeg``; the state holds only message
+  receivers, every other vertex reads as the teleport baseline;
+* corrected: ``rank/outdeg`` plus the dangling-mass crossJoin, dense
+  state checkpointed every round;
+* personalized: the ``(1-d)`` seed row unioned with
+  ``rank/outdeg*d``, then summed; the state holds only reached
+  vertices;
+* weighted: ``rank*wfrac`` over pre-normalized ``(dst, wfrac)`` arrays.
+
+The expressions are not merged: ``rank/outdeg`` and ``rank*wfrac``
+differ in the last ulp, and 9-dp oracle rounding can flip on that.
 
 Scale notes (100 TB posture):
 
@@ -44,7 +63,6 @@ from pyspark.sql import DataFrame, functions as F
 from pagerank_hadoop_spark import runtime_counters
 
 DAMPING = 0.85
-TELEPORT = 0.15
 
 # target vertices per task in iterative loops: small graphs collapse to
 # a handful of partitions (32 near-empty tasks per iteration is pure
@@ -53,13 +71,27 @@ TELEPORT = 0.15
 # default, and AQE coalesces from there
 ROWS_PER_ITER_TASK = 100_000
 
+_NO_RANKS = "id string, rank double"
+
+
+def shuffle_partitions(spark) -> int:
+    """The session's ``spark.sql.shuffle.partitions``; 32 when it is
+    not an integer (e.g. ``auto`` on auto-tuning platforms)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    except (ValueError, TypeError):
+        return 32
+
+
+def loop_partitions(need: int, shuffle_parts: int) -> int:
+    """Task count for an iterative loop's state: the data's ``need``,
+    at least 1 and at most the session's shuffle partitions."""
+    return max(1, min(shuffle_parts, need))
+
 
 def _iter_partitions(n: int, shuffle_parts: int) -> int:
-    """Partition count for iterative state: ~ROWS_PER_ITER_TASK rows
-    per task, never more than the session's shuffle partitions for
-    small graphs, never fewer than shuffle partitions for big ones."""
-    need = -(-n // ROWS_PER_ITER_TASK)
-    return max(1, min(shuffle_parts, need)) if need < shuffle_parts else shuffle_parts
+    """PageRank's state width: ~ROWS_PER_ITER_TASK vertices per task."""
+    return loop_partitions(-(-n // ROWS_PER_ITER_TASK), shuffle_parts)
 
 
 def adjacency_from_edges(edges: DataFrame, dedup: bool = True) -> DataFrame:
@@ -80,15 +112,22 @@ def adjacency_from_edges(edges: DataFrame, dedup: bool = True) -> DataFrame:
     return e.groupBy(F.col("src").alias("id")).agg(agg.alias("outlinks"))
 
 
-def _with_dangling(adjacency: DataFrame, vertices: DataFrame | None) -> DataFrame:
+def _vertices(edges: DataFrame) -> DataFrame:
+    """Every id that appears as a ``src`` or a ``dst``."""
+    return (
+        edges.select(F.col("src").alias("id"))
+        .unionByName(edges.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+
+
+def _with_dangling(adjacency: DataFrame, vertices: DataFrame) -> DataFrame:
     """Ensure every vertex has an adjacency row (possibly empty array).
 
     The reference guarantees this structurally: every page emits a
     ``(title,"!")`` marker (``PageRank.java:80``) so dangling pages
     still appear with an empty outlink list (``PageRank.java:196-197``).
     """
-    if vertices is None:
-        return adjacency
     v = vertices.select(F.col(vertices.columns[0]).alias("id")).distinct()
     return (
         v.join(adjacency, "id", "left")
@@ -150,6 +189,123 @@ def _chunked_adjacency(
 def _with_salt_replicas(ranks: DataFrame) -> DataFrame:
     return ranks.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(_FANOUT_SALTS - 1)))
+    )
+
+
+def _laid_out(
+    adjacency: DataFrame, max_fanout: int | None = None
+) -> tuple[DataFrame, int]:
+    """Lay the static side of every round's join out once: partition
+    on id, cache, count N (the driver-side scalar of
+    ``PageRank.java:470-471``), then right-size. Now that N is known,
+    a graph far smaller than shuffle_parts x ROWS_PER_ITER_TASK is
+    re-laid (tiny, already materialized) onto fewer partitions, so the
+    loop isn't dominated by empty-task scheduling. (The rank-side
+    shuffles stay at shuffle_parts and AQE coalesces them at runtime;
+    what AQE can NOT fix is the partition count of the cached static
+    side, which sets the task count of every round's join.)
+    ``max_fanout`` splits hot rows at layout time instead
+    (:func:`_chunked_adjacency`). Returns ``(adjacency, N)``."""
+    shuffle_parts = shuffle_partitions(adjacency.sparkSession)
+    cached = adjacency.repartition(shuffle_parts, "id").cache()
+    n = cached.count()
+    parts = _iter_partitions(n, shuffle_parts)
+    if n and max_fanout:
+        laid = _chunked_adjacency(cached, max_fanout, parts)
+    elif n and parts < shuffle_parts:
+        laid = cached.repartition(parts, "id").localCheckpoint(eager=True)
+    else:
+        return cached, n
+    cached.unpersist()
+    return laid, n
+
+
+def _ids(adjacency: DataFrame) -> DataFrame:
+    """One row per vertex. A chunked adjacency repeats hot ids, so its
+    chunk 0 is the unique-vertex marker (no distinct — a
+    co-partitioned filter, not a shuffle)."""
+    if "__chunk" in adjacency.columns:
+        adjacency = adjacency.where(F.col("__chunk") == 0)
+    return adjacency.select("id")
+
+
+def _rank_loop(
+    adjacency: DataFrame,
+    step,
+    seed: DataFrame | float,
+    n_iter: int,
+    checkpoint_interval: int,
+    absent: float | None,
+) -> DataFrame:
+    """Run ``n_iter`` rounds of ``ranks = step(rows, ranks)`` over a
+    :func:`_laid_out` adjacency; returns ``(id, rank)``.
+
+    ``seed`` is the round-0 state: an ``(id, rank)`` frame (a saved
+    state when resuming), or a rank every vertex starts at — then
+    round 0 reads the adjacency itself, with no join. ``rows`` is the
+    state joined onto the adjacency. With ``absent`` a vertex missing
+    from the state holds that rank (left join + coalesce), so the
+    state need carry only message receivers — one join per round, no
+    dense left-join-back — and the result is densified the same way.
+    With ``absent`` None the join is inner (a vertex outside the state
+    sends nothing) and the state is returned as it is. A chunked
+    adjacency keys the join on (id, salt) against salt-replicated rank
+    frames, so its persistent layout is the join layout and hub chunks
+    never re-co-locate.
+
+    Every ``checkpoint_interval`` rounds but the last, the state is
+    truncated with a LAZY ``localCheckpoint`` so the plan doesn't grow
+    unboundedly: the final action materializes the chain in order
+    anyway, and an eager barrier would cost one extra synchronous job
+    round-trip per interval."""
+    salted = "__salt" in adjacency.columns
+    ranks = seed
+    for i in range(n_iter):
+        if isinstance(ranks, float):
+            rows = adjacency.withColumn("rank", F.lit(ranks))
+        else:
+            rows = adjacency.join(
+                _with_salt_replicas(ranks) if salted else ranks,
+                ["id", "__salt"] if salted else "id",
+                "inner" if absent is None else "left",
+            )
+            if absent is not None:
+                rows = rows.withColumn("rank", F.coalesce("rank", F.lit(absent)))
+        ranks = step(rows, ranks)
+        runtime_counters.note_round(ranks)
+        if (i + 1) % checkpoint_interval == 0 and i + 1 < n_iter:
+            ranks = ranks.localCheckpoint(eager=False)
+    if isinstance(ranks, float):
+        return _ids(adjacency).select("id", F.lit(ranks).alias("rank"))
+    if absent is None:
+        return ranks
+    return _ids(adjacency).join(ranks, "id", "left").select(
+        "id", F.coalesce("rank", F.lit(absent)).alias("rank")
+    )
+
+
+def _teleport_step(contribs, teleport: float, damping: float):
+    """The uniform/weighted round: each message receiver gets
+    ``teleport + d·Σ contrib`` over ``contribs(rows)`` = ``(id, contrib)``."""
+
+    def step(rows: DataFrame, _ranks) -> DataFrame:
+        return (
+            contribs(rows)
+            .groupBy("id")
+            .agg(F.sum("contrib").alias("insum"))
+            .select(
+                "id",
+                (F.lit(teleport) + F.lit(damping) * F.col("insum")).alias("rank"),
+            )
+        )
+
+    return step
+
+
+def _uniform_contribs(rows: DataFrame) -> DataFrame:
+    return rows.select(
+        F.explode("outlinks").alias("id"),
+        (F.col("rank") / F.col("outdeg")).alias("contrib"),
     )
 
 
@@ -218,140 +374,22 @@ def pagerank_with_n(
     frames, so results can differ from the unsalted run in the last
     ulp (partial sums regroup); the registry entries run unchunked.
     """
-    spark = edges.sparkSession
     if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("id"))
-            .unionByName(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-    adjacency = _with_dangling(adjacency_from_edges(edges), vertices)
-
-    # Static side of every iteration's join: partition once on id, keep hot.
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    adjacency = adjacency.repartition(shuffle_parts, "id").cache()
-    n = adjacency.count()  # driver-side scalar, as PageRank.java:470-471
-    if n == 0:
-        return spark.createDataFrame([], "id string, rank double"), 0
-    # Now that N is known, right-size the iteration partitioning: for a
-    # graph far smaller than shuffle_parts x ROWS_PER_ITER_TASK, re-lay
-    # the (tiny, already-materialized) adjacency onto fewer partitions
-    # so the 8-iteration loop isn't dominated by empty-task scheduling.
-    # (The rank-side shuffles stay at shuffle_parts and AQE coalesces
-    # them at runtime; what AQE can NOT fix is the partition count of
-    # the cached static side, which sets the task count of every
-    # iteration's join.)
-    parts = _iter_partitions(n, shuffle_parts)
-    if max_fanout:
-        # hub fan-out skew: split hot adjacency rows at layout time
-        # (see _chunked_adjacency) — the default path is untouched
-        old = adjacency
-        adjacency = _chunked_adjacency(old, max_fanout, parts)
-        old.unpersist()
-    elif parts < shuffle_parts:
-        old = adjacency
-        adjacency = (
-            old.withColumn("outdeg", F.size("outlinks"))
-            .repartition(parts, "id")
-            .localCheckpoint(eager=True)
-        )
-        old.unpersist()
-    else:
-        adjacency = adjacency.withColumn("outdeg", F.size("outlinks"))
-    return _pagerank_loop(
-        adjacency,
-        n,
-        n_iter,
-        damping,
-        parity,
-        checkpoint_interval,
-        init_ranks,
-        salted=bool(max_fanout),
-    ), n
-
-
-def _pagerank_loop(
-    adjacency: DataFrame,
-    n: int,
-    n_iter: int,
-    damping: float,
-    parity: bool,
-    checkpoint_interval: int,
-    init_ranks: DataFrame | None = None,
-    salted: bool = False,
-) -> DataFrame:
-
-    teleport = (1.0 - damping) / n
-    outdeg = F.col("outdeg")
-    # unique-vertex frame for seeding and final joins: chunked
-    # adjacencies repeat hot ids, so chunk 0 is the one-row-per-vertex
-    # marker (no distinct — co-partitioned filter, not a shuffle)
-    ids = (
-        adjacency.where(F.col("__chunk") == 0).select("id")
-        if salted
-        else adjacency.select("id")
+        vertices = _vertices(edges)
+    adjacency, n = _laid_out(
+        _with_dangling(adjacency_from_edges(edges), vertices), max_fanout
     )
-
-    def _rank_join(ranks: DataFrame, how: str) -> DataFrame:
-        """adjacency ⋈ ranks on id — with the salt in the key when
-        chunked, so the persistent (id, __salt) layout is the join
-        layout and hub chunks never re-co-locate."""
-        if salted:
-            return adjacency.join(
-                _with_salt_replicas(ranks), ["id", "__salt"], how
-            )
-        return adjacency.join(ranks, "id", how)
-
+    if n == 0:
+        return edges.sparkSession.createDataFrame([], _NO_RANKS), 0
+    if not max_fanout:  # a chunked adjacency carries the true outdeg
+        adjacency = adjacency.withColumn("outdeg", F.size("outlinks"))
+    teleport = (1.0 - damping) / n
+    seed = 1.0 / n if init_ranks is None else init_ranks.select("id", "rank")
     if parity:
-        # Sparse-rank loop: `ranks_sparse` holds only vertices that
-        # received messages; every other vertex's rank is exactly the
-        # teleport baseline (0.15/N — the self-shipped structure row of
-        # PageRank.java:281,305), restored by coalesce at the next
-        # join. One join per iteration instead of two (no dense
-        # left-join-back), and the shuffle carries only message
-        # receivers.
-        # iteration-0: uniform 1/N, or a saved state when resuming (a
-        # dense restart frame rides the same left-join/coalesce path a
-        # sparse message frame does — absent ids read as teleport)
-        ranks_sparse: DataFrame | None = (
-            init_ranks.select("id", "rank") if init_ranks is not None else None
-        )
-        for i in range(n_iter):
-            if ranks_sparse is None:
-                src_ranks = adjacency.select(
-                    "id", "outlinks", "outdeg", F.lit(1.0 / n).alias("rank")
-                )
-            else:
-                src_ranks = _rank_join(ranks_sparse, "left").select(
-                    "id",
-                    "outlinks",
-                    "outdeg",
-                    F.coalesce("rank", F.lit(teleport)).alias("rank"),
-                )
-            contribs = src_ranks.select(
-                F.explode("outlinks").alias("id"),
-                (F.col("rank") / outdeg).alias("contrib"),
-            )
-            ranks_sparse = (
-                contribs.groupBy("id")
-                .agg(F.sum("contrib").alias("insum"))
-                .select(
-                    "id",
-                    (F.lit(teleport) + F.lit(damping) * F.col("insum")).alias("rank"),
-                )
-            )
-            runtime_counters.note_round()
-            if (i + 1) % checkpoint_interval == 0 and i + 1 < n_iter:
-                # truncate lineage so the plan doesn't grow unboundedly;
-                # LAZY: the final action materializes the chain in order
-                # anyway, and an eager barrier here costs one extra
-                # synchronous job round-trip per interval
-                ranks_sparse = ranks_sparse.localCheckpoint(eager=False)
-        if ranks_sparse is None:
-            return ids.select("id", F.lit(1.0 / n).alias("rank"))
-        return ids.join(ranks_sparse, "id", "left").select(
-            "id", F.coalesce("rank", F.lit(teleport)).alias("rank")
-        )
+        step = _teleport_step(_uniform_contribs, teleport, damping)
+        return _rank_loop(
+            adjacency, step, seed, n_iter, checkpoint_interval, teleport
+        ), n
 
     # Corrected mode: dangling mass is redistributed uniformly each
     # iteration. The mass is a 1-row aggregate broadcast back via
@@ -367,24 +405,17 @@ def _pagerank_loop(
     # order, which is exactly the per-iteration work anyway.
     # The dangling-vertex set is a static property of the adjacency —
     # compute the id list once, not from the per-iteration join.
-    dangling = adjacency.where(outdeg == 0).select("id")
-    if init_ranks is not None:
-        ranks = init_ranks.select("id", "rank")
-    else:
-        ranks = ids.select("id", F.lit(1.0 / n).alias("rank"))
-    for i in range(n_iter):
-        contribs = _rank_join(ranks, "inner").select(
-            F.explode("outlinks").alias("id"),
-            (F.col("rank") / outdeg).alias("contrib"),
-        )
-        extra_df = ranks.join(dangling, "id", "left_semi").agg(
+    ids = _ids(adjacency)
+    dangling = adjacency.where(F.col("outdeg") == 0).select("id")
+
+    def corrected(rows: DataFrame, ranks: DataFrame) -> DataFrame:
+        extra = ranks.join(dangling, "id", "left_semi").agg(
             (F.lit(damping) * F.coalesce(F.sum("rank"), F.lit(0.0)) / n).alias("extra")
         )
-        summed = contribs.groupBy("id").agg(F.sum("contrib").alias("insum"))
-        ranks = (
-            ids
-            .join(summed, "id", "left")
-            .crossJoin(F.broadcast(extra_df))
+        summed = _uniform_contribs(rows).groupBy("id").agg(F.sum("contrib").alias("insum"))
+        return (
+            ids.join(summed, "id", "left")
+            .crossJoin(F.broadcast(extra))
             .select(
                 "id",
                 (
@@ -394,11 +425,10 @@ def _pagerank_loop(
                 ).alias("rank"),
             )
         )
-        runtime_counters.note_round(ranks)
-        if i + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
 
-    return ranks
+    if isinstance(seed, float):
+        seed = ids.select("id", F.lit(seed).alias("rank"))
+    return _rank_loop(adjacency, corrected, seed, n_iter, 1, None), n
 
 
 def top_ranks(
@@ -448,46 +478,29 @@ def personalized_pagerank(
     cannot do this; its baseline is nonzero everywhere).
     """
     spark = edges.sparkSession
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
+    adjacency, n = _laid_out(
+        _with_dangling(adjacency_from_edges(edges), _vertices(edges))
     )
-    adjacency = _with_dangling(adjacency_from_edges(edges), vertices)
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    adjacency = adjacency.repartition(shuffle_parts, "id").cache()
-    n = adjacency.count()
     if n == 0:
-        return spark.createDataFrame([], "id string, rank double")
-    parts = _iter_partitions(n, shuffle_parts)
-    if parts < shuffle_parts:
-        old = adjacency
-        adjacency = old.repartition(parts, "id").localCheckpoint(eager=True)
-        old.unpersist()
-
-    outdeg = F.size("outlinks")
+        return spark.createDataFrame([], _NO_RANKS)
     seed = spark.createDataFrame([(source,)], "id string")
-    ranks = seed.select("id", F.lit(1.0).alias("rank"))
     base = seed.select("id", F.lit(1.0 - damping).alias("rank"))
-    for i in range(n_iter):
-        contribs = (
-            adjacency.join(ranks, "id")
-            .select(
-                F.explode("outlinks").alias("id"),
-                (F.col("rank") / outdeg * damping).alias("rank"),
-            )
-        )
+
+    def step(rows: DataFrame, _ranks) -> DataFrame:
         # teleport lands only on the source; propagated mass unions in
         # and the per-vertex sum collapses both — still sparse
-        ranks = (
+        contribs = rows.select(
+            F.explode("outlinks").alias("id"),
+            (F.col("rank") / F.size("outlinks") * damping).alias("rank"),
+        )
+        return (
             base.unionByName(contribs)
             .groupBy("id")
             .agg(F.sum("rank").alias("rank"))
         )
-        runtime_counters.note_round()
-        if (i + 1) % checkpoint_interval == 0 and i + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+
+    ranks = seed.select("id", F.lit(1.0).alias("rank"))
+    return _rank_loop(adjacency, step, ranks, n_iter, checkpoint_interval, None)
 
 
 def weighted_pagerank(
@@ -504,19 +517,18 @@ def weighted_pagerank(
     corpus scale: link multiplicity, click counts, co-occurrence
     frequencies.
 
-    Same scale posture as the uniform loop: the weighted adjacency
+    Same loop as the uniform parity mode: the weighted adjacency
     (id → array<struct<dst, wfrac>>) is built once with weights
     pre-normalized (the per-iteration join never re-aggregates W(u)),
-    partitioned on id, and cached; dangling mass is lost
-    (parity-mode semantics)."""
-    spark = edges.sparkSession
+    laid out by :func:`_laid_out`; the state is sparse and dangling
+    mass is lost (parity-mode semantics)."""
     w_edges = edges.groupBy("src", "dst").agg(
         F.sum("weight").alias("w")
     )
     # aliased self-derived join: tot shares w_edges' lineage, so bare
     # column refs to `w` would resolve ambiguously
     tot = w_edges.groupBy("src").agg(F.sum("w").alias("W"))
-    adjacency = (
+    outs = (
         w_edges.alias("we")
         .join(tot.alias("tt"), F.col("we.src") == F.col("tt.src"))
         .select(
@@ -529,64 +541,22 @@ def weighted_pagerank(
         .groupBy("id")
         .agg(F.sort_array(F.collect_list("out")).alias("outs"))
     )
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
+    adjacency, n = _laid_out(
+        _vertices(edges).join(outs, "id", "left").select(
+            "id", F.coalesce("outs", F.array()).alias("outs")
+        )
     )
-    adjacency = vertices.join(adjacency, "id", "left").select(
-        "id", F.coalesce("outs", F.array()).alias("outs")
-    )
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    adjacency = adjacency.repartition(shuffle_parts, "id").cache()
-    n = adjacency.count()
     if n == 0:
-        return spark.createDataFrame([], "id string, rank double")
-    parts = _iter_partitions(n, shuffle_parts)
-    if parts < shuffle_parts:
-        old = adjacency
-        adjacency = old.repartition(parts, "id").localCheckpoint(eager=True)
-        old.unpersist()
-
-    # Sparse-rank loop, as the parity-mode uniform loop: a vertex with
-    # no incoming weighted mass holds exactly the teleport baseline,
-    # so `ranks_sparse` carries only message receivers and each
-    # iteration is ONE join (state onto adjacency) instead of a join
-    # plus a dense left-join-back. Identical values (oracle-pinned).
+        return edges.sparkSession.createDataFrame([], _NO_RANKS)
     teleport = (1.0 - damping) / n
-    ranks_sparse: DataFrame | None = None
-    for i in range(n_iter):
-        if ranks_sparse is None:
-            src_ranks = adjacency.select(
-                "id", "outs", F.lit(1.0 / n).alias("rank")
-            )
-        else:
-            src_ranks = adjacency.join(ranks_sparse, "id", "left").select(
-                "id",
-                "outs",
-                F.coalesce("rank", F.lit(teleport)).alias("rank"),
-            )
-        contribs = src_ranks.select(
-            F.explode("outs").alias("o"), "rank"
-        ).select(
+
+    def contribs(rows: DataFrame) -> DataFrame:
+        return rows.select(F.explode("outs").alias("o"), "rank").select(
             F.col("o.dst").alias("id"),
             (F.col("rank") * F.col("o.wfrac")).alias("contrib"),
         )
-        ranks_sparse = (
-            contribs.groupBy("id")
-            .agg(F.sum("contrib").alias("insum"))
-            .select(
-                "id",
-                (F.lit(teleport) + F.lit(damping) * F.col("insum")).alias(
-                    "rank"
-                ),
-            )
-        )
-        runtime_counters.note_round()
-        if (i + 1) % checkpoint_interval == 0 and i + 1 < n_iter:
-            ranks_sparse = ranks_sparse.localCheckpoint(eager=False)
-    if ranks_sparse is None:
-        return adjacency.select("id", F.lit(1.0 / n).alias("rank"))
-    return adjacency.select("id").join(ranks_sparse, "id", "left").select(
-        "id", F.coalesce("rank", F.lit(teleport)).alias("rank")
+
+    step = _teleport_step(contribs, teleport, damping)
+    return _rank_loop(
+        adjacency, step, 1.0 / n, n_iter, checkpoint_interval, teleport
     )

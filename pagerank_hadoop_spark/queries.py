@@ -3184,61 +3184,6 @@ def q_stream_ttl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name).orderBy("user_id", "event_id", "ts_ms")
 
 
-def _register_tws_query() -> None:
-    """Conditionally register the transformWithStateInPandas gate.
-
-    The Spark-4 arbitrary-state API needs the ``protobuf`` package at
-    runtime (pyspark's Python↔JVM state protocol); this container
-    ships without it, so the query self-registers only where the
-    dependency exists — the operator itself is build-complete
-    (streaming/stateful.py::running_user_stats_stream) and its
-    applyInPandasWithState sibling carries the custom-state gate
-    meanwhile."""
-    from pagerank_hadoop_spark.streaming.stateful import _has_protobuf
-
-    if not _has_protobuf():
-        return
-
-    @register(
-        "stream_tws_user_stats",
-        """
-        SELECT user_id, COUNT(*) AS n_events,
-               MAX(value) AS max_value
-        FROM events GROUP BY user_id
-        """,
-    )
-    def q_stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """E6: transformWithStateInPandas running per-user (count, max)
-        drained with availableNow; both aggregates are order-insensitive
-        so the drained final state equals the batch GROUP BY."""
-        from pagerank_hadoop_spark.streaming.stateful import (
-            running_user_stats_stream,
-        )
-        from pagerank_hadoop_spark.streaming.windows import run_to_memory
-
-        stream = _stream_events(spark, sf_dir)
-        _STREAM_SEQ["n"] += 1
-        name = f"stream_tws_{_STREAM_SEQ['n']}"
-        with _stream_parts(spark, sf_dir):
-            run_to_memory(
-                running_user_stats_stream(stream), name, output_mode="update"
-            )
-        # update-mode sink: keep the LAST emitted row per user (the
-        # final running value)
-        from pyspark.sql.window import Window as _W
-
-        w = _W.partitionBy("user_id").orderBy(F.desc("n_events"))
-        return (
-            spark.table(name)
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .select("user_id", "n_events", "max_value")
-        )
-
-
-_register_tws_query()
-
-
 @register(
     "connected_components",
     """

@@ -15,21 +15,11 @@ the scale-correct one for 100 TB streams:
 
 from __future__ import annotations
 
-import importlib.util
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-def _has_protobuf() -> bool:
-    """find_spec raises (not returns None) when the parent ``google``
-    namespace package is absent entirely."""
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
 
 DEDUP_OUTPUT_SCHEMA = "user_id long, event_id long, n_dups_dropped long"
 DEDUP_STATE_SCHEMA = "seen array<long>"
@@ -95,92 +85,6 @@ def stateful_dedup_stream(events: DataFrame, state_ttl_ms: int | None = None) ->
             stateStructType=DEDUP_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=timeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState (Spark 4.x arbitrary-state API)
-# ---------------------------------------------------------------------------
-
-TWS_OUTPUT_SCHEMA = "user_id long, n_events long, max_value double"
-TWS_STATE_SCHEMA = "n long, mx double"
-
-
-def running_user_stats_stream(events: DataFrame) -> DataFrame:
-    """Per-user running (count, max) via ``transformWithStateInPandas``
-    — the Spark 4 successor to ``applyInPandasWithState``: typed state
-    handles (Value/List/MapState), timers, and TTL live on a
-    ``StatefulProcessor`` object instead of a closure, and the state
-    store is RocksDB (disk-backed, changelog-checkpointed), which is
-    what lets per-key state exceed executor memory at 100 TB stream
-    scale.
-
-    Both running aggregates are order-insensitive (count, max), so the
-    drained result is batch-reproducible — the oracle is a plain
-    GROUP BY.
-
-    Runtime dependency: the transformWithState Python worker speaks a
-    protobuf state protocol (``pyspark.sql.streaming.proto``), so it
-    needs the ``protobuf`` package at executor runtime. This container
-    ships pyspark without it, so the operator is build-complete but
-    not registered in ``queries()``; the test suite skips it when
-    ``google.protobuf`` is absent. applyInPandasWithState
-    (:func:`stateful_dedup_stream`) covers the gated custom-state
-    path meanwhile.
-    """
-    if not _has_protobuf():
-        raise ModuleNotFoundError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(pyspark's streaming state protocol); install protobuf or "
-            "use stateful_dedup_stream (applyInPandasWithState) instead"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningUserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._stats = handle.getValueState("stats", TWS_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, mx = 0, None
-            if self._stats.exists():
-                prev = self._stats.get()
-                n, mx = int(prev[0]), float(prev[1])
-            for pdf in rows:
-                n += len(pdf)
-                batch_max = float(pdf["value"].max())
-                mx = batch_max if mx is None else max(mx, batch_max)
-            self._stats.update((n, mx))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "max_value": [mx]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    spark = events.sparkSession
-    # transformWithState requires the RocksDB state store provider.
-    # NOTE: this is a SESSION-wide conf with no per-query scope — it
-    # stays set, and later streams (including ones resuming HDFS-
-    # backed checkpoints, which would then fail on provider mismatch)
-    # inherit it. Callers mixing state-store providers in one session
-    # must manage the conf themselves.
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_RunningUserStats(),
-            outputStructType=TWS_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )
 

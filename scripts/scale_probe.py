@@ -21,8 +21,10 @@ Usage:
     python scripts/scale_probe.py [--top N] [name ...]
 
 Defaults: top 10 of BENCH_FULL.json. The synth SF is built once into
-/tmp/sf1_synth (~10x sf0.1) and reused. bench.py itself is untouched
-— this tool is additive, outside the driver's bench path.
+/tmp/sf1_synth (~10x sf0.1) and reused once its build has finished (a
+``_COMPLETE`` sentinel written after make_synth_sf.py succeeds; an
+interrupted build is redone). bench.py itself is untouched — this tool
+is additive.
 """
 
 from __future__ import annotations
@@ -30,17 +32,17 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SYNTH_DIR = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/sf1_synth")
+SENTINEL = os.path.join(SYNTH_DIR, "_COMPLETE")
 
 
 def ensure_synth() -> None:
-    if os.path.isdir(SYNTH_DIR) and any(
-        f.endswith(".parquet") for f in os.listdir(SYNTH_DIR)
-    ):
+    if os.path.exists(SENTINEL):
         return
     print(f"# building {SYNTH_DIR} (10x sf0.1)...", file=sys.stderr)
     subprocess.run(
@@ -54,27 +56,19 @@ def ensure_synth() -> None:
         check=True,
         cwd=ROOT,
     )
+    open(SENTINEL, "w").close()
 
 
 def pick_names(argv: list[str]) -> list[str]:
-    if argv and argv[0] == "--top":
-        n = int(argv[1])
-        full = json.load(open(os.path.join(ROOT, "BENCH_FULL.json")))
-        return [
-            k
-            for k, _ in sorted(
-                full["queries"].items(), key=lambda kv: -kv[1]
-            )[:n]
-        ]
-    if argv:
+    """Explicit query names, or the top N (default 10) of
+    BENCH_FULL.json by wall time with ``--top N``."""
+    if argv and argv[0] != "--top":
         return argv
+    if argv and len(argv) != 2:
+        raise SystemExit("usage: scale_probe.py [--top N] [name ...]")
+    n = int(argv[1]) if argv else 10
     full = json.load(open(os.path.join(ROOT, "BENCH_FULL.json")))
-    return [
-        k
-        for k, _ in sorted(full["queries"].items(), key=lambda kv: -kv[1])[
-            :10
-        ]
-    ]
+    return [k for k, _ in sorted(full["queries"].items(), key=lambda kv: -kv[1])[:n]]
 
 
 _RUN_RE = re.compile(r"^# run\d+ (\S+): ([0-9.]+)s")
@@ -122,8 +116,7 @@ def main() -> None:
             r = round(t8[n] / t32[n], 3)
             queries[n] = {"c8": t8[n], "c32": t32[n], "ratio": r}
             ratios.append(r)
-    ratios.sort()
-    median = ratios[len(ratios) // 2] if ratios else None
+    median = statistics.median(ratios) if ratios else None
     print(
         json.dumps(
             {

@@ -587,33 +587,12 @@ def test_loop_shuffle_scope_semantics(spark):
     assert spark.conf.get(key) == before
     assert spark.conf.get(aqe_key) == before_aqe
     assert spark.conf.get(bloom_key) == before_bloom
-    # SPARK_GRAFT_LOOP_LEAN=0 (the A/B measurement toggle) narrows
-    # the width but leaves AQE/bloom at the session setting
-    import os as _os
-
-    _os.environ["SPARK_GRAFT_LOOP_LEAN"] = "0"
-    try:
-        with _loop_shuffle_scope(spark, 4):
-            assert spark.conf.get(key) == "4"
-            assert spark.conf.get(aqe_key) == before_aqe
-            assert spark.conf.get(bloom_key) == before_bloom
-    finally:
-        _os.environ.pop("SPARK_GRAFT_LOOP_LEAN", None)
-    assert spark.conf.get(key) == before
-    # r16: broadcast planning is scoped off with the width (lean
-    # implies nobcast by default) and restored after; the A/B toggle
-    # SPARK_GRAFT_LOOP_NOBCAST=0 leaves the session threshold alone
+    # broadcast planning is scoped off with the width and restored
+    # after
     bcast_key = "spark.sql.autoBroadcastJoinThreshold"
     before_bcast = spark.conf.get(bcast_key)
     with _loop_shuffle_scope(spark, 4):
         assert spark.conf.get(bcast_key) == "-1"
-    assert spark.conf.get(bcast_key) == before_bcast
-    _os.environ["SPARK_GRAFT_LOOP_NOBCAST"] = "0"
-    try:
-        with _loop_shuffle_scope(spark, 4):
-            assert spark.conf.get(bcast_key) == before_bcast
-    finally:
-        _os.environ.pop("SPARK_GRAFT_LOOP_NOBCAST", None)
     assert spark.conf.get(bcast_key) == before_bcast
     # nested scopes (scc's outer recursion over inner pregels) restore
     # the session values on full unwind, and the inner scope cannot

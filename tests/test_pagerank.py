@@ -284,3 +284,100 @@ def test_chunked_adjacency_non_string_vertex_ids(spark):
     dangling = chunked.where(F.col("id") == 2).collect()
     assert len(dangling) == 1
     assert dangling[0].outdeg == 0 and dangling[0].outlinks == []
+
+
+@pytest.mark.parametrize(
+    "n, shuffle_parts, parts",
+    [
+        (0, 8, 1),  # an empty graph still gets one task
+        (1, 8, 1),
+        (100_000, 8, 1),
+        (100_001, 8, 2),
+        (250_000, 32, 3),
+        (800_000, 8, 8),
+        (900_000, 8, 8),  # never wider than the session
+        (10**9, 32, 32),
+        (10**9, 1, 1),
+    ],
+)
+def test_pagerank_partitions_per_vertex_count(n, shuffle_parts, parts):
+    """PageRank sizes its state at ROWS_PER_ITER_TASK vertices per task,
+    clamped to [1, shuffle partitions] by the rule graph loops share."""
+    from pagerank_hadoop_spark.operators.pagerank import _iter_partitions
+
+    assert _iter_partitions(n, shuffle_parts) == parts
+
+
+def test_shuffle_partitions_falls_back_on_non_integer():
+    from types import SimpleNamespace
+
+    from pagerank_hadoop_spark.operators.pagerank import shuffle_partitions
+
+    def session(value):
+        return SimpleNamespace(conf=SimpleNamespace(get=lambda key, default: value))
+
+    assert shuffle_partitions(session("12")) == 12
+    assert shuffle_partitions(session("auto")) == 32
+
+
+# A hub (h), a 3-cycle (a→b→c→a), two dangling vertices (d, g) and a
+# source-only vertex (i); 9 vertices, so 1/N and the dangling share are
+# inexact. Every vertex has in-degree ≤ 2 and there are two dangling
+# vertices, so no sum below depends on partial-aggregation order: the
+# values are the same at any width (checked at local[1], [8] and [32]).
+PIN_EDGES = [
+    ("h", "a", 3), ("h", "b", 1), ("h", "c", 1), ("h", "d", 2), ("h", "e", 1),
+    ("a", "b", 1), ("b", "c", 1), ("c", "a", 1),
+    ("e", "h", 1), ("f", "h", 4), ("f", "g", 1), ("i", "f", 1),
+]
+# Exact ranks after 8 iterations, computed by the implementation before
+# its four per-variant loops were folded into one.
+PIN_GOLDENS = {
+    "parity": {
+        "a": 0.16927184743244095, "b": 0.16927184743244095,
+        "c": 0.16927184743244095, "d": 0.025452541633875003,
+        "e": 0.025452541633875003, "f": 0.030833333333333338,
+        "g": 0.029770833333333337, "h": 0.0514878464141389,
+        "i": 0.01666666666666667,
+    },
+    "corrected": {
+        "a": 0.244226718576374, "b": 0.244226718576374,
+        "c": 0.244226718576374, "d": 0.037946980678345614,
+        "e": 0.037946980678345614, "f": 0.045616473225023275,
+        "g": 0.04419004613492206, "h": 0.07706802248015725,
+        "i": 0.024551341074084077,
+    },
+    "personalized": {
+        "a": 0.16883343096506248, "b": 0.16883343096506248,
+        "c": 0.16883343096506248, "d": 0.0256956017588125,
+        "e": 0.17569560175881252, "h": 0.14897067438093753,
+    },
+    "weighted": {
+        "a": 0.18665078513006186, "b": 0.17699585595987422,
+        "c": 0.17131996331047503, "d": 0.02878728177310181,
+        "e": 0.02272697421988424, "f": 0.030833333333333338,
+        "g": 0.021908333333333335, "h": 0.056986446286206784,
+        "i": 0.01666666666666667,
+    },
+}
+
+
+def test_every_variant_bitwise_pinned(spark):
+    """Each variant's exact float expression (rank/outdeg, rank*wfrac,
+    rank/outdeg*d, the dangling term) is pinned to the last ulp: 9-dp
+    oracle rounding can flip on one ulp, so `==`, not approx."""
+    from pagerank_hadoop_spark.operators.pagerank import (
+        personalized_pagerank,
+        weighted_pagerank,
+    )
+
+    wedges = spark.createDataFrame(PIN_EDGES, "src string, dst string, weight long")
+    edges = wedges.select("src", "dst")
+    got = {
+        "parity": pagerank(edges, n_iter=8, parity=True),
+        "corrected": pagerank(edges, n_iter=8, parity=False),
+        "personalized": personalized_pagerank(edges, "e", n_iter=8),
+        "weighted": weighted_pagerank(wedges, n_iter=8),
+    }
+    drifted = [v for v, df in got.items() if _ranks(df) != PIN_GOLDENS[v]]
+    assert not drifted, drifted

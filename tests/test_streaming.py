@@ -164,48 +164,6 @@ def test_foreachbatch_parquet_sink_idempotent(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == src_count
 
 
-def test_transform_with_state_gated_on_protobuf(spark, sf_dir):
-    """transformWithStateInPandas (Spark 4 arbitrary-state API): runs
-    end to end where the protobuf state protocol is available; raises
-    a clear gate error where it is not (this container ships pyspark
-    without protobuf)."""
-    from pagerank_hadoop_spark.streaming.stateful import (
-        _has_protobuf,
-        running_user_stats_stream,
-    )
-
-    schema = (
-        "event_id long, ts long, user_id long, event_type string, "
-        "value double, props string"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if not _has_protobuf():
-        with pytest.raises(ModuleNotFoundError, match="protobuf"):
-            running_user_stats_stream(stream)
-        return
-    from pagerank_hadoop_spark.streaming.windows import run_to_memory
-    from pyspark.sql import functions as F
-
-    run_to_memory(
-        running_user_stats_stream(stream), "tws_test", output_mode="update"
-    )
-    got = (
-        spark.table("tws_test")
-        .groupBy("user_id")
-        .agg(F.max("n_events").alias("n"), F.max("max_value").alias("mx"))
-    )
-    want = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.max("value").alias("mx"))
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
 def test_stream_shuffle_partitions_scopes_and_restores(spark):
     from pagerank_hadoop_spark.streaming.windows import (
         stream_shuffle_partitions,
