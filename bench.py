@@ -1,6 +1,9 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+A query that raises is recorded as ``{name: "ExcType: msg"}`` under
+``errors`` (and left out of the timings); the sweep goes on, and the
+run exits 1.
 """
 
 from __future__ import annotations
@@ -9,6 +12,7 @@ import json
 import os
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -18,7 +22,7 @@ from pagerank_hadoop_spark.session import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def main() -> None:
+def main() -> int:
     spark = get_spark("bench")
     # untimed warmup: JVM/codegen/Arrow spin-up and the parquet footer
     # reads otherwise land entirely on whichever query runs first.
@@ -102,14 +106,25 @@ def main() -> None:
 
     runs: list[dict[str, float]] = []
     rounds_total: dict[str, int] = {}
+    errors: dict[str, str] = {}
     for r in range(n_runs):
         pass_timings: dict[str, float] = {}
         for name in names:
+            if name in errors:
+                continue
             fn = qs[name]
             runtime_counters.reset()
             t0 = time.time()
-            df = fn(spark, SF_DIR)
-            n = df.count()  # force full execution
+            try:
+                df = fn(spark, SF_DIR)
+                n = df.count()  # force full execution
+            except Exception as exc:
+                traceback.print_exc(file=sys.stderr)
+                # first line only: the stdout record stays one short line
+                msg = (str(exc).splitlines() or [""])[0]
+                errors[name] = f"{type(exc).__name__}: {msg}"
+                print(f"# run{r + 1} {name}: FAILED {errors[name]}", file=sys.stderr)
+                continue
             pass_timings[name] = round(time.time() - t0, 3)
             # fixpoint round count (0 for non-iterative queries). MAX
             # across passes: memoized artifacts (_confirmed_pairs_cached)
@@ -122,7 +137,9 @@ def main() -> None:
                 file=sys.stderr,
             )
         runs.append(pass_timings)
-    timings = {name: min(p[name] for p in runs) for name in names}
+    timings = {
+        name: min(p[name] for p in runs) for name in names if name not in errors
+    }
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     total = round(sum(timings.values()), 3)
     # The driver captures/parses ONE stdout JSON line; round 1 showed a
@@ -188,7 +205,7 @@ def main() -> None:
         if len(runs) >= 2:
             ratios = sorted(
                 max(p[n] for p in runs) / timings[n]
-                for n in names
+                for n in timings
                 if timings[n] > 0
             )
             variance = {
@@ -211,6 +228,7 @@ def main() -> None:
                     "rounds_total": {
                         k: v for k, v in sorted(rounds_total.items()) if v
                     },
+                    "errors": errors,
                 },
                 fh,
             )
@@ -226,10 +244,12 @@ def main() -> None:
                 "n_queries": len(timings),
                 "full": "BENCH_FULL.json",
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "errors": errors,
             }
         )
     )
+    return 1 if errors else 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

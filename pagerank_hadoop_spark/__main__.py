@@ -106,11 +106,12 @@ def main(argv: list[str]) -> int:
         ranks, n = pagerank_with_n(edges, n_iter=iters, parity=True)
         out = top_ranks(ranks, n, threshold=THRESHOLD_NUM / n)
         tsv_dir = os.path.join(output_dir, f"PageRank.iter{iters}.out")
+        # bare ``title\trank`` text lines, as the reference writes them
+        # (a CSV writer would quote and escape titles holding '"');
         # coalesce(1): the reference's ordered snapshot is one file; at
         # real scale drop this and keep the range-partitioned sort output
-        out.select("id", F.col("rank").cast("string")).coalesce(1).write.mode(
-            "overwrite"
-        ).option("sep", "\t").csv(tsv_dir)
+        line = F.concat_ws("\t", "id", F.col("rank").cast("string"))
+        out.select(line).coalesce(1).write.mode("overwrite").text(tsv_dir)
         out.write.mode("overwrite").parquet(
             os.path.join(output_dir, f"pagerank_iter{iters}.parquet")
         )

@@ -23,6 +23,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
 from pagerank_hadoop_spark import runtime_counters
+from pagerank_hadoop_spark.session import plan_bytes
 
 
 # ---------------------------------------------------------------------------
@@ -128,20 +129,17 @@ def _spread(df: DataFrame) -> DataFrame:
     text."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
+    size = plan_bytes(df)
     try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        max_split = int(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-        )
-        small = size < target * max_split
+        # the JVM's own byte parser: accepts '128m' as well as a count
+        split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     except Exception:
-        # stats unavailable (non-JVM plan edge): FAIL CLOSED (treat as
-        # big) — the spread is a local-regime perf assist, and a probe
-        # failure at production scale must not round-robin a 100 TB
-        # text scan down to defaultParallelism
-        small = False
+        split = None
+    # a failed probe FAILS CLOSED (treated as big): the spread is a
+    # local-regime perf assist, and a probe failure at production
+    # scale must not round-robin a 100 TB text scan down to
+    # defaultParallelism
+    small = size is not None and split is not None and size < target * split
     return df.repartition(target) if small else df
 
 

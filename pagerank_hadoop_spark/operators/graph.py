@@ -17,8 +17,10 @@ from __future__ import annotations
 
 import warnings
 from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import ArrayType, DoubleType, FloatType, MapType, StructType
 
 from pagerank_hadoop_spark import runtime_counters
 from pagerank_hadoop_spark.operators.pagerank import (
@@ -26,6 +28,7 @@ from pagerank_hadoop_spark.operators.pagerank import (
     pagerank_with_n,
     shuffle_partitions,
 )
+from pagerank_hadoop_spark.session import plan_bytes
 
 
 class PregelNotConverged(RuntimeError):
@@ -42,7 +45,7 @@ def _nonconvergence(label: str, max_iter: int, on_max_iter: str) -> None:
     if on_max_iter == "raise":
         raise PregelNotConverged(msg)
     if on_max_iter != "ignore":
-        warnings.warn(msg, RuntimeWarning, stacklevel=3)
+        warnings.warn(msg, RuntimeWarning, stacklevel=4)
 
 
 def _edge_partitions(edges: DataFrame, doubled: bool = True) -> int:
@@ -56,15 +59,55 @@ def _edge_partitions(edges: DataFrame, doubled: bool = True) -> int:
     the estimate only needs the right order of magnitude (small
     graph → few tasks, big graph → all)."""
     shuffle_parts = shuffle_partitions(edges.sparkSession)
-    try:
-        size = int(
-            edges._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # stats unavailable: keep the session default
+    size = plan_bytes(edges)
+    if size is None:  # stats unavailable: keep the session default
         return shuffle_parts
     if doubled:
         size *= 2  # symmetrized edge list
     return loop_partitions(size // (1 << 20), shuffle_parts)
+
+
+def _symmetrized(e: DataFrame, *cols: str) -> DataFrame:
+    """``e``'s ``(src, dst, *cols)`` rows plus each one reversed."""
+    return e.select("src", "dst", *cols).unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *cols)
+    )
+
+
+def _pinned(
+    e: DataFrame, parts: int, key: str, salt: int | None = None
+) -> DataFrame:
+    """Persistent copy of ``e`` hash-laid on ``key`` over ``parts``
+    tasks, so every round's join on ``key`` reuses the layout.
+
+    ``salt`` spreads a hot key's edges over ``salt`` sub-partitions: a
+    deterministic per-row salt (content hash — no RNG state to
+    coordinate across task retries, same scheme as
+    ``operators.joins.salted_join``) is baked in BEFORE the one-time
+    repartition; :func:`_score_join` matches it."""
+    keys = [key]
+    if salt:
+        e = e.withColumn("__salt", F.pmod(F.xxhash64("src", "dst"), F.lit(salt)))
+        keys.append("__salt")
+    return e.repartition(parts, *keys).localCheckpoint(eager=True)
+
+
+def _score_join(
+    e: DataFrame, key: str, scores: DataFrame, salt: int | None
+) -> DataFrame:
+    """``e ⋈ scores`` on ``e[key] == scores.id``. Salted (``e`` laid
+    out by :func:`_pinned` with the same ``salt``), the scores side is
+    replicated once per salt value and the join matches the salt too
+    (|V|·salt rows — scores are (id, value) pairs, so replication is
+    cheap relative to the hot key's edge volume it spreads)."""
+    if not salt:
+        return e.join(scores, e[key] == scores.id)
+    scores = scores.withColumn(
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
+    )
+    return e.join(
+        scores, (e[key] == scores.id) & (e["__salt"] == scores["__salt"])
+    )
 
 
 @contextmanager
@@ -79,11 +122,15 @@ def _loop_shuffle_scope(spark, parts: int | None):
     on scc/bfs wall at sf0.1). At production scale the stats-derived
     count reaches the session default and this is a no-op; it only
     ever narrows, never widens. Restores the session value even on
-    error. Only loop drivers whose aggregates are order-insensitive
-    and exact (min / mode / count / bool-or on ids) may use it —
-    float-sum loops (pagerank, hits) stay at the session setting so
-    partial-aggregation order, and therefore last-ulp sums, cannot
-    move under the oracle gate.
+    error.
+
+    The width may only move results when a round's aggregate depends
+    on partial-aggregation order, i.e. when it sums floats. The round
+    driver (:func:`_fixpoint`) enforces that: it opens this scope only
+    when no field of the round frame is float or double, so float-sum
+    loops (hits, and PageRank's own loop) run at the session setting
+    and their last-ulp sums cannot move under the oracle gate; exact
+    min / mode / count / bool-or loops on ids narrow.
 
     NOT thread-safe: this mutates the session-global conf, so any
     concurrent query on the same SparkSession silently plans its
@@ -152,6 +199,83 @@ def _loop_shuffle_scope(spark, parts: int | None):
         spark.conf.set(bcast_key, prev_bcast)
 
 
+def _holds_float(t) -> bool:
+    """Whether a float or double sits anywhere in data type ``t``."""
+    if isinstance(t, StructType):
+        return any(_holds_float(f.dataType) for f in t.fields)
+    if isinstance(t, ArrayType):
+        return _holds_float(t.elementType)
+    if isinstance(t, MapType):
+        return _holds_float(t.keyType) or _holds_float(t.valueType)
+    return isinstance(t, (FloatType, DoubleType))
+
+
+def _fixpoint(
+    step,
+    state: DataFrame,
+    rounds: int,
+    *,
+    parts: int | None = None,
+    done=None,
+    pin_last: bool = False,
+    label: str = "loop",
+    on_max_iter: str = "warn",
+) -> tuple[DataFrame, bool]:
+    """The one round driver every iterative loop of this module runs on
+    (the relational form of GraphX's ``Pregel`` operator). Returns
+    ``(state, converged)``.
+
+    Per round: ``frame = step(state)`` builds the round's plan; the
+    driver counts it (``runtime_counters.note_round``) and
+    ``localCheckpoint``s it lazily, and that checkpoint is the next
+    ``state``. ``done(state)`` runs the round's one Spark action, which
+    also materializes the checkpoint, and says whether the fixpoint is
+    reached; with ``done=None`` exactly ``rounds`` rounds run. Rounds
+    running out before ``done`` says so are reported per
+    ``on_max_iter``. ``pin_last`` counts the last state once, inside
+    the scope, for a fixed-round loop whose caller reads that state.
+
+    ``parts`` narrows every round's shuffles to that width
+    (:func:`_loop_shuffle_scope`) only when no field of the round frame
+    is float or double: a float sum depends on partial-aggregation
+    order, so a loop that carries one runs at the session width
+    whatever ``parts`` says. The first frame is built before the scope
+    opens, to read its schema: Spark plans a frame at its checkpoint,
+    which runs inside the scope.
+    """
+    frame = step(state) if rounds > 0 else None
+    if frame is None or _holds_float(frame.schema):
+        parts = None
+    converged = False
+    with _loop_shuffle_scope(state.sparkSession, parts):
+        for i in range(rounds):
+            if i:
+                frame = step(state)
+            runtime_counters.note_round(frame)
+            state = frame.localCheckpoint(eager=False)
+            if done is not None and done(state):
+                converged = True
+                break
+        if pin_last and rounds > 0:
+            state.count()
+    if done is not None and not converged:
+        _nonconvergence(label, rounds, on_max_iter)
+    return state, converged
+
+
+def _count_stable(n: int):
+    """``done`` test of a shrink-only loop: the round's count (which
+    materializes its checkpoint) equals the one before — ``n`` before
+    the first round."""
+
+    def done(state: DataFrame) -> bool:
+        nonlocal n
+        prev, n = n, state.count()
+        return n == prev
+
+    return done
+
+
 def pregel(
     edges: DataFrame,
     init: DataFrame,
@@ -161,9 +285,9 @@ def pregel(
     label: str = "pregel",
     shuffle_parts: int | None = None,
 ) -> DataFrame:
-    """Generic fixed-point loop driver — the one-job-per-round +
-    lazy-checkpoint economy every iterative operator in this module
-    shares, factored out so custom algorithms inherit it.
+    """Generic fixed-point loop over an edge frame, on the module's
+    round driver (:func:`_fixpoint`), so custom algorithms inherit the
+    one-job-per-round + lazy-checkpoint economy the built-ins use.
 
     ``step(edges, state, changed)`` returns the next state with a
     boolean ``__changed`` column; ``changed`` is the previous round's
@@ -178,46 +302,37 @@ def pregel(
 
     ``edges`` is passed through untouched — shape it first (symmetrize,
     right-size partitions, eager-checkpoint) as the built-ins do.
-    ``shuffle_parts`` scopes the per-round exchange width to the
-    caller's stats-derived task count (see :func:`_loop_shuffle_scope`
-    — pass it ONLY for order-insensitive-aggregation steps).
+    ``shuffle_parts`` narrows the per-round exchange width to the
+    caller's stats-derived task count (:func:`_loop_shuffle_scope`).
+    The driver checks the rule that makes this safe: a step whose
+    frame has a float or double field runs at the session width
+    whatever is passed, since its sums could move with
+    partial-aggregation order; exact min / count / bool-or steps
+    narrow.
     """
-    with _loop_shuffle_scope(edges.sparkSession, shuffle_parts):
-        converged, state = _pregel_loop_body(edges, step, max_iter, init)
-    if not converged:
-        _nonconvergence(label, max_iter, on_max_iter)
-    return state
-
-
-def _pregel_loop_body(edges, step, max_iter, init):
     from pyspark.sql import Observation
 
-    state = init
-    changed_rows = init
-    converged = False
-    for _ in range(max_iter):
-        pre_ckpt = step(edges, state, changed_rows)
-        runtime_counters.note_round(pre_ckpt)
-        new_state = pre_ckpt.localCheckpoint(eager=False)
-        # fixpoint test fused into the materializing action with
-        # observe(): the count() pins every checkpoint partition and
-        # the changed-metric rides along as an accumulator — the
-        # filter is never re-evaluated as a separate scan (VERDICT r4
-        # item 4; observe sits ABOVE the checkpoint so the metric's
-        # CollectMetrics node is in the counting query's plan — under
-        # the checkpoint it would vanish into the materialized RDD
-        # lineage and obs.get would block forever)
+    def round_(state: DataFrame) -> DataFrame:
+        if state is init:
+            return step(edges, init, init)
+        changed = state.where(F.col("__changed")).drop("__changed")
+        return step(edges, state.drop("__changed"), changed)
+
+    def unchanged(state: DataFrame) -> bool:
+        # the fixpoint test rides the materializing count as an
+        # observe() metric — the filter is never a separate scan. The
+        # Observation sits ABOVE the checkpoint: under it the
+        # CollectMetrics node would vanish into the checkpointed RDD's
+        # lineage and obs.get would block forever
         obs = Observation()
-        new_state.observe(
-            obs, F.count_if(F.col("__changed")).alias("nc")
-        ).count()
-        n_changed = obs.get["nc"]
-        changed_rows = new_state.where(F.col("__changed")).drop("__changed")
-        state = new_state.drop("__changed")
-        if n_changed == 0:
-            converged = True
-            break
-    return converged, state
+        state.observe(obs, F.count_if(F.col("__changed")).alias("nc")).count()
+        return obs.get["nc"] == 0
+
+    state, _ = _fixpoint(
+        round_, init, max_iter, parts=shuffle_parts, done=unchanged,
+        label=label, on_max_iter=on_max_iter,
+    )
+    return state.drop("__changed")
 
 
 class PropertyGraph:
@@ -313,11 +428,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 50,
-    jump: bool | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """Undirected connected components by hash-min label propagation:
     every vertex's label converges to the minimum vertex id in its
     component. Returns ``(id, component)``.
@@ -335,29 +446,26 @@ def connected_components(
     checkpoint (every partition is computed and pinned by the count)
     and answers the fixpoint question — no second pass, no lineage
     replay next round.
+
+    Pointer jumping (each round also replaces a vertex's label with
+    its label's label) cuts rounds from O(diameter) to O(log
+    diameter) for one extra (id, label) join per round. It is on
+    exactly when the graph is big enough for the round count to
+    dominate: at least half the session's shuffle width of
+    right-sized tasks. On a smaller graph the extra per-round stage
+    costs more than the rounds it saves.
     """
     # NOT distinct'ed: duplicate edges send duplicate min-messages,
     # which the per-vertex min() absorbs — a distinct here would cost
     # a full shuffle of the doubled edge list every bit as large as
     # one propagation round.
-    shuffle_parts = shuffle_partitions(edges.sparkSession)
     # Right-size the per-round task count to the edge count (see
     # pagerank.loop_partitions): a small graph over 32 partitions
     # makes every round 32 near-empty tasks. The count is a
     # column-pruned scan of the (not yet doubled) edge frame.
     parts = _edge_partitions(edges)
-    # pointer jumping pays one extra (id, label) join per round to cut
-    # rounds from O(diameter) to O(log diameter). On a small graph the
-    # extra per-round stage overhead outweighs the saved rounds (the
-    # whole label table fits in one task); auto-enable it only when
-    # the graph is big enough for round count to dominate (≥ half the
-    # session's shuffle width of right-sized tasks).
-    if jump is None:
-        jump = parts * 2 >= shuffle_parts
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    sym = sym.repartition(parts, "src").localCheckpoint(eager=True)
+    jump = parts * 2 >= shuffle_partitions(edges.sparkSession)
+    sym = _pinned(_symmetrized(edges), parts, "src")
 
     init = (
         sym.select(F.col("src").alias("id")).distinct().withColumn("component", F.col("id"))
@@ -431,10 +539,7 @@ def shortest_paths(
     source, each round one join + partial-aggregated groupBy.
     """
     parts = _edge_partitions(edges)
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    sym = sym.repartition(parts, "src").localCheckpoint(eager=True)
+    sym = _pinned(_symmetrized(edges), parts, "src")
 
     init = (
         sym.select(F.col("src").alias("id"))
@@ -547,31 +652,26 @@ def k_truss(
             .agg(F.count(F.lit(1)).alias("support"))
         )
 
-    prev = canon.count()
-    converged = False
     supp = None
-    for _ in range(max_iter):
-        supp = _support(canon)
-        pre_ckpt = (
-            canon.join(supp, ["src", "dst"], "left")
+
+    def peel(es: DataFrame) -> DataFrame:
+        nonlocal supp
+        supp = _support(es)
+        return (
+            es.join(supp, ["src", "dst"], "left")
             .where(F.coalesce("support", F.lit(0)) >= k - 2)
             .select("src", "dst")
         )
-        runtime_counters.note_round(pre_ckpt)
-        nxt = pre_ckpt.localCheckpoint(eager=False)
-        n = nxt.count()  # materializes + fixpoint test
-        canon = nxt
-        if n == prev:
-            converged = True
-            break
-        prev = n
-    if not converged:
-        _nonconvergence("k_truss", max_iter, on_max_iter)
+
+    canon, converged = _fixpoint(
+        peel, canon, max_iter, done=_count_stable(canon.count()),
+        label="k_truss", on_max_iter=on_max_iter,
+    )
     final = canon.localCheckpoint(eager=True)  # feeds support AND join
     # at a fixpoint the last round dropped nothing, so its support
     # table (computed on the same edge content) IS the final support —
     # skip the extra triangle pass; only a max_iter bailout recomputes
-    fsupp = supp if (converged and supp is not None) else _support(final)
+    fsupp = supp if converged else _support(final)
     return final.join(fsupp, ["src", "dst"], "left").select(
         "src", "dst", F.coalesce("support", F.lit(0)).cast("long").alias("support")
     )
@@ -607,51 +707,38 @@ def k_core(
     # here inflate degrees and change which vertices survive).
     # dropDuplicates doubles as the repartition — its shuffle hashes
     # on both key columns.
-    base = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     cur = (
-        base.unionByName(
-            base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+        _symmetrized(edges.where(F.col("src") != F.col("dst")))
         .repartition(parts, "src", "dst")
         .dropDuplicates(["src", "dst"])
         .localCheckpoint(eager=True)
     )
-    prev_edges = cur.count()
-    converged = False
-    # the peel's per-round aggregates are exact integer counts and
-    # id semi-joins — order-insensitive, so the loop-width scope is
-    # hash-safe (see _loop_shuffle_scope); the entry-level estimate
-    # is threaded through every round because the edge list only
-    # shrinks (the scc precedent: per-round re-estimates run high)
-    with _loop_shuffle_scope(edges.sparkSession, parts):
-        for _ in range(max_iter):
-            # keep derives FROM cur, so the semi-joins are self-joins;
-            # name-based join keys (not cross-plan Column refs) keep the
-            # analyzer from resolving the condition into the shared subplan
-            keep = (
-                cur.groupBy("src")
-                .agg(F.count(F.lit(1)).alias("__d"))
-                .where(F.col("__d") >= k)
-                .select("src")
-            )
-            pre_ckpt = (
-                cur.join(keep, "src", "left_semi")
-                .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-                .select("src", "dst")
-            )
-            runtime_counters.note_round(pre_ckpt)
-            nxt = pre_ckpt.localCheckpoint(eager=False)
-            n = nxt.count()  # materializes the checkpoint + fixpoint test
-            cur = nxt
-            if n == prev_edges:
-                converged = True
-                break
-            prev_edges = n
-    if not converged:
-        # the peel cascade was still shrinking the edge list when the
-        # round budget ran out: the result would contain vertices a
-        # deeper cascade peels away — not a k-core
-        _nonconvergence("k_core", max_iter, on_max_iter)
+
+    def peel(cur: DataFrame) -> DataFrame:
+        # keep derives FROM cur, so the semi-joins are self-joins;
+        # name-based join keys (not cross-plan Column refs) keep the
+        # analyzer from resolving the condition into the shared subplan
+        keep = (
+            cur.groupBy("src")
+            .agg(F.count(F.lit(1)).alias("__d"))
+            .where(F.col("__d") >= k)
+            .select("src")
+        )
+        return (
+            cur.join(keep, "src", "left_semi")
+            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
+            .select("src", "dst")
+        )
+
+    # the entry-level width estimate is threaded through every round
+    # because the edge list only shrinks (the scc precedent: per-round
+    # re-estimates run high). Rounds running out means the cascade was
+    # still peeling: the result would hold vertices a deeper cascade
+    # removes — not a k-core
+    cur, _ = _fixpoint(
+        peel, cur, max_iter, parts=parts, done=_count_stable(cur.count()),
+        label="k_core", on_max_iter=on_max_iter,
+    )
     return cur.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("core_deg")
     )
@@ -684,7 +771,6 @@ def maximal_independent_set(
         .select(F.col("src").alias("id"))
         .distinct()
     )
-    base = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     # partitioned by DST: the recurring per-round join keys on dst
     # (min active-neighbor lookup), so the persistent copy must be
     # laid out for THAT join — src is only used by the winner
@@ -692,12 +778,8 @@ def maximal_independent_set(
     # enough to broadcast every round. Partitioning by src would
     # re-shuffle the full edge list per round at broadcast-infeasible
     # active-set sizes.
-    sym = (
-        base.unionByName(
-            base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(parts, "dst")
-        .localCheckpoint(eager=True)
+    sym = _pinned(
+        _symmetrized(edges.where(F.col("src") != F.col("dst"))), parts, "dst"
     )
     pri = F.conv(F.substring(F.md5(F.col("id")), 1, 6), 16, 10).cast("long")
     active = (
@@ -707,64 +789,63 @@ def maximal_independent_set(
         .select("id", pri.alias("pri"))
         .localCheckpoint(eager=True)
     )
-    chosen = None
-    converged = False
-    # min-of-(pri, id) structs and id anti-joins only — exact and
-    # order-insensitive, so the loop-width scope is hash-safe
-    with _loop_shuffle_scope(edges.sparkSession, parts):
-        for _ in range(max_iter):
-            # min active-neighbor (pri, id) per vertex; duplicate edges
-            # are absorbed by the min, so the symmetrized list is not
-            # deduped
-            neigh = (
-                sym.join(
-                    active.select(
-                        F.col("id").alias("dst"),
-                        F.struct("pri", "id").alias("__p"),
-                    ),
-                    "dst",
-                )
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.min("__p").alias("__minp"))
+    chosen = []
+
+    def luby(_winners: DataFrame) -> DataFrame:
+        # min active-neighbor (pri, id) per vertex; duplicate edges are
+        # absorbed by the min, so the symmetrized list is not deduped
+        neigh = (
+            sym.join(
+                active.select(
+                    F.col("id").alias("dst"), F.struct("pri", "id").alias("__p")
+                ),
+                "dst",
             )
-            pre_ckpt = (
-                active.join(neigh, "id", "left")
-                .where(
-                    F.col("__minp").isNull()
-                    | (F.struct("pri", "id") < F.col("__minp"))
-                )
-                .select("id")
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.min("__p").alias("__minp"))
+        )
+        return (
+            active.join(neigh, "id", "left")
+            .where(
+                F.col("__minp").isNull()
+                | (F.struct("pri", "id") < F.col("__minp"))
             )
-            runtime_counters.note_round(pre_ckpt)
-            winners = pre_ckpt.localCheckpoint(eager=False)
-            n_win = winners.count()
-            if n_win == 0:
-                converged = True
-                break
-            # each winners frame is already pinned by its count; collect
-            # references and union once at the end instead of paying an
-            # eager re-checkpoint of the growing chosen set every round
-            chosen = winners if chosen is None else chosen.unionByName(winners)
-            touched = winners.unionByName(
-                sym.join(
-                    winners.withColumnRenamed("id", "src"), "src", "left_semi"
-                ).select(F.col("dst").alias("id"))
-            )
-            # no per-round active.count(): an empty active set just makes
-            # the NEXT round's winners.count() return 0 and exit — one
-            # fewer job per round (the lazy checkpoint pins on first use)
-            active = (
-                active.join(touched, "id", "left_anti")
-                .localCheckpoint(eager=False)
-            )
+            .select("id")
+        )
+
+    def no_winners(winners: DataFrame) -> bool:
+        nonlocal active
+        if winners.count() == 0:
+            return True
+        # each winners frame is already pinned by its count; collect
+        # references and union once at the end instead of paying an
+        # eager re-checkpoint of the growing chosen set every round
+        chosen.append(winners)
+        touched = winners.unionByName(
+            sym.join(
+                winners.withColumnRenamed("id", "src"), "src", "left_semi"
+            ).select(F.col("dst").alias("id"))
+        )
+        # no per-round active.count(): an empty active set just makes
+        # the NEXT round's winners.count() return 0 and exit — one
+        # fewer job per round (the lazy checkpoint pins on first use)
+        active = active.join(touched, "id", "left_anti").localCheckpoint(
+            eager=False
+        )
+        return False
+
+    _, converged = _fixpoint(
+        luby, active, max_iter, parts=parts, done=no_winners,
+        on_max_iter="ignore",
+    )
     # Luby rounds exhausted with eligible vertices still active → the
     # set is independent but possibly NOT maximal; only the final
     # exhaustion path pays the active-count job
     if not converged and active.limit(1).count() > 0:
         _nonconvergence("maximal_independent_set", max_iter, on_max_iter)
-    if chosen is None:
+    if not chosen:
         return active.select("id").where(F.lit(False))
-    return chosen.select("id")
+    return reduce(DataFrame.unionByName, chosen).select("id")
 
 
 def aggregate_messages(
@@ -870,48 +951,27 @@ def label_propagation(
     hot vertex's partition; salting spreads it at layout time.
     """
     parts = _edge_partitions(edges)
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    if salt:
-        sym = _salted_edges(sym, "src", parts, salt)
-    else:
-        sym = sym.repartition(parts, "src").localCheckpoint(eager=True)
-
+    sym = _pinned(_symmetrized(edges), parts, "src", salt)
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
         .localCheckpoint(eager=True)
     )
-    # mode(deterministic=true) is an exact counted argmax with a total
-    # tie-break — partial-aggregation order cannot move it, so the
-    # loop-width scope is hash-safe here too
-    with _loop_shuffle_scope(edges.sparkSession, parts):
-        for i in range(max_iter):
-            labels_j = _replicated_scores(labels, salt) if salt else labels
-            pre_ckpt = (
-                sym.join(
-                    labels_j,
-                    (sym.src == labels_j.id)
-                    & (
-                        (sym["__salt"] == labels_j["__salt"])
-                        if salt
-                        else F.lit(True)
-                    ),
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.mode("label", True).alias("label"))
-            )
-            runtime_counters.note_round(pre_ckpt)
-            labels = pre_ckpt.localCheckpoint(eager=False)
-        # unlike pregel/k_core/MIS there is no per-round action, so the
-        # whole chain would otherwise PLAN at the caller's first action
-        # — outside this scope, making it a silent no-op; one count
-        # materializes every round's lazy checkpoint at the narrowed
-        # width (same total work: the caller re-reads pinned partitions)
-        if max_iter > 0:
-            labels.count()
+
+    def adopt(labels: DataFrame) -> DataFrame:
+        # mode(deterministic=true) is an exact counted argmax with a
+        # total tie-break: the narrowed loop width cannot move it
+        return (
+            _score_join(sym, "src", labels, salt)
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.mode("label", True).alias("label"))
+        )
+
+    # no per-round action: pin_last materializes every round's lazy
+    # checkpoint with one count inside the loop scope (same total
+    # work: the caller re-reads pinned partitions)
+    labels, _ = _fixpoint(adopt, labels, max_iter, parts=parts, pin_last=True)
     return labels
 
 
@@ -947,37 +1007,15 @@ def bipartite_project(
     # the dominant stage (measured: 8 tasks / 3.6 s for an 8.7 M-pair
     # projection at sf0.1 that 32 tasks finish in ~1 s). Spread the
     # checkpointed frame to the cluster's parallelism when the edge
-    # list is small (same stats gate as dedup._spread, decided on the
-    # PRE-checkpoint plan — a LogicalRDD reports no stats); a large
-    # edge list keeps its already-parallel layout, so nothing moves
-    # at 100 TB. Output values cannot change: the pair aggregate is
-    # an exact integer count, layout-insensitive.
-    spark = edges.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    try:
-        size = int(
-            edges._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        max_split = int(
-            spark.conf.get(
-                "spark.sql.files.maxPartitionBytes", str(128 << 20)
-            )
-        )
-        small = size < target * max_split
-    except Exception:
-        # stats unavailable: FAIL CLOSED (treat as big). The widen is
-        # a local-regime perf assist; guessing "small" on a probe
-        # failure at production scale would round-robin a huge edge
-        # list down to defaultParallelism (same policy as
-        # _edge_partitions, which keeps the session default).
-        small = False
+    # list is small (dedup._spread's stats gate, decided on the
+    # PRE-checkpoint plan — a LogicalRDD reports no stats; a failed
+    # probe counts as big); a large edge list keeps its
+    # already-parallel layout, so nothing moves at 100 TB. Output
+    # values cannot change: the pair aggregate is an exact integer
+    # count, layout-insensitive.
+    from pagerank_hadoop_spark.operators.dedup import _spread
 
-    def _wide(df: DataFrame) -> DataFrame:
-        return df.repartition(target) if small else df
-
-    e = _wide(edges.select("src", "dst").distinct()).localCheckpoint(
-        eager=True
-    )
+    e = _spread(edges.select("src", "dst").distinct()).localCheckpoint(eager=True)
     if max_degree is not None:
         ok = (
             e.groupBy("dst")
@@ -985,7 +1023,7 @@ def bipartite_project(
             .where(F.col("__deg") <= max_degree)
             .select("dst")
         )
-        # no second _wide: when ``ok`` broadcasts, the semi-join keeps
+        # no second _spread: when ``ok`` broadcasts, the semi-join keeps
         # e's (already spread) layout, and the repartition here was a
         # pure extra exchange paid inside the checkpoint
         # materialization (measured: 5.6 → 2.7-3.2 s on the sf0.1
@@ -999,31 +1037,6 @@ def bipartite_project(
         .where(F.col("src_a") < F.col("src_b"))
         .groupBy("src_a", "src_b")
         .agg(F.count(F.lit(1)).alias("weight"))
-    )
-
-
-def _salted_edges(
-    e: DataFrame, key: str, parts: int, salt: int
-) -> DataFrame:
-    """Persistent edge copy for a salted rank-message join: a
-    deterministic per-row salt (content hash — no RNG state to
-    coordinate across task retries, same scheme as
-    ``operators.joins.salted_join``) baked in BEFORE the one-time
-    repartition, so a hot vertex's edges spread over ``salt``
-    partitions and every round's join reuses the layout."""
-    return (
-        e.withColumn("__salt", F.pmod(F.xxhash64("src", "dst"), F.lit(salt)))
-        .repartition(parts, key, "__salt")
-        .localCheckpoint(eager=True)
-    )
-
-
-def _replicated_scores(scores: DataFrame, salt: int) -> DataFrame:
-    """Scores side of a salted join: one copy per salt value (|V|·salt
-    rows — scores are (id, double) pairs, so replication is cheap
-    relative to the hot key's edge volume it spreads)."""
-    return scores.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
     )
 
 
@@ -1043,8 +1056,19 @@ def hits(edges: DataFrame, n_iter: int = 3, salt: int | None = None) -> DataFram
     and Catalyst does not CSE the two subtrees, so an un-checkpointed
     input re-runs the whole join+aggregate per consumer (the
     repo-documented double-consumption pitfall — measured 1.9x on
-    this loop). The normalized frame is checkpointed too (it feeds
-    both the next half-step and the final join).
+    this loop).
+
+    The NORMALIZED frames are not checkpointed, which trades a rescan
+    for a barrier: normalization is a 1-row aggregate plus a narrow
+    projection over the already-pinned raw RDD, so each consumer (the
+    next half-step, the final join) re-derives it by rescanning that
+    RDD, while a checkpoint of it would be one more driver round trip
+    per half-step (a Catalyst pass plus an eager broadcast build at
+    toRdd: 4 barriers per iteration instead of 2). The expression
+    trees are the same either way, so scores are bit-identical. Both
+    half-steps make one round of the module's round driver, so
+    ``rounds_total`` counts ``n_iter``; the double sums keep every
+    round at the session shuffle width.
 
     Reference mapping: the reference repo has no HITS; this extends
     its PageRank surface (C1 loop driver family,
@@ -1070,19 +1094,15 @@ def hits(edges: DataFrame, n_iter: int = 3, salt: int | None = None) -> DataFram
     # update, dst for the hub update), so keep TWO aligned persistent
     # copies — the GraphX routing-table trade: 2x edge cache buys zero
     # per-round edge exchanges at score sizes too big to broadcast
-    if salt:
-        e_src = _salted_edges(e, "src", parts, salt)
-        e_dst = _salted_edges(e, "dst", parts, salt)
-    else:
-        e_src = e.repartition(parts, "src").localCheckpoint(eager=True)
-        e_dst = e.repartition(parts, "dst").localCheckpoint(eager=True)
+    e_src = _pinned(e, parts, "src", salt)
+    e_dst = _pinned(e, parts, "dst", salt)
     vertices = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    hub = vertices.select("id", F.lit(1.0).alias("hub"))
+    seed = vertices.select("id", F.lit(1.0).alias("hub"))
     auth = vertices.select("id", F.lit(1.0).alias("auth"))
 
     def _normalized(scores: DataFrame, col: str) -> DataFrame:
@@ -1093,52 +1113,30 @@ def hits(edges: DataFrame, n_iter: int = 3, salt: int | None = None) -> DataFram
             "id", (F.col(col) / F.col("__nrm")).alias(col)
         )
 
-    # Checkpoint cadence (r15 VERDICT item 1): only the RAW half-step
-    # frames are checkpointed — they sit above the heavy join+agg and
-    # feed two subtrees (the norm agg and the division). The NORMALIZED
-    # frames are NOT: normalization is a 1-row agg plus a narrow
-    # projection over the already-pinned raw RDD, so a consumer
-    # re-deriving it re-runs only that tiny subplan — while each
-    # dropped localCheckpoint call was a full driver round trip
-    # (Catalyst pass + eager broadcast build at toRdd, the measured
-    # per-half-step floor: 4 barriers/iteration → 2). The expression
-    # trees are unchanged node-for-node, so scores are bit-identical.
-    for _ in range(n_iter):
-        hub_j = _replicated_scores(hub, salt) if salt else hub
-        auth = (
-            e_src.join(
-                hub_j,
-                (e_src.src == hub_j.id)
-                & ((e_src["__salt"] == hub_j["__salt"]) if salt else F.lit(True)),
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("hub").alias("auth"))
+    def _raw(e_side, key, scores, col, to, out) -> DataFrame:
+        # per ``to`` vertex, the sum of ``col`` over the edges whose
+        # ``key`` end holds the score; 0.0 where no edge arrives
+        summed = (
+            _score_join(e_side, key, scores, salt)
+            .groupBy(F.col(to).alias("id"))
+            .agg(F.sum(col).alias(out))
         )
-        auth_raw = (
-            vertices.join(auth, "id", "left")
-            .select("id", F.coalesce("auth", F.lit(0.0)).alias("auth"))
-            .localCheckpoint(eager=False)
+        return vertices.join(summed, "id", "left").select(
+            "id", F.coalesce(out, F.lit(0.0)).alias(out)
         )
-        auth = _normalized(auth_raw, "auth")
-        runtime_counters.note_round(auth)
-        auth_j = _replicated_scores(auth, salt) if salt else auth
-        hub = (
-            e_dst.join(
-                auth_j,
-                (e_dst.dst == auth_j.id)
-                & ((e_dst["__salt"] == auth_j["__salt"]) if salt else F.lit(True)),
-            )
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("auth").alias("hub"))
-        )
-        hub_raw = (
-            vertices.join(hub, "id", "left")
-            .select("id", F.coalesce("hub", F.lit(0.0)).alias("hub"))
-            .localCheckpoint(eager=False)
-        )
-        hub = _normalized(hub_raw, "hub")
-        runtime_counters.note_frame(hub)
-    return hub.join(auth, "id")
+
+    def hub_of(raw: DataFrame) -> DataFrame:
+        return raw if raw is seed else _normalized(raw, "hub")
+
+    def both_halves(raw_hub: DataFrame) -> DataFrame:
+        # auth's raw frame is pinned here, hub's by the round driver
+        nonlocal auth
+        auth_raw = _raw(e_src, "src", hub_of(raw_hub), "hub", "dst", "auth")
+        auth = _normalized(auth_raw.localCheckpoint(eager=False), "auth")
+        return _raw(e_dst, "dst", auth, "auth", "src", "hub")
+
+    raw_hub, _ = _fixpoint(both_halves, seed, n_iter)
+    return hub_of(raw_hub).join(auth, "id")
 
 
 def weighted_shortest_paths(
@@ -1162,17 +1160,12 @@ def weighted_shortest_paths(
     Rounds needed ≤ longest shortest-path hop count (≤ |V|-1); on
     real graphs the frontier empties in O(diameter) rounds.
     """
-    e = edges.select("src", "dst", "weight")
-    if not directed:
-        e = e.unionByName(
-            edges.select(
-                F.col("dst").alias("src"),
-                F.col("src").alias("dst"),
-                "weight",
-            )
-        )
-    e = e.repartition(_edge_partitions(edges, doubled=not directed), "src")
-    e = e.localCheckpoint(eager=True)
+    e = (
+        edges.select("src", "dst", "weight")
+        if directed
+        else _symmetrized(edges, "weight")
+    )
+    e = _pinned(e, _edge_partitions(edges, doubled=not directed), "src")
 
     init = (
         e.select(F.col("src").alias("id"))
@@ -1400,18 +1393,12 @@ def random_walks(
     per edge — the standard alias-table trade; cap degree upstream
     if hub arrays outgrow task memory.
     """
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    e = e.distinct()
+    e = (edges.select("src", "dst") if directed else _symmetrized(edges)).distinct()
     parts = _edge_partitions(e, doubled=False)
-    adj = (
-        e.groupBy("src")
-        .agg(F.sort_array(F.collect_set("dst")).alias("nbrs"))
-        .repartition(parts, "src")
-        .localCheckpoint(eager=True)
+    adj = _pinned(
+        e.groupBy("src").agg(F.sort_array(F.collect_set("dst")).alias("nbrs")),
+        parts,
+        "src",
     )
 
     frontier = (
@@ -1431,34 +1418,24 @@ def random_walks(
         .localCheckpoint(eager=False)
     )
 
-    out = frontier.withColumn("step", F.lit(0))
+    steps = []  # each step's frontier, tagged with its step number
+
+    def walk(frontier: DataFrame) -> DataFrame:
+        steps.append(frontier.withColumn("step", F.lit(len(steps))))
+        seed = F.concat(F.lit("w:"), F.col("walk_id"), F.lit(f":{len(steps)}"))
+        h = F.conv(F.substring(F.md5(seed), 1, 15), 16, 10).cast("long")
+        return frontier.join(adj, frontier.pos == adj.src).select(
+            "walk_id",
+            F.element_at(
+                "nbrs", (F.pmod(h, F.size("nbrs")) + 1).cast("int")
+            ).alias("pos"),
+        )
+
     # the step loop is pure join + element_at pick — NO aggregation
     # anywhere, so partitioning/AQE cannot move a single value: the
     # loop-width scope (narrow shuffles + AQE/bloom off per round) is
     # trivially hash-safe here, and each lazy checkpoint's toRdd
     # otherwise pays AQE's eager per-stage execution per step
-    with _loop_shuffle_scope(edges.sparkSession, parts):
-        for step in range(1, walk_len + 1):
-            h = F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("w:"), F.col("walk_id"), F.lit(f":{step}")
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            pre_ckpt = frontier.join(adj, frontier.pos == adj.src).select(
-                "walk_id",
-                F.element_at(
-                    "nbrs", (F.pmod(h, F.size("nbrs")) + 1).cast("int")
-                ).alias("pos"),
-            )
-            runtime_counters.note_round(pre_ckpt)
-            frontier = pre_ckpt.localCheckpoint(eager=False)
-            out = out.unionByName(frontier.withColumn("step", F.lit(step)))
-    return out
+    last, _ = _fixpoint(walk, frontier, walk_len, parts=parts)
+    steps.append(last.withColumn("step", F.lit(len(steps))))
+    return reduce(DataFrame.unionByName, steps)

@@ -51,13 +51,6 @@ def note_round(frame=None) -> None:
     rounds.
     """
     _STATE["rounds"] += 1
-    note_frame(frame)
-
-
-def note_frame(frame) -> None:
-    """Add a frame's exchange count WITHOUT starting a new round —
-    for loops that checkpoint more than one frame per round (HITS
-    truncates auth and hub separately)."""
     if frame is None or not _audit_enabled():
         return
     try:

@@ -75,6 +75,16 @@ def get_spark(app_name: str = "pagerank-hadoop-spark") -> SparkSession:
     return builder.getOrCreate()
 
 
+def plan_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate of ``df``'s optimized plan, in bytes;
+    no job runs. ``None`` when the plan reports no stats: callers
+    must then treat the input as big (fail closed)."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver test table (columnar Parquet scan, S4)."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

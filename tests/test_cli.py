@@ -35,7 +35,7 @@ def test_cli_writes_ordered_snapshots(spark, tmp_path):
     assert main([str(dump), str(out)]) == 0
 
     for snap in ("PageRank.iter1.out", "PageRank.iter8.out"):
-        files = glob.glob(os.path.join(out, snap, "part-*.csv"))
+        files = glob.glob(os.path.join(out, snap, "part-*"))
         assert files, f"missing TSV snapshot {snap}"
         rows = [
             line.split("\t")
@@ -47,6 +47,31 @@ def test_cli_writes_ordered_snapshots(spark, tmp_path):
         assert rows[0][0] == "Hub"  # the only page above 5/N, or at least top
     pq = spark.read.parquet(str(out / "pagerank_iter8.parquet"))
     assert pq.columns == ["id", "rank"]
+
+
+def test_cli_snapshots_keep_titles_bare(spark, tmp_path):
+    """Snapshot lines are ``title\trank`` exactly as the reference
+    writes them: a title holding a quote (mid-title or leading) or a
+    backslash is neither quoted nor escaped."""
+    titles = ['Say_"Hi"', '"Quoted"_lead', "Back\\slash"]
+    dump = tmp_path / "dump"
+    dump.mkdir()
+    # 30 spokes and the three titles all link to the three titles,
+    # so the titles hold nearly all the mass: each ranks above 5/N
+    links = "".join(f"[[{t}]]" for t in titles)
+    pages = [t.replace('"', "&quot;") for t in titles]
+    (dump / "part0.xml").write_text(
+        "".join(_page(p, links) for p in pages + [f"S{i}" for i in range(30)])
+    )
+    out = tmp_path / "result"
+    assert main([str(dump), str(out)]) == 0
+
+    for snap in ("PageRank.iter1.out", "PageRank.iter8.out"):
+        files = glob.glob(os.path.join(out, snap, "part-*"))
+        lines = [ln for f in files for ln in open(f).read().splitlines()]
+        got = {ln.split("\t")[0] for ln in lines}
+        assert got == set(titles), lines
+        assert all(len(ln.split("\t")) == 2 for ln in lines)
 
 
 def test_registry_rotation_prefers_unchecked_oracle_backed(tmp_path):

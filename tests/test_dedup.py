@@ -618,3 +618,27 @@ def test_containment_join_directed_asymmetric(spark):
         for r in containment_join(docs, threshold=0.9).collect()
     }
     assert got == {(2, 1): 1000000, (2, 3): 1000000}
+
+
+def test_spread_reads_split_size_in_bytes_and_fails_closed(spark, monkeypatch):
+    """The small-input probe reads ``spark.sql.files.maxPartitionBytes``
+    through the JVM's byte parser, so a value like ``128m`` still
+    spreads a small frame; when the plan reports no stats the frame is
+    left as it is."""
+    from pagerank_hadoop_spark.operators import dedup
+
+    df = spark.range(10)
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "128m")
+    try:
+        spread = dedup._spread(df)
+        assert spread is not df
+        assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+        monkeypatch.setattr(dedup, "plan_bytes", lambda _df: None)
+        assert dedup._spread(df) is df
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)

@@ -713,3 +713,227 @@ def test_kcore_mis_lpa_width_invariant(spark, sf_dir):
     assert wide == narrow
     assert all(wide)
     assert spark.conf.get(key) == before
+
+
+# Directed fixture for the loop pins: a 3-cycle {a,b,c} and a 2-cycle
+# {d,e} joined by c->d, a sink f, a directed K4 {p,q,r,s} with t
+# feeding two of its vertices and s bridging into the 3-cycle, and an
+# isolated pair x->y. Every loop below needs more than one round on it.
+_PIN_EDGES = [
+    ("a", "b", 2), ("b", "c", 1), ("c", "a", 3), ("c", "d", 1),
+    ("d", "e", 4), ("e", "d", 1), ("e", "f", 2), ("p", "q", 1),
+    ("q", "r", 2), ("r", "s", 1), ("s", "p", 5), ("p", "r", 1),
+    ("q", "s", 3), ("t", "p", 1), ("t", "q", 2), ("s", "a", 1),
+    ("x", "y", 1),
+]
+# A 10-vertex path: hash-min labels need one round per hop, so cc's
+# round count shows whether pointer jumping ran.
+_PIN_PATH = [(f"v{i}", f"v{i + 1}") for i in range(9)]
+# HITS fixture: hubs h1, h2 and authorities a1, a2. No sum ever has
+# more than two nonzero terms, so no float depends on summation order.
+_PIN_HITS_EDGES = [("h1", "a1"), ("h1", "a2"), ("h2", "a1")]
+
+
+def _pinned_loop_results(spark, tmp):
+    """``{loop: (sorted output rows, rounds)}`` for every graph loop on
+    the pin fixtures, read back from Parquet under ``tmp`` as queries
+    read their tables: the plan-size probe then sees a small graph, so
+    the loops run narrowed and cc runs without pointer jumping."""
+    import os
+
+    from pagerank_hadoop_spark import runtime_counters
+    from pagerank_hadoop_spark.operators import graph as G
+
+    def table(name, rows, schema):
+        path = os.path.join(tmp, name)
+        spark.createDataFrame(rows, schema).write.parquet(path)
+        return spark.read.parquet(path)
+
+    wedges = table("edges", _PIN_EDGES, "src string, dst string, weight long")
+    edges = wedges.select("src", "dst")
+    hedges = table("hits", _PIN_HITS_EDGES, "src string, dst string")
+    path = table("path", _PIN_PATH, "src string, dst string")
+    runs = {
+        "cc": lambda: G.connected_components(edges),
+        "cc_path": lambda: G.connected_components(path),
+        "bfs": lambda: G.shortest_paths(edges, "a"),
+        "sssp": lambda: G.weighted_shortest_paths(wedges, "t", directed=True),
+        "scc": lambda: G.strongly_connected_components(edges),
+        "k_core": lambda: G.k_core(edges, 3),
+        "k_truss": lambda: G.k_truss(edges, k=3),
+        "k_truss_precore": lambda: G.k_truss(edges, k=3, precore=True),
+        "mis": lambda: G.maximal_independent_set(edges),
+        "lpa": lambda: G.label_propagation(edges, max_iter=3),
+        "hits": lambda: G.hits(hedges, n_iter=4),
+        "walks": lambda: G.random_walks(edges, walk_len=3, walks_per_node=2),
+    }
+    out = {}
+    for name, run in runs.items():
+        runtime_counters.reset()
+        rows = sorted(tuple(r) for r in run().collect())
+        out[name] = (rows, runtime_counters.snapshot()["rounds"])
+    return out
+
+
+# goldens taken with the per-loop code, identical at local[1], [4] and [8]
+_PIN_GOLDEN = {
+    "cc": (
+        [
+            ("a", "a"), ("b", "a"), ("c", "a"), ("d", "a"), ("e", "a"), ("f", "a"),
+            ("p", "a"), ("q", "a"), ("r", "a"), ("s", "a"), ("t", "a"), ("x", "x"),
+            ("y", "x"),
+        ],
+        5,
+    ),
+    "cc_path": (
+        [
+            ("v0", "v0"), ("v1", "v0"), ("v2", "v0"), ("v3", "v0"), ("v4", "v0"),
+            ("v5", "v0"), ("v6", "v0"), ("v7", "v0"), ("v8", "v0"), ("v9", "v0"),
+        ],
+        10,
+    ),
+    "bfs": (
+        [
+            ("a", 0), ("b", 1), ("c", 1), ("d", 2), ("e", 3), ("f", 4), ("p", 2),
+            ("q", 2), ("r", 2), ("s", 1), ("t", 3),
+        ],
+        5,
+    ),
+    "sssp": (
+        [
+            ("a", 4), ("b", 6), ("c", 7), ("d", 8), ("e", 12), ("f", 14), ("p", 1),
+            ("q", 2), ("r", 2), ("s", 3), ("t", 0),
+        ],
+        10,
+    ),
+    "scc": (
+        [
+            ("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d"), ("f", "f"),
+            ("p", "p"), ("q", "p"), ("r", "p"), ("s", "p"), ("t", "t"), ("x", "x"),
+            ("y", "y"),
+        ],
+        16,
+    ),
+    "k_core": (
+        [
+            ("p", 3), ("q", 3), ("r", 3), ("s", 3),
+        ],
+        3,
+    ),
+    "k_truss": (
+        [
+            ("a", "b", 1), ("a", "c", 1), ("b", "c", 1), ("p", "q", 3), ("p", "r", 2),
+            ("p", "s", 2), ("p", "t", 1), ("q", "r", 2), ("q", "s", 2), ("q", "t", 1),
+            ("r", "s", 2),
+        ],
+        2,
+    ),
+    "k_truss_precore": (
+        [
+            ("a", "b", 1), ("a", "c", 1), ("b", "c", 1), ("p", "q", 3), ("p", "r", 2),
+            ("p", "s", 2), ("p", "t", 1), ("q", "r", 2), ("q", "s", 2), ("q", "t", 1),
+            ("r", "s", 2),
+        ],
+        6,
+    ),
+    "mis": (
+        [
+            ("c",), ("f",), ("s",), ("t",), ("y",),
+        ],
+        3,
+    ),
+    "lpa": (
+        [
+            ("a", "a"), ("b", "a"), ("c", "a"), ("d", "e"), ("e", "d"), ("f", "e"),
+            ("p", "p"), ("q", "p"), ("r", "p"), ("s", "a"), ("t", "p"), ("x", "y"),
+            ("y", "x"),
+        ],
+        3,
+    ),
+    "hits": (
+        [
+            ("a1", 0.0, 0.8507979973592923), ("a2", 0.0, 0.5254928807219158),
+            ("h1", 0.8505945695460383, 0.0), ("h2", 0.5258220975375509, 0.0),
+        ],
+        4,
+    ),
+    "walks": (
+        [
+            ("a#0", "a", 0), ("a#0", "a", 2), ("a#0", "c", 1), ("a#0", "s", 3),
+            ("a#1", "a", 0), ("a#1", "p", 2), ("a#1", "s", 1), ("a#1", "t", 3),
+            ("b#0", "a", 1), ("b#0", "a", 3), ("b#0", "b", 0), ("b#0", "s", 2),
+            ("b#1", "b", 0), ("b#1", "b", 2), ("b#1", "c", 1), ("b#1", "c", 3),
+            ("c#0", "a", 1), ("c#0", "a", 3), ("c#0", "b", 2), ("c#0", "c", 0),
+            ("c#1", "a", 2), ("c#1", "b", 1), ("c#1", "c", 0), ("c#1", "c", 3),
+            ("d#0", "a", 2), ("d#0", "c", 1), ("d#0", "c", 3), ("d#0", "d", 0),
+            ("d#1", "d", 0), ("d#1", "e", 1), ("d#1", "e", 3), ("d#1", "f", 2),
+            ("e#0", "d", 3), ("e#0", "e", 0), ("e#0", "e", 2), ("e#0", "f", 1),
+            ("e#1", "c", 2), ("e#1", "d", 1), ("e#1", "d", 3), ("e#1", "e", 0),
+            ("f#0", "c", 3), ("f#0", "d", 2), ("f#0", "e", 1), ("f#0", "f", 0),
+            ("f#1", "e", 1), ("f#1", "e", 3), ("f#1", "f", 0), ("f#1", "f", 2),
+            ("p#0", "p", 0), ("p#0", "p", 2), ("p#0", "r", 1), ("p#0", "r", 3),
+            ("p#1", "p", 0), ("p#1", "p", 2), ("p#1", "t", 1), ("p#1", "t", 3),
+            ("q#0", "p", 1), ("q#0", "q", 0), ("q#0", "q", 2), ("q#0", "r", 3),
+            ("q#1", "q", 0), ("q#1", "q", 2), ("q#1", "s", 1), ("q#1", "t", 3),
+            ("r#0", "p", 1), ("r#0", "p", 3), ("r#0", "r", 0), ("r#0", "r", 2),
+            ("r#1", "q", 1), ("r#1", "q", 3), ("r#1", "r", 0), ("r#1", "r", 2),
+            ("s#0", "a", 3), ("s#0", "p", 1), ("s#0", "s", 0), ("s#0", "s", 2),
+            ("s#1", "p", 2), ("s#1", "q", 1), ("s#1", "r", 3), ("s#1", "s", 0),
+            ("t#0", "p", 1), ("t#0", "r", 3), ("t#0", "s", 2), ("t#0", "t", 0),
+            ("t#1", "p", 2), ("t#1", "q", 1), ("t#1", "s", 3), ("t#1", "t", 0),
+            ("x#0", "x", 0), ("x#0", "x", 2), ("x#0", "y", 1), ("x#0", "y", 3),
+            ("x#1", "x", 0), ("x#1", "x", 2), ("x#1", "y", 1), ("x#1", "y", 3),
+            ("y#0", "x", 1), ("y#0", "x", 3), ("y#0", "y", 0), ("y#0", "y", 2),
+            ("y#1", "x", 1), ("y#1", "x", 3), ("y#1", "y", 0), ("y#1", "y", 2),
+        ],
+        3,
+    ),
+}
+
+
+def test_every_graph_loop_pinned(spark, tmp_path):
+    """Exact output and round count of every graph loop, against
+    goldens taken before the loops shared one driver. HITS floats are
+    compared with ``==``: the fixture keeps every sum order-free."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "8")  # cc's pointer-jump rule reads this width
+    try:
+        got = _pinned_loop_results(spark, str(tmp_path))
+    finally:
+        spark.conf.set(key, before)
+    for name, (rows, rounds) in _PIN_GOLDEN.items():
+        assert got[name][1] == rounds, name
+        assert got[name][0] == rows, name
+
+
+def test_round_driver_keeps_float_loops_at_session_width(spark):
+    """The round driver narrows the shuffle width only for a round
+    frame with no float or double field (top level or nested): a
+    float sum's partial-aggregation order, and so its last ulp,
+    depends on the width. The matching integer step narrows."""
+    from pyspark.sql import functions as F
+
+    from pagerank_hadoop_spark.operators.graph import _fixpoint
+
+    key = "spark.sql.shuffle.partitions"
+    session = spark.conf.get(key)
+    seen = []
+
+    def done(state):
+        seen.append(spark.conf.get(key))
+        return True
+
+    state = spark.range(6).selectExpr("id % 3 AS k", "id AS v")
+    steps = {
+        "double": lambda s: s.groupBy("k").agg(F.sum(F.col("v") * 0.5).alias("v")),
+        "nested": lambda s: s.groupBy("k").agg(
+            F.struct(F.sum(F.col("v").cast("float")).alias("f")).alias("v")
+        ),
+        "long": lambda s: s.groupBy("k").agg(F.sum("v").alias("v")),
+    }
+    for step in steps.values():
+        out, converged = _fixpoint(step, state, 3, parts=1, done=done)
+        assert converged and out.count() == 3
+    assert seen == [session, session, "1"]
+    assert spark.conf.get(key) == session
