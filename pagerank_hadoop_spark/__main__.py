@@ -7,13 +7,16 @@ iteration 8 (``PageRank.java:480-487,492-497``) as tab-separated
 ``page \\t rank`` text.
 
 Here: ``python -m pagerank_hadoop_spark <input-dir> <output-dir>``
-runs the same DAG as one lazy Spark plan per snapshot — XML page
-source, link extraction, red-link semi-join, PageRank (parity
-semantics: 1/N seed, 0.15/N teleport, dangling mass lost), the
-``rank > 5/N`` cut (``PageRank.java:336,346``), descending sort — and
-writes ``PageRank.iter1.out`` / ``PageRank.iter8.out`` TSV
-directories plus a combined Parquet result (the scale-appropriate
-sink; TSV kept for byte-level reference parity).
+runs the same DAG — XML page source, link extraction, red-link
+semi-join, PageRank (parity semantics: 1/N seed, 0.15/N teleport,
+dangling mass lost), the ``rank > 5/N`` cut
+(``PageRank.java:336,346``), descending sort — as ONE 8-round rank
+run over one adjacency layout, like the reference's
+(``pagerank_snapshots``: the iteration-1 snapshot is taken after
+round 1 and rounds 2-8 resume from it), and writes
+``PageRank.iter1.out`` / ``PageRank.iter8.out`` TSV directories plus
+a combined Parquet result (the scale-appropriate sink; TSV kept for
+byte-level reference parity).
 """
 
 from __future__ import annotations
@@ -24,7 +27,7 @@ import sys
 from pyspark.sql import functions as F
 
 from pagerank_hadoop_spark.functions.wikitext import extract_links, remove_red_links
-from pagerank_hadoop_spark.operators.pagerank import pagerank_with_n, top_ranks
+from pagerank_hadoop_spark.operators.pagerank import pagerank_snapshots, top_ranks
 from pagerank_hadoop_spark.session import get_spark
 from pagerank_hadoop_spark.sources.wiki import parse_pages, read_pages
 
@@ -102,9 +105,9 @@ def main(argv: list[str]) -> int:
     parsed = parse_pages(read_pages(spark, input_dir))
     edges = remove_red_links(extract_links(parsed), parsed).cache()
 
-    for iters in SNAPSHOT_ITERS:
-        ranks, n = pagerank_with_n(edges, n_iter=iters, parity=True)
-        out = top_ranks(ranks, n, threshold=THRESHOLD_NUM / n)
+    for iters, ranks, n in pagerank_snapshots(edges, SNAPSHOT_ITERS):
+        # cached: both snapshots below are written from one computation
+        out = top_ranks(ranks, n, threshold=THRESHOLD_NUM / n).cache()
         tsv_dir = os.path.join(output_dir, f"PageRank.iter{iters}.out")
         # bare ``title\trank`` text lines, as the reference writes them
         # (a CSV writer would quote and escape titles holding '"');
@@ -115,6 +118,7 @@ def main(argv: list[str]) -> int:
         out.write.mode("overwrite").parquet(
             os.path.join(output_dir, f"pagerank_iter{iters}.parquet")
         )
+        out.unpersist()
     return 0
 
 

@@ -15,12 +15,22 @@ degrees correspond to the outdeg computed inline at
 
 from __future__ import annotations
 
+import json
 import warnings
 from contextlib import contextmanager
-from functools import reduce
+from functools import partial, reduce
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, DoubleType, FloatType, MapType, StructType
+import numpy as np
+from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    FloatType,
+    IntegralType,
+    MapType,
+    StringType,
+    StructType,
+)
 
 from pagerank_hadoop_spark import runtime_counters
 from pagerank_hadoop_spark.operators.pagerank import (
@@ -48,6 +58,18 @@ def _nonconvergence(label: str, max_iter: int, on_max_iter: str) -> None:
         warnings.warn(msg, RuntimeWarning, stacklevel=4)
 
 
+def _edge_tasks(edges: DataFrame, doubled: bool = True) -> int | None:
+    """Tasks a loop over ``edges`` needs at ~1 MB each, from Catalyst's
+    plan-size estimate (no job), before any clamp to the session
+    width; ``None`` when the plan reports no stats."""
+    size = plan_bytes(edges)
+    if size is None:
+        return None
+    if doubled:
+        size *= 2  # symmetrized edge list
+    return size // (1 << 20)
+
+
 def _edge_partitions(edges: DataFrame, doubled: bool = True) -> int:
     """Right-size the per-round task count for an iterative loop from
     Catalyst's plan-size estimate — no job, unlike the ``count()``
@@ -57,14 +79,33 @@ def _edge_partitions(edges: DataFrame, doubled: bool = True) -> int:
     ROWS_PER_ITER_TASK economy (Catalyst's post-projection/distinct
     size estimates run low, so the divisor is deliberately tight);
     the estimate only needs the right order of magnitude (small
-    graph → few tasks, big graph → all)."""
+    graph → few tasks, big graph → all). Frames built with
+    ``createDataFrame`` report Spark's default size, so they count as
+    big: they get the session width, and never the one-task path of
+    :func:`_fits_one_task` (a known issue)."""
     shuffle_parts = shuffle_partitions(edges.sparkSession)
-    size = plan_bytes(edges)
-    if size is None:  # stats unavailable: keep the session default
+    need = _edge_tasks(edges, doubled)
+    if need is None:  # stats unavailable: keep the session default
         return shuffle_parts
-    if doubled:
-        size *= 2  # symmetrized edge list
-    return loop_partitions(size // (1 << 20), shuffle_parts)
+    return loop_partitions(need, shuffle_parts)
+
+
+def _fits_one_task(edges: DataFrame, doubled: bool = True) -> bool:
+    """Whether a loop over ``edges`` may run whole in one task
+    (:func:`_in_one_task`): both id columns of one integer type, or
+    both Spark's binary-ordered string type, and an edge list that
+    needs at most one task under :func:`_edge_partitions`' rule. The
+    need is read before that rule clamps it to the session width, so
+    ``spark.sql.shuffle.partitions=1`` cannot admit a big graph. No
+    stats, or any other id type, fails closed to the distributed
+    loop."""
+    t = edges.schema["src"].dataType
+    if t != edges.schema["dst"].dataType or not (
+        isinstance(t, IntegralType) or t == StringType()
+    ):
+        return False
+    need = _edge_tasks(edges, doubled)
+    return need is not None and need <= 1  # loop_partitions floors at 1
 
 
 def _symmetrized(e: DataFrame, *cols: str) -> DataFrame:
@@ -276,6 +317,181 @@ def _count_stable(n: int):
     return done
 
 
+def _in_one_task(
+    edges: DataFrame, label_col: str, kernel, on_max_iter: str
+) -> DataFrame:
+    """The round driver's small-graph sibling: run a whole exact-integer
+    fixpoint in ONE Python task and return ``(id, label_col)``.
+
+    ``kernel(n, src, dst, has_null)`` is a numpy copy of a distributed
+    loop, round for round, over ids factorized to ``0..n-1`` in id
+    order (:func:`_one_task_frame`); it returns ``(labels, log,
+    null_row)``. Its log lists each inner loop as ``[label, max_iter,
+    rounds, converged]``. The edge list travels through one
+    ``groupBy(lit(0)).applyInPandas`` group; the result is checkpointed
+    lazily and one ``observe(...).count()`` both materializes it and
+    reads the log, so no second job runs (the :func:`pregel` pattern;
+    an ``Observation``, unlike an accumulator, cannot double-count a
+    recomputed task). The driver then replays the log: one
+    ``runtime_counters.note_round`` per round, so ``rounds_total``
+    keeps its meaning, and the same warning or error, at the same
+    point, as the distributed loop would give.
+
+    Callers take this path only when :func:`_fits_one_task` says so:
+    the edge list then needs one ~1 MB task, and the narrowed
+    distributed loop would run each of its rounds in one task too, so
+    this adds no new per-task memory regime. Null ids cannot reach
+    pandas as float64: each endpoint travels as a non-null value plus
+    a null flag."""
+    spark = edges.sparkSession
+    t = edges.schema["src"].dataType
+    zero = F.lit("" if t == StringType() else 0).cast(t)
+    flat = edges.select(
+        F.coalesce("src", zero).alias("src"),
+        F.coalesce("dst", zero).alias("dst"),
+        F.isnull("src").alias("__sn"),
+        F.isnull("dst").alias("__dn"),
+    )
+    schema = f"id {t.simpleString()}, {label_col} {t.simpleString()}, __log string"
+    obs = Observation()
+    with _loop_shuffle_scope(spark, 1):
+        # aliased: a bare integer literal would read as a group-by ordinal
+        out = (
+            flat.groupBy(F.lit(0).alias("__task"))
+            .applyInPandas(lambda pdf: _one_task_frame(kernel, label_col, pdf), schema)
+            .localCheckpoint(eager=False)
+        )
+        out.observe(obs, F.max("__log").alias("log")).count()
+    log = obs.get["log"]
+    if log is None:  # no edge row, so no group ran: replay the empty graph
+        log = kernel(0, np.empty(0, int), np.empty(0, int), False)[1]
+    else:
+        log = json.loads(log)
+    for label, limit, rounds, converged in log:
+        for _ in range(rounds):
+            runtime_counters.note_round()
+        if not converged:
+            _nonconvergence(label, limit, on_max_iter)
+    return out.where(F.col("__log").isNull()).drop("__log")
+
+
+def _one_task_frame(kernel, label_col: str, pdf):
+    """The one task's body. Factorizes the non-null endpoint ids with
+    ``np.unique``, which sorts, so code order is id order (Python's
+    code-point order on ``str`` equals Spark's UTF-8 byte order), and
+    runs ``kernel`` on the edges with both ends non-null. Emits one
+    row per vertex the kernel labels (label code -1: no row), a
+    ``(null, null)`` row when it asks for one, and one row holding the
+    JSON round log. The id columns are built as Python objects, so
+    ids above 2**53 stay exact."""
+    import pandas as pd
+
+    m = len(pdf)
+    ends = np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()])
+    null = np.concatenate([pdf["__sn"].to_numpy(bool), pdf["__dn"].to_numpy(bool)])
+    uniq, codes = np.unique(ends[~null], return_inverse=True)
+    full = np.full(2 * m, -1)
+    full[~null] = codes
+    src, dst = full[:m], full[m:]
+    both = (src >= 0) & (dst >= 0)
+    labels, log, null_row = kernel(len(uniq), src[both], dst[both], bool(null.any()))
+    keep = labels >= 0
+    rows = pd.DataFrame({
+        "id": uniq[keep].astype(object),
+        label_col: uniq[labels[keep]].astype(object),
+        "__log": None,
+    })
+    extra = [[None, None, None]] * null_row + [[None, None, json.dumps(log)]]
+    return pd.concat(
+        [rows, pd.DataFrame(extra, columns=rows.columns)], ignore_index=True
+    )
+
+
+def _until_stable(step, frontier, max_iter: int) -> tuple[int, bool]:
+    """Rounds of ``frontier = step(frontier)``, where a round returns
+    the mask of what it changed, until one changes nothing or
+    ``max_iter`` ran: ``(rounds, converged)``, counted as
+    :func:`_fixpoint` counts them."""
+    rounds, converged = 0, False
+    while rounds < max_iter and not converged:
+        rounds += 1
+        frontier = step(frontier)
+        converged = not frontier.any()
+    return rounds, converged
+
+
+def _cc_kernel(n, src, dst, has_null, *, max_iter: int, jump: bool):
+    """:func:`connected_components`' loop: synchronous hash-min over
+    both edge directions, then the pointer jump when ``jump``, until a
+    round changes no label. A null id is its own labelless vertex."""
+    s, d = np.concatenate([src, dst]), np.concatenate([dst, src])
+    labels = np.arange(n)
+
+    def step(_):
+        nonlocal labels
+        new = labels.copy()
+        np.minimum.at(new, d, labels[s])
+        if jump:
+            new = np.minimum(new, labels[new])
+        changed, labels = new < labels, new
+        return changed
+
+    rounds, converged = _until_stable(step, None, max_iter)
+    return labels, [["connected_components", max_iter, rounds, converged]], has_null
+
+
+def _scc_kernel(n, src, dst, has_null, *, max_outer: int, max_iter: int):
+    """:func:`strongly_connected_components`' FW-BW peel: on the
+    distinct edge set, per outer round, the forward-min coloring from
+    the changed frontier, the backward sweep from the roots within
+    color classes, then both edge ends restricted to survivors. Only
+    settled vertices get a label. A null id is a vertex of the first
+    outer round only (it never settles), as on the distributed path."""
+    if n:
+        src, dst = np.unique(np.stack([src, dst]), axis=1)
+    ids = np.arange(n)
+    alive = np.ones(n, dtype=bool)
+    scc = np.full(n, -1)
+    log = []
+    for _ in range(max_outer):
+        if not (alive.any() or has_null):
+            break
+        has_null = False
+        color = ids.copy()
+
+        def color_step(frontier):
+            nonlocal color
+            new = color.copy()
+            hot = frontier[src]
+            np.minimum.at(new, dst[hot], color[src[hot]])
+            changed, color = new < color, new
+            return changed
+
+        colored = _until_stable(color_step, alive, max_iter)
+        log.append(["scc:color", max_iter, *colored])
+        in_scc = alive & (color == ids)
+        inner = color[src] == color[dst]
+        bsrc, bdst = src[inner], dst[inner]
+
+        def back_step(frontier):
+            hit = np.zeros(n, dtype=bool)
+            hit[bsrc[frontier[bdst]]] = True
+            changed = hit & ~in_scc
+            in_scc[hit] = True
+            return changed
+
+        swept = _until_stable(back_step, in_scc.copy(), max_iter)
+        log.append(["scc:backward", max_iter, *swept])
+        scc[in_scc] = color[in_scc]
+        alive &= ~in_scc
+        keep = alive[src] & alive[dst]
+        src, dst = src[keep], dst[keep]
+    else:
+        if alive.any() or has_null:
+            log.append(["scc", max_outer, 0, False])
+    return scc, log, False
+
+
 def pregel(
     edges: DataFrame,
     init: DataFrame,
@@ -310,7 +526,6 @@ def pregel(
     partial-aggregation order; exact min / count / bool-or steps
     narrow.
     """
-    from pyspark.sql import Observation
 
     def round_(state: DataFrame) -> DataFrame:
         if state is init:
@@ -454,6 +669,16 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     dominate: at least half the session's shuffle width of
     right-sized tasks. On a smaller graph the extra per-round stage
     costs more than the rounds it saves.
+
+    Small graphs run in one task (:func:`_in_one_task`): when
+    :func:`_fits_one_task` finds integer or string ids and an edge
+    list needing one ~1 MB task, a numpy copy of this loop runs all
+    rounds in one Python task, with the same labels, round count,
+    pointer-jump rule and ``max_iter`` warning. Rounds on such a graph
+    are bound by scheduling, not data: two jobs per call instead of
+    nine. The narrowed loop would run each round in one task anyway,
+    so no task holds more than before. Missing stats or a bigger
+    graph take the distributed loop above.
     """
     # NOT distinct'ed: duplicate edges send duplicate min-messages,
     # which the per-vertex min() absorbs — a distinct here would cost
@@ -465,6 +690,9 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     # column-pruned scan of the (not yet doubled) edge frame.
     parts = _edge_partitions(edges)
     jump = parts * 2 >= shuffle_partitions(edges.sparkSession)
+    if _fits_one_task(edges):
+        kernel = partial(_cc_kernel, max_iter=max_iter, jump=jump)
+        return _in_one_task(edges, "component", kernel, "warn")
     sym = _pinned(_symmetrized(edges), parts, "src")
 
     init = (
@@ -1235,7 +1463,17 @@ def strongly_connected_components(
     label) pairs. Worst case (a long path) peels one SCC per outer
     round — the classic FW-BW bound; real graphs with a few large
     SCCs settle in a handful of outer rounds.
+
+    Small graphs run in one task (:func:`_in_one_task`), under the
+    rule :func:`connected_components` states: a numpy copy of these
+    loops runs every inner and outer round in one Python task, with
+    the same labels, round counts and ``max_iter`` / ``max_outer`` /
+    ``on_max_iter`` behaviour, in two jobs per call where the
+    distributed loops run about thirty.
     """
+    if _fits_one_task(edges, doubled=False):
+        kernel = partial(_scc_kernel, max_outer=max_outer, max_iter=max_iter)
+        return _in_one_task(edges, "scc", kernel, on_max_iter)
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     verts = (
         e.select(F.col("src").alias("id"))

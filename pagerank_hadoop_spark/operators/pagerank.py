@@ -332,6 +332,23 @@ def pagerank(
     return ranks
 
 
+def _rank_layout(
+    edges: DataFrame, vertices: DataFrame | None, max_fanout: int | None
+) -> tuple[DataFrame, int]:
+    """The static side of a rank run over ``edges``: the
+    :func:`_laid_out` adjacency (a row for every vertex of
+    ``vertices``, all endpoints when None) with its ``outdeg``, and
+    N."""
+    if vertices is None:
+        vertices = _vertices(edges)
+    adjacency, n = _laid_out(
+        _with_dangling(adjacency_from_edges(edges), vertices), max_fanout
+    )
+    if n and not max_fanout:  # a chunked adjacency carries the true outdeg
+        adjacency = adjacency.withColumn("outdeg", F.size("outlinks"))
+    return adjacency, n
+
+
 def pagerank_with_n(
     edges: DataFrame,
     *,
@@ -374,15 +391,9 @@ def pagerank_with_n(
     frames, so results can differ from the unsalted run in the last
     ulp (partial sums regroup); the registry entries run unchunked.
     """
-    if vertices is None:
-        vertices = _vertices(edges)
-    adjacency, n = _laid_out(
-        _with_dangling(adjacency_from_edges(edges), vertices), max_fanout
-    )
+    adjacency, n = _rank_layout(edges, vertices, max_fanout)
     if n == 0:
         return edges.sparkSession.createDataFrame([], _NO_RANKS), 0
-    if not max_fanout:  # a chunked adjacency carries the true outdeg
-        adjacency = adjacency.withColumn("outdeg", F.size("outlinks"))
     teleport = (1.0 - damping) / n
     seed = 1.0 / n if init_ranks is None else init_ranks.select("id", "rank")
     if parity:
@@ -429,6 +440,32 @@ def pagerank_with_n(
     if isinstance(seed, float):
         seed = ids.select("id", F.lit(seed).alias("rank"))
     return _rank_loop(adjacency, corrected, seed, n_iter, 1, None), n
+
+
+def pagerank_snapshots(edges: DataFrame, iters):
+    """Yield ``(k, ranks, N)`` after each ``k`` of ``iters``
+    (ascending) rounds of ONE parity run, the way the reference writes
+    its iteration-1 snapshot from inside its 8-round run
+    (``PageRank.java:480-487,492-497``): the adjacency is laid out and
+    N counted once, and each stretch of rounds resumes from the
+    previous snapshot's ranks on that same layout. Resuming is exact,
+    so each ``ranks`` equals :func:`pagerank_with_n`'s for
+    ``n_iter=k`` bit for bit. Each ``ranks`` is checkpointed lazily:
+    the caller's first action on it materializes it, and the next
+    stretch reads it instead of recomputing its rounds."""
+    adjacency, n = _rank_layout(edges, None, None)
+    if n == 0:
+        for k in iters:
+            yield k, edges.sparkSession.createDataFrame([], _NO_RANKS), 0
+        return
+    teleport = (1.0 - DAMPING) / n
+    step = _teleport_step(_uniform_contribs, teleport, DAMPING)
+    ranks, done = 1.0 / n, 0
+    for k in iters:
+        # 4: pagerank_with_n's default checkpoint interval
+        ranks = _rank_loop(adjacency, step, ranks, k - done, 4, teleport)
+        ranks, done = ranks.localCheckpoint(eager=False), k
+        yield k, ranks, n
 
 
 def top_ranks(

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import glob
+import importlib
 import os
 
 from pagerank_hadoop_spark.__main__ import main
@@ -72,6 +73,49 @@ def test_cli_snapshots_keep_titles_bare(spark, tmp_path):
         got = {ln.split("\t")[0] for ln in lines}
         assert got == set(titles), lines
         assert all(len(ln.split("\t")) == 2 for ln in lines)
+
+
+def test_cli_lays_out_once_and_matches_pagerank_with_n(spark, tmp_path, monkeypatch):
+    """The CLI's two snapshots come from one rank run: the adjacency
+    is laid out (and N counted) once per ``main``, and the iter-1 and
+    iter-8 Parquet rank tables equal ``pagerank_with_n``'s for
+    ``n_iter=1`` and ``n_iter=8``, compared float for float with
+    ``==``."""
+    from pagerank_hadoop_spark.__main__ import THRESHOLD_NUM
+    from pagerank_hadoop_spark.functions.wikitext import (
+        extract_links,
+        remove_red_links,
+    )
+    from pagerank_hadoop_spark.sources.wiki import parse_pages, read_pages
+
+    # the package re-exports a function named ``pagerank``; fetch the module
+    P = importlib.import_module("pagerank_hadoop_spark.operators.pagerank")
+
+    dump = tmp_path / "dump"
+    dump.mkdir()
+    hubs = ["H0", "H1", "H2"]
+    pages = [_page(h, "".join(f"[[{o}]]" for o in hubs if o != h)) for h in hubs]
+    for i in range(30):
+        links = [h for j, h in enumerate(hubs) if j == 0 or i % (j + 1) == 0]
+        pages.append(_page(f"S{i}", "".join(f"[[{h}]]" for h in links)))
+    (dump / "part0.xml").write_text("".join(pages))
+    out = tmp_path / "result"
+
+    calls, real = [], P._laid_out
+    monkeypatch.setattr(
+        P, "_laid_out", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    assert main([str(dump), str(out)]) == 0
+    assert len(calls) == 1
+
+    parsed = parse_pages(read_pages(spark, str(dump)))
+    edges = remove_red_links(extract_links(parsed), parsed)
+    for k in (1, 8):
+        ranks, n = P.pagerank_with_n(edges, n_iter=k, parity=True)
+        want = P.top_ranks(ranks, n, threshold=THRESHOLD_NUM / n).collect()
+        table = spark.read.parquet(str(out / f"pagerank_iter{k}.parquet"))
+        got = sorted(tuple(r) for r in table.collect())
+        assert got == sorted(tuple(r) for r in want) and got, k
 
 
 def test_registry_rotation_prefers_unchecked_oracle_backed(tmp_path):

@@ -613,12 +613,16 @@ def test_loop_shuffle_scope_semantics(spark):
     # it exists for auto-tuning platforms whose GET returns non-int)
 
 
-def test_scoped_loops_match_unscoped_results(spark, sf_dir):
+def test_scoped_loops_match_unscoped_results(spark, sf_dir, monkeypatch):
     """Bit-identical results under any loop width (the property that
     makes the scope hash-safe for the order-insensitive drivers):
     run connected_components with the scope engaged (default) and
-    with the session width forced so the scope no-ops, compare."""
+    with the session width forced so the scope no-ops, compare. The
+    graph fits one task, so the distributed loop is forced."""
+    from pagerank_hadoop_spark.operators import graph as G
     from pagerank_hadoop_spark.operators.graph import connected_components
+
+    monkeypatch.setattr(G, "_fits_one_task", lambda *a, **k: False)
 
     edges = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -642,14 +646,18 @@ def test_scoped_loops_match_unscoped_results(spark, sf_dir):
     assert scoped == narrow and scoped
 
 
-def test_scc_width_invariant(spark, sf_dir):
+def test_scc_width_invariant(spark, sf_dir, monkeypatch):
     """SCC (two nested pregels + outer recursion, all under one
     threaded loop width) returns identical components at any forced
     session width — a scope leak between the inner loops or into the
-    epilogue would surface here."""
+    epilogue would surface here. The graph fits one task, so the
+    distributed loop is forced."""
+    from pagerank_hadoop_spark.operators import graph as G
     from pagerank_hadoop_spark.operators.graph import (
         strongly_connected_components,
     )
+
+    monkeypatch.setattr(G, "_fits_one_task", lambda *a, **k: False)
 
     edges = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -734,11 +742,12 @@ _PIN_PATH = [(f"v{i}", f"v{i + 1}") for i in range(9)]
 _PIN_HITS_EDGES = [("h1", "a1"), ("h1", "a2"), ("h2", "a1")]
 
 
-def _pinned_loop_results(spark, tmp):
-    """``{loop: (sorted output rows, rounds)}`` for every graph loop on
-    the pin fixtures, read back from Parquet under ``tmp`` as queries
-    read their tables: the plan-size probe then sees a small graph, so
-    the loops run narrowed and cc runs without pointer jumping."""
+def _pinned_loop_results(spark, tmp, only=None):
+    """``{loop: (sorted output rows, rounds)}`` for every graph loop
+    (or the ``only`` ones) on the pin fixtures, read back from Parquet
+    under ``tmp`` as queries read their tables: the plan-size probe
+    then sees a small graph, so the loops run narrowed, cc runs
+    without pointer jumping, and cc and scc run in one task."""
     import os
 
     from pagerank_hadoop_spark import runtime_counters
@@ -769,6 +778,8 @@ def _pinned_loop_results(spark, tmp):
     }
     out = {}
     for name, run in runs.items():
+        if only is not None and name not in only:
+            continue
         runtime_counters.reset()
         rows = sorted(tuple(r) for r in run().collect())
         out[name] = (rows, runtime_counters.snapshot()["rounds"])
@@ -891,20 +902,185 @@ _PIN_GOLDEN = {
 }
 
 
-def test_every_graph_loop_pinned(spark, tmp_path):
+def test_every_graph_loop_pinned(spark, tmp_path, monkeypatch):
     """Exact output and round count of every graph loop, against
     goldens taken before the loops shared one driver. HITS floats are
-    compared with ``==``: the fixture keeps every sum order-free."""
+    compared with ``==``: the fixture keeps every sum order-free. cc
+    and scc are pinned on both paths: the one-task path these small
+    Parquet inputs take by default, and the distributed loop."""
+    from pagerank_hadoop_spark.operators import graph as G
+
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
     spark.conf.set(key, "8")  # cc's pointer-jump rule reads this width
     try:
-        got = _pinned_loop_results(spark, str(tmp_path))
+        one_task = _spy_one_task(monkeypatch)
+        got = _pinned_loop_results(spark, str(tmp_path / "default"))
+        assert one_task == ["component", "component", "scc"]
+        monkeypatch.setattr(G, "_fits_one_task", lambda *a, **k: False)
+        dist = _pinned_loop_results(
+            spark, str(tmp_path / "distributed"), ("cc", "cc_path", "scc")
+        )
+        assert one_task == ["component", "component", "scc"]
     finally:
         spark.conf.set(key, before)
     for name, (rows, rounds) in _PIN_GOLDEN.items():
         assert got[name][1] == rounds, name
         assert got[name][0] == rows, name
+    for name in dist:
+        assert dist[name] == _PIN_GOLDEN[name], name
+
+
+def _spy_one_task(monkeypatch) -> list:
+    """Record the label column of every one-task run from now on."""
+    from pagerank_hadoop_spark.operators import graph as G
+
+    calls, real = [], G._in_one_task
+    monkeypatch.setattr(
+        G, "_in_one_task", lambda e, col, *a: calls.append(col) or real(e, col, *a)
+    )
+    return calls
+
+
+def _on_path(monkeypatch, one_task: bool, run):
+    """``run()`` forced onto one path, as ``(sorted rows or the error,
+    rounds, non-convergence warnings)``. The plan-size probe reads a
+    small graph, so both paths derive the same loop width and cc the
+    same pointer-jump rule from it."""
+    import warnings
+
+    from pagerank_hadoop_spark import runtime_counters
+    from pagerank_hadoop_spark.operators import graph as G
+
+    with monkeypatch.context() as m:
+        calls = _spy_one_task(m)
+        m.setattr(G, "plan_bytes", lambda df: 1000)
+        m.setattr(G, "_fits_one_task", lambda *a, **k: one_task)
+        runtime_counters.reset()
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            try:
+                rows = sorted((tuple(r) for r in run().collect()), key=repr)
+            except G.PregelNotConverged as exc:
+                rows = f"raised: {exc}"
+        assert bool(calls) == one_task
+    msgs = [str(w.message) for w in caught if "no fixpoint" in str(w.message)]
+    return rows, runtime_counters.snapshot()["rounds"], msgs
+
+
+def test_one_task_and_distributed_paths_agree(spark, monkeypatch):
+    """cc and scc give the same rows, rounds and non-convergence
+    warnings or errors in one task as on the distributed loop."""
+    from pagerank_hadoop_spark.operators import graph as G
+
+    big = 2**53
+    fixtures = {
+        # non-ASCII and mixed case: code-point order is Spark's order
+        "strings": (
+            [("Zeta", "alpha"), ("alpha", "Ärger"), ("Ärger", "Zeta"),
+             ("école", "Émile"), ("Émile", "b"), ("b", "日本"),
+             ("日本", "école"), ("Bob", "bob"), ("B", "Bob")],
+            "src string, dst string",
+        ),
+        "longs_above_2_53": (
+            [(big + 1, big + 3), (big + 3, big + 1), (2**62, big + 1),
+             (5, 2**62), (2**63 - 1, 5), (-(2**62), 2**63 - 1)],
+            "src long, dst long",
+        ),
+        "null_strings": (
+            [("a", "b"), ("b", None), (None, "c"), ("c", "a"), (None, None),
+             ("d", None)],
+            "src string, dst string",
+        ),
+        "null_longs": (
+            [(big + 1, None), (big + 1, big + 2), (big + 2, big + 1),
+             (None, 7)],
+            "src long, dst long",
+        ),
+        "only_nulls": ([(None, None)], "src int, dst int"),
+        "loops_and_dups": (
+            [(1, 1), (1, 2), (1, 2), (2, 1), (3, 3), (2, 3), (2, 3)],
+            "src int, dst int",
+        ),
+        "empty": ([], "src long, dst long"),
+    }
+    path = [(i, i + 1) for i in range(8)]
+    runs = {}
+    for name, (rows, schema) in fixtures.items():
+        edges = spark.createDataFrame(rows, schema)
+        runs[f"cc/{name}"] = lambda e=edges: G.connected_components(e)
+        runs[f"scc/{name}"] = lambda e=edges: G.strongly_connected_components(e)
+    edges = spark.createDataFrame(path, "src long, dst long")
+    runs["cc/path_over_max_iter"] = lambda: G.connected_components(edges, max_iter=3)
+    for mode in ("warn", "raise"):
+        runs[f"scc/path_over_max_iter/{mode}"] = lambda m=mode: (
+            G.strongly_connected_components(edges, max_iter=3, on_max_iter=m)
+        )
+        runs[f"scc/path_over_max_outer/{mode}"] = lambda m=mode: (
+            G.strongly_connected_components(edges, max_outer=2, on_max_iter=m)
+        )
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        for name, run in runs.items():
+            got = [_on_path(monkeypatch, p, run) for p in (True, False)]
+            assert got[0] == got[1], name
+        # a session two tasks wide turns cc's pointer jump on
+        spark.conf.set(key, "2")
+        got = [
+            _on_path(monkeypatch, p, lambda: G.connected_components(edges))
+            for p in (True, False)
+        ]
+    finally:
+        spark.conf.set(key, before)
+    assert got[0] == got[1]
+    assert got[0][1] == 5  # 9 hops in 4 changing rounds, then a stable one
+    warned = _on_path(monkeypatch, True, runs["cc/path_over_max_iter"])
+    assert warned[1] == 3 and len(warned[2]) == 1
+    raised = _on_path(monkeypatch, True, runs["scc/path_over_max_outer/raise"])
+    assert raised[0].startswith("raised: scc: no fixpoint after max_iter=2")
+    nulls = _on_path(monkeypatch, True, runs["cc/null_longs"])
+    assert nulls[0] == sorted(
+        [(None, None), (7, 7), (big + 1, big + 1), (big + 2, big + 1)], key=repr
+    )
+
+
+def test_one_task_probe_fails_closed(spark, monkeypatch):
+    """The one-task path needs plan stats that fit one ~1 MB task
+    before the session-width clamp, and integer or string ids; any
+    other case takes the distributed loop."""
+    from pagerank_hadoop_spark.operators import graph as G
+
+    edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
+    size = {"bytes": None}
+    monkeypatch.setattr(G, "plan_bytes", lambda df: size["bytes"])
+    assert not G._fits_one_task(edges)
+    assert not G._fits_one_task(edges, doubled=False)
+    size["bytes"] = (1 << 20) - 1  # doubled, just under two tasks' worth
+    assert G._fits_one_task(edges)
+    size["bytes"] = 1 << 20
+    assert not G._fits_one_task(edges) and G._fits_one_task(edges, doubled=False)
+    size["bytes"] = 1000
+    for types in (("double", "double"), ("long", "string"), ("int", "long"),
+                  ("binary", "binary"), ("decimal(20,0)", "decimal(20,0)")):
+        other = spark.range(2).selectExpr(
+            f"CAST(CAST(id AS string) AS {types[0]}) AS src",
+            f"CAST(CAST(id AS string) AS {types[1]}) AS dst",
+        )
+        assert not G._fits_one_task(other), types
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    calls = _spy_one_task(monkeypatch)
+    try:
+        for size["bytes"] in (None, 1 << 30):
+            spark.conf.set(key, "1")  # clamps the loop width to one task
+            cc = {tuple(r) for r in G.connected_components(edges).collect()}
+            scc = {tuple(r) for r in G.strongly_connected_components(edges).collect()}
+            assert cc == {(1, 1), (2, 1)} and scc == {(1, 1), (2, 1)}
+    finally:
+        spark.conf.set(key, before)
+    assert calls == []
 
 
 def test_round_driver_keeps_float_loops_at_session_width(spark):
