@@ -106,8 +106,11 @@ def main(argv: list[str]) -> int:
     edges = remove_red_links(extract_links(parsed), parsed).cache()
 
     for iters, ranks, n in pagerank_snapshots(edges, SNAPSHOT_ITERS):
+        # no kept link (N = 0): the reference's 5.0/N is +Infinity,
+        # which keeps no row, so both snapshots are written empty
+        threshold = THRESHOLD_NUM / n if n else float("inf")
         # cached: both snapshots below are written from one computation
-        out = top_ranks(ranks, n, threshold=THRESHOLD_NUM / n).cache()
+        out = top_ranks(ranks, n, threshold=threshold).cache()
         tsv_dir = os.path.join(output_dir, f"PageRank.iter{iters}.out")
         # bare ``title\trank`` text lines, as the reference writes them
         # (a CSV writer would quote and escape titles holding '"');

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import json
 import warnings
-from contextlib import contextmanager
 from functools import partial, reduce
 
 import numpy as np
@@ -26,7 +25,6 @@ from pyspark.sql.types import (
     ArrayType,
     DoubleType,
     FloatType,
-    IntegralType,
     MapType,
     StringType,
     StructType,
@@ -34,11 +32,13 @@ from pyspark.sql.types import (
 
 from pagerank_hadoop_spark import runtime_counters
 from pagerank_hadoop_spark.operators.pagerank import (
+    _edge_tasks,
+    _fits_one_task,
+    _loop_shuffle_scope,
     loop_partitions,
     pagerank_with_n,
     shuffle_partitions,
 )
-from pagerank_hadoop_spark.session import plan_bytes
 
 
 class PregelNotConverged(RuntimeError):
@@ -56,18 +56,6 @@ def _nonconvergence(label: str, max_iter: int, on_max_iter: str) -> None:
         raise PregelNotConverged(msg)
     if on_max_iter != "ignore":
         warnings.warn(msg, RuntimeWarning, stacklevel=4)
-
-
-def _edge_tasks(edges: DataFrame, doubled: bool = True) -> int | None:
-    """Tasks a loop over ``edges`` needs at ~1 MB each, from Catalyst's
-    plan-size estimate (no job), before any clamp to the session
-    width; ``None`` when the plan reports no stats."""
-    size = plan_bytes(edges)
-    if size is None:
-        return None
-    if doubled:
-        size *= 2  # symmetrized edge list
-    return size // (1 << 20)
 
 
 def _edge_partitions(edges: DataFrame, doubled: bool = True) -> int:
@@ -88,24 +76,6 @@ def _edge_partitions(edges: DataFrame, doubled: bool = True) -> int:
     if need is None:  # stats unavailable: keep the session default
         return shuffle_parts
     return loop_partitions(need, shuffle_parts)
-
-
-def _fits_one_task(edges: DataFrame, doubled: bool = True) -> bool:
-    """Whether a loop over ``edges`` may run whole in one task
-    (:func:`_in_one_task`): both id columns of one integer type, or
-    both Spark's binary-ordered string type, and an edge list that
-    needs at most one task under :func:`_edge_partitions`' rule. The
-    need is read before that rule clamps it to the session width, so
-    ``spark.sql.shuffle.partitions=1`` cannot admit a big graph. No
-    stats, or any other id type, fails closed to the distributed
-    loop."""
-    t = edges.schema["src"].dataType
-    if t != edges.schema["dst"].dataType or not (
-        isinstance(t, IntegralType) or t == StringType()
-    ):
-        return False
-    need = _edge_tasks(edges, doubled)
-    return need is not None and need <= 1  # loop_partitions floors at 1
 
 
 def _symmetrized(e: DataFrame, *cols: str) -> DataFrame:
@@ -149,95 +119,6 @@ def _score_join(
     return e.join(
         scores, (e[key] == scores.id) & (e["__salt"] == scores["__salt"])
     )
-
-
-@contextmanager
-def _loop_shuffle_scope(spark, parts: int | None):
-    """Scope ``spark.sql.shuffle.partitions`` to a loop's
-    stats-derived task count (:func:`_edge_partitions`) for the
-    duration of its per-round jobs. AQE coalesces one-shot queries'
-    tiny shuffles by bytes, but a fixpoint loop pays the map-side
-    width and checkpoint-materialization task count EVERY round, and
-    those are set by the session conf, not by AQE — on a small graph
-    32-wide rounds are pure scheduling overhead (measured -33%/-36%
-    on scc/bfs wall at sf0.1). At production scale the stats-derived
-    count reaches the session default and this is a no-op; it only
-    ever narrows, never widens. Restores the session value even on
-    error.
-
-    The width may only move results when a round's aggregate depends
-    on partial-aggregation order, i.e. when it sums floats. The round
-    driver (:func:`_fixpoint`) enforces that: it opens this scope only
-    when no field of the round frame is float or double, so float-sum
-    loops (hits, and PageRank's own loop) run at the session setting
-    and their last-ulp sums cannot move under the oracle gate; exact
-    min / mode / count / bool-or loops on ids narrow.
-
-    NOT thread-safe: this mutates the session-global conf, so any
-    concurrent query on the same SparkSession silently plans its
-    shuffles at the narrowed width for the scope's duration (results
-    unaffected — the conf is a task-count knob — but a wide query
-    would run under-parallel). The repo's bench/driver/test paths are
-    single-threaded per session; wrap concurrent use in a dedicated
-    child session (``spark.newSession()``) instead."""
-    if parts is None:
-        yield
-        return
-    key = "spark.sql.shuffle.partitions"
-    try:
-        current = int(spark.conf.get(key, "32"))
-    except (ValueError, TypeError):  # e.g. "auto"
-        yield
-        return
-    if parts >= current:
-        yield
-        return
-    # In the narrowed (small-graph) regime the loop's wall is driver
-    # planning, not data: every round pays a full Catalyst pass at its
-    # localCheckpoint (toRdd) plus one at the fixpoint count. AQE's
-    # per-stage re-planning and the runtime bloom-filter injection
-    # rule are pure overhead on 1-3-partition rounds (measured ~25%
-    # of per-round wall at sf0.1) and physically cannot help there —
-    # AQE coalesces by bytes on already-tiny exchanges and the bloom
-    # rule never fires on checkpointed-RDD join sides (no scan to
-    # prune). Scope them off WITH the width narrowing: the same
-    # stats-derived condition that says "this graph is small" says
-    # "these rules cannot pay here". At production scale parts >=
-    # current, the scope is a no-op, and AQE skew-splitting + runtime
-    # filters stay on.
-    # (A/B evidence, interleaved same-box 2x2 at sf0.1: scc 7.7/8.4 s
-    # lean vs 13.0/10.4 s session-AQE, sssp 7.8/8.4 vs 12.5/8.6,
-    # k_truss_precore 3.8/4.4 vs 7.1/4.5; mis/lpa neutral.)
-    # The same regime also stops PLANNING broadcast joins. A lazy
-    # localCheckpoint's toRdd blocks on every BroadcastExchange build
-    # in the round's plan (driver collect + rebroadcast, ~2 driver
-    # round trips per join per round), while a shuffle join over
-    # 1-3-partition loop state is a tiny exchange that executes
-    # lazily inside the round's one counting job.
-    # All three knobs are physical-only: join strategy and AQE cannot
-    # change which rows meet, and the loops admitted to this scope
-    # aggregate order-insensitively (min / count / mode / bool-or),
-    # so results cannot move.
-    aqe_key = "spark.sql.adaptive.enabled"
-    bloom_key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
-    bcast_key = "spark.sql.autoBroadcastJoinThreshold"
-    prev_aqe = spark.conf.get(aqe_key, "true")
-    prev_bloom = spark.conf.get(bloom_key, "true")
-    prev_bcast = spark.conf.get(bcast_key, "10485760b")
-    # every set happens INSIDE the try: if any one throws, finally
-    # restores whatever was already applied (prev values are captured
-    # above) instead of leaving the session narrowed for its lifetime
-    try:
-        spark.conf.set(key, str(parts))
-        spark.conf.set(aqe_key, "false")
-        spark.conf.set(bloom_key, "false")
-        spark.conf.set(bcast_key, "-1")
-        yield
-    finally:
-        spark.conf.set(key, str(current))
-        spark.conf.set(aqe_key, prev_aqe)
-        spark.conf.set(bloom_key, prev_bloom)
-        spark.conf.set(bcast_key, prev_bcast)
 
 
 def _holds_float(t) -> bool:

@@ -40,6 +40,24 @@ expression:
 The expressions are not merged: ``rank/outdeg`` and ``rank*wfrac``
 differ in the last ulp, and 9-dp oracle rounding can flip on that.
 
+One summation order. The layout is sorted by id within each
+partition, and a layout narrower than the session runs its rounds at
+its own width with the rank side as the hash-join build side, so each
+vertex adds its incoming contributions in (source id, target id)
+order, whatever the session width or core count (one sequential sum on
+a one-partition layout; on a wider one, one per layout partition,
+then merged). A small parity run
+with string ids (:func:`_fits_one_task`, which fails closed) runs all
+its rounds in ONE Python task instead (:func:`_ranks_in_one_task`):
+a numpy loop that adds in the same order, so its ranks equal the
+distributed loop's bit for bit. Its rounds are bound by scheduling,
+not data: one job runs them all. Resumed, chunked, corrected,
+personalized and weighted runs stay distributed.
+
+The module also holds the small-graph probe (:func:`_fits_one_task`)
+and the loop-width scope (:func:`_loop_shuffle_scope`) that the graph
+loops of ``operators/graph.py`` share.
+
 Scale notes (100 TB posture):
 
 * The per-iteration join ``adjacency ⋈ ranks`` shuffles both sides on
@@ -58,9 +76,15 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from contextlib import contextmanager
+from functools import partial
+
+import numpy as np
+from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.types import IntegralType, StringType
 
 from pagerank_hadoop_spark import runtime_counters
+from pagerank_hadoop_spark.session import plan_bytes
 
 DAMPING = 0.85
 
@@ -92,6 +116,134 @@ def loop_partitions(need: int, shuffle_parts: int) -> int:
 def _iter_partitions(n: int, shuffle_parts: int) -> int:
     """PageRank's state width: ~ROWS_PER_ITER_TASK vertices per task."""
     return loop_partitions(-(-n // ROWS_PER_ITER_TASK), shuffle_parts)
+
+
+def _edge_tasks(edges: DataFrame, doubled: bool = True) -> int | None:
+    """Tasks a loop over ``edges`` needs at ~1 MB each, from Catalyst's
+    plan-size estimate (no job), before any clamp to the session
+    width; ``None`` when the plan reports no stats."""
+    size = plan_bytes(edges)
+    if size is None:
+        return None
+    if doubled:
+        size *= 2  # symmetrized edge list
+    return size // (1 << 20)
+
+
+def _fits_one_task(frame: DataFrame, doubled: bool = True) -> bool:
+    """Whether a loop over ``frame`` may run whole in one task
+    (``graph._in_one_task``, :func:`_ranks_in_one_task`): its id
+    columns — an edge list's ``src`` and ``dst``, or a vertex list's
+    first column — all of one integer type, or all Spark's
+    binary-ordered string type, and at most one task of need under
+    ``graph._edge_partitions``' rule. The need is read before that
+    rule clamps it to the session width, so
+    ``spark.sql.shuffle.partitions=1`` cannot admit a big graph. No
+    stats, or any other id type, fails closed to the distributed
+    loop."""
+    cols = ("src", "dst") if "src" in frame.columns else frame.columns[:1]
+    types = {frame.schema[c].dataType for c in cols}
+    if len(types) != 1:
+        return False
+    (t,) = types
+    if not (isinstance(t, IntegralType) or t == StringType()):
+        return False
+    need = _edge_tasks(frame, doubled)
+    return need is not None and need <= 1  # loop_partitions floors at 1
+
+
+@contextmanager
+def _loop_shuffle_scope(spark, parts: int | None):
+    """Scope ``spark.sql.shuffle.partitions`` to a loop's
+    stats-derived task count (``graph._edge_partitions``, or a rank
+    layout's width) for the
+    duration of its per-round jobs. AQE coalesces one-shot queries'
+    tiny shuffles by bytes, but a fixpoint loop pays the map-side
+    width and checkpoint-materialization task count EVERY round, and
+    those are set by the session conf, not by AQE — on a small graph
+    32-wide rounds are pure scheduling overhead (measured -33%/-36%
+    on scc/bfs wall at sf0.1). At production scale the stats-derived
+    count reaches the session default and this is a no-op; it only
+    ever narrows, never widens. Restores the session value even on
+    error.
+
+    The width may only move results when a round's aggregate depends
+    on partial-aggregation order, i.e. when it sums floats. Exact
+    min / mode / count / bool-or loops on ids narrow freely. The graph
+    round driver (``graph._fixpoint``) opens this scope only when no
+    field of its round frame is float or double, so hits keeps the
+    session setting.
+    PageRank (:func:`_rank_loop`) may narrow: its map side is the
+    fixed :func:`_laid_out` layout, streamed in id order through every
+    round's partial sum, and narrowing to the layout's own width is
+    what keeps a round from re-hashing it into session-width buckets.
+
+    NOT thread-safe: this mutates the session-global conf, so any
+    concurrent query on the same SparkSession silently plans its
+    shuffles at the narrowed width for the scope's duration (results
+    unaffected — the conf is a task-count knob — but a wide query
+    would run under-parallel). The repo's bench/driver/test paths are
+    single-threaded per session; wrap concurrent use in a dedicated
+    child session (``spark.newSession()``) instead."""
+    if parts is None:
+        yield
+        return
+    key = "spark.sql.shuffle.partitions"
+    try:
+        current = int(spark.conf.get(key, "32"))
+    except (ValueError, TypeError):  # e.g. "auto"
+        yield
+        return
+    if parts >= current:
+        yield
+        return
+    # In the narrowed (small-graph) regime the loop's wall is driver
+    # planning, not data: every round pays a full Catalyst pass at its
+    # localCheckpoint (toRdd) plus one at the fixpoint count. AQE's
+    # per-stage re-planning and the runtime bloom-filter injection
+    # rule are pure overhead on 1-3-partition rounds (measured ~25%
+    # of per-round wall at sf0.1) and physically cannot help there —
+    # AQE coalesces by bytes on already-tiny exchanges and the bloom
+    # rule never fires on checkpointed-RDD join sides (no scan to
+    # prune). Scope them off WITH the width narrowing: the same
+    # stats-derived condition that says "this graph is small" says
+    # "these rules cannot pay here". At production scale parts >=
+    # current, the scope is a no-op, and AQE skew-splitting + runtime
+    # filters stay on.
+    # (A/B evidence, interleaved same-box 2x2 at sf0.1: scc 7.7/8.4 s
+    # lean vs 13.0/10.4 s session-AQE, sssp 7.8/8.4 vs 12.5/8.6,
+    # k_truss_precore 3.8/4.4 vs 7.1/4.5; mis/lpa neutral.)
+    # The same regime also stops PLANNING broadcast joins. A lazy
+    # localCheckpoint's toRdd blocks on every BroadcastExchange build
+    # in the round's plan (driver collect + rebroadcast, ~2 driver
+    # round trips per join per round), while a shuffle join over
+    # 1-3-partition loop state is a tiny exchange that executes
+    # lazily inside the round's one counting job.
+    # All three knobs are physical-only: join strategy and AQE cannot
+    # change which rows meet, and the loops admitted to this scope
+    # either aggregate order-insensitively (min / count / mode /
+    # bool-or) or sum in their fixed layout's order (PageRank), so
+    # results cannot move.
+    aqe_key = "spark.sql.adaptive.enabled"
+    bloom_key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
+    bcast_key = "spark.sql.autoBroadcastJoinThreshold"
+    prev_aqe = spark.conf.get(aqe_key, "true")
+    prev_bloom = spark.conf.get(bloom_key, "true")
+    prev_bcast = spark.conf.get(bcast_key, "10485760b")
+    # every set happens INSIDE the try: if any one throws, finally
+    # restores whatever was already applied (prev values are captured
+    # above) instead of leaving the session narrowed for its lifetime
+    try:
+        spark.conf.set(key, str(parts))
+        spark.conf.set(aqe_key, "false")
+        spark.conf.set(bloom_key, "false")
+        spark.conf.set(bcast_key, "-1")
+        yield
+    finally:
+        spark.conf.set(key, str(current))
+        spark.conf.set(aqe_key, prev_aqe)
+        spark.conf.set(bloom_key, prev_bloom)
+        spark.conf.set(bcast_key, prev_bcast)
 
 
 def adjacency_from_edges(edges: DataFrame, dedup: bool = True) -> DataFrame:
@@ -196,24 +348,30 @@ def _laid_out(
     adjacency: DataFrame, max_fanout: int | None = None
 ) -> tuple[DataFrame, int]:
     """Lay the static side of every round's join out once: partition
-    on id, cache, count N (the driver-side scalar of
-    ``PageRank.java:470-471``), then right-size. Now that N is known,
-    a graph far smaller than shuffle_parts x ROWS_PER_ITER_TASK is
-    re-laid (tiny, already materialized) onto fewer partitions, so the
-    loop isn't dominated by empty-task scheduling. (The rank-side
-    shuffles stay at shuffle_parts and AQE coalesces them at runtime;
-    what AQE can NOT fix is the partition count of the cached static
-    side, which sets the task count of every round's join.)
+    on id, sort each partition by id, cache, count N (the driver-side
+    scalar of ``PageRank.java:470-471``), then right-size. Now that N
+    is known, a graph far smaller than shuffle_parts x
+    ROWS_PER_ITER_TASK is re-laid (tiny, already materialized) onto
+    fewer partitions, so the loop isn't dominated by empty-task
+    scheduling; :func:`_rank_loop` then runs its rounds at that width.
+    The id sort fixes the order in which every round streams the
+    adjacency into its partial sums (:func:`_rank_loop`).
     ``max_fanout`` splits hot rows at layout time instead
     (:func:`_chunked_adjacency`). Returns ``(adjacency, N)``."""
     shuffle_parts = shuffle_partitions(adjacency.sparkSession)
-    cached = adjacency.repartition(shuffle_parts, "id").cache()
+    cached = (
+        adjacency.repartition(shuffle_parts, "id").sortWithinPartitions("id").cache()
+    )
     n = cached.count()
     parts = _iter_partitions(n, shuffle_parts)
     if n and max_fanout:
         laid = _chunked_adjacency(cached, max_fanout, parts)
     elif n and parts < shuffle_parts:
-        laid = cached.repartition(parts, "id").localCheckpoint(eager=True)
+        laid = (
+            cached.repartition(parts, "id")
+            .sortWithinPartitions("id")
+            .localCheckpoint(eager=True)
+        )
     else:
         return cached, n
     cached.unpersist()
@@ -253,35 +411,54 @@ def _rank_loop(
     frames, so its persistent layout is the join layout and hub chunks
     never re-co-locate.
 
+    A layout narrower than the session runs every round, and the
+    result, at the layout's width (:func:`_loop_shuffle_scope`), and
+    each round's join builds its hash table from the rank side
+    (``shuffle_hash``). The adjacency is then never re-shuffled: it
+    streams through the round's partial sums in its id-sorted layout
+    order, so each vertex adds its incoming contributions in (source
+    id, target id) order whatever the session width — on a
+    one-partition layout as one sequential sum, which
+    :func:`_rank_frame` repeats bit for bit. Spark reads the width
+    when a plan runs, so the result is materialized inside the scope
+    with one eager ``localCheckpoint``.
+
     Every ``checkpoint_interval`` rounds but the last, the state is
     truncated with a LAZY ``localCheckpoint`` so the plan doesn't grow
     unboundedly: the final action materializes the chain in order
     anyway, and an eager barrier would cost one extra synchronous job
     round-trip per interval."""
+    spark = adjacency.sparkSession
+    parts = adjacency.rdd.getNumPartitions()
+    narrow = parts < shuffle_partitions(spark)
     salted = "__salt" in adjacency.columns
     ranks = seed
-    for i in range(n_iter):
+    with _loop_shuffle_scope(spark, parts):
+        for i in range(n_iter):
+            if isinstance(ranks, float):
+                rows = adjacency.withColumn("rank", F.lit(ranks))
+            else:
+                side = _with_salt_replicas(ranks) if salted else ranks
+                rows = adjacency.join(
+                    side.hint("shuffle_hash") if narrow else side,
+                    ["id", "__salt"] if salted else "id",
+                    "inner" if absent is None else "left",
+                )
+                if absent is not None:
+                    rows = rows.withColumn("rank", F.coalesce("rank", F.lit(absent)))
+            ranks = step(rows, ranks)
+            runtime_counters.note_round(ranks)
+            if (i + 1) % checkpoint_interval == 0 and i + 1 < n_iter:
+                ranks = ranks.localCheckpoint(eager=False)
         if isinstance(ranks, float):
-            rows = adjacency.withColumn("rank", F.lit(ranks))
+            out = _ids(adjacency).select("id", F.lit(ranks).alias("rank"))
+        elif absent is None:
+            out = ranks
         else:
-            rows = adjacency.join(
-                _with_salt_replicas(ranks) if salted else ranks,
-                ["id", "__salt"] if salted else "id",
-                "inner" if absent is None else "left",
+            out = _ids(adjacency).join(ranks, "id", "left").select(
+                "id", F.coalesce("rank", F.lit(absent)).alias("rank")
             )
-            if absent is not None:
-                rows = rows.withColumn("rank", F.coalesce("rank", F.lit(absent)))
-        ranks = step(rows, ranks)
-        runtime_counters.note_round(ranks)
-        if (i + 1) % checkpoint_interval == 0 and i + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=False)
-    if isinstance(ranks, float):
-        return _ids(adjacency).select("id", F.lit(ranks).alias("rank"))
-    if absent is None:
-        return ranks
-    return _ids(adjacency).join(ranks, "id", "left").select(
-        "id", F.coalesce("rank", F.lit(absent)).alias("rank")
-    )
+        return out.localCheckpoint(eager=True) if narrow else out
 
 
 def _teleport_step(contribs, teleport: float, damping: float):
@@ -390,7 +567,15 @@ def pagerank_with_n(
     per-iteration join on (id, salt) against salt-replicated rank
     frames, so results can differ from the unsalted run in the last
     ulp (partial sums regroup); the registry entries run unchunked.
+
+    A parity run with neither ``init_ranks`` nor ``max_fanout`` on a
+    small string-id graph runs in one task (:func:`_ranks_in_one_task`),
+    with the same ranks, N and round count.
     """
+    one_task = parity and init_ranks is None and not max_fanout
+    if one_task and _small_string_graph(edges, vertices):
+        ((_, ranks),), n = _ranks_in_one_task(edges, vertices, (n_iter,), damping)
+        return ranks, n
     adjacency, n = _rank_layout(edges, vertices, max_fanout)
     if n == 0:
         return edges.sparkSession.createDataFrame([], _NO_RANKS), 0
@@ -452,7 +637,15 @@ def pagerank_snapshots(edges: DataFrame, iters):
     so each ``ranks`` equals :func:`pagerank_with_n`'s for
     ``n_iter=k`` bit for bit. Each ``ranks`` is checkpointed lazily:
     the caller's first action on it materializes it, and the next
-    stretch reads it instead of recomputing its rounds."""
+    stretch reads it instead of recomputing its rounds. A small
+    string-id graph runs all rounds in one task
+    (:func:`_ranks_in_one_task`) before the first yield."""
+    iters = tuple(iters)
+    if iters and _small_string_graph(edges, None):
+        snaps, n = _ranks_in_one_task(edges, None, iters, DAMPING)
+        for k, ranks in snaps:
+            yield k, ranks, n
+        return
     adjacency, n = _rank_layout(edges, None, None)
     if n == 0:
         for k in iters:
@@ -466,6 +659,109 @@ def pagerank_snapshots(edges: DataFrame, iters):
         ranks = _rank_loop(adjacency, step, ranks, k - done, 4, teleport)
         ranks, done = ranks.localCheckpoint(eager=False), k
         yield k, ranks, n
+
+
+def _small_string_graph(edges: DataFrame, vertices: DataFrame | None) -> bool:
+    """Whether a parity run may take :func:`_ranks_in_one_task`: string
+    ids, and ``edges`` (and ``vertices`` when given) fit one task by
+    :func:`_fits_one_task`, which fails closed on missing stats."""
+    if vertices is not None and not (
+        vertices.schema[0].dataType == StringType()
+        and _fits_one_task(vertices, doubled=False)
+    ):
+        return False
+    return edges.schema["src"].dataType == StringType() and _fits_one_task(
+        edges, doubled=False
+    )
+
+
+_RANK_ROWS = "k int, id string, rank double"
+
+
+def _ranks_in_one_task(
+    edges: DataFrame, vertices: DataFrame | None, iters: tuple, damping: float
+) -> tuple[list[tuple[int, DataFrame]], int]:
+    """The parity loop for a small graph, all rounds in ONE Python task:
+    ``([(k, ranks) for k in iters], N)``.
+
+    The adjacency (:func:`_rank_layout`'s, without the layout) is
+    built at width 1 and sent through one
+    ``groupBy(lit(0)).applyInPandas`` group, where :func:`_rank_frame`
+    runs the rounds and emits ``(k, id, rank)`` for each ``k``. The
+    result is checkpointed lazily, and one ``observe(...).count()``
+    both materializes it and reads N, so the whole run is one job.
+    ``runtime_counters.note_round`` then runs once per round, so
+    ``rounds_total`` keeps its meaning. With N = 0 no group runs and
+    no round is counted, as on the distributed path."""
+    spark = edges.sparkSession
+    obs = Observation()
+    with _loop_shuffle_scope(spark, 1):
+        adjacency = _with_dangling(
+            adjacency_from_edges(edges),
+            _vertices(edges) if vertices is None else vertices,
+        )
+        # aliased: a bare integer literal would read as a group-by
+        # ordinal. coalesce(1) changes no row; it makes the frame report
+        # one partition, so a caller's global sort needs no range shuffle
+        out = (
+            adjacency.groupBy(F.lit(0).alias("__task"))
+            .applyInPandas(partial(_rank_frame, iters, damping), _RANK_ROWS)
+            .coalesce(1)
+            .localCheckpoint(eager=False)
+        )
+        out.observe(obs, F.count_if(F.col("k") == iters[0]).alias("n")).count()
+    n = obs.get["n"]
+    for _ in range(iters[-1] if n else 0):
+        runtime_counters.note_round()
+    snaps = [(k, out.where(F.col("k") == k).select("id", "rank")) for k in iters]
+    return snaps, n
+
+
+def _rank_frame(iters: tuple, damping: float, pdf):
+    """The one task's body: the parity rounds over the adjacency rows
+    ``pdf`` (``id``, ``outlinks``), the same float operations as
+    :func:`_uniform_contribs` and :func:`_teleport_step`, in the order
+    the distributed loop adds them (:func:`_rank_loop`).
+
+    Ids are factorized with ``np.unique``, which sorts, so code order
+    is id order (Python's code-point order on ``str`` equals Spark's
+    UTF-8 byte order). Contributions are sorted by (source, target)
+    code, and ``np.add.at`` adds each target's in that order, one at a
+    time from 0.0, as a one-partition partial sum does. A target
+    outside the vertex set still counts in its source's out-degree but
+    keeps no rank; the null id counts in N, sends and receives
+    nothing, and reads as the teleport rank after a round."""
+    import pandas as pd
+
+    n = len(pdf)
+    ids = pdf["id"].to_numpy(object)
+    real = pd.notna(ids)
+    uniq, code = np.unique(ids[real], return_inverse=True)
+    links = pdf["outlinks"].to_numpy(object)[real]
+    deg = np.fromiter(map(len, links), int, len(links))
+    outdeg = np.zeros(len(uniq), int)
+    outdeg[code] = deg
+    src = np.repeat(code, deg)
+    targets = np.concatenate([np.empty(0, object), *links])
+    dst = np.searchsorted(uniq, targets)
+    hit = dst < len(uniq)
+    hit[hit] = uniq[dst[hit]] == targets[hit]
+    order = np.lexsort((dst[hit], src[hit]))
+    src, dst = src[hit][order], dst[hit][order]
+    div = outdeg[src]
+    teleport = (1.0 - damping) / n
+    rank, null_rank = np.full(len(uniq), 1.0 / n), 1.0 / n
+    frames, done = [], 0
+    for k in iters:
+        for _ in range(k - done):
+            insum = np.zeros(len(uniq))
+            np.add.at(insum, dst, rank[src] / div)
+            rank, null_rank = teleport + damping * insum, teleport
+        done = k
+        frames.append(pd.DataFrame({"k": k, "id": uniq, "rank": rank}))
+        if not real.all():
+            frames.append(pd.DataFrame({"k": [k], "id": [None], "rank": [null_rank]}))
+    return pd.concat(frames, ignore_index=True)
 
 
 def top_ranks(

@@ -75,12 +75,30 @@ def test_cli_snapshots_keep_titles_bare(spark, tmp_path):
         assert all(len(ln.split("\t")) == 2 for ln in lines)
 
 
+def _pagerank_module():
+    # the package re-exports a function named ``pagerank``; fetch the module
+    return importlib.import_module("pagerank_hadoop_spark.operators.pagerank")
+
+
+def _outputs(spark, out) -> dict:
+    """Each snapshot's bytes and each rank table's sorted rows."""
+    got = {}
+    for k in (1, 8):
+        files = sorted(glob.glob(os.path.join(out, f"PageRank.iter{k}.out", "part-*")))
+        got[f"iter{k}.out"] = b"".join(open(f, "rb").read() for f in files)
+        table = spark.read.parquet(str(out / f"pagerank_iter{k}.parquet"))
+        assert table.columns == ["id", "rank"]
+        got[f"iter{k}.parquet"] = sorted(tuple(r) for r in table.collect())
+    return got
+
+
 def test_cli_lays_out_once_and_matches_pagerank_with_n(spark, tmp_path, monkeypatch):
-    """The CLI's two snapshots come from one rank run: the adjacency
-    is laid out (and N counted) once per ``main``, and the iter-1 and
-    iter-8 Parquet rank tables equal ``pagerank_with_n``'s for
-    ``n_iter=1`` and ``n_iter=8``, compared float for float with
-    ``==``."""
+    """The CLI's two snapshots come from one rank run, on either path:
+    distributed, the adjacency is laid out (and N counted) once per
+    ``main``; on a graph that fits one task, all rounds run in one
+    task and nothing is laid out. Either way the iter-1 and iter-8
+    Parquet rank tables equal ``pagerank_with_n``'s for ``n_iter=1``
+    and ``n_iter=8``, compared float for float with ``==``."""
     from pagerank_hadoop_spark.__main__ import THRESHOLD_NUM
     from pagerank_hadoop_spark.functions.wikitext import (
         extract_links,
@@ -88,9 +106,7 @@ def test_cli_lays_out_once_and_matches_pagerank_with_n(spark, tmp_path, monkeypa
     )
     from pagerank_hadoop_spark.sources.wiki import parse_pages, read_pages
 
-    # the package re-exports a function named ``pagerank``; fetch the module
-    P = importlib.import_module("pagerank_hadoop_spark.operators.pagerank")
-
+    P = _pagerank_module()
     dump = tmp_path / "dump"
     dump.mkdir()
     hubs = ["H0", "H1", "H2"]
@@ -99,23 +115,123 @@ def test_cli_lays_out_once_and_matches_pagerank_with_n(spark, tmp_path, monkeypa
         links = [h for j, h in enumerate(hubs) if j == 0 or i % (j + 1) == 0]
         pages.append(_page(f"S{i}", "".join(f"[[{h}]]" for h in links)))
     (dump / "part0.xml").write_text("".join(pages))
-    out = tmp_path / "result"
-
-    calls, real = [], P._laid_out
-    monkeypatch.setattr(
-        P, "_laid_out", lambda *a, **k: calls.append(1) or real(*a, **k)
-    )
-    assert main([str(dump), str(out)]) == 0
-    assert len(calls) == 1
 
     parsed = parse_pages(read_pages(spark, str(dump)))
     edges = remove_red_links(extract_links(parsed), parsed)
-    for k in (1, 8):
-        ranks, n = P.pagerank_with_n(edges, n_iter=k, parity=True)
-        want = P.top_ranks(ranks, n, threshold=THRESHOLD_NUM / n).collect()
-        table = spark.read.parquet(str(out / f"pagerank_iter{k}.parquet"))
-        got = sorted(tuple(r) for r in table.collect())
-        assert got == sorted(tuple(r) for r in want) and got, k
+    assert P._small_string_graph(edges, None)  # the default takes one task
+    for one_task in (True, False):
+        out = tmp_path / f"result-{one_task}"
+        layouts, one_task_runs = [], []
+        real_layout, real_run = P._laid_out, P._ranks_in_one_task
+        with monkeypatch.context() as m:
+            m.setattr(P, "_fits_one_task", lambda *a, **k: one_task)
+            m.setattr(
+                P, "_laid_out",
+                lambda *a, **k: layouts.append(1) or real_layout(*a, **k),
+            )
+            m.setattr(
+                P, "_ranks_in_one_task",
+                lambda *a, **k: one_task_runs.append(1) or real_run(*a, **k),
+            )
+            assert main([str(dump), str(out)]) == 0
+            assert (len(layouts), len(one_task_runs)) == (1 - one_task, one_task)
+            for k in (1, 8):
+                ranks, n = P.pagerank_with_n(edges, n_iter=k, parity=True)
+                want = P.top_ranks(ranks, n, threshold=THRESHOLD_NUM / n).collect()
+                got = _outputs(spark, out)[f"iter{k}.parquet"]
+                assert got == sorted(tuple(r) for r in want) and got, (one_task, k)
+
+
+def _hub_dump(path, hubs: int = 3, spokes: int = 40) -> None:
+    """Hubs that link on to each other and to one spoke each, and
+    spokes that link to one or two hubs and some to another spoke: the
+    hubs rank above 5/N and sum in-links of several sizes, so the
+    order of their sums shows in the last ulp."""
+    path.mkdir()
+    h = [f"Hub{j}" for j in range(hubs)]
+    pages = [
+        _page(h[j], f"[[{h[(j + 1) % hubs]}]] [[{h[(j + 2) % hubs]}]] [[Spoke{j}]]")
+        for j in range(hubs)
+    ]
+    for i in range(spokes):
+        links = {h[i % hubs]}
+        if i % 2:
+            links.add(h[(i * 5 + 1) % hubs])
+        if i % 3 == 1:
+            links.add(f"Spoke{(i * 7 + 2) % spokes}")
+        pages.append(_page(f"Spoke{i}", "".join(f"[[{t}]]" for t in sorted(links))))
+    (path / "part0.xml").write_text("".join(pages))
+
+
+def test_cli_results_do_not_depend_on_shuffle_width(spark, tmp_path, monkeypatch):
+    """The snapshots and rank tables are the same bytes and floats at
+    shuffle widths 8 and 12, on the one-task path and the distributed
+    one, and the two paths agree: every rank adds its in-links in
+    (source, target) order whatever the width. The full rank tables
+    of ``pagerank_snapshots`` over the dump's edges, uncached, agree
+    the same way."""
+    from pagerank_hadoop_spark.functions.wikitext import (
+        extract_links,
+        remove_red_links,
+    )
+    from pagerank_hadoop_spark.sources.wiki import parse_pages, read_pages
+
+    P = _pagerank_module()
+    dump = tmp_path / "dump"
+    _hub_dump(dump)
+    parsed = parse_pages(read_pages(spark, str(dump)))
+    edges = remove_red_links(extract_links(parsed), parsed)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    got = {}
+    try:
+        for one_task in (True, False):
+            with monkeypatch.context() as m:
+                m.setattr(P, "_fits_one_task", lambda *a, **k: one_task)
+                for width in ("8", "12"):
+                    # main's get_spark sets the width from the core count
+                    m.setenv("SPARK_GRAFT_CPUS", width)
+                    out = tmp_path / f"result-{one_task}-{width}"
+                    assert main([str(dump), str(out)]) == 0
+                    assert spark.conf.get(key) == width
+                    got[one_task, width] = _outputs(spark, out)
+                    # uncached, as a caller's edges would be
+                    spark.catalog.clearCache()
+                    got[one_task, width]["tables"] = [
+                        sorted(tuple(r) for r in ranks.collect())
+                        for _, ranks, _ in P.pagerank_snapshots(edges, (1, 8))
+                    ]
+    finally:
+        spark.conf.set(key, before)
+    first = got[True, "8"]
+    assert len(first["iter1.parquet"]) >= 3 and len(first["iter8.parquet"]) >= 3
+    for run, outputs in got.items():
+        assert outputs == first, run
+
+
+def test_cli_writes_empty_snapshots_when_no_link_is_kept(spark, tmp_path, monkeypatch):
+    """A dump with no kept link has N = 0. The reference's 5.0/N cut
+    is then +Infinity and keeps no row, so both snapshots and both
+    rank tables are written empty and the CLI exits 0, on both paths;
+    no round runs."""
+    from pagerank_hadoop_spark import runtime_counters
+
+    P = _pagerank_module()
+    dump = tmp_path / "dump"
+    dump.mkdir()
+    (dump / "part0.xml").write_text(_page("Lonely", "no links here"))
+    for one_task in (True, False):
+        out = tmp_path / f"result-{one_task}"
+        with monkeypatch.context() as m:
+            m.setattr(P, "_fits_one_task", lambda *a, **k: one_task)
+            runtime_counters.reset()
+            assert main([str(dump), str(out)]) == 0
+        assert runtime_counters.snapshot()["rounds"] == 0
+        got = _outputs(spark, out)
+        assert got == {
+            "iter1.out": b"", "iter1.parquet": [],
+            "iter8.out": b"", "iter8.parquet": [],
+        }, one_task
 
 
 def test_registry_rotation_prefers_unchecked_oracle_backed(tmp_path):

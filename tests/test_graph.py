@@ -556,7 +556,7 @@ def test_loop_shuffle_scope_semantics(spark):
     tolerates non-integer session values."""
     import pytest as _pytest
 
-    from pagerank_hadoop_spark.operators.graph import _loop_shuffle_scope
+    from pagerank_hadoop_spark.operators.pagerank import _loop_shuffle_scope
 
     key = "spark.sql.shuffle.partitions"
     aqe_key = "spark.sql.adaptive.enabled"
@@ -931,6 +931,14 @@ def test_every_graph_loop_pinned(spark, tmp_path, monkeypatch):
         assert dist[name] == _PIN_GOLDEN[name], name
 
 
+def _pagerank_module():
+    """The module holding the plan-size probe that graph loops share
+    (the package re-exports a function named ``pagerank``)."""
+    import importlib
+
+    return importlib.import_module("pagerank_hadoop_spark.operators.pagerank")
+
+
 def _spy_one_task(monkeypatch) -> list:
     """Record the label column of every one-task run from now on."""
     from pagerank_hadoop_spark.operators import graph as G
@@ -954,7 +962,7 @@ def _on_path(monkeypatch, one_task: bool, run):
 
     with monkeypatch.context() as m:
         calls = _spy_one_task(m)
-        m.setattr(G, "plan_bytes", lambda df: 1000)
+        m.setattr(_pagerank_module(), "plan_bytes", lambda df: 1000)
         m.setattr(G, "_fits_one_task", lambda *a, **k: one_task)
         runtime_counters.reset()
         with warnings.catch_warnings(record=True) as caught:
@@ -1053,7 +1061,7 @@ def test_one_task_probe_fails_closed(spark, monkeypatch):
 
     edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
     size = {"bytes": None}
-    monkeypatch.setattr(G, "plan_bytes", lambda df: size["bytes"])
+    monkeypatch.setattr(_pagerank_module(), "plan_bytes", lambda df: size["bytes"])
     assert not G._fits_one_task(edges)
     assert not G._fits_one_task(edges, doubled=False)
     size["bytes"] = (1 << 20) - 1  # doubled, just under two tasks' worth

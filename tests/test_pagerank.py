@@ -381,3 +381,135 @@ def test_every_variant_bitwise_pinned(spark):
     }
     drifted = [v for v, df in got.items() if _ranks(df) != PIN_GOLDENS[v]]
     assert not drifted, drifted
+
+
+def _pagerank_module():
+    # the package re-exports a function named ``pagerank``; fetch the module
+    import importlib
+
+    return importlib.import_module("pagerank_hadoop_spark.operators.pagerank")
+
+
+def _spy_one_task(monkeypatch) -> list:
+    """Record every one-task rank run from now on."""
+    P = _pagerank_module()
+    calls, real = [], P._ranks_in_one_task
+    monkeypatch.setattr(
+        P, "_ranks_in_one_task", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    return calls
+
+
+def _rank_run_on_path(monkeypatch, one_task: bool, run):
+    """``run()`` forced onto one path: ``(sorted rows per frame, N,
+    rounds)``, with every rank compared as its exact float."""
+    from pagerank_hadoop_spark import runtime_counters
+
+    P = _pagerank_module()
+    with monkeypatch.context() as m:
+        calls = _spy_one_task(m)
+        m.setattr(P, "_fits_one_task", lambda *a, **k: one_task)
+        runtime_counters.reset()
+        frames, n = run()
+        rows = [sorted((tuple(r) for r in f.collect()), key=repr) for f in frames]
+        assert bool(calls) == one_task
+    return rows, n, runtime_counters.snapshot()["rounds"]
+
+
+# The one-task rank path against the distributed loop: one graph of
+# four parts (several parts name the same vertex), and the empty one
+RANK_PATH_EDGES = [
+    # code-point order: U+1F600 sorts after U+FF5E as UTF-8 bytes do,
+    # where UTF-16 order puts it first; mixed case sorts upper first
+    ("Zeta", "alpha"), ("alpha", "Ärger"), ("Ärger", "Zeta"),
+    ("～", "\U0001F600"), ("\U0001F600", "～"), ("Bob", "～"),
+    ("bob", "\U0001F600"), ("B", "Bob"), ("\U0001F600", "bob"),
+    ("alpha", "～"), ("Zeta", "\U0001F600"),
+    # self-links and duplicate edges
+    ("a", "a"), ("a", "b"), ("a", "b"), ("b", "a"), ("c", "c"),
+    ("b", "c"), ("b", "c"), ("c", "a"),
+    # "t" has five in-links of four sizes; "x" and "y" dangle
+    ("h", "t"), ("h", "x"), ("h", "y"), ("a", "t"), ("b", "t"),
+    ("b", "a"), ("c", "t"), ("c", "a"), ("c", "b"), ("d", "t"),
+    ("t", "h"), ("t", "c"), ("t", "d"),
+    # null endpoints
+    ("b", None), (None, "c"), (None, None), ("d", None), ("d", "c"),
+]
+RANK_VERTICES = ["a", "b", "c", "t", "iso1", "Iso2", "\U0001F600", None]
+
+
+def test_one_task_and_distributed_rank_paths_agree(spark, monkeypatch):
+    """The one-task kernel and the distributed loop give identical
+    rows, N and rounds, float for float, for ``n_iter`` 1 and 8, with
+    and without a vertex list holding isolated vertices, and for the
+    snapshots (1, 8); on the empty edge list too."""
+    P = _pagerank_module()
+    verts = spark.createDataFrame([(v,) for v in RANK_VERTICES], "id string")
+    runs = {}
+    for name, rows in (("graph", RANK_PATH_EDGES), ("empty", [])):
+        edges = spark.createDataFrame(rows, "src string, dst string")
+        for k in (1, 8):
+            runs[f"{name}/{k}"] = lambda e=edges, k=k: _one(P.pagerank_with_n(e, n_iter=k))
+            runs[f"{name}/{k}/vertices"] = lambda e=edges, k=k: _one(
+                P.pagerank_with_n(e, vertices=verts, n_iter=k)
+            )
+        runs[f"{name}/snapshots"] = lambda e=edges: _snapshots(
+            P.pagerank_snapshots(e, (1, 8))
+        )
+    got = {}
+    for name, run in runs.items():
+        got[name] = [_rank_run_on_path(monkeypatch, p, run) for p in (True, False)]
+        assert got[name][0] == got[name][1], name
+    assert got["empty/8"][0] == ([[]], 0, 0)
+    assert got["empty/snapshots"][0] == ([[], []], 0, 0)
+    teleport = (1.0 - 0.85) / len(RANK_VERTICES)
+    assert got["empty/8/vertices"][0] == (
+        [sorted(((v, teleport) for v in RANK_VERTICES), key=repr)],
+        len(RANK_VERTICES),
+        8,
+    )
+    ranks, n, rounds = got["graph/8"][0]
+    assert (None, (1.0 - 0.85) / n) in ranks[0] and rounds == 8
+    assert got["graph/snapshots"][0][1:] == (n, 8)
+
+
+def _one(result):
+    ranks, n = result
+    return [ranks], n
+
+
+def _snapshots(gen):
+    out = list(gen)
+    assert [k for k, _, _ in out] == [1, 8]
+    return [ranks for _, ranks, _ in out], out[0][2]
+
+
+def test_rank_runs_outside_the_one_task_rule_stay_distributed(spark, monkeypatch):
+    """A small string-id parity run takes one task; missing stats, a
+    big estimate under a one-task session width, non-string ids,
+    ``init_ranks``, ``max_fanout`` and ``parity=False`` each take the
+    distributed loop."""
+    P = _pagerank_module()
+    edges = spark.createDataFrame(RANK_PATH_EDGES, "src string, dst string")
+    longs = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
+    size = {"bytes": 1000}
+    monkeypatch.setattr(P, "plan_bytes", lambda df: size["bytes"])
+    calls = _spy_one_task(monkeypatch)
+    P.pagerank_with_n(edges, n_iter=2)
+    list(P.pagerank_snapshots(edges, (1, 2)))
+    assert len(calls) == 2
+    calls.clear()
+    half, _ = P.pagerank_with_n(edges, n_iter=1, parity=False)
+    P.pagerank_with_n(longs, n_iter=2)
+    P.pagerank_with_n(edges, n_iter=2, init_ranks=half)
+    P.pagerank_with_n(edges, n_iter=2, max_fanout=2)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        for size["bytes"] in (None, 1 << 30):
+            spark.conf.set(key, "1")  # clamps the loop width to one task
+            P.pagerank_with_n(edges, n_iter=2)
+            list(P.pagerank_snapshots(edges, (1, 2)))
+    finally:
+        spark.conf.set(key, before)
+    assert calls == []
