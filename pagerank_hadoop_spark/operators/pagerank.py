@@ -40,13 +40,14 @@ expression:
 The expressions are not merged: ``rank/outdeg`` and ``rank*wfrac``
 differ in the last ulp, and 9-dp oracle rounding can flip on that.
 
-One summation order. The layout is sorted by id within each
-partition, and a layout narrower than the session runs its rounds at
-its own width with the rank side as the hash-join build side, so each
-vertex adds its incoming contributions in (source id, target id)
-order, whatever the session width or core count (one sequential sum on
-a one-partition layout; on a wider one, one per layout partition,
-then merged). A small parity run
+One summation order. A layout narrower than the session is re-laid
+sorted by id within each partition and runs its rounds at its own
+width with the rank side as the hash-join build side, so each vertex
+adds its incoming contributions in (source id, target id) order,
+whatever the session width or core count (one sequential sum on a
+one-partition layout; on a wider one, one per layout partition, then
+merged). A layout at the full session width, and a chunked one, get
+no fixed order. A small parity run
 with string ids (:func:`_fits_one_task`, which fails closed) runs all
 its rounds in ONE Python task instead (:func:`_ranks_in_one_task`):
 a numpy loop that adds in the same order, so its ranks equal the
@@ -130,25 +131,22 @@ def _edge_tasks(edges: DataFrame, doubled: bool = True) -> int | None:
     return size // (1 << 20)
 
 
-def _fits_one_task(frame: DataFrame, doubled: bool = True) -> bool:
-    """Whether a loop over ``frame`` may run whole in one task
-    (``graph._in_one_task``, :func:`_ranks_in_one_task`): its id
-    columns — an edge list's ``src`` and ``dst``, or a vertex list's
-    first column — all of one integer type, or all Spark's
-    binary-ordered string type, and at most one task of need under
+def _fits_one_task(edges: DataFrame, doubled: bool = True) -> bool:
+    """Whether a loop over ``edges`` may run whole in one task
+    (``graph._in_one_task``, :func:`_ranks_in_one_task`): both id
+    columns of one integer type, or both Spark's binary-ordered string
+    type, and an edge list that needs at most one task under
     ``graph._edge_partitions``' rule. The need is read before that
     rule clamps it to the session width, so
     ``spark.sql.shuffle.partitions=1`` cannot admit a big graph. No
     stats, or any other id type, fails closed to the distributed
     loop."""
-    cols = ("src", "dst") if "src" in frame.columns else frame.columns[:1]
-    types = {frame.schema[c].dataType for c in cols}
-    if len(types) != 1:
+    t = edges.schema["src"].dataType
+    if t != edges.schema["dst"].dataType or not (
+        isinstance(t, IntegralType) or t == StringType()
+    ):
         return False
-    (t,) = types
-    if not (isinstance(t, IntegralType) or t == StringType()):
-        return False
-    need = _edge_tasks(frame, doubled)
+    need = _edge_tasks(edges, doubled)
     return need is not None and need <= 1  # loop_partitions floors at 1
 
 
@@ -348,20 +346,18 @@ def _laid_out(
     adjacency: DataFrame, max_fanout: int | None = None
 ) -> tuple[DataFrame, int]:
     """Lay the static side of every round's join out once: partition
-    on id, sort each partition by id, cache, count N (the driver-side
-    scalar of ``PageRank.java:470-471``), then right-size. Now that N
-    is known, a graph far smaller than shuffle_parts x
-    ROWS_PER_ITER_TASK is re-laid (tiny, already materialized) onto
-    fewer partitions, so the loop isn't dominated by empty-task
-    scheduling; :func:`_rank_loop` then runs its rounds at that width.
-    The id sort fixes the order in which every round streams the
-    adjacency into its partial sums (:func:`_rank_loop`).
-    ``max_fanout`` splits hot rows at layout time instead
-    (:func:`_chunked_adjacency`). Returns ``(adjacency, N)``."""
+    on id, cache, count N (the driver-side scalar of
+    ``PageRank.java:470-471``), then right-size. Now that N is known, a
+    graph far smaller than shuffle_parts x ROWS_PER_ITER_TASK is
+    re-laid (tiny, already materialized) onto fewer partitions, each
+    sorted by id, so the loop isn't dominated by empty-task
+    scheduling; :func:`_rank_loop` then runs its rounds at that width,
+    and the id sort fixes the order in which every round streams the
+    adjacency into its partial sums. ``max_fanout`` splits hot rows at
+    layout time instead (:func:`_chunked_adjacency`). Returns
+    ``(adjacency, N)``."""
     shuffle_parts = shuffle_partitions(adjacency.sparkSession)
-    cached = (
-        adjacency.repartition(shuffle_parts, "id").sortWithinPartitions("id").cache()
-    )
+    cached = adjacency.repartition(shuffle_parts, "id").cache()
     n = cached.count()
     parts = _iter_partitions(n, shuffle_parts)
     if n and max_fanout:
@@ -385,6 +381,14 @@ def _ids(adjacency: DataFrame) -> DataFrame:
     if "__chunk" in adjacency.columns:
         adjacency = adjacency.where(F.col("__chunk") == 0)
     return adjacency.select("id")
+
+
+def _narrow_width(adjacency: DataFrame) -> int | None:
+    """A :func:`_laid_out` adjacency's partition count when it is
+    narrower than the session: :func:`_rank_loop` then runs its rounds
+    at that width and returns a materialized result. None otherwise."""
+    parts = adjacency.rdd.getNumPartitions()
+    return parts if parts < shuffle_partitions(adjacency.sparkSession) else None
 
 
 def _rank_loop(
@@ -428,12 +432,11 @@ def _rank_loop(
     unboundedly: the final action materializes the chain in order
     anyway, and an eager barrier would cost one extra synchronous job
     round-trip per interval."""
-    spark = adjacency.sparkSession
-    parts = adjacency.rdd.getNumPartitions()
-    narrow = parts < shuffle_partitions(spark)
+    parts = _narrow_width(adjacency)
+    narrow = parts is not None
     salted = "__salt" in adjacency.columns
     ranks = seed
-    with _loop_shuffle_scope(spark, parts):
+    with _loop_shuffle_scope(adjacency.sparkSession, parts):
         for i in range(n_iter):
             if isinstance(ranks, float):
                 rows = adjacency.withColumn("rank", F.lit(ranks))
@@ -635,9 +638,11 @@ def pagerank_snapshots(edges: DataFrame, iters):
     N counted once, and each stretch of rounds resumes from the
     previous snapshot's ranks on that same layout. Resuming is exact,
     so each ``ranks`` equals :func:`pagerank_with_n`'s for
-    ``n_iter=k`` bit for bit. Each ``ranks`` is checkpointed lazily:
-    the caller's first action on it materializes it, and the next
-    stretch reads it instead of recomputing its rounds. A small
+    ``n_iter=k`` bit for bit. The next stretch reads each ``ranks``
+    instead of recomputing its rounds: on a narrow layout
+    :func:`_rank_loop` has already materialized it; on a wide one it
+    is checkpointed lazily, and the caller's first action on it
+    materializes it. A small
     string-id graph runs all rounds in one task
     (:func:`_ranks_in_one_task`) before the first yield."""
     iters = tuple(iters)
@@ -653,23 +658,26 @@ def pagerank_snapshots(edges: DataFrame, iters):
         return
     teleport = (1.0 - DAMPING) / n
     step = _teleport_step(_uniform_contribs, teleport, DAMPING)
+    wide = _narrow_width(adjacency) is None
     ranks, done = 1.0 / n, 0
     for k in iters:
         # 4: pagerank_with_n's default checkpoint interval
         ranks = _rank_loop(adjacency, step, ranks, k - done, 4, teleport)
-        ranks, done = ranks.localCheckpoint(eager=False), k
+        if wide:
+            ranks = ranks.localCheckpoint(eager=False)
+        done = k
         yield k, ranks, n
 
 
 def _small_string_graph(edges: DataFrame, vertices: DataFrame | None) -> bool:
     """Whether a parity run may take :func:`_ranks_in_one_task`: string
-    ids, and ``edges`` (and ``vertices`` when given) fit one task by
-    :func:`_fits_one_task`, which fails closed on missing stats."""
-    if vertices is not None and not (
-        vertices.schema[0].dataType == StringType()
-        and _fits_one_task(vertices, doubled=False)
-    ):
-        return False
+    ids, ``edges`` fit one task by :func:`_fits_one_task`, and
+    ``vertices``, when given, needs at most one task too. Missing stats
+    fail closed."""
+    if vertices is not None:
+        need = _edge_tasks(vertices, doubled=False)
+        if vertices.schema[0].dataType != StringType() or need is None or need > 1:
+            return False
     return edges.schema["src"].dataType == StringType() and _fits_one_task(
         edges, doubled=False
     )

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import importlib
 import os
 
 import pytest
@@ -20,3 +21,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def pagerank_module():
+    """``operators/pagerank.py`` as a module, to patch its probe: the
+    package re-exports a function named ``pagerank``, which an
+    attribute import would return instead."""
+    return importlib.import_module("pagerank_hadoop_spark.operators.pagerank")

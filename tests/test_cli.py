@@ -4,7 +4,6 @@
 from __future__ import annotations
 
 import glob
-import importlib
 import os
 
 from pagerank_hadoop_spark.__main__ import main
@@ -75,11 +74,6 @@ def test_cli_snapshots_keep_titles_bare(spark, tmp_path):
         assert all(len(ln.split("\t")) == 2 for ln in lines)
 
 
-def _pagerank_module():
-    # the package re-exports a function named ``pagerank``; fetch the module
-    return importlib.import_module("pagerank_hadoop_spark.operators.pagerank")
-
-
 def _outputs(spark, out) -> dict:
     """Each snapshot's bytes and each rank table's sorted rows."""
     got = {}
@@ -92,7 +86,9 @@ def _outputs(spark, out) -> dict:
     return got
 
 
-def test_cli_lays_out_once_and_matches_pagerank_with_n(spark, tmp_path, monkeypatch):
+def test_cli_lays_out_once_and_matches_pagerank_with_n(
+    spark, tmp_path, monkeypatch, pagerank_module
+):
     """The CLI's two snapshots come from one rank run, on either path:
     distributed, the adjacency is laid out (and N counted) once per
     ``main``; on a graph that fits one task, all rounds run in one
@@ -106,7 +102,7 @@ def test_cli_lays_out_once_and_matches_pagerank_with_n(spark, tmp_path, monkeypa
     )
     from pagerank_hadoop_spark.sources.wiki import parse_pages, read_pages
 
-    P = _pagerank_module()
+    P = pagerank_module
     dump = tmp_path / "dump"
     dump.mkdir()
     hubs = ["H0", "H1", "H2"]
@@ -163,7 +159,9 @@ def _hub_dump(path, hubs: int = 3, spokes: int = 40) -> None:
     (path / "part0.xml").write_text("".join(pages))
 
 
-def test_cli_results_do_not_depend_on_shuffle_width(spark, tmp_path, monkeypatch):
+def test_cli_results_do_not_depend_on_shuffle_width(
+    spark, tmp_path, monkeypatch, pagerank_module
+):
     """The snapshots and rank tables are the same bytes and floats at
     shuffle widths 8 and 12, on the one-task path and the distributed
     one, and the two paths agree: every rank adds its in-links in
@@ -176,7 +174,7 @@ def test_cli_results_do_not_depend_on_shuffle_width(spark, tmp_path, monkeypatch
     )
     from pagerank_hadoop_spark.sources.wiki import parse_pages, read_pages
 
-    P = _pagerank_module()
+    P = pagerank_module
     dump = tmp_path / "dump"
     _hub_dump(dump)
     parsed = parse_pages(read_pages(spark, str(dump)))
@@ -209,14 +207,16 @@ def test_cli_results_do_not_depend_on_shuffle_width(spark, tmp_path, monkeypatch
         assert outputs == first, run
 
 
-def test_cli_writes_empty_snapshots_when_no_link_is_kept(spark, tmp_path, monkeypatch):
+def test_cli_writes_empty_snapshots_when_no_link_is_kept(
+    spark, tmp_path, monkeypatch, pagerank_module
+):
     """A dump with no kept link has N = 0. The reference's 5.0/N cut
     is then +Infinity and keeps no row, so both snapshots and both
     rank tables are written empty and the CLI exits 0, on both paths;
     no round runs."""
     from pagerank_hadoop_spark import runtime_counters
 
-    P = _pagerank_module()
+    P = pagerank_module
     dump = tmp_path / "dump"
     dump.mkdir()
     (dump / "part0.xml").write_text(_page("Lonely", "no links here"))

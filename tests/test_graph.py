@@ -931,14 +931,6 @@ def test_every_graph_loop_pinned(spark, tmp_path, monkeypatch):
         assert dist[name] == _PIN_GOLDEN[name], name
 
 
-def _pagerank_module():
-    """The module holding the plan-size probe that graph loops share
-    (the package re-exports a function named ``pagerank``)."""
-    import importlib
-
-    return importlib.import_module("pagerank_hadoop_spark.operators.pagerank")
-
-
 def _spy_one_task(monkeypatch) -> list:
     """Record the label column of every one-task run from now on."""
     from pagerank_hadoop_spark.operators import graph as G
@@ -950,10 +942,10 @@ def _spy_one_task(monkeypatch) -> list:
     return calls
 
 
-def _on_path(monkeypatch, one_task: bool, run):
+def _on_path(monkeypatch, probe, one_task: bool, run):
     """``run()`` forced onto one path, as ``(sorted rows or the error,
-    rounds, non-convergence warnings)``. The plan-size probe reads a
-    small graph, so both paths derive the same loop width and cc the
+    rounds, non-convergence warnings)``. The plan-size probe (in the
+    ``probe`` module) reads a small graph, so both paths derive the same loop width and cc the
     same pointer-jump rule from it."""
     import warnings
 
@@ -962,7 +954,7 @@ def _on_path(monkeypatch, one_task: bool, run):
 
     with monkeypatch.context() as m:
         calls = _spy_one_task(m)
-        m.setattr(_pagerank_module(), "plan_bytes", lambda df: 1000)
+        m.setattr(probe, "plan_bytes", lambda df: 1000)
         m.setattr(G, "_fits_one_task", lambda *a, **k: one_task)
         runtime_counters.reset()
         with warnings.catch_warnings(record=True) as caught:
@@ -976,7 +968,7 @@ def _on_path(monkeypatch, one_task: bool, run):
     return rows, runtime_counters.snapshot()["rounds"], msgs
 
 
-def test_one_task_and_distributed_paths_agree(spark, monkeypatch):
+def test_one_task_and_distributed_paths_agree(spark, monkeypatch, pagerank_module):
     """cc and scc give the same rows, rounds and non-convergence
     warnings or errors in one task as on the distributed loop."""
     from pagerank_hadoop_spark.operators import graph as G
@@ -1031,29 +1023,29 @@ def test_one_task_and_distributed_paths_agree(spark, monkeypatch):
     before = spark.conf.get(key)
     try:
         for name, run in runs.items():
-            got = [_on_path(monkeypatch, p, run) for p in (True, False)]
+            got = [_on_path(monkeypatch, pagerank_module, p, run) for p in (True, False)]
             assert got[0] == got[1], name
         # a session two tasks wide turns cc's pointer jump on
         spark.conf.set(key, "2")
         got = [
-            _on_path(monkeypatch, p, lambda: G.connected_components(edges))
+            _on_path(monkeypatch, pagerank_module, p, lambda: G.connected_components(edges))
             for p in (True, False)
         ]
     finally:
         spark.conf.set(key, before)
     assert got[0] == got[1]
     assert got[0][1] == 5  # 9 hops in 4 changing rounds, then a stable one
-    warned = _on_path(monkeypatch, True, runs["cc/path_over_max_iter"])
+    warned = _on_path(monkeypatch, pagerank_module, True, runs["cc/path_over_max_iter"])
     assert warned[1] == 3 and len(warned[2]) == 1
-    raised = _on_path(monkeypatch, True, runs["scc/path_over_max_outer/raise"])
+    raised = _on_path(monkeypatch, pagerank_module, True, runs["scc/path_over_max_outer/raise"])
     assert raised[0].startswith("raised: scc: no fixpoint after max_iter=2")
-    nulls = _on_path(monkeypatch, True, runs["cc/null_longs"])
+    nulls = _on_path(monkeypatch, pagerank_module, True, runs["cc/null_longs"])
     assert nulls[0] == sorted(
         [(None, None), (7, 7), (big + 1, big + 1), (big + 2, big + 1)], key=repr
     )
 
 
-def test_one_task_probe_fails_closed(spark, monkeypatch):
+def test_one_task_probe_fails_closed(spark, monkeypatch, pagerank_module):
     """The one-task path needs plan stats that fit one ~1 MB task
     before the session-width clamp, and integer or string ids; any
     other case takes the distributed loop."""
@@ -1061,7 +1053,7 @@ def test_one_task_probe_fails_closed(spark, monkeypatch):
 
     edges = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
     size = {"bytes": None}
-    monkeypatch.setattr(_pagerank_module(), "plan_bytes", lambda df: size["bytes"])
+    monkeypatch.setattr(pagerank_module, "plan_bytes", lambda df: size["bytes"])
     assert not G._fits_one_task(edges)
     assert not G._fits_one_task(edges, doubled=False)
     size["bytes"] = (1 << 20) - 1  # doubled, just under two tasks' worth

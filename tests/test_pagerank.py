@@ -383,16 +383,8 @@ def test_every_variant_bitwise_pinned(spark):
     assert not drifted, drifted
 
 
-def _pagerank_module():
-    # the package re-exports a function named ``pagerank``; fetch the module
-    import importlib
-
-    return importlib.import_module("pagerank_hadoop_spark.operators.pagerank")
-
-
-def _spy_one_task(monkeypatch) -> list:
-    """Record every one-task rank run from now on."""
-    P = _pagerank_module()
+def _spy_one_task(monkeypatch, P) -> list:
+    """Record every one-task rank run of ``P`` from now on."""
     calls, real = [], P._ranks_in_one_task
     monkeypatch.setattr(
         P, "_ranks_in_one_task", lambda *a, **k: calls.append(1) or real(*a, **k)
@@ -400,14 +392,16 @@ def _spy_one_task(monkeypatch) -> list:
     return calls
 
 
-def _rank_run_on_path(monkeypatch, one_task: bool, run):
-    """``run()`` forced onto one path: ``(sorted rows per frame, N,
-    rounds)``, with every rank compared as its exact float."""
+def _rank_run_on_path(monkeypatch, P, one_task: bool, run):
+    """``run()`` forced onto one path of ``P``: ``(sorted rows per
+    frame, N, rounds)``, with every rank compared as its exact float.
+    The plan-size probe reads every input as small, and the edge
+    probe decides the path."""
     from pagerank_hadoop_spark import runtime_counters
 
-    P = _pagerank_module()
     with monkeypatch.context() as m:
-        calls = _spy_one_task(m)
+        calls = _spy_one_task(m, P)
+        m.setattr(P, "plan_bytes", lambda df: 1000)
         m.setattr(P, "_fits_one_task", lambda *a, **k: one_task)
         runtime_counters.reset()
         frames, n = run()
@@ -438,12 +432,12 @@ RANK_PATH_EDGES = [
 RANK_VERTICES = ["a", "b", "c", "t", "iso1", "Iso2", "\U0001F600", None]
 
 
-def test_one_task_and_distributed_rank_paths_agree(spark, monkeypatch):
+def test_one_task_and_distributed_rank_paths_agree(spark, monkeypatch, pagerank_module):
     """The one-task kernel and the distributed loop give identical
     rows, N and rounds, float for float, for ``n_iter`` 1 and 8, with
     and without a vertex list holding isolated vertices, and for the
     snapshots (1, 8); on the empty edge list too."""
-    P = _pagerank_module()
+    P = pagerank_module
     verts = spark.createDataFrame([(v,) for v in RANK_VERTICES], "id string")
     runs = {}
     for name, rows in (("graph", RANK_PATH_EDGES), ("empty", [])):
@@ -458,7 +452,7 @@ def test_one_task_and_distributed_rank_paths_agree(spark, monkeypatch):
         )
     got = {}
     for name, run in runs.items():
-        got[name] = [_rank_run_on_path(monkeypatch, p, run) for p in (True, False)]
+        got[name] = [_rank_run_on_path(monkeypatch, P, p, run) for p in (True, False)]
         assert got[name][0] == got[name][1], name
     assert got["empty/8"][0] == ([[]], 0, 0)
     assert got["empty/snapshots"][0] == ([[], []], 0, 0)
@@ -484,20 +478,24 @@ def _snapshots(gen):
     return [ranks for _, ranks, _ in out], out[0][2]
 
 
-def test_rank_runs_outside_the_one_task_rule_stay_distributed(spark, monkeypatch):
+def test_rank_runs_outside_the_one_task_rule_stay_distributed(
+    spark, monkeypatch, pagerank_module
+):
     """A small string-id parity run takes one task; missing stats, a
     big estimate under a one-task session width, non-string ids,
     ``init_ranks``, ``max_fanout`` and ``parity=False`` each take the
     distributed loop."""
-    P = _pagerank_module()
+    P = pagerank_module
     edges = spark.createDataFrame(RANK_PATH_EDGES, "src string, dst string")
     longs = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
     size = {"bytes": 1000}
     monkeypatch.setattr(P, "plan_bytes", lambda df: size["bytes"])
-    calls = _spy_one_task(monkeypatch)
+    calls = _spy_one_task(monkeypatch, P)
     P.pagerank_with_n(edges, n_iter=2)
     list(P.pagerank_snapshots(edges, (1, 2)))
     assert len(calls) == 2
+    assert P._small_string_graph(edges, edges.select("src"))
+    assert not P._small_string_graph(edges, longs.select("src"))
     calls.clear()
     half, _ = P.pagerank_with_n(edges, n_iter=1, parity=False)
     P.pagerank_with_n(longs, n_iter=2)
