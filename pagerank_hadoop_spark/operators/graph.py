@@ -15,8 +15,6 @@ degrees correspond to the outdeg computed inline at
 
 from __future__ import annotations
 
-import json
-import warnings
 from functools import partial, reduce
 
 import numpy as np
@@ -26,36 +24,22 @@ from pyspark.sql.types import (
     DoubleType,
     FloatType,
     MapType,
-    StringType,
     StructType,
 )
 
 from pagerank_hadoop_spark import runtime_counters
-from pagerank_hadoop_spark.operators.pagerank import (
+from pagerank_hadoop_spark.operators.pagerank import (  # noqa: F401 (re-export)
+    PregelNotConverged,
     _edge_tasks,
     _fits_one_task,
+    _in_one_task,
     _loop_shuffle_scope,
+    _nonconvergence,
+    _vertices,
     loop_partitions,
     pagerank_with_n,
     shuffle_partitions,
 )
-
-
-class PregelNotConverged(RuntimeError):
-    """An iterative graph loop hit ``max_iter`` before its fixpoint."""
-
-
-def _nonconvergence(label: str, max_iter: int, on_max_iter: str) -> None:
-    msg = (
-        f"{label}: no fixpoint after max_iter={max_iter} rounds — "
-        "the returned state is the last iterate, not the converged "
-        "result. Raise max_iter (rounds scale with graph diameter / "
-        "peel depth) or pass on_max_iter='ignore' to accept it."
-    )
-    if on_max_iter == "raise":
-        raise PregelNotConverged(msg)
-    if on_max_iter != "ignore":
-        warnings.warn(msg, RuntimeWarning, stacklevel=4)
 
 
 def _edge_partitions(edges: DataFrame, doubled: bool = True) -> int:
@@ -198,94 +182,22 @@ def _count_stable(n: int):
     return done
 
 
-def _in_one_task(
-    edges: DataFrame, label_col: str, kernel, on_max_iter: str
-) -> DataFrame:
-    """The round driver's small-graph sibling: run a whole exact-integer
-    fixpoint in ONE Python task and return ``(id, label_col)``.
-
-    ``kernel(n, src, dst, has_null)`` is a numpy copy of a distributed
-    loop, round for round, over ids factorized to ``0..n-1`` in id
-    order (:func:`_one_task_frame`); it returns ``(labels, log,
-    null_row)``. Its log lists each inner loop as ``[label, max_iter,
-    rounds, converged]``. The edge list travels through one
-    ``groupBy(lit(0)).applyInPandas`` group; the result is checkpointed
-    lazily and one ``observe(...).count()`` both materializes it and
-    reads the log, so no second job runs (the :func:`pregel` pattern;
-    an ``Observation``, unlike an accumulator, cannot double-count a
-    recomputed task). The driver then replays the log: one
-    ``runtime_counters.note_round`` per round, so ``rounds_total``
-    keeps its meaning, and the same warning or error, at the same
-    point, as the distributed loop would give.
-
-    Callers take this path only when :func:`_fits_one_task` says so:
-    the edge list then needs one ~1 MB task, and the narrowed
-    distributed loop would run each of its rounds in one task too, so
-    this adds no new per-task memory regime. Null ids cannot reach
-    pandas as float64: each endpoint travels as a non-null value plus
-    a null flag."""
-    spark = edges.sparkSession
-    t = edges.schema["src"].dataType
-    zero = F.lit("" if t == StringType() else 0).cast(t)
-    flat = edges.select(
-        F.coalesce("src", zero).alias("src"),
-        F.coalesce("dst", zero).alias("dst"),
-        F.isnull("src").alias("__sn"),
-        F.isnull("dst").alias("__dn"),
-    )
-    schema = f"id {t.simpleString()}, {label_col} {t.simpleString()}, __log string"
-    obs = Observation()
-    with _loop_shuffle_scope(spark, 1):
-        # aliased: a bare integer literal would read as a group-by ordinal
-        out = (
-            flat.groupBy(F.lit(0).alias("__task"))
-            .applyInPandas(lambda pdf: _one_task_frame(kernel, label_col, pdf), schema)
-            .localCheckpoint(eager=False)
-        )
-        out.observe(obs, F.max("__log").alias("log")).count()
-    log = obs.get["log"]
-    if log is None:  # no edge row, so no group ran: replay the empty graph
-        log = kernel(0, np.empty(0, int), np.empty(0, int), False)[1]
-    else:
-        log = json.loads(log)
-    for label, limit, rounds, converged in log:
-        for _ in range(rounds):
-            runtime_counters.note_round()
-        if not converged:
-            _nonconvergence(label, limit, on_max_iter)
-    return out.where(F.col("__log").isNull()).drop("__log")
-
-
-def _one_task_frame(kernel, label_col: str, pdf):
-    """The one task's body. Factorizes the non-null endpoint ids with
-    ``np.unique``, which sorts, so code order is id order (Python's
-    code-point order on ``str`` equals Spark's UTF-8 byte order), and
-    runs ``kernel`` on the edges with both ends non-null. Emits one
-    row per vertex the kernel labels (label code -1: no row), a
-    ``(null, null)`` row when it asks for one, and one row holding the
-    JSON round log. The id columns are built as Python objects, so
+def _labelled(label_col: str, kernel, uniq, src, dst, has_null: bool):
+    """A label kernel ``kernel(n, src, dst, has_null) -> (labels, log,
+    null_row)`` as a kernel of the one-task runner
+    (``pagerank._in_one_task``): one ``(id, label_col)`` row per vertex
+    it labels (label code -1: no row), and a ``(null, null)`` row when
+    it asks for one. The id columns are built as Python objects, so
     ids above 2**53 stay exact."""
     import pandas as pd
 
-    m = len(pdf)
-    ends = np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()])
-    null = np.concatenate([pdf["__sn"].to_numpy(bool), pdf["__dn"].to_numpy(bool)])
-    uniq, codes = np.unique(ends[~null], return_inverse=True)
-    full = np.full(2 * m, -1)
-    full[~null] = codes
-    src, dst = full[:m], full[m:]
-    both = (src >= 0) & (dst >= 0)
-    labels, log, null_row = kernel(len(uniq), src[both], dst[both], bool(null.any()))
+    labels, log, null_row = kernel(len(uniq), src, dst, has_null)
     keep = labels >= 0
-    rows = pd.DataFrame({
-        "id": uniq[keep].astype(object),
-        label_col: uniq[labels[keep]].astype(object),
-        "__log": None,
-    })
-    extra = [[None, None, None]] * null_row + [[None, None, json.dumps(log)]]
-    return pd.concat(
-        [rows, pd.DataFrame(extra, columns=rows.columns)], ignore_index=True
-    )
+    none = [None] * null_row
+    return pd.DataFrame({
+        "id": np.append(uniq[keep].astype(object), none),
+        label_col: np.append(uniq[labels[keep]].astype(object), none),
+    }), log
 
 
 def _until_stable(step, frontier, max_iter: int) -> tuple[int, bool]:
@@ -441,12 +353,7 @@ class PropertyGraph:
     @classmethod
     def from_edges(cls, edges: DataFrame) -> "PropertyGraph":
         """Vertex set = every id appearing as src or dst."""
-        v = (
-            edges.select(F.col("src").alias("id"))
-            .unionByName(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        return cls(v, edges)
+        return cls(_vertices(edges), edges)
 
     def out_degrees(self) -> DataFrame:
         """(id, out_degree) — distinct successors per vertex; one
@@ -551,10 +458,11 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     right-sized tasks. On a smaller graph the extra per-round stage
     costs more than the rounds it saves.
 
-    Small graphs run in one task (:func:`_in_one_task`): when
+    Small graphs run in one task (``pagerank._in_one_task``, the one
+    runner scc and parity PageRank share): when
     :func:`_fits_one_task` finds integer or string ids and an edge
-    list needing one ~1 MB task, a numpy copy of this loop runs all
-    rounds in one Python task, with the same labels, round count,
+    list needing one ~1 MB task, a numpy copy of this loop
+    (:func:`_cc_kernel`) runs all rounds in one Python task, with the same labels, round count,
     pointer-jump rule and ``max_iter`` warning. Rounds on such a graph
     are bound by scheduling, not data: two jobs per call instead of
     nine. The narrowed loop would run each round in one task anyway,
@@ -573,7 +481,8 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     jump = parts * 2 >= shuffle_partitions(edges.sparkSession)
     if _fits_one_task(edges):
         kernel = partial(_cc_kernel, max_iter=max_iter, jump=jump)
-        return _in_one_task(edges, "component", kernel, "warn")
+        kernel = partial(_labelled, "component", kernel)
+        return _in_one_task(edges, "component {id}", kernel, "warn")[0]
     sym = _pinned(_symmetrized(edges), parts, "src")
 
     init = (
@@ -1345,16 +1254,17 @@ def strongly_connected_components(
     round — the classic FW-BW bound; real graphs with a few large
     SCCs settle in a handful of outer rounds.
 
-    Small graphs run in one task (:func:`_in_one_task`), under the
-    rule :func:`connected_components` states: a numpy copy of these
-    loops runs every inner and outer round in one Python task, with
+    Small graphs run in one task (``pagerank._in_one_task``), under
+    the rule :func:`connected_components` states: a numpy copy of
+    these loops (:func:`_scc_kernel`) runs every inner and outer round in one Python task, with
     the same labels, round counts and ``max_iter`` / ``max_outer`` /
     ``on_max_iter`` behaviour, in two jobs per call where the
     distributed loops run about thirty.
     """
     if _fits_one_task(edges, doubled=False):
         kernel = partial(_scc_kernel, max_outer=max_outer, max_iter=max_iter)
-        return _in_one_task(edges, "scc", kernel, on_max_iter)
+        kernel = partial(_labelled, "scc", kernel)
+        return _in_one_task(edges, "scc {id}", kernel, on_max_iter)[0]
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     verts = (
         e.select(F.col("src").alias("id"))

@@ -48,16 +48,20 @@ whatever the session width or core count (one sequential sum on a
 one-partition layout; on a wider one, one per layout partition, then
 merged). A layout at the full session width, and a chunked one, get
 no fixed order. A small parity run
-with string ids (:func:`_fits_one_task`, which fails closed) runs all
-its rounds in ONE Python task instead (:func:`_ranks_in_one_task`):
-a numpy loop that adds in the same order, so its ranks equal the
+with no vertex list (:func:`_fits_one_task`, which fails closed) runs
+all its rounds in ONE Python task instead (:func:`_rank_kernel`): a
+numpy loop that adds in the same order, so its ranks equal the
 distributed loop's bit for bit. Its rounds are bound by scheduling,
-not data: one job runs them all. Resumed, chunked, corrected,
-personalized and weighted runs stay distributed.
+not data: one job runs them all. :func:`pagerank_with_n` and
+:func:`pagerank_snapshots` share one run (:func:`_rank_runs`), which
+picks the path. Resumed, chunked, corrected, personalized and
+weighted runs, and runs given a vertex list, stay distributed.
 
-The module also holds the small-graph probe (:func:`_fits_one_task`)
-and the loop-width scope (:func:`_loop_shuffle_scope`) that the graph
-loops of ``operators/graph.py`` share.
+The module also holds what the one-task loops of
+``operators/graph.py`` (cc, scc) and parity PageRank share: the
+small-graph probe (:func:`_fits_one_task`), the one runner
+(:func:`_in_one_task`) and the loop-width scope
+(:func:`_loop_shuffle_scope`).
 
 Scale notes (100 TB posture):
 
@@ -77,6 +81,8 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+import json
+import warnings
 from contextlib import contextmanager
 from functools import partial
 
@@ -133,7 +139,7 @@ def _edge_tasks(edges: DataFrame, doubled: bool = True) -> int | None:
 
 def _fits_one_task(edges: DataFrame, doubled: bool = True) -> bool:
     """Whether a loop over ``edges`` may run whole in one task
-    (``graph._in_one_task``, :func:`_ranks_in_one_task`): both id
+    (:func:`_in_one_task`; cc, scc and parity PageRank): both id
     columns of one integer type, or both Spark's binary-ordered string
     type, and an edge list that needs at most one task under
     ``graph._edge_partitions``' rule. The need is read before that
@@ -242,6 +248,108 @@ def _loop_shuffle_scope(spark, parts: int | None):
         spark.conf.set(aqe_key, prev_aqe)
         spark.conf.set(bloom_key, prev_bloom)
         spark.conf.set(bcast_key, prev_bcast)
+
+
+class PregelNotConverged(RuntimeError):
+    """An iterative graph loop hit ``max_iter`` before its fixpoint."""
+
+
+def _nonconvergence(label: str, max_iter: int, on_max_iter: str) -> None:
+    msg = (
+        f"{label}: no fixpoint after max_iter={max_iter} rounds — "
+        "the returned state is the last iterate, not the converged "
+        "result. Raise max_iter (rounds scale with graph diameter / "
+        "peel depth) or pass on_max_iter='ignore' to accept it."
+    )
+    if on_max_iter == "raise":
+        raise PregelNotConverged(msg)
+    if on_max_iter != "ignore":
+        warnings.warn(msg, RuntimeWarning, stacklevel=4)
+
+
+def _in_one_task(
+    edges: DataFrame, cols: str, kernel, on_max_iter: str
+) -> tuple[DataFrame, int]:
+    """Run a whole small-graph loop in ONE Python task: the one-task
+    runner of cc, scc and parity PageRank. Returns ``(result, N)``: the
+    result has an ``id`` column of the edges' id type, then ``cols``
+    (DDL, ``{id}`` standing for that type); N counts the distinct ids,
+    a null id as one.
+
+    ``kernel(uniq, src, dst, has_null)`` is a numpy copy of a
+    distributed loop, round for round (:func:`_one_task_frame` factorizes
+    the ids); it returns ``(rows, log)``, rows a pandas frame of the
+    result's columns. Its log lists each inner loop as ``[label,
+    max_iter, rounds, converged]``. The edge list travels through one
+    ``groupBy(lit(0)).applyInPandas`` group; the result is checkpointed
+    lazily and one ``observe(...).count()`` both materializes it and
+    reads the log, so no second job runs (the ``graph.pregel`` pattern;
+    an ``Observation``, unlike an accumulator, cannot double-count a
+    recomputed task). The driver then replays the log: one
+    ``runtime_counters.note_round`` per round, so ``rounds_total``
+    keeps its meaning, and the same warning or error, at the same
+    point, as the distributed loop would give. When no edge row
+    exists no group runs, and the kernel's log on the empty graph is
+    replayed.
+
+    Callers take this path only when :func:`_fits_one_task` says so:
+    the edge list then needs one ~1 MB task, and the narrowed
+    distributed loop would run each of its rounds in one task too, so
+    this adds no new per-task memory regime. Null ids cannot reach
+    pandas as float64: each endpoint travels as a non-null value plus
+    a null flag."""
+    spark = edges.sparkSession
+    t = edges.schema["src"].dataType
+    zero = F.lit("" if t == StringType() else 0).cast(t)
+    flat = edges.select(
+        F.coalesce("src", zero).alias("src"),
+        F.coalesce("dst", zero).alias("dst"),
+        F.isnull("src").alias("__sn"),
+        F.isnull("dst").alias("__dn"),
+    )
+    schema = f"id {{id}}, {cols}, __log string".format(id=t.simpleString())
+    obs = Observation()
+    with _loop_shuffle_scope(spark, 1):
+        # aliased: a bare integer literal would read as a group-by ordinal
+        out = (
+            flat.groupBy(F.lit(0).alias("__task"))
+            .applyInPandas(partial(_one_task_frame, kernel), schema)
+            .localCheckpoint(eager=False)
+        )
+        out.observe(obs, F.max("__log").alias("log")).count()
+    log = obs.get["log"]
+    if log is None:  # no edge row, so no group ran: replay the empty graph
+        n, log = 0, kernel(np.empty(0), np.empty(0, int), np.empty(0, int), False)[1]
+    else:
+        n, log = json.loads(log)
+    for label, limit, rounds, converged in log:
+        for _ in range(rounds):
+            runtime_counters.note_round()
+        if not converged:
+            _nonconvergence(label, limit, on_max_iter)
+    return out.where(F.col("__log").isNull()).drop("__log"), n
+
+
+def _one_task_frame(kernel, pdf):
+    """The one task's body. Factorizes the non-null endpoint ids with
+    ``np.unique``, which sorts, so code order is id order (Python's
+    code-point order on ``str`` equals Spark's UTF-8 byte order), runs
+    ``kernel`` on the edges with both ends non-null, and appends one
+    row holding the JSON of N and the round log (its other columns
+    null)."""
+    m = len(pdf)
+    ends = np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()])
+    null = np.concatenate([pdf["__sn"].to_numpy(bool), pdf["__dn"].to_numpy(bool)])
+    uniq, codes = np.unique(ends[~null], return_inverse=True)
+    full = np.full(2 * m, -1)
+    full[~null] = codes
+    src, dst = full[:m], full[m:]
+    both = (src >= 0) & (dst >= 0)
+    has_null = bool(null.any())
+    rows, log = kernel(uniq, src[both], dst[both], has_null)
+    rows["__log"] = None
+    rows.loc[len(rows), "__log"] = json.dumps([len(uniq) + has_null, log])
+    return rows
 
 
 def adjacency_from_edges(edges: DataFrame, dedup: bool = True) -> DataFrame:
@@ -423,7 +531,7 @@ def _rank_loop(
     order, so each vertex adds its incoming contributions in (source
     id, target id) order whatever the session width — on a
     one-partition layout as one sequential sum, which
-    :func:`_rank_frame` repeats bit for bit. Spark reads the width
+    :func:`_rank_kernel` repeats bit for bit. Spark reads the width
     when a plan runs, so the result is materialized inside the scope
     with one eager ``localCheckpoint``.
 
@@ -512,23 +620,6 @@ def pagerank(
     return ranks
 
 
-def _rank_layout(
-    edges: DataFrame, vertices: DataFrame | None, max_fanout: int | None
-) -> tuple[DataFrame, int]:
-    """The static side of a rank run over ``edges``: the
-    :func:`_laid_out` adjacency (a row for every vertex of
-    ``vertices``, all endpoints when None) with its ``outdeg``, and
-    N."""
-    if vertices is None:
-        vertices = _vertices(edges)
-    adjacency, n = _laid_out(
-        _with_dangling(adjacency_from_edges(edges), vertices), max_fanout
-    )
-    if n and not max_fanout:  # a chunked adjacency carries the true outdeg
-        adjacency = adjacency.withColumn("outdeg", F.size("outlinks"))
-    return adjacency, n
-
-
 def pagerank_with_n(
     edges: DataFrame,
     *,
@@ -571,205 +662,169 @@ def pagerank_with_n(
     frames, so results can differ from the unsalted run in the last
     ulp (partial sums regroup); the registry entries run unchunked.
 
-    A parity run with neither ``init_ranks`` nor ``max_fanout`` on a
-    small string-id graph runs in one task (:func:`_ranks_in_one_task`),
-    with the same ranks, N and round count.
+    This is the one snapshot of :func:`_rank_runs` after ``n_iter``
+    rounds, so a small parity run takes one task under the rule stated
+    there, with the same ranks, N and round count.
     """
-    one_task = parity and init_ranks is None and not max_fanout
-    if one_task and _small_string_graph(edges, vertices):
-        ((_, ranks),), n = _ranks_in_one_task(edges, vertices, (n_iter,), damping)
-        return ranks, n
-    adjacency, n = _rank_layout(edges, vertices, max_fanout)
-    if n == 0:
-        return edges.sparkSession.createDataFrame([], _NO_RANKS), 0
-    teleport = (1.0 - damping) / n
-    seed = 1.0 / n if init_ranks is None else init_ranks.select("id", "rank")
-    if parity:
-        step = _teleport_step(_uniform_contribs, teleport, damping)
-        return _rank_loop(
-            adjacency, step, seed, n_iter, checkpoint_interval, teleport
-        ), n
-
-    # Corrected mode: dangling mass is redistributed uniformly each
-    # iteration. The mass is a 1-row aggregate broadcast back via
-    # crossJoin — kept lazy (a per-iteration collect() would re-execute
-    # the whole lineage from scratch every iteration).
-    #
-    # Unlike the parity loop, each iteration consumes `ranks` TWICE
-    # (contribution fan-out + dangling-mass sum), so without a barrier
-    # the lineage doubles per iteration (2^k plan blowup between
-    # checkpoints — measured as a 100-exchange final plan at k=4).
-    # A lazy localCheckpoint per iteration bounds the plan to one
-    # iteration's shape; the final action materializes the chain in
-    # order, which is exactly the per-iteration work anyway.
-    # The dangling-vertex set is a static property of the adjacency —
-    # compute the id list once, not from the per-iteration join.
-    ids = _ids(adjacency)
-    dangling = adjacency.where(F.col("outdeg") == 0).select("id")
-
-    def corrected(rows: DataFrame, ranks: DataFrame) -> DataFrame:
-        extra = ranks.join(dangling, "id", "left_semi").agg(
-            (F.lit(damping) * F.coalesce(F.sum("rank"), F.lit(0.0)) / n).alias("extra")
-        )
-        summed = _uniform_contribs(rows).groupBy("id").agg(F.sum("contrib").alias("insum"))
-        return (
-            ids.join(summed, "id", "left")
-            .crossJoin(F.broadcast(extra))
-            .select(
-                "id",
-                (
-                    F.lit(teleport)
-                    + F.lit(damping) * F.coalesce(F.col("insum"), F.lit(0.0))
-                    + F.col("extra")
-                ).alias("rank"),
-            )
-        )
-
-    if isinstance(seed, float):
-        seed = ids.select("id", F.lit(seed).alias("rank"))
-    return _rank_loop(adjacency, corrected, seed, n_iter, 1, None), n
+    ((_, ranks, n),) = _rank_runs(
+        edges,
+        (n_iter,),
+        vertices=vertices,
+        damping=damping,
+        parity=parity,
+        checkpoint_interval=checkpoint_interval,
+        init_ranks=init_ranks,
+        max_fanout=max_fanout,
+    )
+    return ranks, n
 
 
 def pagerank_snapshots(edges: DataFrame, iters):
     """Yield ``(k, ranks, N)`` after each ``k`` of ``iters``
     (ascending) rounds of ONE parity run, the way the reference writes
     its iteration-1 snapshot from inside its 8-round run
-    (``PageRank.java:480-487,492-497``): the adjacency is laid out and
-    N counted once, and each stretch of rounds resumes from the
-    previous snapshot's ranks on that same layout. Resuming is exact,
-    so each ``ranks`` equals :func:`pagerank_with_n`'s for
-    ``n_iter=k`` bit for bit. The next stretch reads each ``ranks``
-    instead of recomputing its rounds: on a narrow layout
-    :func:`_rank_loop` has already materialized it; on a wide one it
-    is checkpointed lazily, and the caller's first action on it
-    materializes it. A small
-    string-id graph runs all rounds in one task
-    (:func:`_ranks_in_one_task`) before the first yield."""
-    iters = tuple(iters)
-    if iters and _small_string_graph(edges, None):
-        snaps, n = _ranks_in_one_task(edges, None, iters, DAMPING)
-        for k, ranks in snaps:
-            yield k, ranks, n
+    (``PageRank.java:480-487,492-497``). Each ``ranks`` equals
+    :func:`pagerank_with_n`'s for ``n_iter=k`` bit for bit. The next
+    stretch reads each ``ranks`` instead of recomputing its rounds: on
+    a narrow layout :func:`_rank_loop` has already materialized it; on
+    a wide one it is checkpointed lazily, and the caller's first action
+    on it materializes it."""
+    return _rank_runs(edges, tuple(iters), stretch_checkpoint=True)
+
+
+_RANK_COLS = "k int, rank double"
+
+
+def _rank_runs(
+    edges: DataFrame,
+    iters: tuple,
+    *,
+    vertices: DataFrame | None = None,
+    damping: float = DAMPING,
+    parity: bool = True,
+    checkpoint_interval: int = 4,
+    init_ranks: DataFrame | None = None,
+    max_fanout: int | None = None,
+    stretch_checkpoint: bool = False,
+):
+    """The one rank run behind :func:`pagerank_with_n` and
+    :func:`pagerank_snapshots`: yield ``(k, ranks, N)`` after each
+    ``k`` of ``iters`` (ascending) rounds. The adjacency is laid out and
+    N counted once, and each stretch of rounds resumes from the previous
+    snapshot's ranks on that same layout; resuming is exact.
+    ``stretch_checkpoint`` checkpoints each stretch lazily on a wide
+    layout.
+
+    A parity run with no ``vertices``, ``init_ranks`` or ``max_fanout``
+    on an edge list that fits one task (:func:`_fits_one_task`, the
+    rule cc and scc use) runs all its rounds in ONE Python task
+    (:func:`_in_one_task`, :func:`_rank_kernel`) before the first
+    yield. Its result is ``coalesce(1)``'d: that changes no row, and
+    the frame then reports one partition, so a caller's global sort
+    needs no range shuffle."""
+    one_task = parity and vertices is None and init_ranks is None and not max_fanout
+    if iters and one_task and _fits_one_task(edges, doubled=False):
+        kernel = partial(_rank_kernel, iters, damping)
+        out, n = _in_one_task(edges, _RANK_COLS, kernel, "ignore")
+        out = out.coalesce(1)
+        for k in iters:
+            yield k, out.where(F.col("k") == k).select("id", "rank"), n
         return
-    adjacency, n = _rank_layout(edges, None, None)
+    if vertices is None:
+        vertices = _vertices(edges)
+    adjacency, n = _laid_out(
+        _with_dangling(adjacency_from_edges(edges), vertices), max_fanout
+    )
     if n == 0:
         for k in iters:
             yield k, edges.sparkSession.createDataFrame([], _NO_RANKS), 0
         return
-    teleport = (1.0 - DAMPING) / n
-    step = _teleport_step(_uniform_contribs, teleport, DAMPING)
-    wide = _narrow_width(adjacency) is None
-    ranks, done = 1.0 / n, 0
+    if not max_fanout:  # a chunked adjacency carries the true outdeg
+        adjacency = adjacency.withColumn("outdeg", F.size("outlinks"))
+    teleport = (1.0 - damping) / n
+    ranks = 1.0 / n if init_ranks is None else init_ranks.select("id", "rank")
+    if parity:
+        step, absent = _teleport_step(_uniform_contribs, teleport, damping), teleport
+    else:
+        # Corrected mode: dangling mass is redistributed uniformly each
+        # iteration. The mass is a 1-row aggregate broadcast back via
+        # crossJoin — kept lazy (a per-iteration collect() would
+        # re-execute the whole lineage from scratch every iteration).
+        #
+        # Unlike the parity loop, each iteration consumes `ranks` TWICE
+        # (contribution fan-out + dangling-mass sum), so without a
+        # barrier the lineage doubles per iteration (2^k plan blowup
+        # between checkpoints — measured as a 100-exchange final plan at
+        # k=4). A lazy localCheckpoint per iteration bounds the plan to
+        # one iteration's shape; the final action materializes the chain
+        # in order, which is exactly the per-iteration work anyway.
+        # The dangling-vertex set is a static property of the adjacency —
+        # compute the id list once, not from the per-iteration join.
+        ids = _ids(adjacency)
+        dangling = adjacency.where(F.col("outdeg") == 0).select("id")
+
+        def step(rows: DataFrame, ranks: DataFrame) -> DataFrame:
+            extra = ranks.join(dangling, "id", "left_semi").agg(
+                (F.lit(damping) * F.coalesce(F.sum("rank"), F.lit(0.0)) / n).alias("extra")
+            )
+            summed = _uniform_contribs(rows).groupBy("id").agg(F.sum("contrib").alias("insum"))
+            return (
+                ids.join(summed, "id", "left")
+                .crossJoin(F.broadcast(extra))
+                .select(
+                    "id",
+                    (
+                        F.lit(teleport)
+                        + F.lit(damping) * F.coalesce(F.col("insum"), F.lit(0.0))
+                        + F.col("extra")
+                    ).alias("rank"),
+                )
+            )
+
+        absent, checkpoint_interval = None, 1
+        if isinstance(ranks, float):
+            ranks = ids.select("id", F.lit(ranks).alias("rank"))
+    wide = stretch_checkpoint and _narrow_width(adjacency) is None
+    done = 0
     for k in iters:
-        # 4: pagerank_with_n's default checkpoint interval
-        ranks = _rank_loop(adjacency, step, ranks, k - done, 4, teleport)
+        ranks = _rank_loop(adjacency, step, ranks, k - done, checkpoint_interval, absent)
         if wide:
             ranks = ranks.localCheckpoint(eager=False)
         done = k
         yield k, ranks, n
 
 
-def _small_string_graph(edges: DataFrame, vertices: DataFrame | None) -> bool:
-    """Whether a parity run may take :func:`_ranks_in_one_task`: string
-    ids, ``edges`` fit one task by :func:`_fits_one_task`, and
-    ``vertices``, when given, needs at most one task too. Missing stats
-    fail closed."""
-    if vertices is not None:
-        need = _edge_tasks(vertices, doubled=False)
-        if vertices.schema[0].dataType != StringType() or need is None or need > 1:
-            return False
-    return edges.schema["src"].dataType == StringType() and _fits_one_task(
-        edges, doubled=False
-    )
+def _rank_kernel(iters: tuple, damping: float, uniq, src, dst, has_null: bool):
+    """The parity rounds in :func:`_in_one_task`'s one task: ``(k, id,
+    rank)`` rows for each ``k`` of ``iters``, and the round log. The
+    same float operations as :func:`_uniform_contribs` and
+    :func:`_teleport_step`, in the order the distributed loop adds them
+    (:func:`_rank_loop`).
 
-
-_RANK_ROWS = "k int, id string, rank double"
-
-
-def _ranks_in_one_task(
-    edges: DataFrame, vertices: DataFrame | None, iters: tuple, damping: float
-) -> tuple[list[tuple[int, DataFrame]], int]:
-    """The parity loop for a small graph, all rounds in ONE Python task:
-    ``([(k, ranks) for k in iters], N)``.
-
-    The adjacency (:func:`_rank_layout`'s, without the layout) is
-    built at width 1 and sent through one
-    ``groupBy(lit(0)).applyInPandas`` group, where :func:`_rank_frame`
-    runs the rounds and emits ``(k, id, rank)`` for each ``k``. The
-    result is checkpointed lazily, and one ``observe(...).count()``
-    both materializes it and reads N, so the whole run is one job.
-    ``runtime_counters.note_round`` then runs once per round, so
-    ``rounds_total`` keeps its meaning. With N = 0 no group runs and
-    no round is counted, as on the distributed path."""
-    spark = edges.sparkSession
-    obs = Observation()
-    with _loop_shuffle_scope(spark, 1):
-        adjacency = _with_dangling(
-            adjacency_from_edges(edges),
-            _vertices(edges) if vertices is None else vertices,
-        )
-        # aliased: a bare integer literal would read as a group-by
-        # ordinal. coalesce(1) changes no row; it makes the frame report
-        # one partition, so a caller's global sort needs no range shuffle
-        out = (
-            adjacency.groupBy(F.lit(0).alias("__task"))
-            .applyInPandas(partial(_rank_frame, iters, damping), _RANK_ROWS)
-            .coalesce(1)
-            .localCheckpoint(eager=False)
-        )
-        out.observe(obs, F.count_if(F.col("k") == iters[0]).alias("n")).count()
-    n = obs.get["n"]
-    for _ in range(iters[-1] if n else 0):
-        runtime_counters.note_round()
-    snaps = [(k, out.where(F.col("k") == k).select("id", "rank")) for k in iters]
-    return snaps, n
-
-
-def _rank_frame(iters: tuple, damping: float, pdf):
-    """The one task's body: the parity rounds over the adjacency rows
-    ``pdf`` (``id``, ``outlinks``), the same float operations as
-    :func:`_uniform_contribs` and :func:`_teleport_step`, in the order
-    the distributed loop adds them (:func:`_rank_loop`).
-
-    Ids are factorized with ``np.unique``, which sorts, so code order
-    is id order (Python's code-point order on ``str`` equals Spark's
-    UTF-8 byte order). Contributions are sorted by (source, target)
-    code, and ``np.add.at`` adds each target's in that order, one at a
-    time from 0.0, as a one-partition partial sum does. A target
-    outside the vertex set still counts in its source's out-degree but
-    keeps no rank; the null id counts in N, sends and receives
-    nothing, and reads as the teleport rank after a round."""
+    Only edges with both ends non-null send rank, each distinct edge
+    once (the adjacency's ``collect_set``). ``np.unique`` returns them
+    in (source, target) code order, which is (source id, target id)
+    order, and ``np.add.at`` adds each target's contributions in that
+    order, one at a time from 0.0, as a one-partition partial sum does.
+    The null id counts in N, sends and receives nothing, and so reads
+    as the teleport rank after a round. With N = 0 no round runs."""
     import pandas as pd
 
-    n = len(pdf)
-    ids = pdf["id"].to_numpy(object)
-    real = pd.notna(ids)
-    uniq, code = np.unique(ids[real], return_inverse=True)
-    links = pdf["outlinks"].to_numpy(object)[real]
-    deg = np.fromiter(map(len, links), int, len(links))
-    outdeg = np.zeros(len(uniq), int)
-    outdeg[code] = deg
-    src = np.repeat(code, deg)
-    targets = np.concatenate([np.empty(0, object), *links])
-    dst = np.searchsorted(uniq, targets)
-    hit = dst < len(uniq)
-    hit[hit] = uniq[dst[hit]] == targets[hit]
-    order = np.lexsort((dst[hit], src[hit]))
-    src, dst = src[hit][order], dst[hit][order]
-    div = outdeg[src]
-    teleport = (1.0 - damping) / n
-    rank, null_rank = np.full(len(uniq), 1.0 / n), 1.0 / n
-    frames, done = [], 0
+    n = len(uniq) + has_null
+    if not n:
+        return None, []
+    src, dst = np.unique(np.stack([src, dst]), axis=1)
+    div = np.bincount(src, minlength=len(uniq))[src]
+    ids = np.append(uniq.astype(object), [None] * has_null)
+    rank, frames, done = np.full(n, 1.0 / n), [], 0
     for k in iters:
         for _ in range(k - done):
-            insum = np.zeros(len(uniq))
+            insum = np.zeros(n)
             np.add.at(insum, dst, rank[src] / div)
-            rank, null_rank = teleport + damping * insum, teleport
+            rank = (1.0 - damping) / n + damping * insum
         done = k
-        frames.append(pd.DataFrame({"k": k, "id": uniq, "rank": rank}))
-        if not real.all():
-            frames.append(pd.DataFrame({"k": [k], "id": [None], "rank": [null_rank]}))
-    return pd.concat(frames, ignore_index=True)
+        frames.append(pd.DataFrame({"id": ids, "k": k, "rank": rank}))
+    return pd.concat(frames, ignore_index=True), [["pagerank", done, done, True]]
 
 
 def top_ranks(

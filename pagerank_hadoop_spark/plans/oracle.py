@@ -70,6 +70,9 @@ def pagerank_corrected_oracle_sql(
 
     Per-iteration: ``dang_i = Σ r_i(v) over v with no out-edges``;
     ``r_{i+1}(v) = (1-d)/N + d·(Σ_{u→v} r_i(u)/outdeg(u) + dang_i/N)``.
+    Each ``r{i}`` is read twice (by ``d{i}`` and by ``r{i+1}``), so it
+    is MATERIALIZED: inlined, DuckDB would re-derive the whole chain
+    below it at every read.
     """
     ctes = [
         f"edges AS ({edges_sql})",
@@ -79,7 +82,7 @@ def pagerank_corrected_oracle_sql(
         " FROM edges GROUP BY src)",
         "uedges AS (SELECT DISTINCT src, dst FROM edges)",
         "nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM vertices)",
-        "r0 AS (SELECT id, 1.0 / nn.n AS rank FROM vertices, nn)",
+        "r0 AS MATERIALIZED (SELECT id, 1.0 / nn.n AS rank FROM vertices, nn)",
     ]
     for i in range(n_iter):
         ctes.append(
@@ -87,7 +90,7 @@ def pagerank_corrected_oracle_sql(
             f"FROM r{i} r LEFT JOIN adj a ON r.id = a.id WHERE a.id IS NULL)"
         )
         ctes.append(
-            f"r{i + 1} AS (SELECT v.id, "
+            f"r{i + 1} AS MATERIALIZED (SELECT v.id, "
             f"(1.0 - {damping}) / nn.n + {damping} * "
             f"(COALESCE(s.insum, 0.0) + d{i}.dang / nn.n) AS rank "
             f"FROM vertices v CROSS JOIN nn CROSS JOIN d{i} LEFT JOIN ("

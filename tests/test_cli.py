@@ -114,11 +114,11 @@ def test_cli_lays_out_once_and_matches_pagerank_with_n(
 
     parsed = parse_pages(read_pages(spark, str(dump)))
     edges = remove_red_links(extract_links(parsed), parsed)
-    assert P._small_string_graph(edges, None)  # the default takes one task
+    assert P._fits_one_task(edges, doubled=False)  # the default takes one task
     for one_task in (True, False):
         out = tmp_path / f"result-{one_task}"
         layouts, one_task_runs = [], []
-        real_layout, real_run = P._laid_out, P._ranks_in_one_task
+        real_layout, real_run = P._laid_out, P._in_one_task
         with monkeypatch.context() as m:
             m.setattr(P, "_fits_one_task", lambda *a, **k: one_task)
             m.setattr(
@@ -126,7 +126,7 @@ def test_cli_lays_out_once_and_matches_pagerank_with_n(
                 lambda *a, **k: layouts.append(1) or real_layout(*a, **k),
             )
             m.setattr(
-                P, "_ranks_in_one_task",
+                P, "_in_one_task",
                 lambda *a, **k: one_task_runs.append(1) or real_run(*a, **k),
             )
             assert main([str(dump), str(out)]) == 0

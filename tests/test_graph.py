@@ -937,7 +937,10 @@ def _spy_one_task(monkeypatch) -> list:
 
     calls, real = [], G._in_one_task
     monkeypatch.setattr(
-        G, "_in_one_task", lambda e, col, *a: calls.append(col) or real(e, col, *a)
+        G,
+        "_in_one_task",
+        # the result's columns after id: the label column comes first
+        lambda e, cols, *a: calls.append(cols.split()[0]) or real(e, cols, *a),
     )
     return calls
 
@@ -1081,6 +1084,32 @@ def test_one_task_probe_fails_closed(spark, monkeypatch, pagerank_module):
     finally:
         spark.conf.set(key, before)
     assert calls == []
+
+
+def test_cc_scc_and_rank_snapshots_share_one_runner(spark, monkeypatch, pagerank_module):
+    """cc, scc and a rank snapshot run on a small graph each go through
+    the one one-task runner exactly once."""
+    from pagerank_hadoop_spark.operators import graph as G
+
+    P = pagerank_module
+    assert G._in_one_task is P._in_one_task
+    calls, real = [], P._in_one_task
+
+    def spy(edges, cols, *a):
+        calls.append(cols)
+        return real(edges, cols, *a)
+
+    monkeypatch.setattr(P, "plan_bytes", lambda df: 1000)
+    for module in (G, P):
+        monkeypatch.setattr(module, "_in_one_task", spy)
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "a"), ("b", "c")], "src string, dst string"
+    )
+    G.connected_components(edges).collect()
+    G.strongly_connected_components(edges).collect()
+    for _, ranks, _ in P.pagerank_snapshots(edges, (1, 8)):
+        ranks.collect()
+    assert calls == ["component {id}", "scc {id}", P._RANK_COLS]
 
 
 def test_round_driver_keeps_float_loops_at_session_width(spark):

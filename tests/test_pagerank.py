@@ -385,18 +385,19 @@ def test_every_variant_bitwise_pinned(spark):
 
 def _spy_one_task(monkeypatch, P) -> list:
     """Record every one-task rank run of ``P`` from now on."""
-    calls, real = [], P._ranks_in_one_task
+    calls, real = [], P._in_one_task
     monkeypatch.setattr(
-        P, "_ranks_in_one_task", lambda *a, **k: calls.append(1) or real(*a, **k)
+        P, "_in_one_task", lambda *a, **k: calls.append(1) or real(*a, **k)
     )
     return calls
 
 
-def _rank_run_on_path(monkeypatch, P, one_task: bool, run):
+def _rank_run_on_path(monkeypatch, P, one_task: bool, run, took: bool | None = None):
     """``run()`` forced onto one path of ``P``: ``(sorted rows per
     frame, N, rounds)``, with every rank compared as its exact float.
     The plan-size probe reads every input as small, and the edge
-    probe decides the path."""
+    probe decides the path; ``took`` (default ``one_task``) is whether
+    the one-task runner must have run."""
     from pagerank_hadoop_spark import runtime_counters
 
     with monkeypatch.context() as m:
@@ -406,7 +407,7 @@ def _rank_run_on_path(monkeypatch, P, one_task: bool, run):
         runtime_counters.reset()
         frames, n = run()
         rows = [sorted((tuple(r) for r in f.collect()), key=repr) for f in frames]
-        assert bool(calls) == one_task
+        assert len(calls) == (one_task if took is None else took)
     return rows, n, runtime_counters.snapshot()["rounds"]
 
 
@@ -430,41 +431,84 @@ RANK_PATH_EDGES = [
     ("b", None), (None, "c"), (None, None), ("d", None), ("d", "c"),
 ]
 RANK_VERTICES = ["a", "b", "c", "t", "iso1", "Iso2", "\U0001F600", None]
+# The same graph's ids as longs above 2**53, where a float64 would
+# merge neighbours, with the same null endpoints
+_BIG = 2**53
+_LONG_IDS = {v: _BIG + i for i, v in enumerate(sorted(
+    {v for e in RANK_PATH_EDGES for v in e if v is not None}))}
+RANK_PATH_LONG_EDGES = [
+    tuple(None if v is None else _LONG_IDS[v] for v in e) for e in RANK_PATH_EDGES
+]
+# Exact ranks of RANK_PATH_EDGES over RANK_VERTICES (N = 8) after 1
+# and 8 rounds, taken while a vertex list could still run in one task
+# (both paths gave these); a vertex list now runs distributed.
+_TELEPORT_8 = 0.018750000000000003
+RANK_VERTICES_GOLDENS = {
+    1: {"a": 0.11614583333333332, "b": 0.08072916666666666,
+        "c": 0.11614583333333332, "t": 0.11614583333333332},
+    8: {"a": 0.07000941684172746, "b": 0.054290807123528156,
+        "c": 0.07000941684172746, "t": 0.07000941684172746},
+}
 
 
 def test_one_task_and_distributed_rank_paths_agree(spark, monkeypatch, pagerank_module):
     """The one-task kernel and the distributed loop give identical
-    rows, N and rounds, float for float, for ``n_iter`` 1 and 8, with
-    and without a vertex list holding isolated vertices, and for the
-    snapshots (1, 8); on the empty edge list too."""
+    rows, N and rounds, float for float, for ``n_iter`` 1 and 8 and
+    for the snapshots (1, 8), on string ids, on long ids above 2**53
+    and on the empty edge list. A run with a vertex list holding
+    isolated vertices takes the distributed loop even where the edge
+    probe admits one task, and gives the exact ranks pinned before."""
     P = pagerank_module
     verts = spark.createDataFrame([(v,) for v in RANK_VERTICES], "id string")
     runs = {}
-    for name, rows in (("graph", RANK_PATH_EDGES), ("empty", [])):
-        edges = spark.createDataFrame(rows, "src string, dst string")
+    for name, rows, schema in (
+        ("graph", RANK_PATH_EDGES, "src string, dst string"),
+        ("longs", RANK_PATH_LONG_EDGES, "src long, dst long"),
+        ("empty", [], "src string, dst string"),
+    ):
+        edges = spark.createDataFrame(rows, schema)
         for k in (1, 8):
             runs[f"{name}/{k}"] = lambda e=edges, k=k: _one(P.pagerank_with_n(e, n_iter=k))
-            runs[f"{name}/{k}/vertices"] = lambda e=edges, k=k: _one(
-                P.pagerank_with_n(e, vertices=verts, n_iter=k)
-            )
+            if name != "longs":
+                runs[f"{name}/{k}/vertices"] = lambda e=edges, k=k: _one(
+                    P.pagerank_with_n(e, vertices=verts, n_iter=k)
+                )
         runs[f"{name}/snapshots"] = lambda e=edges: _snapshots(
             P.pagerank_snapshots(e, (1, 8))
         )
     got = {}
     for name, run in runs.items():
-        got[name] = [_rank_run_on_path(monkeypatch, P, p, run) for p in (True, False)]
+        took = "vertices" not in name
+        got[name] = [
+            _rank_run_on_path(monkeypatch, P, p, run, p and took) for p in (True, False)
+        ]
         assert got[name][0] == got[name][1], name
     assert got["empty/8"][0] == ([[]], 0, 0)
     assert got["empty/snapshots"][0] == ([[], []], 0, 0)
     teleport = (1.0 - 0.85) / len(RANK_VERTICES)
+    assert teleport == _TELEPORT_8
     assert got["empty/8/vertices"][0] == (
         [sorted(((v, teleport) for v in RANK_VERTICES), key=repr)],
         len(RANK_VERTICES),
         8,
     )
+    for k, pinned in RANK_VERTICES_GOLDENS.items():
+        want = {v: pinned.get(v, _TELEPORT_8) for v in RANK_VERTICES}
+        assert got[f"graph/{k}/vertices"][0] == (
+            [sorted(want.items(), key=repr)], len(RANK_VERTICES), k
+        ), k
     ranks, n, rounds = got["graph/8"][0]
     assert (None, (1.0 - 0.85) / n) in ranks[0] and rounds == 8
     assert got["graph/snapshots"][0][1:] == (n, 8)
+    # the long-id run is the string run with its ids renamed, in the
+    # same code order, so every rank is the same float
+    longs = got["longs/snapshots"][0]
+    assert longs[1:] == (n, 8)
+    rename = {**_LONG_IDS, None: None}
+    assert longs[0] == [
+        sorted(((rename[v], r) for v, r in ranks), key=repr)
+        for ranks in got["graph/snapshots"][0][0]
+    ]
 
 
 def _one(result):
@@ -481,10 +525,10 @@ def _snapshots(gen):
 def test_rank_runs_outside_the_one_task_rule_stay_distributed(
     spark, monkeypatch, pagerank_module
 ):
-    """A small string-id parity run takes one task; missing stats, a
-    big estimate under a one-task session width, non-string ids,
-    ``init_ranks``, ``max_fanout`` and ``parity=False`` each take the
-    distributed loop."""
+    """A small parity run with integer or string ids and no vertex list
+    takes one task; missing stats, a big estimate under a one-task
+    session width, a vertex list, ``init_ranks``, ``max_fanout`` and
+    ``parity=False`` each take the distributed loop."""
     P = pagerank_module
     edges = spark.createDataFrame(RANK_PATH_EDGES, "src string, dst string")
     longs = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
@@ -493,12 +537,11 @@ def test_rank_runs_outside_the_one_task_rule_stay_distributed(
     calls = _spy_one_task(monkeypatch, P)
     P.pagerank_with_n(edges, n_iter=2)
     list(P.pagerank_snapshots(edges, (1, 2)))
-    assert len(calls) == 2
-    assert P._small_string_graph(edges, edges.select("src"))
-    assert not P._small_string_graph(edges, longs.select("src"))
+    P.pagerank_with_n(longs, n_iter=2)
+    assert len(calls) == 3
     calls.clear()
     half, _ = P.pagerank_with_n(edges, n_iter=1, parity=False)
-    P.pagerank_with_n(longs, n_iter=2)
+    P.pagerank_with_n(edges, n_iter=2, vertices=edges.select("src"))
     P.pagerank_with_n(edges, n_iter=2, init_ranks=half)
     P.pagerank_with_n(edges, n_iter=2, max_fanout=2)
     key = "spark.sql.shuffle.partitions"
