@@ -69,40 +69,10 @@ def _symmetrized(e: DataFrame, *cols: str) -> DataFrame:
     )
 
 
-def _pinned(
-    e: DataFrame, parts: int, key: str, salt: int | None = None
-) -> DataFrame:
+def _pinned(e: DataFrame, parts: int, key: str) -> DataFrame:
     """Persistent copy of ``e`` hash-laid on ``key`` over ``parts``
-    tasks, so every round's join on ``key`` reuses the layout.
-
-    ``salt`` spreads a hot key's edges over ``salt`` sub-partitions: a
-    deterministic per-row salt (content hash — no RNG state to
-    coordinate across task retries, same scheme as
-    ``operators.joins.salted_join``) is baked in BEFORE the one-time
-    repartition; :func:`_score_join` matches it."""
-    keys = [key]
-    if salt:
-        e = e.withColumn("__salt", F.pmod(F.xxhash64("src", "dst"), F.lit(salt)))
-        keys.append("__salt")
-    return e.repartition(parts, *keys).localCheckpoint(eager=True)
-
-
-def _score_join(
-    e: DataFrame, key: str, scores: DataFrame, salt: int | None
-) -> DataFrame:
-    """``e ⋈ scores`` on ``e[key] == scores.id``. Salted (``e`` laid
-    out by :func:`_pinned` with the same ``salt``), the scores side is
-    replicated once per salt value and the join matches the salt too
-    (|V|·salt rows — scores are (id, value) pairs, so replication is
-    cheap relative to the hot key's edge volume it spreads)."""
-    if not salt:
-        return e.join(scores, e[key] == scores.id)
-    scores = scores.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    )
-    return e.join(
-        scores, (e[key] == scores.id) & (e["__salt"] == scores["__salt"])
-    )
+    tasks, so every round's join on ``key`` reuses the layout."""
+    return e.repartition(parts, key).localCheckpoint(eager=True)
 
 
 def _holds_float(t) -> bool:
@@ -941,9 +911,7 @@ def aggregate_messages(
     return msgs.groupBy("id").agg(agg("__msg").alias("msg"))
 
 
-def label_propagation(
-    edges: DataFrame, max_iter: int = 3, salt: int | None = None
-) -> DataFrame:
+def label_propagation(edges: DataFrame, max_iter: int = 3) -> DataFrame:
     """Synchronous label propagation (community detection) — the
     GraphFrames ``labelPropagation`` surface: every vertex starts in
     its own community and each round adopts the most frequent label
@@ -963,13 +931,9 @@ def label_propagation(
     second exchange). Only (id, label) pairs ever shuffle. Every
     vertex of the symmetrized edge list has ≥1 neighbor, so the
     per-round argmax covers the whole vertex set.
-
-    ``salt``: same skew escape hatch as :func:`hits` — the persistent
-    symmetrized copy is not a shuffle output, so AQE cannot split a
-    hot vertex's partition; salting spreads it at layout time.
     """
     parts = _edge_partitions(edges)
-    sym = _pinned(_symmetrized(edges), parts, "src", salt)
+    sym = _pinned(_symmetrized(edges), parts, "src")
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
@@ -981,7 +945,7 @@ def label_propagation(
         # mode(deterministic=true) is an exact counted argmax with a
         # total tie-break: the narrowed loop width cannot move it
         return (
-            _score_join(sym, "src", labels, salt)
+            sym.join(labels, sym["src"] == labels.id)
             .groupBy(F.col("dst").alias("id"))
             .agg(F.mode("label", True).alias("label"))
         )
@@ -1058,7 +1022,7 @@ def bipartite_project(
     )
 
 
-def hits(edges: DataFrame, n_iter: int = 3, salt: int | None = None) -> DataFrame:
+def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     """HITS (Kleinberg hubs & authorities) over a directed edge list:
     ``auth(v) = Σ_{u→v} hub(u)``, ``hub(u) = Σ_{u→v} auth(v)``, each
     L2-normalized per half-step; returns ``(id, hub, auth)`` for the
@@ -1092,19 +1056,6 @@ def hits(edges: DataFrame, n_iter: int = 3, salt: int | None = None) -> DataFram
     its PageRank surface (C1 loop driver family,
     ``PageRank.java:305-340``) with the other classic link-analysis
     fixpoint, expressed on the same id-only shuffle economy.
-
-    ``salt`` (off by default): spread each hot vertex's edges over
-    ``salt`` sub-partitions of the persistent copies and replicate the
-    per-round score frames once per salt value. The skew escape hatch
-    for the broadcast-infeasible regime: the persistent key-aligned
-    edge copies are NOT shuffle outputs, so AQE's skew-join split has
-    nothing to split there (measured in scripts/graph_skew_ab.py —
-    the rule engages only when the edge side shuffles per round,
-    which is the layout this function deliberately avoids). Salting
-    regroups the partial sums (per (key, salt) instead of per key),
-    so scores can differ from the unsalted run in the last ulp — the
-    registry entries run unsalted; turn it on for production graphs
-    with broadcast-infeasible scores and known hot vertices.
     """
     parts = _edge_partitions(edges, doubled=False)
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
@@ -1112,8 +1063,8 @@ def hits(edges: DataFrame, n_iter: int = 3, salt: int | None = None) -> DataFram
     # update, dst for the hub update), so keep TWO aligned persistent
     # copies — the GraphX routing-table trade: 2x edge cache buys zero
     # per-round edge exchanges at score sizes too big to broadcast
-    e_src = _pinned(e, parts, "src", salt)
-    e_dst = _pinned(e, parts, "dst", salt)
+    e_src = _pinned(e, parts, "src")
+    e_dst = _pinned(e, parts, "dst")
     vertices = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
@@ -1135,7 +1086,7 @@ def hits(edges: DataFrame, n_iter: int = 3, salt: int | None = None) -> DataFram
         # per ``to`` vertex, the sum of ``col`` over the edges whose
         # ``key`` end holds the score; 0.0 where no edge arrives
         summed = (
-            _score_join(e_side, key, scores, salt)
+            e_side.join(scores, e_side[key] == scores.id)
             .groupBy(F.col(to).alias("id"))
             .agg(F.sum(col).alias(out))
         )

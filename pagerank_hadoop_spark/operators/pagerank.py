@@ -46,16 +46,15 @@ width with the rank side as the hash-join build side, so each vertex
 adds its incoming contributions in (source id, target id) order,
 whatever the session width or core count (one sequential sum on a
 one-partition layout; on a wider one, one per layout partition, then
-merged). A layout at the full session width, and a chunked one, get
-no fixed order. A small parity run
-with no vertex list (:func:`_fits_one_task`, which fails closed) runs
-all its rounds in ONE Python task instead (:func:`_rank_kernel`): a
-numpy loop that adds in the same order, so its ranks equal the
-distributed loop's bit for bit. Its rounds are bound by scheduling,
+merged). A layout at the full session width gets no fixed order. A
+small parity run with no vertex list (:func:`_fits_one_task`, which
+fails closed) runs all its rounds in ONE Python task instead
+(:func:`_rank_kernel`): a numpy loop that adds in the same order, so
+its ranks equal the distributed loop's bit for bit. Its rounds are bound by scheduling,
 not data: one job runs them all. :func:`pagerank_with_n` and
 :func:`pagerank_snapshots` share one run (:func:`_rank_runs`), which
-picks the path. Resumed, chunked, corrected, personalized and
-weighted runs, and runs given a vertex list, stay distributed.
+picks the path. Resumed, corrected, personalized and weighted runs,
+and runs given a vertex list, stay distributed.
 
 The module also holds what the one-task loops of
 ``operators/graph.py`` (cc, scc) and parity PageRank share: the
@@ -393,66 +392,7 @@ def _with_dangling(adjacency: DataFrame, vertices: DataFrame) -> DataFrame:
     )
 
 
-_FANOUT_SALTS = 8
-
-
-def _chunked_adjacency(
-    adjacency: DataFrame, max_fanout: int, parts: int
-) -> DataFrame:
-    """Split each vertex's outlinks into rows of ≤ ``max_fanout``
-    elements, keeping the TRUE out-degree in ``outdeg`` (the contrib
-    divisor). A hub holding 20 % of all edges otherwise fans out all
-    its messages from ONE task — explode output stays in the
-    producing task's partition, so no downstream setting can spread
-    it; splitting must happen at layout time. Rows carry
-    ``__chunk`` (0..k-1; chunk 0 doubles as the unique-vertex marker
-    for final joins) and a bounded ``__salt`` the persistent
-    partitioning AND the per-round join key include, so hub chunks
-    land on ``_FANOUT_SALTS`` different partitions and stay there
-    across rounds (rank frames replicate once per salt — (id, double)
-    pairs, cheap against the hot key's edge volume)."""
-    # Empty-chunk literal must match the caller's element type — a
-    # pre-built adjacency may carry non-string vertex ids, and a
-    # hardcoded array<string> makes when/otherwise raise an opaque
-    # AnalysisException.
-    outlinks_type = adjacency.schema["outlinks"].dataType.simpleString()
-    chunks = F.when(
-        F.size("outlinks") > 0,
-        F.transform(
-            F.sequence(
-                F.lit(0),
-                F.ceil(F.size("outlinks") / F.lit(max_fanout)).cast("int")
-                - 1,
-            ),
-            lambda i: F.slice("outlinks", i * max_fanout + 1, max_fanout),
-        ),
-        # guard: sequence(0, -1) generates DESCENDING; empty outlink
-        # rows (dangling) keep exactly one empty chunk
-    ).otherwise(F.array(F.array().cast(outlinks_type)))
-    return (
-        adjacency.select(
-            "id",
-            F.size("outlinks").alias("outdeg"),
-            F.posexplode(chunks).alias("__chunk", "outlinks"),
-        )
-        .withColumn(
-            "__salt",
-            F.pmod(F.xxhash64("id", "__chunk"), F.lit(_FANOUT_SALTS)),
-        )
-        .repartition(parts, "id", "__salt")
-        .localCheckpoint(eager=True)
-    )
-
-
-def _with_salt_replicas(ranks: DataFrame) -> DataFrame:
-    return ranks.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(_FANOUT_SALTS - 1)))
-    )
-
-
-def _laid_out(
-    adjacency: DataFrame, max_fanout: int | None = None
-) -> tuple[DataFrame, int]:
+def _laid_out(adjacency: DataFrame) -> tuple[DataFrame, int]:
     """Lay the static side of every round's join out once: partition
     on id, cache, count N (the driver-side scalar of
     ``PageRank.java:470-471``), then right-size. Now that N is known, a
@@ -461,34 +401,20 @@ def _laid_out(
     sorted by id, so the loop isn't dominated by empty-task
     scheduling; :func:`_rank_loop` then runs its rounds at that width,
     and the id sort fixes the order in which every round streams the
-    adjacency into its partial sums. ``max_fanout`` splits hot rows at
-    layout time instead (:func:`_chunked_adjacency`). Returns
-    ``(adjacency, N)``."""
+    adjacency into its partial sums. Returns ``(adjacency, N)``."""
     shuffle_parts = shuffle_partitions(adjacency.sparkSession)
     cached = adjacency.repartition(shuffle_parts, "id").cache()
     n = cached.count()
     parts = _iter_partitions(n, shuffle_parts)
-    if n and max_fanout:
-        laid = _chunked_adjacency(cached, max_fanout, parts)
-    elif n and parts < shuffle_parts:
-        laid = (
-            cached.repartition(parts, "id")
-            .sortWithinPartitions("id")
-            .localCheckpoint(eager=True)
-        )
-    else:
+    if not n or parts >= shuffle_parts:
         return cached, n
+    laid = (
+        cached.repartition(parts, "id")
+        .sortWithinPartitions("id")
+        .localCheckpoint(eager=True)
+    )
     cached.unpersist()
     return laid, n
-
-
-def _ids(adjacency: DataFrame) -> DataFrame:
-    """One row per vertex. A chunked adjacency repeats hot ids, so its
-    chunk 0 is the unique-vertex marker (no distinct — a
-    co-partitioned filter, not a shuffle)."""
-    if "__chunk" in adjacency.columns:
-        adjacency = adjacency.where(F.col("__chunk") == 0)
-    return adjacency.select("id")
 
 
 def _narrow_width(adjacency: DataFrame) -> int | None:
@@ -518,10 +444,7 @@ def _rank_loop(
     state need carry only message receivers — one join per round, no
     dense left-join-back — and the result is densified the same way.
     With ``absent`` None the join is inner (a vertex outside the state
-    sends nothing) and the state is returned as it is. A chunked
-    adjacency keys the join on (id, salt) against salt-replicated rank
-    frames, so its persistent layout is the join layout and hub chunks
-    never re-co-locate.
+    sends nothing) and the state is returned as it is.
 
     A layout narrower than the session runs every round, and the
     result, at the layout's width (:func:`_loop_shuffle_scope`), and
@@ -542,17 +465,15 @@ def _rank_loop(
     round-trip per interval."""
     parts = _narrow_width(adjacency)
     narrow = parts is not None
-    salted = "__salt" in adjacency.columns
     ranks = seed
     with _loop_shuffle_scope(adjacency.sparkSession, parts):
         for i in range(n_iter):
             if isinstance(ranks, float):
                 rows = adjacency.withColumn("rank", F.lit(ranks))
             else:
-                side = _with_salt_replicas(ranks) if salted else ranks
                 rows = adjacency.join(
-                    side.hint("shuffle_hash") if narrow else side,
-                    ["id", "__salt"] if salted else "id",
+                    ranks.hint("shuffle_hash") if narrow else ranks,
+                    "id",
                     "inner" if absent is None else "left",
                 )
                 if absent is not None:
@@ -562,11 +483,11 @@ def _rank_loop(
             if (i + 1) % checkpoint_interval == 0 and i + 1 < n_iter:
                 ranks = ranks.localCheckpoint(eager=False)
         if isinstance(ranks, float):
-            out = _ids(adjacency).select("id", F.lit(ranks).alias("rank"))
+            out = adjacency.select("id", F.lit(ranks).alias("rank"))
         elif absent is None:
             out = ranks
         else:
-            out = _ids(adjacency).join(ranks, "id", "left").select(
+            out = adjacency.select("id").join(ranks, "id", "left").select(
                 "id", F.coalesce("rank", F.lit(absent)).alias("rank")
             )
         return out.localCheckpoint(eager=True) if narrow else out
@@ -605,7 +526,6 @@ def pagerank(
     damping: float = DAMPING,
     parity: bool = True,
     checkpoint_interval: int = 4,
-    max_fanout: int | None = None,
 ) -> DataFrame:
     """Run ``n_iter`` PageRank iterations; returns ``(id, rank)``."""
     ranks, _ = pagerank_with_n(
@@ -615,7 +535,6 @@ def pagerank(
         damping=damping,
         parity=parity,
         checkpoint_interval=checkpoint_interval,
-        max_fanout=max_fanout,
     )
     return ranks
 
@@ -629,7 +548,6 @@ def pagerank_with_n(
     parity: bool = True,
     checkpoint_interval: int = 4,
     init_ranks: DataFrame | None = None,
-    max_fanout: int | None = None,
 ) -> tuple[DataFrame, int]:
     """Run ``n_iter`` PageRank iterations; returns ``((id, rank), N)``.
 
@@ -652,16 +570,6 @@ def pagerank_with_n(
     j + k straight iterations (unit-pinned and oracle-gated as
     ``pagerank_resume``).
 
-    ``max_fanout`` (off by default): cap outlinks-per-adjacency-row by
-    chunking hot rows at layout time (``_chunked_adjacency``) — the
-    hub-skew escape hatch. A vertex holding 20 % of all edges
-    otherwise fans its messages out of ONE task per iteration
-    (explode output never leaves the producing task), which bounds
-    stage wall at any cluster size. Chunked mode keys the
-    per-iteration join on (id, salt) against salt-replicated rank
-    frames, so results can differ from the unsalted run in the last
-    ulp (partial sums regroup); the registry entries run unchunked.
-
     This is the one snapshot of :func:`_rank_runs` after ``n_iter``
     rounds, so a small parity run takes one task under the rule stated
     there, with the same ranks, N and round count.
@@ -674,7 +582,6 @@ def pagerank_with_n(
         parity=parity,
         checkpoint_interval=checkpoint_interval,
         init_ranks=init_ranks,
-        max_fanout=max_fanout,
     )
     return ranks, n
 
@@ -704,7 +611,6 @@ def _rank_runs(
     parity: bool = True,
     checkpoint_interval: int = 4,
     init_ranks: DataFrame | None = None,
-    max_fanout: int | None = None,
     stretch_checkpoint: bool = False,
 ):
     """The one rank run behind :func:`pagerank_with_n` and
@@ -715,14 +621,14 @@ def _rank_runs(
     ``stretch_checkpoint`` checkpoints each stretch lazily on a wide
     layout.
 
-    A parity run with no ``vertices``, ``init_ranks`` or ``max_fanout``
-    on an edge list that fits one task (:func:`_fits_one_task`, the
-    rule cc and scc use) runs all its rounds in ONE Python task
+    A parity run with no ``vertices`` or ``init_ranks`` on an edge list
+    that fits one task (:func:`_fits_one_task`, the rule cc and scc
+    use) runs all its rounds in ONE Python task
     (:func:`_in_one_task`, :func:`_rank_kernel`) before the first
     yield. Its result is ``coalesce(1)``'d: that changes no row, and
     the frame then reports one partition, so a caller's global sort
     needs no range shuffle."""
-    one_task = parity and vertices is None and init_ranks is None and not max_fanout
+    one_task = parity and vertices is None and init_ranks is None
     if iters and one_task and _fits_one_task(edges, doubled=False):
         kernel = partial(_rank_kernel, iters, damping)
         out, n = _in_one_task(edges, _RANK_COLS, kernel, "ignore")
@@ -732,15 +638,12 @@ def _rank_runs(
         return
     if vertices is None:
         vertices = _vertices(edges)
-    adjacency, n = _laid_out(
-        _with_dangling(adjacency_from_edges(edges), vertices), max_fanout
-    )
+    adjacency, n = _laid_out(_with_dangling(adjacency_from_edges(edges), vertices))
     if n == 0:
         for k in iters:
             yield k, edges.sparkSession.createDataFrame([], _NO_RANKS), 0
         return
-    if not max_fanout:  # a chunked adjacency carries the true outdeg
-        adjacency = adjacency.withColumn("outdeg", F.size("outlinks"))
+    adjacency = adjacency.withColumn("outdeg", F.size("outlinks"))
     teleport = (1.0 - damping) / n
     ranks = 1.0 / n if init_ranks is None else init_ranks.select("id", "rank")
     if parity:
@@ -760,7 +663,7 @@ def _rank_runs(
         # in order, which is exactly the per-iteration work anyway.
         # The dangling-vertex set is a static property of the adjacency —
         # compute the id list once, not from the per-iteration join.
-        ids = _ids(adjacency)
+        ids = adjacency.select("id")
         dangling = adjacency.where(F.col("outdeg") == 0).select("id")
 
         def step(rows: DataFrame, ranks: DataFrame) -> DataFrame:

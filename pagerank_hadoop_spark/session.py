@@ -33,6 +33,13 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def get_spark(app_name: str = "pagerank-hadoop-spark") -> SparkSession:
+    """The active session, unchanged, when there is one; otherwise a
+    new session with the confs below. A running session's confs are
+    its caller's: re-applying the builder's would reset any width,
+    AQE, bloom or broadcast setting the caller chose."""
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)

@@ -240,55 +240,6 @@ def main():
         "rows": n, "skew_split_engaged": "skew=true" in plan,
     }), flush=True)
 
-    # Restore the AQE probe's lowered skew knobs to defaults before
-    # the salted-loop / max_fanout cells — leaving a 64 KiB advisory
-    # partition size in force would shatter every downstream shuffle
-    # into thousands of tiny partitions and distort the wall /
-    # straggler numbers those cells feed into SCALE.md. Broadcast
-    # stays disabled (that's the regime under test).
-    spark.conf.unset(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
-    spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    spark.conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionFactor")
-    spark.conf.unset("spark.sql.adaptive.forceOptimizeSkewedJoin")
-
-    # Salted-loop A/B in the broadcast-infeasible regime (broadcast
-    # still off): the persistent edge copies are NOT shuffle outputs,
-    # so AQE cannot split them — salt is the layout-time fix.
-    from pagerank_hadoop_spark.operators.graph import hits, label_propagation
-    for op_name, fn, kws in (
-        ("hits", hits, ({"n_iter": 3}, {"n_iter": 3, "salt": 8})),
-        ("label_propagation", label_propagation,
-         ({"max_iter": 3}, {"max_iter": 3, "salt": 8})),
-    ):
-        for kw in kws:
-            before = completed_stage_ids(spark)
-            wall, nrows = timed(fn, edges, **kw)
-            mx, med, ratio = stage_skew(spark, before)
-            print(json.dumps({
-                "probe": "salted-loop-smj", "op": op_name,
-                "salt": kw.get("salt"), "wall_sec": wall, "rows": nrows,
-                "worst_stage_max_task_sec": mx,
-                "worst_stage_med_task_sec": med, "straggler_ratio": ratio,
-            }), flush=True)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                   str(64 * 1024 * 1024))
-
-    # Chunked-adjacency A/B (pagerank hub fan-out): the hub's explode
-    # is single-task without it — max_fanout splits the hot row at
-    # layout time.
-    from pagerank_hadoop_spark.operators.pagerank import pagerank
-    for mf in (None, 25_000):
-        before = completed_stage_ids(spark)
-        wall, nrows = timed(pagerank, edges, n_iter=8, max_fanout=mf)
-        mx, med, ratio = stage_skew(spark, before)
-        print(json.dumps({
-            "probe": "pagerank-max-fanout", "max_fanout": mf,
-            "wall_sec": wall, "rows": nrows,
-            "worst_stage_max_task_sec": mx,
-            "worst_stage_med_task_sec": med, "straggler_ratio": ratio,
-        }), flush=True)
-
 
 if __name__ == "__main__":
     main()

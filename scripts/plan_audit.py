@@ -147,72 +147,6 @@ def main() -> None:
             f" {'⚠' if r['cartesian'] else ''} |"
         )
 
-    skew_appendix(spark)
-
-
-def skew_appendix(spark) -> None:
-    """Audit the skew-flag operator variants (r8 escape hatches) next
-    to their defaults, so a refactor can't silently turn a mitigation
-    into a plan regression (r8 VERDICT task 5): the salted / chunked
-    paths must keep 0 cartesians and only pay the DOCUMENTED plan
-    delta (the one-time salted layout shuffle; per-round shuffles stay
-    (id, score)-sized — the score replication and chunk explode are
-    narrow, shuffle-free transforms)."""
-    from pagerank_hadoop_spark import runtime_counters
-    from pagerank_hadoop_spark.operators.graph import (
-        hits,
-        label_propagation,
-    )
-    from pagerank_hadoop_spark.operators.pagerank import pagerank
-
-    edges = registry._pagerank_edges(spark, SF_DIR)
-    variants = [
-        ("hits (default)", lambda: hits(edges, n_iter=3)),
-        ("hits (salt=8)", lambda: hits(edges, n_iter=3, salt=8)),
-        ("label_propagation (default)",
-         lambda: label_propagation(edges, max_iter=3)),
-        ("label_propagation (salt=8)",
-         lambda: label_propagation(edges, max_iter=3, salt=8)),
-        ("pagerank (default)", lambda: pagerank(edges, n_iter=8)),
-        ("pagerank (max_fanout=1000)",
-         lambda: pagerank(edges, n_iter=8, max_fanout=1000)),
-    ]
-    rows = []
-    for label, build in variants:
-        runtime_counters.reset()
-        df = build()
-        m = audit_one(formatted_plan(df))
-        m.update(runtime_counters.snapshot())
-        m["name"] = label
-        rows.append(m)
-        print(f"# skew-appendix {label} {m}", file=sys.stderr)
-
-    print()
-    print("## Appendix: skew-flag variants (off-by-default escape hatches)")
-    print()
-    print("The r8 hub-skew flags audited against their defaults on the")
-    print("part→supplier edges — results are equivalence-pinned in unit")
-    print("tests; THIS table pins the physical plans. The salted paths")
-    print("pay their one-time layout shuffle inside the first round's")
-    print("`rounds×ex` total; per-round joins stay on the persistent")
-    print("salted layout with (id, score)-sized shuffles, and the")
-    print("max_fanout chunk explode is a narrow transform (no exchange).")
-    print()
-    print("| variant | exchanges (final plan) | rounds×ex | cartesian |")
-    print("|---|---|---|---|")
-    for r in rows:
-        rx = (
-            f"{r['rounds']}r/{r['round_exchanges']}ex"
-            if r.get("rounds")
-            else ""
-        )
-        print(
-            f"| {r['name']} | {r['exchanges']} | {rx} |"
-            f" {'⚠' if r['cartesian'] else '0'} |"
-        )
-    bad = [r["name"] for r in rows if r["cartesian"]]
-    assert not bad, f"cartesian product in skew variant(s): {bad}"
-
 
 if __name__ == "__main__":
     main()

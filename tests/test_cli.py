@@ -163,11 +163,12 @@ def test_cli_results_do_not_depend_on_shuffle_width(
     spark, tmp_path, monkeypatch, pagerank_module
 ):
     """The snapshots and rank tables are the same bytes and floats at
-    shuffle widths 8 and 12, on the one-task path and the distributed
-    one, and the two paths agree: every rank adds its in-links in
-    (source, target) order whatever the width. The full rank tables
-    of ``pagerank_snapshots`` over the dump's edges, uncached, agree
-    the same way."""
+    shuffle width 8 with AQE on and width 12 with AQE off, on the
+    one-task path and the distributed one, and the two paths agree:
+    every rank adds its in-links in (source, target) order whatever
+    the width. The full rank tables of ``pagerank_snapshots`` over the
+    dump's edges, uncached, agree the same way. ``main`` runs on the
+    caller's session and leaves its width and AQE setting as set."""
     from pagerank_hadoop_spark.functions.wikitext import (
         extract_links,
         remove_red_links,
@@ -180,18 +181,21 @@ def test_cli_results_do_not_depend_on_shuffle_width(
     parsed = parse_pages(read_pages(spark, str(dump)))
     edges = remove_red_links(extract_links(parsed), parsed)
     key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
+    aqe = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key), spark.conf.get(aqe)
     got = {}
     try:
         for one_task in (True, False):
             with monkeypatch.context() as m:
                 m.setattr(P, "_fits_one_task", lambda *a, **k: one_task)
-                for width in ("8", "12"):
-                    # main's get_spark sets the width from the core count
-                    m.setenv("SPARK_GRAFT_CPUS", width)
+                for width, adaptive in (("8", "true"), ("12", "false")):
+                    spark.conf.set(key, width)
+                    spark.conf.set(aqe, adaptive)
                     out = tmp_path / f"result-{one_task}-{width}"
                     assert main([str(dump), str(out)]) == 0
+                    # main runs on the caller's session as it was set
                     assert spark.conf.get(key) == width
+                    assert spark.conf.get(aqe) == adaptive
                     got[one_task, width] = _outputs(spark, out)
                     # uncached, as a caller's edges would be
                     spark.catalog.clearCache()
@@ -200,7 +204,8 @@ def test_cli_results_do_not_depend_on_shuffle_width(
                         for _, ranks, _ in P.pagerank_snapshots(edges, (1, 8))
                     ]
     finally:
-        spark.conf.set(key, before)
+        spark.conf.set(key, before[0])
+        spark.conf.set(aqe, before[1])
     first = got[True, "8"]
     assert len(first["iter1.parquet"]) >= 3 and len(first["iter8.parquet"]) >= 3
     for run, outputs in got.items():

@@ -530,27 +530,6 @@ def test_k_truss_precore_equivalence(spark):
     assert k_truss(empty, k=4, precore=True).count() == 0
 
 
-def test_hits_and_lpa_salted_match_unsalted(spark):
-    """The salt flag (hub-skew layout for broadcast-infeasible score
-    frames) must not change results: HITS to 9dp, LPA exactly."""
-    from pagerank_hadoop_spark.operators.graph import hits, label_propagation
-
-    pairs = [(0, 1), (1, 2), (2, 0), (0, 3), (3, 4), (4, 0), (2, 3),
-             (1, 4), (5, 0), (0, 5), (0, 2), (6, 0)]
-    edges = spark.createDataFrame(
-        [(str(a), str(b)) for a, b in pairs], "src string, dst string"
-    )
-    h0 = {r.id: (round(r.hub, 9), round(r.auth, 9))
-          for r in hits(edges, 3).collect()}
-    h1 = {r.id: (round(r.hub, 9), round(r.auth, 9))
-          for r in hits(edges, 3, salt=4).collect()}
-    assert h0 == h1
-    l0 = {r.id: r.label for r in label_propagation(edges, 3).collect()}
-    l1 = {r.id: r.label
-          for r in label_propagation(edges, 3, salt=4).collect()}
-    assert l0 == l1
-
-
 def test_loop_shuffle_scope_semantics(spark):
     """The loop-width scope narrows, never widens; restores on error;
     tolerates non-integer session values."""

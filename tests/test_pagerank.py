@@ -200,92 +200,6 @@ def test_pagerank_resume_equals_straight_run(spark):
         assert got == want, parity
 
 
-def test_pagerank_max_fanout_matches_default(spark):
-    """Chunked+salted adjacency (the hub-skew escape hatch) computes
-    the same ranks as the default layout, both modes, to 12dp —
-    including a hub whose outlinks span several chunks and a dangling
-    vertex (empty chunk row must survive the chunking)."""
-    from pagerank_hadoop_spark.operators.pagerank import pagerank
-
-    pairs = [("h", f"v{i}") for i in range(7)] + [
-        ("v0", "v1"), ("v1", "h"), ("v2", "v3"), ("v3", "h"), ("v5", "v6")
-    ]  # v4 receives only; "h" is the hub
-    edges = spark.createDataFrame(pairs, ["src", "dst"])
-    for parity in (True, False):
-        want = {
-            r.id: round(r.rank, 12)
-            for r in pagerank(edges, n_iter=5, parity=parity).collect()
-        }
-        got = {
-            r.id: round(r.rank, 12)
-            for r in pagerank(
-                edges, n_iter=5, parity=parity, max_fanout=3
-            ).collect()
-        }
-        assert got == want, parity
-
-
-def test_chunked_adjacency_spreads_hub_and_keeps_dangling(spark):
-    """_chunked_adjacency splits a hot row into ceil(outdeg/cap)
-    chunks that land on MULTIPLE partitions (the skew point of the
-    feature — explode output never leaves its task, so spreading must
-    happen at layout time), preserves the true out-degree, and keeps
-    dangling vertices as a single empty-chunk row."""
-    import pyspark.sql.functions as F
-
-    from pagerank_hadoop_spark.operators.pagerank import (
-        _chunked_adjacency,
-        _with_dangling,
-        adjacency_from_edges,
-    )
-
-    hub_edges = [("h", f"v{i}") for i in range(40)]
-    edges = spark.createDataFrame(hub_edges, ["src", "dst"])
-    verts = spark.createDataFrame(
-        [("h",)] + [(f"v{i}",) for i in range(40)] + [("lonely",)], ["id"]
-    )
-    adj = _with_dangling(adjacency_from_edges(edges), verts)
-    chunked = _chunked_adjacency(adj, max_fanout=5, parts=16)
-
-    hub = chunked.where(F.col("id") == "h").select(
-        "outdeg", "__chunk", F.size("outlinks").alias("csz"),
-        F.spark_partition_id().alias("pid"),
-    ).collect()
-    assert len(hub) == 8  # ceil(40/5)
-    assert all(r.outdeg == 40 for r in hub)
-    assert all(r.csz == 5 for r in hub)
-    assert len({r.pid for r in hub}) > 1  # spread, not co-located
-    lonely = chunked.where(F.col("id") == "lonely").collect()
-    assert len(lonely) == 1
-    assert lonely[0].outdeg == 0 and lonely[0].outlinks == []
-
-
-def test_chunked_adjacency_non_string_vertex_ids(spark):
-    """The empty-chunk literal derives its element type from the
-    caller's outlinks column — a pre-built adjacency with LONG vertex
-    ids must chunk without an AnalysisException, and dangling rows
-    keep one empty chunk of the right type (ADVICE r8: the old
-    hardcoded array<array<string>> raised a when/otherwise type
-    mismatch here)."""
-    import pyspark.sql.functions as F
-
-    from pagerank_hadoop_spark.operators.pagerank import (
-        _chunked_adjacency,
-    )
-
-    adj = spark.createDataFrame(
-        [(1, [10, 11, 12, 13, 14, 15, 16]), (2, [])],
-        "id long, outlinks array<long>",
-    )
-    chunked = _chunked_adjacency(adj, max_fanout=3, parts=4)
-    hub = chunked.where(F.col("id") == 1).orderBy("__chunk").collect()
-    assert [r.outlinks for r in hub] == [[10, 11, 12], [13, 14, 15], [16]]
-    assert all(r.outdeg == 7 for r in hub)
-    dangling = chunked.where(F.col("id") == 2).collect()
-    assert len(dangling) == 1
-    assert dangling[0].outdeg == 0 and dangling[0].outlinks == []
-
-
 @pytest.mark.parametrize(
     "n, shuffle_parts, parts",
     [
@@ -527,8 +441,8 @@ def test_rank_runs_outside_the_one_task_rule_stay_distributed(
 ):
     """A small parity run with integer or string ids and no vertex list
     takes one task; missing stats, a big estimate under a one-task
-    session width, a vertex list, ``init_ranks``, ``max_fanout`` and
-    ``parity=False`` each take the distributed loop."""
+    session width, a vertex list, ``init_ranks`` and ``parity=False``
+    each take the distributed loop."""
     P = pagerank_module
     edges = spark.createDataFrame(RANK_PATH_EDGES, "src string, dst string")
     longs = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
@@ -543,7 +457,6 @@ def test_rank_runs_outside_the_one_task_rule_stay_distributed(
     half, _ = P.pagerank_with_n(edges, n_iter=1, parity=False)
     P.pagerank_with_n(edges, n_iter=2, vertices=edges.select("src"))
     P.pagerank_with_n(edges, n_iter=2, init_ranks=half)
-    P.pagerank_with_n(edges, n_iter=2, max_fanout=2)
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
     try:

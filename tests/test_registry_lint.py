@@ -8,10 +8,15 @@ CORRECTNESS even when its values are correct (round-4:
 ``jl_projection_vectors`` / ``mrl_truncated_vectors``). These tests pin
 the reshaped (vec_id, pos, val) outputs and emulate the driver canon.
 scripts/check_oracle.py applies the same lint to every oracle-backed
-query it runs.
+query it runs. The hand-run scripts (``bench.py``, ``scripts/*.py``)
+are byte-compiled, since no other test imports them.
 """
 
 from __future__ import annotations
+
+import glob
+import os
+import py_compile
 
 import pandas as pd
 import pytest
@@ -113,3 +118,18 @@ def test_repin_gates_block_round_trips():
         qname = (key.split(".", 1)[1] if key.startswith("ann_recall.")
                  else key.split(".", 1)[0])
         assert qname in Q._ORACLES, key
+
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_SCRIPTS = ["bench.py"] + sorted(
+    os.path.relpath(p, _ROOT) for p in glob.glob(os.path.join(_ROOT, "scripts", "*.py"))
+)
+
+
+@pytest.mark.parametrize("path", _SCRIPTS)
+def test_script_byte_compiles(path, tmp_path):
+    """``bench.py`` and ``scripts/*.py`` run only by hand, so no other
+    test imports them: at least each must compile."""
+    py_compile.compile(
+        os.path.join(_ROOT, path), cfile=str(tmp_path / "out.pyc"), doraise=True
+    )
