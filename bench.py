@@ -133,7 +133,8 @@ def main() -> int:
             rounds = runtime_counters.snapshot()["rounds"]
             rounds_total[name] = max(rounds_total.get(name, 0), rounds)
             print(
-                f"# run{r + 1} {name}: {pass_timings[name]}s rows={n}",
+                f"# run{r + 1} {name}: {pass_timings[name]}s rows={n}"
+                f" rounds={rounds}",
                 file=sys.stderr,
             )
         runs.append(pass_timings)

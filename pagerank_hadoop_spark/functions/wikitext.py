@@ -38,7 +38,6 @@ def extract_links(
     parsed_pages: DataFrame,
     title_col: str = "title",
     text_col: str = "text",
-    dedup: bool = True,
 ) -> DataFrame:
     """Pages → link edges ``(src, dst)``.
 
@@ -56,9 +55,7 @@ def extract_links(
         .select("src", normalize_title(target).alias("dst"))
         .where(valid_wiki_link(F.col("dst")))
     )
-    if dedup:
-        edges = edges.dropDuplicates(["src", "dst"])
-    return edges
+    return edges.dropDuplicates(["src", "dst"])
 
 
 def remove_red_links(edges: DataFrame, pages: DataFrame, title_col: str = "title") -> DataFrame:

@@ -10,8 +10,11 @@ All shapes are shuffle-aware for 100 TB corpora:
 * SimHash buckets on the 64-bit fingerprint split into k bands for
   Hamming-distance candidates.
 
-No Python UDFs: shingling, hashing, and min-reduction are Spark
-built-ins (xxhash64, transform, aggregate), all whole-stage-codegen.
+Shingling and hashing are Spark built-ins (xxhash64, transform,
+aggregate), all whole-stage-codegen. MinHash signatures and SimHash
+fingerprints each have one form, an Arrow-batched NumPy kernel;
+:func:`minhash_signature` and :func:`simhash` are their pure-Column
+references (the md5 oracle queries use the former).
 """
 
 from __future__ import annotations
@@ -93,8 +96,8 @@ def raw_shingles(text: Column, n: int = 5) -> Column:
     )
 
 
-def md5_shingle_hashes(text: Column, n: int = 5, distinct: bool = True) -> Column:
-    """Engine-portable shingle hashes (array<bigint>): the first 15
+def md5_shingle_hashes(text: Column, n: int = 5) -> Column:
+    """Engine-portable shingle hashes (array<bigint>, distinct): the first 15
     hex chars of md5 per n-gram, parsed base-16 — a 60-bit positive
     int both Spark (``conv``) and DuckDB (``('0x'||…)::BIGINT``)
     produce bitwise identically, which makes every downstream sketch
@@ -110,7 +113,7 @@ def md5_shingle_hashes(text: Column, n: int = 5, distinct: bool = True) -> Colum
             F.substring(F.md5(F.substring(cleaned, i, n)), 1, 15), 16, 10
         ).cast("long"),
     )
-    return F.array_distinct(grams) if distinct else grams
+    return F.array_distinct(grams)
 
 
 _MINHASH_P = 4294967311  # smallest prime > 2^32
@@ -172,33 +175,6 @@ def minhash_signature(shingle_hashes: Column, num_hashes: int = 32) -> Column:
     )
 
 
-def minhash_band_hashes(
-    text: Column, num_hashes: int = 32, bands: int = 4, shingle_n: int = 5
-) -> Column:
-    """Per-band LSH bucket keys (array<bigint> of length ``bands``) in
-    ONE aggregate pass: shingling → signature (accumulator) → band
-    hashing (finish lambda, where the signature is a bound value and
-    can be sliced ``bands`` times for free)."""
-    p = _MINHASH_P
-    rows = num_hashes // bands
-    init = F.array_repeat(F.lit(p).cast("long"), num_hashes)
-    ids = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    band_ids = F.sequence(F.lit(0), F.lit(bands - 1))
-    return F.aggregate(
-        shingles(text, shingle_n),
-        init,
-        lambda acc, x: F.zip_with(
-            acc,
-            ids,
-            lambda m, i: F.least(m, (F.pmod(x, F.lit(p)) * (i * 2 + 1) + (i + 1) * 104729) % p),
-        ),
-        lambda sig: F.transform(
-            band_ids,
-            lambda b: F.xxhash64(F.slice(sig, b * rows + 1, rows).cast("string")),
-        ),
-    )
-
-
 def _minhash_sig_arrow(num_hashes: int):
     """Arrow-batched NumPy twin of :func:`minhash_signature` —
     bit-identical output (same hash family/constants, and NumPy's
@@ -234,58 +210,6 @@ def _minhash_sig_arrow(num_hashes: int):
     return sig
 
 
-def _oph_sig_arrow(num_hashes: int):
-    """One-permutation-hashing signature kernel (Li, Owen, Zhang 2012;
-    rotation densification per Shrivastava & Li 2014).
-
-    The universal-hash kernel costs O(Σshingles × num_hashes)
-    multiply-mods — the measured scale bottleneck of the dedup family
-    (5.7x per 10x corpus bytes). OPH replaces it with ONE pass: each
-    shingle hash is assigned to bucket ``h mod k`` and each bucket
-    keeps its minimum — O(Σshingles log Σshingles) for a sort plus a
-    segmented min, ~k-fold less arithmetic. Empty buckets (short
-    documents) borrow cyclically from the next filled bucket, which
-    keeps the equal-component Jaccard estimator usable (slightly
-    biased for docs with ≪ k shingles — acceptable for the screening
-    role; the exact-Jaccard verify stage is unchanged).
-
-    Signatures live in the same value domain (h mod p) as the
-    universal kernel, so banding and the estimate screen compose
-    unchanged; signatures are NOT interchangeable between schemes.
-    """
-    p = _MINHASH_P
-    k = num_hashes
-
-    @pandas_udf("array<long>")
-    def sig(hashes: pd.Series) -> pd.Series:
-        if hashes.empty:
-            return pd.Series([], dtype=object)
-        lens = np.fromiter((len(h) for h in hashes), dtype=np.int64, count=len(hashes))
-        flat = np.concatenate([np.asarray(h, dtype=np.int64) for h in hashes]) % p
-        doc = np.repeat(np.arange(len(hashes), dtype=np.int64), lens)
-        # segmented scatter-min via sort + reduceat (ufunc.at is ~20x
-        # slower per element than a sort at these sizes)
-        key = doc * k + flat % k
-        order = np.argsort(key, kind="stable")
-        sk, sv = key[order], flat[order]
-        starts = np.flatnonzero(np.r_[True, sk[1:] != sk[:-1]])
-        mins = np.minimum.reduceat(sv, starts)
-        cells = sk[starts]
-        out = np.full((len(hashes), k), p, dtype=np.int64)  # p = empty sentinel
-        out[cells // k, cells % k] = mins
-        empty = out == p
-        shift = 1
-        while empty.any() and shift < k:
-            rolled = np.roll(out, -shift, axis=1)
-            fill = empty & (rolled != p)
-            out[fill] = rolled[fill]
-            empty &= ~fill
-            shift += 1
-        return pd.Series(list(out))
-
-    return sig
-
-
 def _simhash_arrow_udf():
     """Arrow-batched NumPy twin of :func:`simhash` — bit-identical
     (bit b of the fingerprint = sign of the tally of bit b of each
@@ -313,33 +237,14 @@ def minhash_signatures(
     text_col: str = "text",
     num_hashes: int = 32,
     shingle_n: int = 5,
-    use_arrow: bool = True,
-    scheme: str = "universal",
 ) -> DataFrame:
-    """``(id, sig: array<long>[num_hashes])`` MinHash signatures.
-
-    ``use_arrow`` picks the NumPy kernel (default; ~10× faster); the
-    pure-Column fallback produces bit-identical signatures.
-
-    ``scheme="oph"`` switches to one-permutation hashing
-    (:func:`_oph_sig_arrow`): ~``num_hashes``-fold less arithmetic per
-    shingle, the scale path when signature building dominates (at 100
-    TB it always does). OPH signatures are not comparable with
-    universal ones — pick one scheme per corpus index.
+    """``(id, sig: array<long>[num_hashes])`` MinHash signatures, built
+    by the NumPy kernel :func:`_minhash_sig_arrow` (bit-identical to
+    the pure-Column :func:`minhash_signature`, ~10× faster).
     """
     df = _spread(df)
     sh = shingles(F.col(text_col), shingle_n, distinct=False)
-    if scheme == "oph":
-        if not use_arrow:
-            raise ValueError(
-                "scheme='oph' has no non-Arrow fallback; use the "
-                "default universal scheme with use_arrow=False"
-            )
-        sig = _oph_sig_arrow(num_hashes)(sh)
-    elif use_arrow:
-        sig = _minhash_sig_arrow(num_hashes)(sh)
-    else:
-        sig = minhash_signature(sh, num_hashes)
+    sig = _minhash_sig_arrow(num_hashes)(sh)
     return df.select(F.col(id_col).alias("id"), sig.alias("sig"))
 
 
@@ -387,7 +292,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 32,
     bands: int = 4,
     shingle_n: int = 5,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash-LSH.
 
@@ -403,7 +307,7 @@ def minhash_lsh_candidates(
     4-row bands do.
     """
     sigs = minhash_signatures(
-        df, id_col, text_col, num_hashes, shingle_n, use_arrow
+        df, id_col, text_col, num_hashes, shingle_n
     ).localCheckpoint(eager=True)
     return _band_pairs(sigs, num_hashes, bands)
 
@@ -669,19 +573,14 @@ def simhash_candidates(
     text_col: str = "text",
     bands: int = 4,
     max_hamming: int = 3,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Near-dup candidates: equal 16-bit SimHash band → candidate;
     verify by full Hamming distance <= ``max_hamming``.
 
-    ``use_arrow`` picks the NumPy fingerprint kernel (default); the
-    pure-Column :func:`simhash` fallback is bit-identical.
+    Fingerprints come from the NumPy kernel :func:`_simhash_arrow_udf`,
+    bit-identical to the pure-Column :func:`simhash`.
     """
-    fingerprint = (
-        _simhash_arrow_udf()(shingles(F.col(text_col)))
-        if use_arrow
-        else simhash(F.col(text_col))
-    )
+    fingerprint = _simhash_arrow_udf()(shingles(F.col(text_col)))
     fp = (
         _spread(df)
         .select(F.col(id_col).alias("id"), fingerprint.alias("fp"))

@@ -399,10 +399,6 @@ def _zigzag(v: int) -> int:
     return (v << 1) if v >= 0 else (((-v) << 1) - 1)
 
 
-def _unzigzag(u: int) -> int:
-    return -((u + 1) >> 1) if u & 1 else (u >> 1)
-
-
 def _rice_write(
     w: _BitWriter, residuals: list[int], escape: bool, pbits: int = 4
 ) -> None:

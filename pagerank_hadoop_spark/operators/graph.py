@@ -989,9 +989,11 @@ def bipartite_project(
     # the dominant stage (measured: 8 tasks / 3.6 s for an 8.7 M-pair
     # projection at sf0.1 that 32 tasks finish in ~1 s). Spread the
     # checkpointed frame to the cluster's parallelism when the edge
-    # list is small (dedup._spread's stats gate, decided on the
-    # PRE-checkpoint plan — a LogicalRDD reports no stats; a failed
-    # probe counts as big); a large edge list keeps its
+    # list is small (dedup._spread's stats gate, read on the
+    # pre-checkpoint plan; a checkpointed Parquet edge list reports
+    # the same size, so the order does not matter there, and only a
+    # createDataFrame input reports Long.MaxValue; a failed probe
+    # counts as big); a large edge list keeps its
     # already-parallel layout, so nothing moves at 100 TB. Output
     # values cannot change: the pair aggregate is an exact integer
     # count, layout-insensitive.

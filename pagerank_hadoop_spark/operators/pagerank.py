@@ -351,7 +351,7 @@ def _one_task_frame(kernel, pdf):
     return rows
 
 
-def adjacency_from_edges(edges: DataFrame, dedup: bool = True) -> DataFrame:
+def adjacency_from_edges(edges: DataFrame) -> DataFrame:
     """Edges ``(src, dst)`` → adjacency ``(id, outlinks array)``.
 
     The Spark form of the reference's tab-packed adjacency build
@@ -361,11 +361,8 @@ def adjacency_from_edges(edges: DataFrame, dedup: bool = True) -> DataFrame:
     shuffle order).
     """
     e = edges.select("src", "dst")
-    if dedup:
-        # per-src dedup, as the reference's HashSet (PageRank.java:91-93)
-        agg = F.array_sort(F.collect_set("dst"))
-    else:
-        agg = F.array_sort(F.collect_list("dst"))
+    # per-src dedup, as the reference's HashSet (PageRank.java:91-93)
+    agg = F.array_sort(F.collect_set("dst"))
     return e.groupBy(F.col("src").alias("id")).agg(agg.alias("outlinks"))
 
 

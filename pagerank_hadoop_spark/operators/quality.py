@@ -8,10 +8,9 @@ reaches dedup/training-export, so they are first-class operators here.
 
 Scale posture:
 
-* ``profile_columns`` is ONE aggregation pass; exact ``countDistinct``
-  over k columns Expand-multiplies rows by k+1 before the partial
-  aggregate, so at 100 TB swap ``exact=False`` to HLL
-  ``approx_count_distinct`` (same plan shape, no expansion blow-up).
+* ``profile_columns`` is ONE aggregation pass; its exact
+  ``countDistinct`` over k columns Expand-multiplies rows by k+1
+  before the partial aggregate.
 * ``constraint_counts`` unions per-rule 1-row aggregates; FK rules are
   left-anti joins whose small (dimension) side Catalyst broadcasts.
 * ``shard_key`` is a pure Column expression (md5 prefix mod n) — a
@@ -26,23 +25,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def profile_columns(
-    df: DataFrame, cols: list[str], exact: bool = True
-) -> DataFrame:
+def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     """Per-column profile in long form:
     ``(col_name, n_nulls, n_distinct, n_rows)``.
 
     One aggregation pass over ``df`` (no per-column scans): null and
     distinct counts for every requested column are sibling aggregates,
-    unpivoted driver-side into one row per column. ``exact=False``
-    switches NDV to ``approx_count_distinct`` (HLL±5%) — the 100 TB
-    default, since k exact distincts cost a (k+1)× row expansion.
+    unpivoted by ``stack`` into one row per column. NDV is exact, so k
+    distincts cost a (k+1)× row expansion.
     """
-    ndv = F.countDistinct if exact else F.approx_count_distinct
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in cols:
         aggs.append(F.count(c).alias(f"__nn_{c}"))
-        aggs.append(ndv(c).alias(f"__nd_{c}"))
+        aggs.append(F.countDistinct(c).alias(f"__nd_{c}"))
     one = df.agg(*aggs)
     stack_args = ", ".join(
         f"'{c}', n_rows - __nn_{c}, cast(__nd_{c} as bigint)" for c in cols

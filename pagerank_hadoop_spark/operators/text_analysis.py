@@ -179,22 +179,6 @@ def scrub_pii(text: Column) -> Column:
     return F.regexp_replace(no_email, r"[0-9]+", "<NUM>")
 
 
-def text_profile(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document profile: tokens, chars, language guess, quality,
-    fingerprint — the one-pass curation scan."""
-    t = F.col(text_col)
-    return docs.select(
-        F.col(id_col),
-        token_count(t).alias("n_tokens"),
-        F.length(t).alias("n_chars"),
-        lang_id(t).alias("lang_guess"),
-        quality_score(t).alias("quality"),
-        doc_fingerprint(t).alias("fingerprint"),
-    )
-
-
 def repetition_micro(text: Column) -> Column:
     """Repetition signals as micro-unit bigints (×1e6, floor+0.5 —
     see :func:`quality_micro` for why that beats decimal rounding):
@@ -260,8 +244,7 @@ def bpe_train_merges(
     docs: DataFrame,
     text: str = "text",
     n_merges: int = 8,
-    batch: int = 1,
-) -> tuple[list[tuple[str, str, int]], DataFrame, list[tuple[int, str, str]]]:
+) -> tuple[list[tuple[str, str, int]], DataFrame]:
     """Train byte-pair-encoding-style merges over a corpus: the
     tokenizer-training loop itself, as an iterative Spark job.
 
@@ -270,10 +253,8 @@ def bpe_train_merges(
     carries (pair, count) only), picks the most frequent pair
     (deterministic tie-break: count desc, then lexicographic), and
     rewrites every document by greedy left-to-right merging of that
-    pair. Returns ``(merges, final_docs, deviations)``: ``merges`` is
-    the ranked merge table, ``final_docs`` the re-tokenized symbol
-    arrays, and ``deviations`` the batched-schedule audit trail
-    (always ``[]`` at ``batch=1``).
+    pair. Returns ``(merges, final_docs)``: ``merges`` is the ranked
+    merge table, ``final_docs`` the re-tokenized symbol arrays.
 
     Symbols here are words (merges learn collocations); character
     level is the SAME plan at ~5x the symbol rows — the driver corpus
@@ -288,30 +269,9 @@ def bpe_train_merges(
     Scale: pair counting is linear in corpus symbols; each rewrite is
     map-only. State (the evolving symbol arrays) is
     localCheckpoint'ed per round to keep lineage flat, exactly like
-    the PageRank loop.
-
-    ``batch`` > 1 cuts driver round-trips ~batch-fold: each round
-    picks up to ``batch`` top pairs whose symbols are mutually
-    DISJOINT (neither source symbols nor joined outputs shared) and
-    applies them in one rewrite pass. Disjoint merges cannot create or
-    destroy each other's adjacencies, so their counts are invariant
-    under each other — the batch replays the sequential argmax exactly
-    UNLESS a merge output immediately forms a new dominant pair
-    (e.g. ``x·ab`` after merging ``ab``), in which case sequential
-    training would interleave it. That near-miss is rare in natural
-    corpora and the deviation is bounded to within one round; a
-    32k-vocab train at batch=64 does 500 driver jobs instead of 32k.
-    ``batch=1`` is exact sequential BPE (the oracle-fixture path);
-    batched ≡ sequential is unit-pinned on the planted corpus.
-
-    Possible deviations from the sequential schedule are RETURNED,
-    not warned: each round whose top pairs involve a symbol created
-    by the previous batch appends ``(round_idx, a, b)`` rows to
-    ``deviations`` (the pair that re-ranked). An empty list certifies
-    the batched schedule provably replayed sequential BPE; a
-    non-empty one bounds where they may differ — callers decide
-    whether that matters (a 32k-vocab production train tolerates it;
-    an oracle fixture asserts ``deviations == []``).
+    the PageRank loop. One merge per round is exact sequential BPE, so
+    a 32k-vocabulary train runs 32k rounds, each collecting its top
+    pair.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -320,13 +280,8 @@ def bpe_train_merges(
         F.split(F.lower(F.col(text)), " +").alias("syms"),
     ).localCheckpoint(eager=False)
     merges: list[tuple[str, str, int]] = []
-    deviations: list[tuple[int, str, str]] = []
-    prev_created: set[str] = set()
-    round_idx = 0
     while len(merges) < n_merges:
         runtime_counters.note_round()
-        round_idx += 1
-        b_now = min(batch, n_merges - len(merges))
         pairs = (
             cur.select(
                 F.explode(
@@ -341,64 +296,39 @@ def bpe_train_merges(
             )
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        # headroom over b_now: overlapping candidates are skipped (they
-        # stay for the next round's recount, as sequential BPE would)
         top = (
             pairs.where(F.col("n") >= 2)
             .orderBy(F.desc("n"), "a", "b")
-            .limit(b_now * 4)
+            .limit(1)
             .collect()
         )
-        # audit signal for batched trains: if a symbol created by the
-        # PREVIOUS batch shows up in this round's top pairs, the
-        # batched schedule may have deviated from sequential BPE
-        # (sequential would have recounted before the prior batch's
-        # later picks; bounded to one round, see docstring)
-        if batch > 1 and prev_created:
-            deviations.extend(
-                (round_idx, r["a"], r["b"])
-                for r in top
-                if r["a"] in prev_created or r["b"] in prev_created
-            )
-        picked: list[tuple[str, str, int]] = []
-        used: set[str] = set()
-        for row in top:
-            syms = {row["a"], row["b"], row["a"] + "▁" + row["b"]}
-            if syms & used:
-                continue
-            picked.append((row["a"], row["b"], int(row["n"])))
-            used |= syms
-            if len(picked) == b_now:
-                break
-        if not picked:
+        if not top:
             break
-        merges.extend(picked)
-        prev_created = {a + "▁" + b for a, b, _ in picked}
+        a, b, n = top[0]
+        merges.append((a, b, int(n)))
 
-        def make_merge_udf(batch_pairs=tuple(picked)):
+        def make_merge_udf(a=a, b=b):
             # default-arg binding: the UDF body must capture THIS
-            # round's pairs, not the loop variables' final values —
+            # round's pair, not the loop variables' final values —
             # the lazy checkpoint defers execution past the rebind
-            rules = [(a, b, a + "▁" + b) for a, b, _ in batch_pairs]
+            joined = a + "▁" + b
 
             @pandas_udf("array<string>")
             def merge_pair(s: pd.Series) -> pd.Series:
                 def one(arr):
-                    for a, b, joined in rules:
-                        out, i = [], 0
-                        while i < len(arr):
-                            if (
-                                i + 1 < len(arr)
-                                and arr[i] == a
-                                and arr[i + 1] == b
-                            ):
-                                out.append(joined)
-                                i += 2
-                            else:
-                                out.append(arr[i])
-                                i += 1
-                        arr = out
-                    return arr
+                    out, i = [], 0
+                    while i < len(arr):
+                        if (
+                            i + 1 < len(arr)
+                            and arr[i] == a
+                            and arr[i + 1] == b
+                        ):
+                            out.append(joined)
+                            i += 2
+                        else:
+                            out.append(arr[i])
+                            i += 1
+                    return out
 
                 return s.map(one)
 
@@ -407,7 +337,7 @@ def bpe_train_merges(
         cur = cur.select(
             "doc_id", make_merge_udf()("syms").alias("syms")
         ).localCheckpoint(eager=False)
-    return merges, cur, deviations
+    return merges, cur
 
 
 def bpe_apply(
@@ -636,7 +566,6 @@ def keyword_tags(
     keywords: list,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_lexicon: bool = False,
 ) -> DataFrame:
     """Dictionary keyword/phrase tagging (the FlashText / trie-tagger
     use case: topic labels, PII term flags, domain lexicons): match a
@@ -652,11 +581,7 @@ def keyword_tags(
     is a map-only column expression — zero shuffles, fully
     scan-bound, and Catalyst folds the constant. That is the right
     call up to dictionaries of a few thousand entries (plan size);
-    ``broadcast_lexicon=True`` is the BIG-dictionary form (hundreds of
-    thousands of entries — gazetteers, PII term lists): the lexicon
-    becomes a broadcast-joined table against the exploded gram stream
-    instead of a plan literal — same semantics (equivalence
-    unit-pinned), one broadcast, no giant plan for Janino to chew.
+    larger ones go into the plan as literals too.
     """
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     bigrams = F.when(
@@ -669,29 +594,6 @@ def keyword_tags(
         ),
     ).otherwise(F.array().cast("array<string>"))
     grams = F.array_distinct(F.concat(toks, bigrams))
-    if broadcast_lexicon:
-        spark = docs.sparkSession
-        lex_df = spark.createDataFrame(
-            [(str(w),) for w in keywords], "gram string"
-        )
-        exploded = docs.select(F.col(id_col), F.explode(grams).alias("gram"))
-        per_doc = (
-            exploded.join(F.broadcast(lex_df), "gram")
-            .groupBy(id_col)
-            .agg(F.array_sort(F.collect_set("gram")).alias("hits"))
-        )
-        hits = F.coalesce(
-            F.col("hits"), F.array().cast("array<string>")
-        )
-        return (
-            docs.select(id_col)
-            .join(per_doc, id_col, "left")
-            .select(
-                F.col(id_col),
-                F.size(hits).cast("long").alias("n_tags"),
-                F.array_join(hits, "|").alias("tags"),
-            )
-        )
     lex = F.array(*[F.lit(str(w)) for w in keywords])
     hits = F.array_sort(F.array_intersect(grams, lex))
     return docs.select(

@@ -31,6 +31,7 @@ from pagerank_hadoop_spark.plans.oracle import (
     pagerank_corrected_oracle_sql,
     pagerank_oracle_sql,
 )
+from pagerank_hadoop_spark.session import load_table as _t
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -118,10 +119,6 @@ def queries() -> dict[str, QueryFn]:
 
 def oracle_sql() -> dict[str, str]:
     return dict(_ORACLES)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7787,8 +7784,7 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     check a curation pipeline runs before admitting a batch. ONE
     aggregation pass (sibling aggregates + driver-side stack); the
     oracle unions per-column projections of the same single-scan CTE.
-    Uses operators.quality.profile_columns (``exact=False`` flips NDV
-    to HLL for the 100 TB path)."""
+    Uses operators.quality.profile_columns."""
     from pagerank_hadoop_spark.operators.quality import profile_columns
 
     return profile_columns(
@@ -8751,7 +8747,7 @@ def q_bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    merges, final, _ = bpe_train_merges(docs, n_merges=6)
+    merges, final = bpe_train_merges(docs, n_merges=6)
     # the oracle's generate_series(1, 6) assumes training yields all 6
     # merges; a corpus too small to sustain the count>=2 floor would
     # otherwise surface as an opaque row-count mismatch

@@ -16,19 +16,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -96,6 +83,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver test table (columnar Parquet scan, S4)."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}

@@ -2,7 +2,9 @@
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin
 on DuckDB at sf0.01, then compares row count, column names, and an
-order-insensitive value hash. Usage:
+order-insensitive value hash. Each line also reports ``rounds=N``, the
+fixpoint rounds the query ran (``runtime_counters``; 0 for a query
+with no loop). Usage:
 
     python scripts/check_oracle.py [name ...]
 """
@@ -58,7 +60,7 @@ def value_hash(cols, rows):
 
 
 def main():
-    from pagerank_hadoop_spark import queries as Q
+    from pagerank_hadoop_spark import queries as Q, runtime_counters
     from pagerank_hadoop_spark.session import get_spark
 
     spark = get_spark("oracle-check")
@@ -73,6 +75,7 @@ def main():
     names = sys.argv[1:] or sorted(qs)
     failures = 0
     for name in names:
+        runtime_counters.reset()
         t0 = time.time()
         sdf = qs[name](spark, SF_DIR)
         scols = sdf.columns
@@ -96,8 +99,12 @@ def main():
                 continue
         srows = [tuple(r) for r in sdf.collect()]
         spark_s = time.time() - t0
+        rounds = runtime_counters.snapshot()["rounds"]
         if name not in oracles:
-            print(f"{name:32s} rows-only rows={len(srows)} ({spark_s:.1f}s)")
+            print(
+                f"{name:32s} rows-only rows={len(srows)} rounds={rounds}"
+                f" ({spark_s:.1f}s)"
+            )
             continue
         t0 = time.time()
         res = con.execute(oracles[name])
@@ -113,7 +120,8 @@ def main():
         print(
             f"{name:32s} {status} rows={len(srows)}/{len(drows)}"
             f" cols={'=' if ok_cols else f'{scols} vs {dcols}'}"
-            f" hash={'=' if ok_hash else '!'} ({spark_s:.1f}s/{duck_s:.1f}s)"
+            f" hash={'=' if ok_hash else '!'} rounds={rounds}"
+            f" ({spark_s:.1f}s/{duck_s:.1f}s)"
         )
         if status == "FAIL" and len(srows) <= 40:
             print("  spark:", sorted(srows)[:10])

@@ -385,7 +385,7 @@ def _ref_bpe(docs: list[list[str]], n_merges: int):
     """Independent pure-Python sequential BPE: count adjacent pairs,
     argmax with (count desc, pair lexicographic asc) tie-break and a
     count >= 2 floor, greedy left-to-right rewrite. The oracle for
-    bpe_train_merges(batch=1) that shares NO code with the operator."""
+    bpe_train_merges that shares NO code with the operator."""
     cur = [list(d) for d in docs]
     merges = []
     for _ in range(n_merges):
@@ -440,9 +440,8 @@ def test_bpe_matches_independent_reference(spark, docs, n_merges):
 
     rows = [(i, " ".join(d)) for i, d in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    merges, final, dev = bpe_train_merges(df, n_merges=n_merges)
+    merges, final = bpe_train_merges(df, n_merges=n_merges)
     ref_merges, ref_final = _ref_bpe(docs, n_merges)
-    assert dev == []
     assert merges == ref_merges
     counts = [c for _, _, c in merges]
     assert counts == sorted(counts, reverse=True)

@@ -9,7 +9,6 @@ from pagerank_hadoop_spark.operators.text_analysis import (
     doc_fingerprint,
     lang_id,
     quality_score,
-    text_profile,
     token_count,
     word_tokens,
 )
@@ -67,13 +66,6 @@ def test_fingerprint_stable_and_sensitive(spark):
           df.select("doc_id", doc_fingerprint(F.col("text")).alias("fp")).collect()}
     assert fp[1] == fp[2]
     assert fp[1] != fp[3]
-
-
-def test_text_profile_schema(samples):
-    prof = text_profile(samples)
-    assert prof.columns == ["doc_id", "n_tokens", "n_chars", "lang_guess",
-                            "quality", "fingerprint"]
-    assert prof.count() == 5
 
 
 def test_tfidf_top_terms(spark):
@@ -175,8 +167,7 @@ def test_bpe_merges_planted_sequence(spark):
         (4, "a b q"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    merges, final, dev = bpe_train_merges(docs, n_merges=3)
-    assert dev == []  # batch=1 is exact sequential BPE by construction
+    merges, final = bpe_train_merges(docs, n_merges=3)
     assert merges[0] == ("a", "b", 4)
     # ("a▁b","c") ties ("c","d") at 3; lexicographic tie-break wins
     assert merges[1] == ("a▁b", "c", 3)
@@ -197,63 +188,14 @@ def test_bpe_greedy_left_to_right_overlap(spark):
     docs = spark.createDataFrame(
         [(1, "x x x x x"), (2, "x x")], "doc_id long, text string"
     )
-    merges, final, _ = bpe_train_merges(docs, n_merges=1)
+    merges, final = bpe_train_merges(docs, n_merges=1)
     assert merges[0] == ("x", "x", 5)  # 4 overlapping in doc1 + 1 in doc2
     out = {r["doc_id"]: r["syms"] for r in final.collect()}
     assert out[1] == ["x▁x", "x▁x", "x"]
     assert out[2] == ["x▁x"]
 
-    merges2, _, _ = bpe_train_merges(docs.repartition(5), n_merges=1)
+    merges2, _ = bpe_train_merges(docs.repartition(5), n_merges=1)
     assert merges2 == merges
-
-
-def test_bpe_batched_matches_sequential(spark):
-    from pagerank_hadoop_spark.operators.text_analysis import (
-        bpe_train_merges,
-    )
-
-    # planted corpus whose top pairs are symbol-disjoint AND strictly
-    # dominate any pair the merges themselves create (max new-pair
-    # count 2 < count(g,h) = 3), so the batched selection must replay
-    # the sequential argmax exactly
-    rows = [
-        (1, "a b c d e f a b c d"),
-        (2, "a b e f e f c d"),
-        (3, "a b g h a b"),
-        (4, "g h c d e f"),
-        (5, "g h q"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    seq_merges, seq_final, seq_dev = bpe_train_merges(docs, n_merges=4, batch=1)
-    bat_merges, bat_final, bat_dev = bpe_train_merges(docs, n_merges=4, batch=4)
-    assert seq_dev == [] and bat_dev == []
-    assert bat_merges == seq_merges
-    seq = {r["doc_id"]: r["syms"] for r in seq_final.collect()}
-    bat = {r["doc_id"]: r["syms"] for r in bat_final.collect()}
-    assert bat == seq
-
-
-def test_bpe_batched_skips_overlapping_pairs(spark):
-    from pagerank_hadoop_spark.operators.text_analysis import (
-        bpe_train_merges,
-    )
-
-    # (a,b) at 5 and (b,c) at 4 share symbol b: the batch must apply
-    # only (a,b) in round 1 and recount before touching b-pairs —
-    # applying both blindly would merge (b,c) on stale adjacencies
-    rows = [
-        (1, "a b c a b c a b c a b c"),
-        (2, "a b z"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    seq_merges, _, _ = bpe_train_merges(docs, n_merges=2, batch=1)
-    bat_merges, _, bat_dev = bpe_train_merges(docs, n_merges=2, batch=2)
-    assert bat_merges == seq_merges
-    # the returned audit trail replaces the old stderr RuntimeWarning:
-    # (a▁b, c) re-ranks right after (a, b) merges, so the batched
-    # schedule must REPORT the potential deviation even though the
-    # overlap-skip rule kept the outcome identical here
-    assert any(a == "a▁b" or b == "a▁b" for _, a, b in bat_dev)
 
 
 def test_bpe_apply_reproduces_training_tokenization(spark):
@@ -266,7 +208,7 @@ def test_bpe_apply_reproduces_training_tokenization(spark):
         [(1, "a b c d x"), (2, "a b c d y"), (3, "a b q"), (4, "x x x")],
         "doc_id long, text string",
     )
-    merges, final, _ = bpe_train_merges(docs, n_merges=3)
+    merges, final = bpe_train_merges(docs, n_merges=3)
     trained = {r["doc_id"]: r["syms"] for r in final.collect()}
     applied = {
         r["doc_id"]: r["syms"] for r in bpe_apply(docs, merges).collect()
@@ -346,30 +288,6 @@ def test_keyword_tags_whole_token_and_phrases(spark):
     assert got[2] == (1, "hash join")   # regex split absorbs the run
     assert got[3] == (1, "stream")      # 'restream' never matches
     assert got[4] == (0, "")
-
-
-def test_keyword_tags_broadcast_lexicon_equivalence(spark, sf_dir):
-    """The big-dictionary form (broadcast-joined lexicon instead of a
-    plan-literal array) returns EXACTLY the plan-literal result on
-    every doc — including zero-hit docs, which the left join must keep
-    with n_tags=0 and empty tags."""
-    from pagerank_hadoop_spark.operators.text_analysis import keyword_tags
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    lex = ["vector", "stream", "merge join", "hash join",
-           "window agg", "zorder", "broadcast"]
-    lit = {
-        (r.doc_id, r.n_tags, r.tags)
-        for r in keyword_tags(docs, lex).collect()
-    }
-    bc = {
-        (r.doc_id, r.n_tags, r.tags)
-        for r in keyword_tags(docs, lex, broadcast_lexicon=True).collect()
-    }
-    assert bc == lit and len(bc) == docs.count()
-    assert any(t[1] == 0 for t in bc)  # zero-hit docs present
 
 
 def test_chunk_documents_window_semantics(spark):
