@@ -23,6 +23,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> int:
+    qs = _registry.queries()
+    names = sys.argv[1:] or sorted(qs)
+    unknown = [name for name in names if name not in qs]
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        return 2
     spark = get_spark("bench")
     # untimed warmup: JVM/codegen/Arrow spin-up and the parquet footer
     # reads otherwise land entirely on whichever query runs first.
@@ -75,8 +81,6 @@ def main() -> int:
     for t in os.listdir(SF_DIR):
         if t.endswith(".parquet"):
             spark.read.parquet(os.path.join(SF_DIR, t)).limit(1).collect()
-    qs = _registry.queries()
-    names = sys.argv[1:] or sorted(qs)
     # JMH-style untimed warm pass: run each query once at the smallest
     # scale factor. Plan shapes (and therefore the whole-stage-codegen
     # classes Janino compiles per generated plan) are identical across

@@ -32,9 +32,9 @@ from pagerank_hadoop_spark.operators.pagerank import (  # noqa: F401 (re-export)
     PregelNotConverged,
     _edge_tasks,
     _fits_one_task,
-    _in_one_task,
     _loop_shuffle_scope,
     _nonconvergence,
+    _on_driver,
     _vertices,
     loop_partitions,
     pagerank_with_n,
@@ -51,10 +51,12 @@ def _edge_partitions(edges: DataFrame, doubled: bool = True) -> int:
     ROWS_PER_ITER_TASK economy (Catalyst's post-projection/distinct
     size estimates run low, so the divisor is deliberately tight);
     the estimate only needs the right order of magnitude (small
-    graph → few tasks, big graph → all). Frames built with
-    ``createDataFrame`` report Spark's default size, so they count as
-    big: they get the session width, and never the one-task path of
-    :func:`_fits_one_task` (a known issue)."""
+    graph → few tasks, big graph → all). A frame built with
+    ``createDataFrame`` from a Python list is a ``LogicalRDD`` that
+    reports Spark's default size (``Long.MaxValue``), so it counts as
+    big: it gets the session width, and never the driver path of
+    :func:`_fits_one_task` (a known issue). One built from a pandas
+    frame with Arrow on is a ``LocalRelation`` with a real size."""
     shuffle_parts = shuffle_partitions(edges.sparkSession)
     need = _edge_tasks(edges, doubled)
     if need is None:  # stats unavailable: keep the session default
@@ -154,8 +156,8 @@ def _count_stable(n: int):
 
 def _labelled(label_col: str, kernel, uniq, src, dst, has_null: bool):
     """A label kernel ``kernel(n, src, dst, has_null) -> (labels, log,
-    null_row)`` as a kernel of the one-task runner
-    (``pagerank._in_one_task``): one ``(id, label_col)`` row per vertex
+    null_row)`` as a kernel of the small-graph runner
+    (``pagerank._on_driver``): one ``(id, label_col)`` row per vertex
     it labels (label code -1: no row), and a ``(null, null)`` row when
     it asks for one. The id columns are built as Python objects, so
     ids above 2**53 stay exact."""
@@ -428,16 +430,16 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     right-sized tasks. On a smaller graph the extra per-round stage
     costs more than the rounds it saves.
 
-    Small graphs run in one task (``pagerank._in_one_task``, the one
+    Small graphs run on the driver (``pagerank._on_driver``, the one
     runner scc and parity PageRank share): when
     :func:`_fits_one_task` finds integer or string ids and an edge
-    list needing one ~1 MB task, a numpy copy of this loop
-    (:func:`_cc_kernel`) runs all rounds in one Python task, with the same labels, round count,
-    pointer-jump rule and ``max_iter`` warning. Rounds on such a graph
-    are bound by scheduling, not data: two jobs per call instead of
-    nine. The narrowed loop would run each round in one task anyway,
-    so no task holds more than before. Missing stats or a bigger
-    graph take the distributed loop above.
+    list needing one ~1 MB task, the edge list is collected and a
+    numpy copy of this loop (:func:`_cc_kernel`) runs all rounds
+    there, with the same labels, round count, pointer-jump rule and
+    ``max_iter`` warning. Rounds on such a graph are bound by
+    scheduling, not data: the collect is the call's one job. The
+    result is a local frame. Missing stats or a bigger graph take the
+    distributed loop above.
     """
     # NOT distinct'ed: duplicate edges send duplicate min-messages,
     # which the per-vertex min() absorbs — a distinct here would cost
@@ -452,7 +454,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     if _fits_one_task(edges):
         kernel = partial(_cc_kernel, max_iter=max_iter, jump=jump)
         kernel = partial(_labelled, "component", kernel)
-        return _in_one_task(edges, "component {id}", kernel, "warn")[0]
+        return _on_driver(edges, "component {id}", kernel, "warn")[0]
     sym = _pinned(_symmetrized(edges), parts, "src")
 
     init = (
@@ -1207,17 +1209,17 @@ def strongly_connected_components(
     round — the classic FW-BW bound; real graphs with a few large
     SCCs settle in a handful of outer rounds.
 
-    Small graphs run in one task (``pagerank._in_one_task``), under
+    Small graphs run on the driver (``pagerank._on_driver``), under
     the rule :func:`connected_components` states: a numpy copy of
-    these loops (:func:`_scc_kernel`) runs every inner and outer round in one Python task, with
-    the same labels, round counts and ``max_iter`` / ``max_outer`` /
-    ``on_max_iter`` behaviour, in two jobs per call where the
-    distributed loops run about thirty.
+    these loops (:func:`_scc_kernel`) runs every inner and outer round
+    on the collected edge list, with the same labels, round counts and
+    ``max_iter`` / ``max_outer`` / ``on_max_iter`` behaviour, in one
+    job per call where the distributed loops run about thirty.
     """
     if _fits_one_task(edges, doubled=False):
         kernel = partial(_scc_kernel, max_outer=max_outer, max_iter=max_iter)
         kernel = partial(_labelled, "scc", kernel)
-        return _in_one_task(edges, "scc {id}", kernel, on_max_iter)[0]
+        return _on_driver(edges, "scc {id}", kernel, on_max_iter)[0]
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     verts = (
         e.select(F.col("src").alias("id"))

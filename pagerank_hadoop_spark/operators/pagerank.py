@@ -48,18 +48,19 @@ whatever the session width or core count (one sequential sum on a
 one-partition layout; on a wider one, one per layout partition, then
 merged). A layout at the full session width gets no fixed order. A
 small parity run with no vertex list (:func:`_fits_one_task`, which
-fails closed) runs all its rounds in ONE Python task instead
+fails closed) runs all its rounds on the driver instead
 (:func:`_rank_kernel`): a numpy loop that adds in the same order, so
-its ranks equal the distributed loop's bit for bit. Its rounds are bound by scheduling,
-not data: one job runs them all. :func:`pagerank_with_n` and
+its ranks equal the distributed loop's bit for bit. Its rounds are
+bound by scheduling, not data: one job collects the edge list and no
+round schedules any. :func:`pagerank_with_n` and
 :func:`pagerank_snapshots` share one run (:func:`_rank_runs`), which
 picks the path. Resumed, corrected, personalized and weighted runs,
 and runs given a vertex list, stay distributed.
 
-The module also holds what the one-task loops of
+The module also holds what the small-graph loops of
 ``operators/graph.py`` (cc, scc) and parity PageRank share: the
 small-graph probe (:func:`_fits_one_task`), the one runner
-(:func:`_in_one_task`) and the loop-width scope
+(:func:`_on_driver`) and the loop-width scope
 (:func:`_loop_shuffle_scope`).
 
 Scale notes (100 TB posture):
@@ -73,20 +74,22 @@ Scale notes (100 TB posture):
   does partial (map-side) aggregation before the shuffle — the
   Spark equivalent of the reference's hand-rolled HashSet combiner
   (``PageRank.java:91-93``), for free.
-* No ``collect()`` of rank state; the only driver-side scalar is N
-  (same round-trip the reference does via a Hadoop counter,
-  ``PageRank.java:470-471``).
+* No ``collect()`` of rank state on the distributed path; the only
+  driver-side scalar is N (same round-trip the reference does via a
+  Hadoop counter, ``PageRank.java:470-471``). Only an edge list under
+  :func:`_fits_one_task`'s ~1 MB bound is collected, whole, to the
+  driver.
 """
 
 from __future__ import annotations
 
-import json
+import threading
 import warnings
 from contextlib import contextmanager
 from functools import partial
 
 import numpy as np
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegralType, StringType
 
 from pagerank_hadoop_spark import runtime_counters
@@ -137,8 +140,8 @@ def _edge_tasks(edges: DataFrame, doubled: bool = True) -> int | None:
 
 
 def _fits_one_task(edges: DataFrame, doubled: bool = True) -> bool:
-    """Whether a loop over ``edges`` may run whole in one task
-    (:func:`_in_one_task`; cc, scc and parity PageRank): both id
+    """Whether a loop over ``edges`` may run whole on the driver
+    (:func:`_on_driver`; cc, scc and parity PageRank): both id
     columns of one integer type, or both Spark's binary-ordered string
     type, and an edge list that needs at most one task under
     ``graph._edge_partitions``' rule. The need is read before that
@@ -153,6 +156,10 @@ def _fits_one_task(edges: DataFrame, doubled: bool = True) -> bool:
         return False
     need = _edge_tasks(edges, doubled)
     return need is not None and need <= 1  # loop_partitions floors at 1
+
+
+# serializes _loop_shuffle_scope across threads; re-entrant for nesting
+_SCOPE_LOCK = threading.RLock()
 
 
 @contextmanager
@@ -181,72 +188,78 @@ def _loop_shuffle_scope(spark, parts: int | None):
     round's partial sum, and narrowing to the layout's own width is
     what keeps a round from re-hashing it into session-width buckets.
 
-    NOT thread-safe: this mutates the session-global conf, so any
-    concurrent query on the same SparkSession silently plans its
-    shuffles at the narrowed width for the scope's duration (results
-    unaffected — the conf is a task-count knob — but a wide query
-    would run under-parallel). The repo's bench/driver/test paths are
-    single-threaded per session; wrap concurrent use in a dedicated
-    child session (``spark.newSession()``) instead."""
+    Scopes are serialized across threads by one process-wide
+    re-entrant lock, held while a scope is open: a scope in another
+    thread waits until it closes, so every scope reads and restores
+    the session's own values, and nested scopes in one thread still
+    stack. What still holds while a scope is open: the conf is
+    session-global, so a query in another thread that opens no scope
+    plans its shuffles at the narrowed width, with AQE, the bloom rule
+    and broadcast joins off. Its exact aggregates are unaffected (the
+    knobs are physical-only), but a wide query runs under-parallel,
+    and a float sum (hits, a PageRank layout at the full session width)
+    may change in its last ulp. Run such a query in a child session
+    (``spark.newSession()``), which has its own conf."""
     if parts is None:
         yield
         return
-    key = "spark.sql.shuffle.partitions"
-    try:
-        current = int(spark.conf.get(key, "32"))
-    except (ValueError, TypeError):  # e.g. "auto"
-        yield
-        return
-    if parts >= current:
-        yield
-        return
-    # In the narrowed (small-graph) regime the loop's wall is driver
-    # planning, not data: every round pays a full Catalyst pass at its
-    # localCheckpoint (toRdd) plus one at the fixpoint count. AQE's
-    # per-stage re-planning and the runtime bloom-filter injection
-    # rule are pure overhead on 1-3-partition rounds (measured ~25%
-    # of per-round wall at sf0.1) and physically cannot help there —
-    # AQE coalesces by bytes on already-tiny exchanges and the bloom
-    # rule never fires on checkpointed-RDD join sides (no scan to
-    # prune). Scope them off WITH the width narrowing: the same
-    # stats-derived condition that says "this graph is small" says
-    # "these rules cannot pay here". At production scale parts >=
-    # current, the scope is a no-op, and AQE skew-splitting + runtime
-    # filters stay on.
-    # (A/B evidence, interleaved same-box 2x2 at sf0.1: scc 7.7/8.4 s
-    # lean vs 13.0/10.4 s session-AQE, sssp 7.8/8.4 vs 12.5/8.6,
-    # k_truss_precore 3.8/4.4 vs 7.1/4.5; mis/lpa neutral.)
-    # The same regime also stops PLANNING broadcast joins. A lazy
-    # localCheckpoint's toRdd blocks on every BroadcastExchange build
-    # in the round's plan (driver collect + rebroadcast, ~2 driver
-    # round trips per join per round), while a shuffle join over
-    # 1-3-partition loop state is a tiny exchange that executes
-    # lazily inside the round's one counting job.
-    # All three knobs are physical-only: join strategy and AQE cannot
-    # change which rows meet, and the loops admitted to this scope
-    # either aggregate order-insensitively (min / count / mode /
-    # bool-or) or sum in their fixed layout's order (PageRank), so
-    # results cannot move.
-    aqe_key = "spark.sql.adaptive.enabled"
-    bloom_key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
-    bcast_key = "spark.sql.autoBroadcastJoinThreshold"
-    prev_aqe = spark.conf.get(aqe_key, "true")
-    prev_bloom = spark.conf.get(bloom_key, "true")
-    prev_bcast = spark.conf.get(bcast_key, "10485760b")
-    # every set happens INSIDE the try: if any one throws, finally
-    # restores whatever was already applied (prev values are captured
-    # above) instead of leaving the session narrowed for its lifetime
-    try:
-        spark.conf.set(key, str(parts))
-        spark.conf.set(aqe_key, "false")
-        spark.conf.set(bloom_key, "false")
-        spark.conf.set(bcast_key, "-1")
-        yield
-    finally:
-        spark.conf.set(key, str(current))
-        spark.conf.set(aqe_key, prev_aqe)
-        spark.conf.set(bloom_key, prev_bloom)
-        spark.conf.set(bcast_key, prev_bcast)
+    with _SCOPE_LOCK:
+        key = "spark.sql.shuffle.partitions"
+        try:
+            current = int(spark.conf.get(key, "32"))
+        except (ValueError, TypeError):  # e.g. "auto"
+            yield
+            return
+        if parts >= current:
+            yield
+            return
+        # In the narrowed (small-graph) regime the loop's wall is driver
+        # planning, not data: every round pays a full Catalyst pass at its
+        # localCheckpoint (toRdd) plus one at the fixpoint count. AQE's
+        # per-stage re-planning and the runtime bloom-filter injection
+        # rule are pure overhead on 1-3-partition rounds (measured ~25%
+        # of per-round wall at sf0.1) and physically cannot help there —
+        # AQE coalesces by bytes on already-tiny exchanges and the bloom
+        # rule never fires on checkpointed-RDD join sides (no scan to
+        # prune). Scope them off WITH the width narrowing: the same
+        # stats-derived condition that says "this graph is small" says
+        # "these rules cannot pay here". At production scale parts >=
+        # current, the scope is a no-op, and AQE skew-splitting + runtime
+        # filters stay on.
+        # (A/B evidence, interleaved same-box 2x2 at sf0.1: scc 7.7/8.4 s
+        # lean vs 13.0/10.4 s session-AQE, sssp 7.8/8.4 vs 12.5/8.6,
+        # k_truss_precore 3.8/4.4 vs 7.1/4.5; mis/lpa neutral.)
+        # The same regime also stops PLANNING broadcast joins. A lazy
+        # localCheckpoint's toRdd blocks on every BroadcastExchange build
+        # in the round's plan (driver collect + rebroadcast, ~2 driver
+        # round trips per join per round), while a shuffle join over
+        # 1-3-partition loop state is a tiny exchange that executes
+        # lazily inside the round's one counting job.
+        # All three knobs are physical-only: join strategy and AQE cannot
+        # change which rows meet, and the loops admitted to this scope
+        # either aggregate order-insensitively (min / count / mode /
+        # bool-or) or sum in their fixed layout's order (PageRank), so
+        # results cannot move.
+        aqe_key = "spark.sql.adaptive.enabled"
+        bloom_key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
+        bcast_key = "spark.sql.autoBroadcastJoinThreshold"
+        prev_aqe = spark.conf.get(aqe_key, "true")
+        prev_bloom = spark.conf.get(bloom_key, "true")
+        prev_bcast = spark.conf.get(bcast_key, "10485760b")
+        # every set happens INSIDE the try: if any one throws, finally
+        # restores whatever was already applied (prev values are captured
+        # above) instead of leaving the session narrowed for its lifetime
+        try:
+            spark.conf.set(key, str(parts))
+            spark.conf.set(aqe_key, "false")
+            spark.conf.set(bloom_key, "false")
+            spark.conf.set(bcast_key, "-1")
+            yield
+        finally:
+            spark.conf.set(key, str(current))
+            spark.conf.set(aqe_key, prev_aqe)
+            spark.conf.set(bloom_key, prev_bloom)
+            spark.conf.set(bcast_key, prev_bcast)
 
 
 class PregelNotConverged(RuntimeError):
@@ -266,79 +279,45 @@ def _nonconvergence(label: str, max_iter: int, on_max_iter: str) -> None:
         warnings.warn(msg, RuntimeWarning, stacklevel=4)
 
 
-def _in_one_task(
+def _on_driver(
     edges: DataFrame, cols: str, kernel, on_max_iter: str
 ) -> tuple[DataFrame, int]:
-    """Run a whole small-graph loop in ONE Python task: the one-task
+    """Run a whole small-graph loop on the driver: the one small-graph
     runner of cc, scc and parity PageRank. Returns ``(result, N)``: the
     result has an ``id`` column of the edges' id type, then ``cols``
     (DDL, ``{id}`` standing for that type); N counts the distinct ids,
     a null id as one.
 
-    ``kernel(uniq, src, dst, has_null)`` is a numpy copy of a
-    distributed loop, round for round (:func:`_one_task_frame` factorizes
-    the ids); it returns ``(rows, log)``, rows a pandas frame of the
-    result's columns. Its log lists each inner loop as ``[label,
-    max_iter, rounds, converged]``. The edge list travels through one
-    ``groupBy(lit(0)).applyInPandas`` group; the result is checkpointed
-    lazily and one ``observe(...).count()`` both materializes it and
-    reads the log, so no second job runs (the ``graph.pregel`` pattern;
-    an ``Observation``, unlike an accumulator, cannot double-count a
-    recomputed task). The driver then replays the log: one
-    ``runtime_counters.note_round`` per round, so ``rounds_total``
-    keeps its meaning, and the same warning or error, at the same
-    point, as the distributed loop would give. When no edge row
-    exists no group runs, and the kernel's log on the empty graph is
-    replayed.
+    The edge list is collected once (``toPandas``, one job). The
+    non-null endpoint ids are factorized with ``np.unique``, which
+    sorts, so code order is id order (Python's code-point order on
+    ``str`` equals Spark's UTF-8 byte order). ``kernel(uniq, src, dst,
+    has_null)``, a numpy copy of a distributed loop, round for round,
+    runs on the edges with both ends non-null; it returns ``(rows,
+    log)``, rows a pandas frame of the result's columns. Its log lists
+    each inner loop as ``[label, max_iter, rounds, converged]``, and
+    is replayed: one ``runtime_counters.note_round`` per round, so
+    ``rounds_total`` keeps its meaning, and the same warning or error,
+    at the same point, as the distributed loop would give. The rows
+    become a local frame (with Arrow on, a ``LocalRelation`` that
+    Catalyst can size).
 
     Callers take this path only when :func:`_fits_one_task` says so:
-    the edge list then needs one ~1 MB task, and the narrowed
-    distributed loop would run each of its rounds in one task too, so
-    this adds no new per-task memory regime. Null ids cannot reach
-    pandas as float64: each endpoint travels as a non-null value plus
-    a null flag."""
-    spark = edges.sparkSession
+    the edge list then fits one ~1 MB task by Catalyst's estimate,
+    which bounds what the driver holds. Null ids cannot reach pandas
+    as float64: each endpoint travels as a non-null value plus a null
+    flag."""
     t = edges.schema["src"].dataType
     zero = F.lit("" if t == StringType() else 0).cast(t)
-    flat = edges.select(
+    pdf = edges.select(
         F.coalesce("src", zero).alias("src"),
         F.coalesce("dst", zero).alias("dst"),
-        F.isnull("src").alias("__sn"),
-        F.isnull("dst").alias("__dn"),
-    )
-    schema = f"id {{id}}, {cols}, __log string".format(id=t.simpleString())
-    obs = Observation()
-    with _loop_shuffle_scope(spark, 1):
-        # aliased: a bare integer literal would read as a group-by ordinal
-        out = (
-            flat.groupBy(F.lit(0).alias("__task"))
-            .applyInPandas(partial(_one_task_frame, kernel), schema)
-            .localCheckpoint(eager=False)
-        )
-        out.observe(obs, F.max("__log").alias("log")).count()
-    log = obs.get["log"]
-    if log is None:  # no edge row, so no group ran: replay the empty graph
-        n, log = 0, kernel(np.empty(0), np.empty(0, int), np.empty(0, int), False)[1]
-    else:
-        n, log = json.loads(log)
-    for label, limit, rounds, converged in log:
-        for _ in range(rounds):
-            runtime_counters.note_round()
-        if not converged:
-            _nonconvergence(label, limit, on_max_iter)
-    return out.where(F.col("__log").isNull()).drop("__log"), n
-
-
-def _one_task_frame(kernel, pdf):
-    """The one task's body. Factorizes the non-null endpoint ids with
-    ``np.unique``, which sorts, so code order is id order (Python's
-    code-point order on ``str`` equals Spark's UTF-8 byte order), runs
-    ``kernel`` on the edges with both ends non-null, and appends one
-    row holding the JSON of N and the round log (its other columns
-    null)."""
+        F.isnull("src").alias("sn"),
+        F.isnull("dst").alias("dn"),
+    ).toPandas()
     m = len(pdf)
     ends = np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()])
-    null = np.concatenate([pdf["__sn"].to_numpy(bool), pdf["__dn"].to_numpy(bool)])
+    null = np.concatenate([pdf["sn"].to_numpy(bool), pdf["dn"].to_numpy(bool)])
     uniq, codes = np.unique(ends[~null], return_inverse=True)
     full = np.full(2 * m, -1)
     full[~null] = codes
@@ -346,9 +325,13 @@ def _one_task_frame(kernel, pdf):
     both = (src >= 0) & (dst >= 0)
     has_null = bool(null.any())
     rows, log = kernel(uniq, src[both], dst[both], has_null)
-    rows["__log"] = None
-    rows.loc[len(rows), "__log"] = json.dumps([len(uniq) + has_null, log])
-    return rows
+    for label, limit, rounds, converged in log:
+        for _ in range(rounds):
+            runtime_counters.note_round()
+        if not converged:
+            _nonconvergence(label, limit, on_max_iter)
+    schema = f"id {{id}}, {cols}".format(id=t.simpleString())
+    return edges.sparkSession.createDataFrame(rows, schema), len(uniq) + has_null
 
 
 def adjacency_from_edges(edges: DataFrame) -> DataFrame:
@@ -568,8 +551,8 @@ def pagerank_with_n(
     ``pagerank_resume``).
 
     This is the one snapshot of :func:`_rank_runs` after ``n_iter``
-    rounds, so a small parity run takes one task under the rule stated
-    there, with the same ranks, N and round count.
+    rounds, so a small parity run runs on the driver under the rule
+    stated there, with the same ranks, N and round count.
     """
     ((_, ranks, n),) = _rank_runs(
         edges,
@@ -620,15 +603,14 @@ def _rank_runs(
 
     A parity run with no ``vertices`` or ``init_ranks`` on an edge list
     that fits one task (:func:`_fits_one_task`, the rule cc and scc
-    use) runs all its rounds in ONE Python task
-    (:func:`_in_one_task`, :func:`_rank_kernel`) before the first
-    yield. Its result is ``coalesce(1)``'d: that changes no row, and
-    the frame then reports one partition, so a caller's global sort
-    needs no range shuffle."""
+    use) runs all its rounds on the driver (:func:`_on_driver`,
+    :func:`_rank_kernel`) before the first yield. Its result is
+    ``coalesce(1)``'d: that changes no row, and the frame then reports
+    one partition, so a caller's global sort needs no range shuffle."""
     one_task = parity and vertices is None and init_ranks is None
     if iters and one_task and _fits_one_task(edges, doubled=False):
         kernel = partial(_rank_kernel, iters, damping)
-        out, n = _in_one_task(edges, _RANK_COLS, kernel, "ignore")
+        out, n = _on_driver(edges, _RANK_COLS, kernel, "ignore")
         out = out.coalesce(1)
         for k in iters:
             yield k, out.where(F.col("k") == k).select("id", "rank"), n
@@ -695,7 +677,7 @@ def _rank_runs(
 
 
 def _rank_kernel(iters: tuple, damping: float, uniq, src, dst, has_null: bool):
-    """The parity rounds in :func:`_in_one_task`'s one task: ``(k, id,
+    """The parity rounds on the driver (:func:`_on_driver`): ``(id, k,
     rank)`` rows for each ``k`` of ``iters``, and the round log. The
     same float operations as :func:`_uniform_contribs` and
     :func:`_teleport_step`, in the order the distributed loop adds them
@@ -707,12 +689,13 @@ def _rank_kernel(iters: tuple, damping: float, uniq, src, dst, has_null: bool):
     order, and ``np.add.at`` adds each target's contributions in that
     order, one at a time from 0.0, as a one-partition partial sum does.
     The null id counts in N, sends and receives nothing, and so reads
-    as the teleport rank after a round. With N = 0 no round runs."""
+    as the teleport rank after a round. With N = 0 no round runs and
+    no row is returned."""
     import pandas as pd
 
     n = len(uniq) + has_null
     if not n:
-        return None, []
+        return pd.DataFrame(columns=["id", "k", "rank"]), []
     src, dst = np.unique(np.stack([src, dst]), axis=1)
     div = np.bincount(src, minlength=len(uniq))[src]
     ids = np.append(uniq.astype(object), [None] * has_null)

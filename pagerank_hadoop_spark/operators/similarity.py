@@ -192,8 +192,8 @@ def _sql_dvec(consts: list[float]) -> str:
 
 def _sql_fold_dot(vec_sql: str, terms_sql: str) -> str:
     """The engine's sequential-fold dot product as a SQL string —
-    the SAME expression tree as ``functions.vectors.dot`` /
-    ``_lit_dot`` (zip_with product, left-fold sum from 0.0), built in
+    the SAME expression tree as ``functions.vectors.dot`` (zip_with
+    product, left-fold sum from 0.0), built in
     ONE ``F.expr`` parse instead of per-node py4j round trips. A
     literal-codebook LUT is m·n_codes of these: the Column-API build
     cost ~17k py4j calls / 13 s of driver wall per pq_topk invocation
@@ -211,17 +211,6 @@ def _lit_dot_sql(vec_sql: str, consts: list[float]) -> str:
     float vector — JVM array expressions, the vector never leaves the
     row (SQL-string twin of the retired Column builder)."""
     return _sql_fold_dot(vec_sql, _sql_dvec(consts))
-
-
-def _lit_dot(vec, consts: list[float]):
-    """Dot product of an array column with a literal float vector —
-    JVM array expressions, the vector never leaves the row."""
-    lits = F.array(*[F.lit(float(x)) for x in consts])
-    return F.aggregate(
-        F.zip_with(vec, lits, lambda x, c: x * c),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def maxsim_screened_topk(

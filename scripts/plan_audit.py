@@ -32,7 +32,7 @@ Bias note: loops that materialize each round (pregel's fused count)
 yield exact per-round plans; loops that only materialize at the end
 (HITS) capture not-yet-truncated earlier lineage in later rounds'
 plans — an over-count, never an under-count. Loops that run all
-their rounds in one Python task (small cc, scc and parity PageRank)
+their rounds on the driver (small cc, scc and parity PageRank)
 tick rounds without a frame and show ``Nr/0ex``.
 """
 

@@ -1,4 +1,5 @@
-"""bench.py keeps sweeping past a query that raises."""
+"""bench.py keeps sweeping past a query that raises, and refuses
+unknown query names before it starts a session."""
 
 from __future__ import annotations
 
@@ -37,3 +38,24 @@ def test_bench_survives_one_bad_query(spark, sf_dir, monkeypatch, capsys):
     assert "boom" in out["errors"]["bad_frame"]
     assert set(out["errors"]) == {"bad_first", "bad_frame"}
     assert out["n_queries"] == 1 and out["value"] >= 0
+
+
+def test_bench_rejects_unknown_query_names(monkeypatch, capsys):
+    spec = importlib.util.spec_from_file_location(
+        "bench", os.path.join(ROOT, "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+
+    def no_session(*_a, **_k):
+        raise AssertionError("a session was started")
+
+    qs = {"good": lambda s, _sf: s.range(5)}
+    monkeypatch.setattr(bench._registry, "queries", lambda: qs)
+    monkeypatch.setattr(bench, "get_spark", no_session)
+    monkeypatch.setattr(sys, "argv", ["bench.py", "nope", "good", "also_nope"])
+
+    assert bench.main() == 2
+    captured = capsys.readouterr()
+    assert captured.out == ""
+    assert "nope also_nope" in captured.err

@@ -91,8 +91,8 @@ def test_cli_lays_out_once_and_matches_pagerank_with_n(
 ):
     """The CLI's two snapshots come from one rank run, on either path:
     distributed, the adjacency is laid out (and N counted) once per
-    ``main``; on a graph that fits one task, all rounds run in one
-    task and nothing is laid out. Either way the iter-1 and iter-8
+    ``main``; on a graph that fits one task, all rounds run on the
+    driver and nothing is laid out. Either way the iter-1 and iter-8
     Parquet rank tables equal ``pagerank_with_n``'s for ``n_iter=1``
     and ``n_iter=8``, compared float for float with ``==``."""
     from pagerank_hadoop_spark.__main__ import THRESHOLD_NUM
@@ -118,7 +118,7 @@ def test_cli_lays_out_once_and_matches_pagerank_with_n(
     for one_task in (True, False):
         out = tmp_path / f"result-{one_task}"
         layouts, one_task_runs = [], []
-        real_layout, real_run = P._laid_out, P._in_one_task
+        real_layout, real_run = P._laid_out, P._on_driver
         with monkeypatch.context() as m:
             m.setattr(P, "_fits_one_task", lambda *a, **k: one_task)
             m.setattr(
@@ -126,7 +126,7 @@ def test_cli_lays_out_once_and_matches_pagerank_with_n(
                 lambda *a, **k: layouts.append(1) or real_layout(*a, **k),
             )
             m.setattr(
-                P, "_in_one_task",
+                P, "_on_driver",
                 lambda *a, **k: one_task_runs.append(1) or real_run(*a, **k),
             )
             assert main([str(dump), str(out)]) == 0
@@ -164,7 +164,7 @@ def test_cli_results_do_not_depend_on_shuffle_width(
 ):
     """The snapshots and rank tables are the same bytes and floats at
     shuffle width 8 with AQE on and width 12 with AQE off, on the
-    one-task path and the distributed one, and the two paths agree:
+    driver path and the distributed one, and the two paths agree:
     every rank adds its in-links in (source, target) order whatever
     the width. The full rank tables of ``pagerank_snapshots`` over the
     dump's edges, uncached, agree the same way. ``main`` runs on the

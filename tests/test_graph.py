@@ -592,6 +592,55 @@ def test_loop_shuffle_scope_semantics(spark):
     # it exists for auto-tuning platforms whose GET returns non-int)
 
 
+def test_loop_shuffle_scope_serializes_threads(spark):
+    """A scope opened in a second thread while the first thread's is
+    open waits for it to close, so each restores the session's own
+    values: thread A narrows an 8-wide session to 2, thread B asks for
+    1 inside A's scope, and afterwards the session is 8-wide with AQE
+    on again. Unserialized, B would read A's 2 and restore it last."""
+    import threading
+    import time
+
+    from pagerank_hadoop_spark.operators.pagerank import _loop_shuffle_scope
+
+    key, aqe_key = "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key), spark.conf.get(aqe_key)
+    a_in, b_trying, a_out = threading.Event(), threading.Event(), threading.Event()
+    seen = {}
+
+    def thread_a():
+        with _loop_shuffle_scope(spark, 2):
+            seen["a"] = spark.conf.get(key)
+            a_in.set()
+            b_trying.wait(10)
+            time.sleep(0.5)  # B is now inside its scope, or blocked entering it
+        a_out.set()
+
+    def thread_b():
+        a_in.wait(10)
+        b_trying.set()
+        with _loop_shuffle_scope(spark, 1):
+            seen["b"] = spark.conf.get(key)
+            a_out.wait(10)  # outlive A's scope
+        seen["b_after_a"] = a_out.is_set()
+
+    spark.conf.set(key, "8")
+    spark.conf.set(aqe_key, "true")
+    try:
+        threads = [threading.Thread(target=f) for f in (thread_a, thread_b)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(30)
+        assert not any(t.is_alive() for t in threads)
+        after = spark.conf.get(key), spark.conf.get(aqe_key)
+    finally:
+        spark.conf.set(key, before[0])
+        spark.conf.set(aqe_key, before[1])
+    assert seen == {"a": "2", "b": "1", "b_after_a": True}
+    assert after == ("8", "true")
+
+
 def test_scoped_loops_match_unscoped_results(spark, sf_dir, monkeypatch):
     """Bit-identical results under any loop width (the property that
     makes the scope hash-safe for the order-insensitive drivers):
@@ -726,7 +775,7 @@ def _pinned_loop_results(spark, tmp, only=None):
     (or the ``only`` ones) on the pin fixtures, read back from Parquet
     under ``tmp`` as queries read their tables: the plan-size probe
     then sees a small graph, so the loops run narrowed, cc runs
-    without pointer jumping, and cc and scc run in one task."""
+    without pointer jumping, and cc and scc run on the driver."""
     import os
 
     from pagerank_hadoop_spark import runtime_counters
@@ -885,7 +934,7 @@ def test_every_graph_loop_pinned(spark, tmp_path, monkeypatch):
     """Exact output and round count of every graph loop, against
     goldens taken before the loops shared one driver. HITS floats are
     compared with ``==``: the fixture keeps every sum order-free. cc
-    and scc are pinned on both paths: the one-task path these small
+    and scc are pinned on both paths: the driver path these small
     Parquet inputs take by default, and the distributed loop."""
     from pagerank_hadoop_spark.operators import graph as G
 
@@ -911,13 +960,13 @@ def test_every_graph_loop_pinned(spark, tmp_path, monkeypatch):
 
 
 def _spy_one_task(monkeypatch) -> list:
-    """Record the label column of every one-task run from now on."""
+    """Record the label column of every driver-path run from now on."""
     from pagerank_hadoop_spark.operators import graph as G
 
-    calls, real = [], G._in_one_task
+    calls, real = [], G._on_driver
     monkeypatch.setattr(
         G,
-        "_in_one_task",
+        "_on_driver",
         # the result's columns after id: the label column comes first
         lambda e, cols, *a: calls.append(cols.split()[0]) or real(e, cols, *a),
     )
@@ -952,7 +1001,7 @@ def _on_path(monkeypatch, probe, one_task: bool, run):
 
 def test_one_task_and_distributed_paths_agree(spark, monkeypatch, pagerank_module):
     """cc and scc give the same rows, rounds and non-convergence
-    warnings or errors in one task as on the distributed loop."""
+    warnings or errors on the driver as on the distributed loop."""
     from pagerank_hadoop_spark.operators import graph as G
 
     big = 2**53
@@ -1028,7 +1077,7 @@ def test_one_task_and_distributed_paths_agree(spark, monkeypatch, pagerank_modul
 
 
 def test_one_task_probe_fails_closed(spark, monkeypatch, pagerank_module):
-    """The one-task path needs plan stats that fit one ~1 MB task
+    """The driver path needs plan stats that fit one ~1 MB task
     before the session-width clamp, and integer or string ids; any
     other case takes the distributed loop."""
     from pagerank_hadoop_spark.operators import graph as G
@@ -1067,12 +1116,12 @@ def test_one_task_probe_fails_closed(spark, monkeypatch, pagerank_module):
 
 def test_cc_scc_and_rank_snapshots_share_one_runner(spark, monkeypatch, pagerank_module):
     """cc, scc and a rank snapshot run on a small graph each go through
-    the one one-task runner exactly once."""
+    the one small-graph runner exactly once."""
     from pagerank_hadoop_spark.operators import graph as G
 
     P = pagerank_module
-    assert G._in_one_task is P._in_one_task
-    calls, real = [], P._in_one_task
+    assert G._on_driver is P._on_driver
+    calls, real = [], P._on_driver
 
     def spy(edges, cols, *a):
         calls.append(cols)
@@ -1080,7 +1129,7 @@ def test_cc_scc_and_rank_snapshots_share_one_runner(spark, monkeypatch, pagerank
 
     monkeypatch.setattr(P, "plan_bytes", lambda df: 1000)
     for module in (G, P):
-        monkeypatch.setattr(module, "_in_one_task", spy)
+        monkeypatch.setattr(module, "_on_driver", spy)
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "a"), ("b", "c")], "src string, dst string"
     )
@@ -1089,6 +1138,32 @@ def test_cc_scc_and_rank_snapshots_share_one_runner(spark, monkeypatch, pagerank
     for _, ranks, _ in P.pagerank_snapshots(edges, (1, 8)):
         ranks.collect()
     assert calls == ["component {id}", "scc {id}", P._RANK_COLS]
+
+
+def test_small_paths_return_local_frames(spark, tmp_path, pagerank_module):
+    """On a small Parquet edge list, cc, scc and a rank snapshot run on
+    the driver and return local frames: cc's and scc's results are a
+    ``LocalRelation`` and all three report a plan size, so a later
+    join or loop can size them."""
+    from pagerank_hadoop_spark.operators import graph as G
+    from pagerank_hadoop_spark.session import plan_bytes
+
+    P = pagerank_module
+    path = str(tmp_path / "edges")
+    spark.createDataFrame(
+        [("a", "b"), ("b", "a"), ("b", "c")], "src string, dst string"
+    ).write.parquet(path)
+    edges = spark.read.parquet(path)
+    assert P._fits_one_task(edges) and P._fits_one_task(edges, doubled=False)
+    for result in (
+        G.connected_components(edges),
+        G.strongly_connected_components(edges),
+    ):
+        plan = result._jdf.queryExecution().optimizedPlan()
+        assert plan.nodeName() == "LocalRelation"
+        assert plan_bytes(result) is not None
+    ((_, ranks, n),) = P.pagerank_snapshots(edges, (8,))
+    assert n == 3 and plan_bytes(ranks) is not None
 
 
 def test_round_driver_keeps_float_loops_at_session_width(spark):

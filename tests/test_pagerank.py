@@ -298,10 +298,10 @@ def test_every_variant_bitwise_pinned(spark):
 
 
 def _spy_one_task(monkeypatch, P) -> list:
-    """Record every one-task rank run of ``P`` from now on."""
-    calls, real = [], P._in_one_task
+    """Record every driver-path rank run of ``P`` from now on."""
+    calls, real = [], P._on_driver
     monkeypatch.setattr(
-        P, "_in_one_task", lambda *a, **k: calls.append(1) or real(*a, **k)
+        P, "_on_driver", lambda *a, **k: calls.append(1) or real(*a, **k)
     )
     return calls
 
@@ -311,7 +311,7 @@ def _rank_run_on_path(monkeypatch, P, one_task: bool, run, took: bool | None = N
     frame, N, rounds)``, with every rank compared as its exact float.
     The plan-size probe reads every input as small, and the edge
     probe decides the path; ``took`` (default ``one_task``) is whether
-    the one-task runner must have run."""
+    the driver-path runner must have run."""
     from pagerank_hadoop_spark import runtime_counters
 
     with monkeypatch.context() as m:
@@ -325,7 +325,7 @@ def _rank_run_on_path(monkeypatch, P, one_task: bool, run, took: bool | None = N
     return rows, n, runtime_counters.snapshot()["rounds"]
 
 
-# The one-task rank path against the distributed loop: one graph of
+# The driver rank path against the distributed loop: one graph of
 # four parts (several parts name the same vertex), and the empty one
 RANK_PATH_EDGES = [
     # code-point order: U+1F600 sorts after U+FF5E as UTF-8 bytes do,
@@ -366,7 +366,7 @@ RANK_VERTICES_GOLDENS = {
 
 
 def test_one_task_and_distributed_rank_paths_agree(spark, monkeypatch, pagerank_module):
-    """The one-task kernel and the distributed loop give identical
+    """The driver kernel and the distributed loop give identical
     rows, N and rounds, float for float, for ``n_iter`` 1 and 8 and
     for the snapshots (1, 8), on string ids, on long ids above 2**53
     and on the empty edge list. A run with a vertex list holding
@@ -440,7 +440,7 @@ def test_rank_runs_outside_the_one_task_rule_stay_distributed(
     spark, monkeypatch, pagerank_module
 ):
     """A small parity run with integer or string ids and no vertex list
-    takes one task; missing stats, a big estimate under a one-task
+    runs on the driver; missing stats, a big estimate under a one-task
     session width, a vertex list, ``init_ranks`` and ``parity=False``
     each take the distributed loop."""
     P = pagerank_module
