@@ -122,6 +122,7 @@ def main(argv: list[str]) -> int:
             os.path.join(output_dir, f"pagerank_iter{iters}.parquet")
         )
         out.unpersist()
+    edges.unpersist()
     return 0
 
 

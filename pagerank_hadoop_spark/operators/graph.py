@@ -3,14 +3,19 @@
 GraphX is Scala-only and GraphFrames is an external jar; the
 Spark-native PySpark expression of a property graph is exactly two
 DataFrames (``vertices``, ``edges``) plus relational algebra — this
-facade names the common graph operations so callers get the
-GraphX/GraphFrames API surface (degrees, pagerank) with Catalyst
-planning everything.
+module names the common graph operations (degrees, messages,
+components, paths, cores, trusses, walks) with Catalyst planning
+everything. PageRank lives in ``operators/pagerank.py``.
+
+One form per operator: every loop runs on one round driver
+(:func:`_fixpoint`), BFS is the unit-weight call of the SSSP loop,
+and :func:`triangle_count` and :func:`k_truss` share one
+wedge-closure plan (:func:`_triangles`).
 
 Reference parity: the reference's only graph op is PageRank over the
-wiki link graph (``/root/reference/src/PageRank/PageRank.java``);
-degrees correspond to the outdeg computed inline at
-``PageRank.java:268-279`` (message fan-out divides by outdegree).
+wiki link graph (the reference's ``PageRank.java``); degrees
+correspond to the outdeg computed inline at ``PageRank.java:268-279``
+(message fan-out divides by outdegree).
 """
 
 from __future__ import annotations
@@ -37,7 +42,6 @@ from pagerank_hadoop_spark.operators.pagerank import (  # noqa: F401 (re-export)
     _on_driver,
     _vertices,
     loop_partitions,
-    pagerank_with_n,
     shuffle_partitions,
 )
 
@@ -352,39 +356,34 @@ class PropertyGraph:
             )
         )
 
-    def page_rank(
-        self, n_iter: int = 8, damping: float = 0.85, parity: bool = True
-    ) -> DataFrame:
-        """Iterative PageRank (see operators.pagerank for semantics
-        and the 100 TB loop design)."""
-        ranks, _ = pagerank_with_n(
-            self.edges,
-            vertices=self.vertices,
-            n_iter=n_iter,
-            damping=damping,
-            parity=parity,
-        )
-        return ranks
+
+def _triangles(canon: DataFrame) -> DataFrame:
+    """Every triangle ``x < y < z`` of a canonical (``src < dst``),
+    distinct edge list, found exactly once as the wedge x-y, y-z
+    closed by x-z: ``(x, z, y)`` rows from two hash joins that shuffle
+    only id pairs."""
+    e1 = canon.select(F.col("src").alias("x"), F.col("dst").alias("y"))
+    e2 = canon.select(F.col("src").alias("y"), F.col("dst").alias("z"))
+    e3 = canon.select(F.col("src").alias("x"), F.col("dst").alias("z"))
+    return e1.join(e2, "y").join(e3, ["x", "z"])
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle count over an undirected graph; returns a
     single-row DataFrame ``(n_triangles: long)``.
 
-    Standard wedge-closure plan: canonicalize each undirected edge to
-    ``src < dst`` (so every triangle {a<b<c} is counted exactly once
-    as the wedge a-b, b-c closed by a-c), then two hash joins:
-    ``e1(a,b) ⋈ e2(b,c) ⋈ edges(a,c)``. Both joins shuffle only
-    2-column id pairs; the wedge fan-out is Σ_b C(deg(b), 2), the
+    Standard wedge-closure plan (:func:`_triangles`): canonicalize each
+    undirected edge to ``src < dst``, so every triangle is counted
+    exactly once; the wedge fan-out is Σ_b C(deg(b), 2), the
     canonical bound for join-based triangle enumeration — at 100 TB
     scale AQE's skew split handles hub vertices, and the final count
     is a partial-aggregated scalar, never a driver-side materialize.
     """
     canon = (
         edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
         )
-        .where(F.col("a") != F.col("b"))
+        .where(F.col("src") != F.col("dst"))
         .distinct()
         # materialize ONCE: the three join legs below are differently-
         # aliased projections of this frame, which defeats Catalyst's
@@ -394,13 +393,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         # triangle count persists)
         .localCheckpoint(eager=True)
     )
-    e1 = canon.select(F.col("a"), F.col("b"))
-    e2 = canon.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    e3 = canon.select(F.col("a"), F.col("b").alias("c"))
-    wedges = e1.join(e2, "b")
-    return wedges.join(e3, ["a", "c"]).agg(
-        F.count(F.lit(1)).alias("n_triangles")
-    )
+    return _triangles(canon).agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
 def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
@@ -504,12 +497,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
             (F.col("component") < F.col("__old")).alias("__changed"),
         )
 
-    labels = pregel(
+    return pregel(
         sym, init, step, max_iter=max_iter, label="connected_components",
         shuffle_parts=parts,
     )
-    sym.unpersist()
-    return labels
 
 
 def shortest_paths(
@@ -518,51 +509,19 @@ def shortest_paths(
     max_iter: int = 20,
 ) -> DataFrame:
     """Single-source BFS shortest paths over an undirected graph:
-    ``(id, dist)`` for every vertex reachable from ``source`` within
-    ``max_iter`` hops (unreachable vertices are absent).
+    ``(id, dist int)`` for every vertex reachable from ``source``
+    within ``max_iter`` hops (unreachable vertices are absent).
 
-    Same one-job-per-round relaxation loop as
-    :func:`connected_components` — each round sends ``dist + 1``
-    across every edge and keeps the per-vertex minimum; the shuffle
-    carries only (id, dist) pairs and the fixpoint test rides the
-    materializing count. Rounds needed = graph eccentricity of the
-    source, each round one join + partial-aggregated groupBy.
+    The unit-weight case of :func:`weighted_shortest_paths`: the same
+    delta-frontier relaxation loop over ``weight = 1``. With unit
+    weights a vertex's distance is final the round it is discovered,
+    so each round messages only the newly discovered frontier, and
+    rounds needed = the source's eccentricity.
     """
-    parts = _edge_partitions(edges)
-    sym = _pinned(_symmetrized(edges), parts, "src")
-
-    init = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .where(F.col("id") == source)
-        .withColumn("dist", F.lit(0))
-    ).localCheckpoint(eager=True)
-
-    # delta iteration: with unit edge weights a vertex's distance is
-    # final the round it is discovered, so only the newly-discovered
-    # frontier (pregel's `changed` delta) needs to message its
-    # neighbors — per-round join input is |frontier|, not |all
-    # discovered so far|
-    def step(sym_e: DataFrame, dist: DataFrame, frontier: DataFrame) -> DataFrame:
-        msgs = (
-            sym_e.join(frontier, sym_e.src == frontier.id)
-            .groupBy(F.col("dst").alias("id"))
-            .agg((F.min("dist") + 1).alias("__m"))
-        )
-        return dist.join(msgs, "id", "full").select(
-            "id",
-            F.least("dist", "__m").alias("dist"),
-            (F.col("dist").isNull() | (F.col("__m") < F.col("dist"))).alias(
-                "__changed"
-            ),
-        )
-
-    dist = pregel(
-        sym, init, step, max_iter=max_iter, label="shortest_paths",
-        shuffle_parts=parts,
+    dist = weighted_shortest_paths(
+        edges.withColumn("weight", F.lit(1)), source, max_iter=max_iter
     )
-    sym.unpersist()
-    return dist
+    return dist.select("id", F.col("dist").cast("int"))
 
 
 def k_truss(
@@ -582,9 +541,9 @@ def k_truss(
     triangle-free edges, which a truss by definition is not about).
 
     Round shape: triangles are enumerated once per round on the
-    CANONICAL (src < dst) edge list via the same wedge-closure
-    double join as :func:`triangle_count` (each triangle x<y<z found
-    exactly once), exploded to their 3 member edges, and
+    CANONICAL (src < dst) edge list by :func:`triangle_count`'s
+    wedge-closure double join (:func:`_triangles`; each triangle
+    x<y<z found exactly once), exploded to their 3 member edges, and
     partial-agg counted → per-edge support; the surviving list is
     lazily checkpointed and its count is the fixpoint test — one
     triangle pass + one filter per round, ids-only shuffles.
@@ -624,12 +583,8 @@ def k_truss(
         )
 
     def _support(es: DataFrame) -> DataFrame:
-        e1 = es.select(F.col("src").alias("x"), F.col("dst").alias("y"))
-        e2 = es.select(F.col("src").alias("y"), F.col("dst").alias("z"))
-        e3 = es.select(F.col("src").alias("x"), F.col("dst").alias("z"))
-        tri = e1.join(e2, "y").join(e3, ["x", "z"])
         return (
-            tri.select(
+            _triangles(es).select(
                 F.explode(
                     F.array(
                         F.struct(F.col("x").alias("src"), F.col("y").alias("dst")),
@@ -844,7 +799,6 @@ def aggregate_messages(
     to_dst,
     to_src,
     agg,
-    drop_missing: bool = True,
 ) -> DataFrame:
     """GraphX's core primitive (``aggregateMessages``) as relational
     algebra: every Pregel-style step — degree counting, rank
@@ -871,16 +825,13 @@ def aggregate_messages(
             agg=F.sum,
         )
 
-    ``drop_missing=True`` (default) matches GraphX: an edge whose
-    endpoint is absent from ``vertices`` produces NO messages — its
-    triplet has no vertex attributes, and letting it through would
-    silently feed null ``src_*``/``dst_*`` attributes into the
-    message expressions (nulls a sum/min then absorbs). Pass
-    ``drop_missing=False`` to keep such edges (null attributes) when
-    the message expression handles them explicitly.
+    As in GraphX, an edge whose endpoint is absent from ``vertices``
+    produces NO messages: its triplet has no vertex attributes, and
+    letting it through would silently feed null ``src_*``/``dst_*``
+    attributes into the message expressions (nulls a sum/min then
+    absorbs).
     """
     vcols = vertices.columns
-    how = "inner" if drop_missing else "left"
     src_state = vertices.select(
         F.col("id").alias("src"),
         *[F.col(c).alias(f"src_{c}") for c in vcols if c != "id"],
@@ -889,8 +840,8 @@ def aggregate_messages(
         F.col("id").alias("dst"),
         *[F.col(c).alias(f"dst_{c}") for c in vcols if c != "id"],
     )
-    joined = edges.join(src_state, "src", how).join(
-        dst_state, "dst", how
+    joined = edges.join(src_state, "src").join(
+        dst_state, "dst"
     )
     # both directions ride ONE explode over the joined triplets — a
     # union of two projections would consume `joined` twice, doubling
@@ -1138,7 +1089,8 @@ def weighted_shortest_paths(
         if directed
         else _symmetrized(edges, "weight")
     )
-    e = _pinned(e, _edge_partitions(edges, doubled=not directed), "src")
+    parts = _edge_partitions(edges, doubled=not directed)
+    e = _pinned(e, parts, "src")
 
     init = (
         e.select(F.col("src").alias("id"))
@@ -1161,7 +1113,7 @@ def weighted_shortest_paths(
             ),
         )
 
-    dist = pregel(
+    return pregel(
         e,
         init,
         step,
@@ -1170,10 +1122,8 @@ def weighted_shortest_paths(
         label="weighted_shortest_paths",
         # least()/min over exact per-edge relaxations is
         # order-insensitive, so the narrow loop scope is hash-safe
-        shuffle_parts=_edge_partitions(e, doubled=False),
+        shuffle_parts=parts,
     )
-    e.unpersist()
-    return dist
 
 
 def strongly_connected_components(
@@ -1354,13 +1304,13 @@ def random_walks(
     edges: DataFrame,
     walk_len: int,
     walks_per_node: int = 1,
-    directed: bool = False,
 ) -> DataFrame:
-    """Deterministic uniform random walks from every vertex —
-    the corpus generator for DeepWalk/node2vec-style graph
-    embeddings. Returns ``(walk_id, step, pos)`` with
+    """Deterministic uniform random walks from every vertex of an
+    undirected graph — the corpus generator for DeepWalk/node2vec-
+    style graph embeddings. Returns ``(walk_id, step, pos)`` with
     ``walks_per_node`` walks per start vertex and steps
-    ``0..walk_len`` (walks stop early at a sink).
+    ``0..walk_len`` (every vertex has a neighbor, so no walk stops
+    early).
 
     Randomness is ONE portable hash per (walk, step) indexing into
     the vertex's sorted neighbor array — a pure function of the
@@ -1377,7 +1327,7 @@ def random_walks(
     per edge — the standard alias-table trade; cap degree upstream
     if hub arrays outgrow task memory.
     """
-    e = (edges.select("src", "dst") if directed else _symmetrized(edges)).distinct()
+    e = _symmetrized(edges).distinct()
     parts = _edge_partitions(e, doubled=False)
     adj = _pinned(
         e.groupBy("src").agg(F.sort_array(F.collect_set("dst")).alias("nbrs")),

@@ -6,15 +6,17 @@ Reference semantics (the reference's ``PageRank.java``):
   each Hadoop iteration re-reads and rewrites the full graph+rank state
   from/to HDFS. Here the loop body is a lazy
   ``join → explode → groupBy.agg`` plan over a cached adjacency — state
-  never leaves memory; ``localCheckpoint`` every few iterations bounds
-  lineage/plan growth (the Spark-idiomatic replacement for the
-  reference's per-iteration disk materialization).
+  never leaves memory; a lazy ``localCheckpoint`` every
+  ``CHECKPOINT_EVERY`` (4) iterations bounds lineage/plan growth (the
+  Spark-idiomatic replacement for the reference's per-iteration disk
+  materialization).
 * iteration-0 seeding: every page starts at ``1/N``
   (``PageRank.java:258-264``).
 * update rule: ``rank' = 0.15/N + 0.85 * Σ incoming rank/outdeg``
-  (``PageRank.java:305,316``). Every page receives the ``0.15/N``
-  baseline even with no in-links, because the reference ships each
-  page's adjacency row to itself (``PageRank.java:281``).
+  (``PageRank.java:305,316``); every variant uses this fixed
+  ``DAMPING``, as the reference does. Every page receives the
+  ``0.15/N`` baseline even with no in-links, because the reference
+  ships each page's adjacency row to itself (``PageRank.java:281``).
 * **parity mode** (default ``parity=True``) reproduces the reference's
   dangling-node behavior exactly: rank mass flowing into pages with no
   outlinks is LOST (never redistributed), so ranks do not sum to 1.
@@ -96,6 +98,9 @@ from pagerank_hadoop_spark import runtime_counters
 from pagerank_hadoop_spark.session import plan_bytes
 
 DAMPING = 0.85
+
+# rounds between the lazy checkpoints that bound a rank loop's plan
+CHECKPOINT_EVERY = 4
 
 # target vertices per task in iterative loops: small graphs collapse to
 # a handful of partitions (32 near-empty tasks per iteration is pure
@@ -410,7 +415,6 @@ def _rank_loop(
     step,
     seed: DataFrame | float,
     n_iter: int,
-    checkpoint_interval: int,
     absent: float | None,
 ) -> DataFrame:
     """Run ``n_iter`` rounds of ``ranks = step(rows, ranks)`` over a
@@ -438,13 +442,16 @@ def _rank_loop(
     when a plan runs, so the result is materialized inside the scope
     with one eager ``localCheckpoint``.
 
-    Every ``checkpoint_interval`` rounds but the last, the state is
+    Every ``CHECKPOINT_EVERY`` rounds but the last, the state is
     truncated with a LAZY ``localCheckpoint`` so the plan doesn't grow
     unboundedly: the final action materializes the chain in order
     anyway, and an eager barrier would cost one extra synchronous job
-    round-trip per interval."""
+    round-trip per interval. A step marked ``reads_state`` (corrected
+    mode, which reads the state twice a round) is truncated every
+    round instead."""
     parts = _narrow_width(adjacency)
     narrow = parts is not None
+    every = 1 if getattr(step, "reads_state", False) else CHECKPOINT_EVERY
     ranks = seed
     with _loop_shuffle_scope(adjacency.sparkSession, parts):
         for i in range(n_iter):
@@ -460,7 +467,7 @@ def _rank_loop(
                     rows = rows.withColumn("rank", F.coalesce("rank", F.lit(absent)))
             ranks = step(rows, ranks)
             runtime_counters.note_round(ranks)
-            if (i + 1) % checkpoint_interval == 0 and i + 1 < n_iter:
+            if (i + 1) % every == 0 and i + 1 < n_iter:
                 ranks = ranks.localCheckpoint(eager=False)
         if isinstance(ranks, float):
             out = adjacency.select("id", F.lit(ranks).alias("rank"))
@@ -473,7 +480,7 @@ def _rank_loop(
         return out.localCheckpoint(eager=True) if narrow else out
 
 
-def _teleport_step(contribs, teleport: float, damping: float):
+def _teleport_step(contribs, teleport: float):
     """The uniform/weighted round: each message receiver gets
     ``teleport + d·Σ contrib`` over ``contribs(rows)`` = ``(id, contrib)``."""
 
@@ -484,7 +491,7 @@ def _teleport_step(contribs, teleport: float, damping: float):
             .agg(F.sum("contrib").alias("insum"))
             .select(
                 "id",
-                (F.lit(teleport) + F.lit(damping) * F.col("insum")).alias("rank"),
+                (F.lit(teleport) + F.lit(DAMPING) * F.col("insum")).alias("rank"),
             )
         )
 
@@ -503,18 +510,14 @@ def pagerank(
     *,
     vertices: DataFrame | None = None,
     n_iter: int = 8,
-    damping: float = DAMPING,
     parity: bool = True,
-    checkpoint_interval: int = 4,
 ) -> DataFrame:
     """Run ``n_iter`` PageRank iterations; returns ``(id, rank)``."""
     ranks, _ = pagerank_with_n(
         edges,
         vertices=vertices,
         n_iter=n_iter,
-        damping=damping,
         parity=parity,
-        checkpoint_interval=checkpoint_interval,
     )
     return ranks
 
@@ -524,9 +527,7 @@ def pagerank_with_n(
     *,
     vertices: DataFrame | None = None,
     n_iter: int = 8,
-    damping: float = DAMPING,
     parity: bool = True,
-    checkpoint_interval: int = 4,
     init_ranks: DataFrame | None = None,
 ) -> tuple[DataFrame, int]:
     """Run ``n_iter`` PageRank iterations; returns ``((id, rank), N)``.
@@ -558,9 +559,7 @@ def pagerank_with_n(
         edges,
         (n_iter,),
         vertices=vertices,
-        damping=damping,
         parity=parity,
-        checkpoint_interval=checkpoint_interval,
         init_ranks=init_ranks,
     )
     return ranks, n
@@ -587,9 +586,7 @@ def _rank_runs(
     iters: tuple,
     *,
     vertices: DataFrame | None = None,
-    damping: float = DAMPING,
     parity: bool = True,
-    checkpoint_interval: int = 4,
     init_ranks: DataFrame | None = None,
     stretch_checkpoint: bool = False,
 ):
@@ -609,7 +606,7 @@ def _rank_runs(
     one partition, so a caller's global sort needs no range shuffle."""
     one_task = parity and vertices is None and init_ranks is None
     if iters and one_task and _fits_one_task(edges, doubled=False):
-        kernel = partial(_rank_kernel, iters, damping)
+        kernel = partial(_rank_kernel, iters)
         out, n = _on_driver(edges, _RANK_COLS, kernel, "ignore")
         out = out.coalesce(1)
         for k in iters:
@@ -623,10 +620,10 @@ def _rank_runs(
             yield k, edges.sparkSession.createDataFrame([], _NO_RANKS), 0
         return
     adjacency = adjacency.withColumn("outdeg", F.size("outlinks"))
-    teleport = (1.0 - damping) / n
+    teleport = (1.0 - DAMPING) / n
     ranks = 1.0 / n if init_ranks is None else init_ranks.select("id", "rank")
     if parity:
-        step, absent = _teleport_step(_uniform_contribs, teleport, damping), teleport
+        step, absent = _teleport_step(_uniform_contribs, teleport), teleport
     else:
         # Corrected mode: dangling mass is redistributed uniformly each
         # iteration. The mass is a 1-row aggregate broadcast back via
@@ -647,7 +644,7 @@ def _rank_runs(
 
         def step(rows: DataFrame, ranks: DataFrame) -> DataFrame:
             extra = ranks.join(dangling, "id", "left_semi").agg(
-                (F.lit(damping) * F.coalesce(F.sum("rank"), F.lit(0.0)) / n).alias("extra")
+                (F.lit(DAMPING) * F.coalesce(F.sum("rank"), F.lit(0.0)) / n).alias("extra")
             )
             summed = _uniform_contribs(rows).groupBy("id").agg(F.sum("contrib").alias("insum"))
             return (
@@ -657,26 +654,26 @@ def _rank_runs(
                     "id",
                     (
                         F.lit(teleport)
-                        + F.lit(damping) * F.coalesce(F.col("insum"), F.lit(0.0))
+                        + F.lit(DAMPING) * F.coalesce(F.col("insum"), F.lit(0.0))
                         + F.col("extra")
                     ).alias("rank"),
                 )
             )
 
-        absent, checkpoint_interval = None, 1
+        step.reads_state, absent = True, None
         if isinstance(ranks, float):
             ranks = ids.select("id", F.lit(ranks).alias("rank"))
     wide = stretch_checkpoint and _narrow_width(adjacency) is None
     done = 0
     for k in iters:
-        ranks = _rank_loop(adjacency, step, ranks, k - done, checkpoint_interval, absent)
+        ranks = _rank_loop(adjacency, step, ranks, k - done, absent)
         if wide:
             ranks = ranks.localCheckpoint(eager=False)
         done = k
         yield k, ranks, n
 
 
-def _rank_kernel(iters: tuple, damping: float, uniq, src, dst, has_null: bool):
+def _rank_kernel(iters: tuple, uniq, src, dst, has_null: bool):
     """The parity rounds on the driver (:func:`_on_driver`): ``(id, k,
     rank)`` rows for each ``k`` of ``iters``, and the round log. The
     same float operations as :func:`_uniform_contribs` and
@@ -704,7 +701,7 @@ def _rank_kernel(iters: tuple, damping: float, uniq, src, dst, has_null: bool):
         for _ in range(k - done):
             insum = np.zeros(n)
             np.add.at(insum, dst, rank[src] / div)
-            rank = (1.0 - damping) / n + damping * insum
+            rank = (1.0 - DAMPING) / n + DAMPING * insum
         done = k
         frames.append(pd.DataFrame({"id": ids, "k": k, "rank": rank}))
     return pd.concat(frames, ignore_index=True), [["pagerank", done, done, True]]
@@ -739,8 +736,6 @@ def personalized_pagerank(
     source: str,
     *,
     n_iter: int = 8,
-    damping: float = DAMPING,
-    checkpoint_interval: int = 4,
 ) -> DataFrame:
     """Personalized PageRank: the teleport mass returns to ``source``
     instead of spreading uniformly — GraphX's
@@ -763,14 +758,14 @@ def personalized_pagerank(
     if n == 0:
         return spark.createDataFrame([], _NO_RANKS)
     seed = spark.createDataFrame([(source,)], "id string")
-    base = seed.select("id", F.lit(1.0 - damping).alias("rank"))
+    base = seed.select("id", F.lit(1.0 - DAMPING).alias("rank"))
 
     def step(rows: DataFrame, _ranks) -> DataFrame:
         # teleport lands only on the source; propagated mass unions in
         # and the per-vertex sum collapses both — still sparse
         contribs = rows.select(
             F.explode("outlinks").alias("id"),
-            (F.col("rank") / F.size("outlinks") * damping).alias("rank"),
+            (F.col("rank") / F.size("outlinks") * DAMPING).alias("rank"),
         )
         return (
             base.unionByName(contribs)
@@ -779,15 +774,13 @@ def personalized_pagerank(
         )
 
     ranks = seed.select("id", F.lit(1.0).alias("rank"))
-    return _rank_loop(adjacency, step, ranks, n_iter, checkpoint_interval, None)
+    return _rank_loop(adjacency, step, ranks, n_iter, None)
 
 
 def weighted_pagerank(
     edges: DataFrame,
     *,
     n_iter: int = 8,
-    damping: float = DAMPING,
-    checkpoint_interval: int = 4,
 ) -> DataFrame:
     """PageRank over WEIGHTED edges ``(src, dst, weight)`` — GraphX
     normalizes outgoing edge weights and ships rank proportionally
@@ -827,7 +820,7 @@ def weighted_pagerank(
     )
     if n == 0:
         return edges.sparkSession.createDataFrame([], _NO_RANKS)
-    teleport = (1.0 - damping) / n
+    teleport = (1.0 - DAMPING) / n
 
     def contribs(rows: DataFrame) -> DataFrame:
         return rows.select(F.explode("outs").alias("o"), "rank").select(
@@ -835,7 +828,7 @@ def weighted_pagerank(
             (F.col("rank") * F.col("o.wfrac")).alias("contrib"),
         )
 
-    step = _teleport_step(contribs, teleport, damping)
+    step = _teleport_step(contribs, teleport)
     return _rank_loop(
-        adjacency, step, 1.0 / n, n_iter, checkpoint_interval, teleport
+        adjacency, step, 1.0 / n, n_iter, teleport
     )

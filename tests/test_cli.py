@@ -32,7 +32,10 @@ def test_cli_writes_ordered_snapshots(spark, tmp_path):
         + spokes
     )
     out = tmp_path / "result"
+    spark.catalog.clearCache()
     assert main([str(dump), str(out)]) == 0
+    # main leaves the caller's cache as it found it
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     for snap in ("PageRank.iter1.out", "PageRank.iter8.out"):
         files = glob.glob(os.path.join(out, snap, "part-*"))
