@@ -85,7 +85,6 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-import threading
 import warnings
 from contextlib import contextmanager
 from functools import partial
@@ -95,7 +94,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegralType, StringType
 
 from pagerank_hadoop_spark import runtime_counters
-from pagerank_hadoop_spark.session import plan_bytes
+from pagerank_hadoop_spark.session import (
+    CONF_LOCK,
+    SHUFFLE_PARTITIONS,
+    conf_scope,
+    plan_bytes,
+    shuffle_partitions,
+)
 
 DAMPING = 0.85
 
@@ -110,15 +115,6 @@ CHECKPOINT_EVERY = 4
 ROWS_PER_ITER_TASK = 100_000
 
 _NO_RANKS = "id string, rank double"
-
-
-def shuffle_partitions(spark) -> int:
-    """The session's ``spark.sql.shuffle.partitions``; 32 when it is
-    not an integer (e.g. ``auto`` on auto-tuning platforms)."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    except (ValueError, TypeError):
-        return 32
 
 
 def loop_partitions(need: int, shuffle_parts: int) -> int:
@@ -163,24 +159,49 @@ def _fits_one_task(edges: DataFrame, doubled: bool = True) -> bool:
     return need is not None and need <= 1  # loop_partitions floors at 1
 
 
-# serializes _loop_shuffle_scope across threads; re-entrant for nesting
-_SCOPE_LOCK = threading.RLock()
+# In the narrowed (small-graph) regime a loop's wall is driver
+# planning, not data: every round pays a full Catalyst pass at its
+# localCheckpoint (toRdd) plus one at the fixpoint count. AQE's
+# per-stage re-planning and the runtime bloom-filter injection rule are
+# pure overhead on 1-3-partition rounds (measured ~25% of per-round
+# wall at sf0.1) and cannot help there: AQE coalesces by bytes on
+# already-tiny exchanges, and the bloom rule never fires on
+# checkpointed-RDD join sides (no scan to prune). Broadcast planning
+# goes too: a lazy localCheckpoint's toRdd blocks on every
+# BroadcastExchange build in the round's plan (driver collect +
+# rebroadcast, ~2 driver round trips per join per round), while a
+# shuffle join over 1-3-partition loop state is a tiny exchange that
+# runs inside the round's one counting job. (A/B, interleaved same-box
+# 2x2 at sf0.1: scc 7.7/8.4 s lean vs 13.0/10.4 s session-AQE, sssp
+# 7.8/8.4 vs 12.5/8.6, k_truss_precore 3.8/4.4 vs 7.1/4.5; mis/lpa
+# neutral.) All three are physical-only: join strategy and AQE cannot
+# change which rows meet, and the loops admitted to the scope either
+# aggregate order-insensitively (min / count / mode / bool-or) or sum
+# in their fixed layout's order (PageRank), so results cannot move.
+_NARROW_LOOP_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "false",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
 
 
 @contextmanager
 def _loop_shuffle_scope(spark, parts: int | None):
     """Scope ``spark.sql.shuffle.partitions`` to a loop's
     stats-derived task count (``graph._edge_partitions``, or a rank
-    layout's width) for the
-    duration of its per-round jobs. AQE coalesces one-shot queries'
-    tiny shuffles by bytes, but a fixpoint loop pays the map-side
-    width and checkpoint-materialization task count EVERY round, and
-    those are set by the session conf, not by AQE — on a small graph
-    32-wide rounds are pure scheduling overhead (measured -33%/-36%
-    on scc/bfs wall at sf0.1). At production scale the stats-derived
-    count reaches the session default and this is a no-op; it only
-    ever narrows, never widens. Restores the session value even on
-    error.
+    layout's width) for the duration of its per-round jobs, with AQE,
+    the runtime bloom rule and broadcast joins off
+    (``_NARROW_LOOP_CONF``). AQE coalesces one-shot queries' tiny
+    shuffles by bytes, but a fixpoint loop pays the map-side width and
+    checkpoint-materialization task count EVERY round, and those are
+    set by the session conf, not by AQE: on a small graph 32-wide
+    rounds are pure scheduling overhead (measured -33%/-36% on scc/bfs
+    wall at sf0.1). The scope does nothing when ``parts`` is None or
+    not below the session width: at production scale the stats-derived
+    count reaches the session default, and the scope only ever
+    narrows. Built on :func:`session.conf_scope`, which restores the
+    session's values even on error and serializes scopes across
+    threads; the width is read under its lock.
 
     The width may only move results when a round's aggregate depends
     on partial-aggregation order, i.e. when it sums floats. Exact
@@ -191,80 +212,12 @@ def _loop_shuffle_scope(spark, parts: int | None):
     PageRank (:func:`_rank_loop`) may narrow: its map side is the
     fixed :func:`_laid_out` layout, streamed in id order through every
     round's partial sum, and narrowing to the layout's own width is
-    what keeps a round from re-hashing it into session-width buckets.
-
-    Scopes are serialized across threads by one process-wide
-    re-entrant lock, held while a scope is open: a scope in another
-    thread waits until it closes, so every scope reads and restores
-    the session's own values, and nested scopes in one thread still
-    stack. What still holds while a scope is open: the conf is
-    session-global, so a query in another thread that opens no scope
-    plans its shuffles at the narrowed width, with AQE, the bloom rule
-    and broadcast joins off. Its exact aggregates are unaffected (the
-    knobs are physical-only), but a wide query runs under-parallel,
-    and a float sum (hits, a PageRank layout at the full session width)
-    may change in its last ulp. Run such a query in a child session
-    (``spark.newSession()``), which has its own conf."""
-    if parts is None:
-        yield
-        return
-    with _SCOPE_LOCK:
-        key = "spark.sql.shuffle.partitions"
-        try:
-            current = int(spark.conf.get(key, "32"))
-        except (ValueError, TypeError):  # e.g. "auto"
+    what keeps a round from re-hashing it into session-width buckets."""
+    with CONF_LOCK:
+        narrow = parts is not None and parts < shuffle_partitions(spark)
+        settings = {SHUFFLE_PARTITIONS: str(parts), **_NARROW_LOOP_CONF}
+        with conf_scope(spark, settings if narrow else {}):
             yield
-            return
-        if parts >= current:
-            yield
-            return
-        # In the narrowed (small-graph) regime the loop's wall is driver
-        # planning, not data: every round pays a full Catalyst pass at its
-        # localCheckpoint (toRdd) plus one at the fixpoint count. AQE's
-        # per-stage re-planning and the runtime bloom-filter injection
-        # rule are pure overhead on 1-3-partition rounds (measured ~25%
-        # of per-round wall at sf0.1) and physically cannot help there —
-        # AQE coalesces by bytes on already-tiny exchanges and the bloom
-        # rule never fires on checkpointed-RDD join sides (no scan to
-        # prune). Scope them off WITH the width narrowing: the same
-        # stats-derived condition that says "this graph is small" says
-        # "these rules cannot pay here". At production scale parts >=
-        # current, the scope is a no-op, and AQE skew-splitting + runtime
-        # filters stay on.
-        # (A/B evidence, interleaved same-box 2x2 at sf0.1: scc 7.7/8.4 s
-        # lean vs 13.0/10.4 s session-AQE, sssp 7.8/8.4 vs 12.5/8.6,
-        # k_truss_precore 3.8/4.4 vs 7.1/4.5; mis/lpa neutral.)
-        # The same regime also stops PLANNING broadcast joins. A lazy
-        # localCheckpoint's toRdd blocks on every BroadcastExchange build
-        # in the round's plan (driver collect + rebroadcast, ~2 driver
-        # round trips per join per round), while a shuffle join over
-        # 1-3-partition loop state is a tiny exchange that executes
-        # lazily inside the round's one counting job.
-        # All three knobs are physical-only: join strategy and AQE cannot
-        # change which rows meet, and the loops admitted to this scope
-        # either aggregate order-insensitively (min / count / mode /
-        # bool-or) or sum in their fixed layout's order (PageRank), so
-        # results cannot move.
-        aqe_key = "spark.sql.adaptive.enabled"
-        bloom_key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
-        bcast_key = "spark.sql.autoBroadcastJoinThreshold"
-        prev_aqe = spark.conf.get(aqe_key, "true")
-        prev_bloom = spark.conf.get(bloom_key, "true")
-        prev_bcast = spark.conf.get(bcast_key, "10485760b")
-        # every set happens INSIDE the try: if any one throws, finally
-        # restores whatever was already applied (prev values are captured
-        # above) instead of leaving the session narrowed for its lifetime
-        try:
-            spark.conf.set(key, str(parts))
-            spark.conf.set(aqe_key, "false")
-            spark.conf.set(bloom_key, "false")
-            spark.conf.set(bcast_key, "-1")
-            yield
-        finally:
-            spark.conf.set(key, str(current))
-            spark.conf.set(aqe_key, prev_aqe)
-            spark.conf.set(bloom_key, prev_bloom)
-            spark.conf.set(bcast_key, prev_bcast)
 
 
 class PregelNotConverged(RuntimeError):
@@ -377,7 +330,8 @@ def _with_dangling(adjacency: DataFrame, vertices: DataFrame) -> DataFrame:
     )
 
 
-def _laid_out(adjacency: DataFrame) -> tuple[DataFrame, int]:
+@contextmanager
+def _laid_out(adjacency: DataFrame):
     """Lay the static side of every round's join out once: partition
     on id, cache, count N (the driver-side scalar of
     ``PageRank.java:470-471``), then right-size. Now that N is known, a
@@ -386,20 +340,31 @@ def _laid_out(adjacency: DataFrame) -> tuple[DataFrame, int]:
     sorted by id, so the loop isn't dominated by empty-task
     scheduling; :func:`_rank_loop` then runs its rounds at that width,
     and the id sort fixes the order in which every round streams the
-    adjacency into its partial sums. Returns ``(adjacency, N)``."""
+    adjacency into its partial sums. Yields ``(adjacency, N)``.
+
+    The cache entry is dropped when the block exits, so a result drawn
+    from the layout must be materialized inside it, as
+    :func:`_rank_loop`'s are. A layout as wide as the session stays a
+    cached frame while the block is open: its hash partitioning lets
+    every round join the rank state without re-shuffling it, which an
+    eager ``localCheckpoint`` would not keep."""
     shuffle_parts = shuffle_partitions(adjacency.sparkSession)
     cached = adjacency.repartition(shuffle_parts, "id").cache()
-    n = cached.count()
-    parts = _iter_partitions(n, shuffle_parts)
-    if not n or parts >= shuffle_parts:
-        return cached, n
-    laid = (
-        cached.repartition(parts, "id")
-        .sortWithinPartitions("id")
-        .localCheckpoint(eager=True)
-    )
-    cached.unpersist()
-    return laid, n
+    try:
+        n = cached.count()
+        parts = _iter_partitions(n, shuffle_parts)
+        if not n or parts >= shuffle_parts:
+            yield cached, n
+            return
+        laid = (
+            cached.repartition(parts, "id")
+            .sortWithinPartitions("id")
+            .localCheckpoint(eager=True)
+        )
+        cached.unpersist()
+        yield laid, n
+    finally:
+        cached.unpersist()
 
 
 def _narrow_width(adjacency: DataFrame) -> int | None:
@@ -438,9 +403,12 @@ def _rank_loop(
     order, so each vertex adds its incoming contributions in (source
     id, target id) order whatever the session width — on a
     one-partition layout as one sequential sum, which
-    :func:`_rank_kernel` repeats bit for bit. Spark reads the width
-    when a plan runs, so the result is materialized inside the scope
-    with one eager ``localCheckpoint``.
+    :func:`_rank_kernel` repeats bit for bit.
+
+    The result is materialized with one eager ``localCheckpoint``,
+    inside the scope: Spark reads the width when a plan runs, and the
+    result must not need the layout once :func:`_laid_out`'s block has
+    dropped its cache.
 
     Every ``CHECKPOINT_EVERY`` rounds but the last, the state is
     truncated with a LAZY ``localCheckpoint`` so the plan doesn't grow
@@ -477,7 +445,7 @@ def _rank_loop(
             out = adjacency.select("id").join(ranks, "id", "left").select(
                 "id", F.coalesce("rank", F.lit(absent)).alias("rank")
             )
-        return out.localCheckpoint(eager=True) if narrow else out
+        return out.localCheckpoint(eager=True)
 
 
 def _teleport_step(contribs, teleport: float):
@@ -571,11 +539,9 @@ def pagerank_snapshots(edges: DataFrame, iters):
     its iteration-1 snapshot from inside its 8-round run
     (``PageRank.java:480-487,492-497``). Each ``ranks`` equals
     :func:`pagerank_with_n`'s for ``n_iter=k`` bit for bit. The next
-    stretch reads each ``ranks`` instead of recomputing its rounds: on
-    a narrow layout :func:`_rank_loop` has already materialized it; on
-    a wide one it is checkpointed lazily, and the caller's first action
-    on it materializes it."""
-    return _rank_runs(edges, tuple(iters), stretch_checkpoint=True)
+    stretch reads each ``ranks`` instead of recomputing its rounds:
+    :func:`_rank_loop` has already materialized it."""
+    return _rank_runs(edges, tuple(iters))
 
 
 _RANK_COLS = "k int, rank double"
@@ -588,15 +554,14 @@ def _rank_runs(
     vertices: DataFrame | None = None,
     parity: bool = True,
     init_ranks: DataFrame | None = None,
-    stretch_checkpoint: bool = False,
 ):
     """The one rank run behind :func:`pagerank_with_n` and
     :func:`pagerank_snapshots`: yield ``(k, ranks, N)`` after each
     ``k`` of ``iters`` (ascending) rounds. The adjacency is laid out and
     N counted once, and each stretch of rounds resumes from the previous
-    snapshot's ranks on that same layout; resuming is exact.
-    ``stretch_checkpoint`` checkpoints each stretch lazily on a wide
-    layout.
+    snapshot's ranks on that same layout; resuming is exact. Each
+    snapshot is materialized before it is yielded, and the layout's
+    cache is dropped when the run is exhausted or closed.
 
     A parity run with no ``vertices`` or ``init_ranks`` on an edge list
     that fits one task (:func:`_fits_one_task`, the rule cc and scc
@@ -614,63 +579,61 @@ def _rank_runs(
         return
     if vertices is None:
         vertices = _vertices(edges)
-    adjacency, n = _laid_out(_with_dangling(adjacency_from_edges(edges), vertices))
-    if n == 0:
-        for k in iters:
-            yield k, edges.sparkSession.createDataFrame([], _NO_RANKS), 0
-        return
-    adjacency = adjacency.withColumn("outdeg", F.size("outlinks"))
-    teleport = (1.0 - DAMPING) / n
-    ranks = 1.0 / n if init_ranks is None else init_ranks.select("id", "rank")
-    if parity:
-        step, absent = _teleport_step(_uniform_contribs, teleport), teleport
-    else:
-        # Corrected mode: dangling mass is redistributed uniformly each
-        # iteration. The mass is a 1-row aggregate broadcast back via
-        # crossJoin — kept lazy (a per-iteration collect() would
-        # re-execute the whole lineage from scratch every iteration).
-        #
-        # Unlike the parity loop, each iteration consumes `ranks` TWICE
-        # (contribution fan-out + dangling-mass sum), so without a
-        # barrier the lineage doubles per iteration (2^k plan blowup
-        # between checkpoints — measured as a 100-exchange final plan at
-        # k=4). A lazy localCheckpoint per iteration bounds the plan to
-        # one iteration's shape; the final action materializes the chain
-        # in order, which is exactly the per-iteration work anyway.
-        # The dangling-vertex set is a static property of the adjacency —
-        # compute the id list once, not from the per-iteration join.
-        ids = adjacency.select("id")
-        dangling = adjacency.where(F.col("outdeg") == 0).select("id")
+    layout = _laid_out(_with_dangling(adjacency_from_edges(edges), vertices))
+    with layout as (adjacency, n):
+        if n == 0:
+            for k in iters:
+                yield k, edges.sparkSession.createDataFrame([], _NO_RANKS), 0
+            return
+        adjacency = adjacency.withColumn("outdeg", F.size("outlinks"))
+        teleport = (1.0 - DAMPING) / n
+        ranks = 1.0 / n if init_ranks is None else init_ranks.select("id", "rank")
+        if parity:
+            step, absent = _teleport_step(_uniform_contribs, teleport), teleport
+        else:
+            # Corrected mode: dangling mass is redistributed uniformly each
+            # iteration. The mass is a 1-row aggregate broadcast back via
+            # crossJoin — kept lazy (a per-iteration collect() would
+            # re-execute the whole lineage from scratch every iteration).
+            #
+            # Unlike the parity loop, each iteration consumes `ranks` TWICE
+            # (contribution fan-out + dangling-mass sum), so without a
+            # barrier the lineage doubles per iteration (2^k plan blowup
+            # between checkpoints — measured as a 100-exchange final plan at
+            # k=4). A lazy localCheckpoint per iteration bounds the plan to
+            # one iteration's shape; the final action materializes the chain
+            # in order, which is exactly the per-iteration work anyway.
+            # The dangling-vertex set is a static property of the adjacency —
+            # compute the id list once, not from the per-iteration join.
+            ids = adjacency.select("id")
+            dangling = adjacency.where(F.col("outdeg") == 0).select("id")
 
-        def step(rows: DataFrame, ranks: DataFrame) -> DataFrame:
-            extra = ranks.join(dangling, "id", "left_semi").agg(
-                (F.lit(DAMPING) * F.coalesce(F.sum("rank"), F.lit(0.0)) / n).alias("extra")
-            )
-            summed = _uniform_contribs(rows).groupBy("id").agg(F.sum("contrib").alias("insum"))
-            return (
-                ids.join(summed, "id", "left")
-                .crossJoin(F.broadcast(extra))
-                .select(
-                    "id",
-                    (
-                        F.lit(teleport)
-                        + F.lit(DAMPING) * F.coalesce(F.col("insum"), F.lit(0.0))
-                        + F.col("extra")
-                    ).alias("rank"),
+            def step(rows: DataFrame, ranks: DataFrame) -> DataFrame:
+                extra = ranks.join(dangling, "id", "left_semi").agg(
+                    (F.lit(DAMPING) * F.coalesce(F.sum("rank"), F.lit(0.0)) / n).alias("extra")
                 )
-            )
+                summed = _uniform_contribs(rows).groupBy("id").agg(F.sum("contrib").alias("insum"))
+                return (
+                    ids.join(summed, "id", "left")
+                    .crossJoin(F.broadcast(extra))
+                    .select(
+                        "id",
+                        (
+                            F.lit(teleport)
+                            + F.lit(DAMPING) * F.coalesce(F.col("insum"), F.lit(0.0))
+                            + F.col("extra")
+                        ).alias("rank"),
+                    )
+                )
 
-        step.reads_state, absent = True, None
-        if isinstance(ranks, float):
-            ranks = ids.select("id", F.lit(ranks).alias("rank"))
-    wide = stretch_checkpoint and _narrow_width(adjacency) is None
-    done = 0
-    for k in iters:
-        ranks = _rank_loop(adjacency, step, ranks, k - done, absent)
-        if wide:
-            ranks = ranks.localCheckpoint(eager=False)
-        done = k
-        yield k, ranks, n
+            step.reads_state, absent = True, None
+            if isinstance(ranks, float):
+                ranks = ids.select("id", F.lit(ranks).alias("rank"))
+        done = 0
+        for k in iters:
+            ranks = _rank_loop(adjacency, step, ranks, k - done, absent)
+            done = k
+            yield k, ranks, n
 
 
 def _rank_kernel(iters: tuple, uniq, src, dst, has_null: bool):
@@ -752,11 +715,6 @@ def personalized_pagerank(
     cannot do this; its baseline is nonzero everywhere).
     """
     spark = edges.sparkSession
-    adjacency, n = _laid_out(
-        _with_dangling(adjacency_from_edges(edges), _vertices(edges))
-    )
-    if n == 0:
-        return spark.createDataFrame([], _NO_RANKS)
     seed = spark.createDataFrame([(source,)], "id string")
     base = seed.select("id", F.lit(1.0 - DAMPING).alias("rank"))
 
@@ -773,8 +731,12 @@ def personalized_pagerank(
             .agg(F.sum("rank").alias("rank"))
         )
 
-    ranks = seed.select("id", F.lit(1.0).alias("rank"))
-    return _rank_loop(adjacency, step, ranks, n_iter, None)
+    layout = _laid_out(_with_dangling(adjacency_from_edges(edges), _vertices(edges)))
+    with layout as (adjacency, n):
+        if n == 0:
+            return spark.createDataFrame([], _NO_RANKS)
+        ranks = seed.select("id", F.lit(1.0).alias("rank"))
+        return _rank_loop(adjacency, step, ranks, n_iter, None)
 
 
 def weighted_pagerank(
@@ -813,14 +775,6 @@ def weighted_pagerank(
         .groupBy("id")
         .agg(F.sort_array(F.collect_list("out")).alias("outs"))
     )
-    adjacency, n = _laid_out(
-        _vertices(edges).join(outs, "id", "left").select(
-            "id", F.coalesce("outs", F.array()).alias("outs")
-        )
-    )
-    if n == 0:
-        return edges.sparkSession.createDataFrame([], _NO_RANKS)
-    teleport = (1.0 - DAMPING) / n
 
     def contribs(rows: DataFrame) -> DataFrame:
         return rows.select(F.explode("outs").alias("o"), "rank").select(
@@ -828,7 +782,14 @@ def weighted_pagerank(
             (F.col("rank") * F.col("o.wfrac")).alias("contrib"),
         )
 
-    step = _teleport_step(contribs, teleport)
-    return _rank_loop(
-        adjacency, step, 1.0 / n, n_iter, teleport
+    layout = _laid_out(
+        _vertices(edges).join(outs, "id", "left").select(
+            "id", F.coalesce("outs", F.array()).alias("outs")
+        )
     )
+    with layout as (adjacency, n):
+        if n == 0:
+            return edges.sparkSession.createDataFrame([], _NO_RANKS)
+        teleport = (1.0 - DAMPING) / n
+        step = _teleport_step(contribs, teleport)
+        return _rank_loop(adjacency, step, 1.0 / n, n_iter, teleport)

@@ -177,20 +177,6 @@ def _stream_events(
     return reader.parquet(src_dir).withColumn("ts", fix)
 
 
-def _stream_parts(spark: SparkSession, sf_dir: str):
-    """Scope streaming state partitioning to the events source size
-    (streaming/windows.py::stream_shuffle_partitions) for one
-    start+drain — per-partition state-store overhead dominates small
-    streams at the session's batch-sized 32."""
-    from pagerank_hadoop_spark.streaming.windows import (
-        stream_shuffle_partitions,
-    )
-
-    return stream_shuffle_partitions(
-        spark, os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    )
-
-
 def dsum(col, alias: str):
     """Order-independent double sum: sum exact decimals, cast back."""
     return (
@@ -2749,9 +2735,6 @@ def q_media_wav_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # [EXT] E6b: true Structured Streaming (availableNow) with batch oracle
 # ---------------------------------------------------------------------------
 
-_STREAM_SEQ = {"n": 0}
-
-
 @register(
     "stream_tumbling",
     """
@@ -2766,14 +2749,15 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same tumbling-window aggregation as events_tumbling, drained to
     a memory sink and checked against the batch SQL oracle — streaming
     ≡ batch on bounded input."""
-    from pagerank_hadoop_spark.streaming.windows import run_to_memory, tumbling_agg
+    from pagerank_hadoop_spark.streaming.windows import (
+        drain,
+        events_parts,
+        tumbling_agg,
+    )
 
     stream = _stream_events(spark, sf_dir)
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_tumbling_{_STREAM_SEQ['n']}"
-    with _stream_parts(spark, sf_dir):
-        run_to_memory(tumbling_agg(stream), name, output_mode="complete")
-    return spark.table(name).select(
+    drained = drain(tumbling_agg(stream), "complete", parts=events_parts(sf_dir))
+    return drained.select(
         F.unix_timestamp("wstart").alias("wstart"), "event_type", "cnt"
     )
 
@@ -3115,17 +3099,13 @@ def q_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, event_id % 1000) pairs is exactly the distinct set.
     event_id is folded mod 1000 to plant real duplicates."""
     from pagerank_hadoop_spark.streaming.stateful import stateful_dedup_stream
-    from pagerank_hadoop_spark.streaming.windows import run_to_memory
+    from pagerank_hadoop_spark.streaming.windows import drain, events_parts
 
     stream = _stream_events(spark, sf_dir).withColumn(
         "event_id", F.col("event_id") % 1000
     )
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_stateful_{_STREAM_SEQ['n']}"
-    with _stream_parts(spark, sf_dir):
-        run_to_memory(stateful_dedup_stream(stream), name, output_mode="append")
     return (
-        spark.table(name)
+        drain(stateful_dedup_stream(stream), parts=events_parts(sf_dir))
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_unique"))
     )
@@ -3162,7 +3142,8 @@ def q_stream_ttl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stateful_dedup_ttl_stream,
     )
     from pagerank_hadoop_spark.streaming.windows import (
-        run_to_memory,
+        drain,
+        events_parts,
         ts_split_events_dir,
     )
 
@@ -3170,15 +3151,11 @@ def q_stream_ttl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _stream_events(
         spark, sf_dir, src_dir=staged, max_files_per_trigger=1
     ).withColumn("event_id", F.col("event_id") % 20)
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_ttl_{_STREAM_SEQ['n']}"
-    with _stream_parts(spark, sf_dir):
-        run_to_memory(
-            stateful_dedup_ttl_stream(stream, ttl_ms=96 * 3600 * 1000),
-            name,
-            output_mode="append",
-        )
-    return spark.table(name).orderBy("user_id", "event_id", "ts_ms")
+    drained = drain(
+        stateful_dedup_ttl_stream(stream, ttl_ms=96 * 3600 * 1000),
+        parts=events_parts(sf_dir),
+    )
+    return drained.orderBy("user_id", "event_id", "ts_ms")
 
 
 @register(
@@ -3455,7 +3432,7 @@ def q_stream_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch inequality join, which is the oracle (same SQL as
     range_join_purchase_error's)."""
     from pagerank_hadoop_spark.streaming.windows import (
-        run_to_memory,
+        drain,
         stream_stream_band_join,
     )
 
@@ -3480,19 +3457,10 @@ def q_stream_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         band="2 hours",
         watermark="1 hour",
     )
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_band_{_STREAM_SEQ['n']}"
-    # the stream drains fully inside run_to_memory, so scoping the
-    # shuffle/state partitioning down is safe: join state here is a
-    # few thousand rows, and 32 state stores x N micro-batches is
-    # pure overhead (a real deployment sizes this to state volume)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        run_to_memory(joined, name, output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name).select(
+    # join state here is a few thousand rows, and 32 state stores x N
+    # micro-batches is pure overhead (a real deployment sizes this to
+    # state volume)
+    return drain(joined, parts=4).select(
         F.col("p_user_id").alias("user_id"),
         F.col("p_event_id").alias("purchase_id"),
         F.col("e_event_id").alias("error_id"),
@@ -3964,14 +3932,15 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complete mode (not append) so sessions past the final watermark
     are still emitted on bounded input; production would run append
     with a real watermark-driven sink."""
-    from pagerank_hadoop_spark.streaming.windows import run_to_memory, session_agg
+    from pagerank_hadoop_spark.streaming.windows import (
+        drain,
+        events_parts,
+        session_agg,
+    )
 
     stream = _stream_events(spark, sf_dir)
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_session_{_STREAM_SEQ['n']}"
-    with _stream_parts(spark, sf_dir):
-        run_to_memory(session_agg(stream), name, output_mode="complete")
-    return spark.table(name).select(
+    drained = drain(session_agg(stream), "complete", parts=events_parts(sf_dir))
+    return drained.select(
         "user_id",
         F.unix_timestamp("session_start").alias("session_start"),
         "n_events",
@@ -4025,7 +3994,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode. The static side is planned per micro-batch, so Catalyst
     broadcasts it exactly as in batch; no stream-stream state is
     created. Oracle: the identical batch join."""
-    from pagerank_hadoop_spark.streaming.windows import run_to_memory
+    from pagerank_hadoop_spark.streaming.windows import drain, events_parts
 
     stream = _stream_events(spark, sf_dir).where(
         F.col("event_type") == "purchase"
@@ -4038,11 +4007,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count(F.lit(1)).alias("n_purchases"), dsum("value", "total_value")
     )
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_static_{_STREAM_SEQ['n']}"
-    with _stream_parts(spark, sf_dir):
-        run_to_memory(joined, name, output_mode="complete")
-    return spark.table(name)
+    return drain(joined, "complete", parts=events_parts(sf_dir))
 
 
 @register(
@@ -4790,14 +4755,15 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-minute slide) through streaming.windows.sliding_agg, drained
     with availableNow in complete mode — streaming ≡ batch on bounded
     input, same oracle as the batch twin events_sliding."""
-    from pagerank_hadoop_spark.streaming.windows import run_to_memory, sliding_agg
+    from pagerank_hadoop_spark.streaming.windows import (
+        drain,
+        events_parts,
+        sliding_agg,
+    )
 
     stream = _stream_events(spark, sf_dir)
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_sliding_{_STREAM_SEQ['n']}"
-    with _stream_parts(spark, sf_dir):
-        run_to_memory(sliding_agg(stream), name, output_mode="complete")
-    return spark.table(name).select(
+    drained = drain(sliding_agg(stream), "complete", parts=events_parts(sf_dir))
+    return drained.select(
         F.unix_timestamp("wstart").alias("wstart"), "cnt"
     )
 
@@ -6054,7 +6020,7 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the oracle. Complements stream_stateful_dedup (the custom
     applyInPandasWithState form) with the operator users reach for
     first."""
-    from pagerank_hadoop_spark.streaming.windows import run_to_memory
+    from pagerank_hadoop_spark.streaming.windows import drain, events_parts
 
     stream = (
         _stream_events(spark, sf_dir)
@@ -6062,12 +6028,8 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["user_id", "eid"])
     )
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_ddw_{_STREAM_SEQ['n']}"
-    with _stream_parts(spark, sf_dir):
-        run_to_memory(stream, name, output_mode="append")
     return (
-        spark.table(name)
+        drain(stream, parts=events_parts(sf_dir))
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_unique"))
     )
@@ -6554,15 +6516,13 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint."""
     from pagerank_hadoop_spark.streaming.windows import (
         chained_windowed_agg,
-        run_to_memory,
+        drain,
+        events_parts,
     )
 
     stream = _stream_events(spark, sf_dir)
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_chained_{_STREAM_SEQ['n']}"
-    with _stream_parts(spark, sf_dir):
-        run_to_memory(chained_windowed_agg(stream), name, output_mode="append")
-    return spark.table(name).select(
+    drained = drain(chained_windowed_agg(stream), parts=events_parts(sf_dir))
+    return drained.select(
         F.unix_timestamp("wstart").alias("wstart"),
         "active_users",
         "max_user_burst",
@@ -8217,8 +8177,9 @@ def q_stream_left_outer_band_join(spark: SparkSession, sf_dir: str) -> DataFrame
     join state. Sentinel rows (user_id -1) are filtered out; the
     oracle is the batch LEFT JOIN over the real events."""
     from pagerank_hadoop_spark.streaming.windows import (
+        drain,
+        events_parts,
         punctuated_events_dir,
-        run_to_memory,
         stream_stream_band_join,
     )
 
@@ -8248,12 +8209,8 @@ def q_stream_left_outer_band_join(spark: SparkSession, sf_dir: str) -> DataFrame
         watermark="1 hour",
         how="leftOuter",
     )
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_louter_{_STREAM_SEQ['n']}"
-    with _stream_parts(spark, sf_dir):
-        run_to_memory(joined, name, output_mode="append")
     return (
-        spark.table(name)
+        drain(joined, parts=events_parts(sf_dir))
         .where(F.col("p_user_id") >= 0)  # drop punctuation sentinels
         .select(
             F.col("p_user_id").alias("user_id"),
@@ -8555,6 +8512,7 @@ def q_stream_cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pagerank_hadoop_spark.streaming.windows import (
         cdc_apply_to_parquet,
+        events_parts,
         read_cdc_state,
     )
 
@@ -8566,11 +8524,11 @@ def q_stream_cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = tempfile.mkdtemp(prefix="spark_graft_cdc_state_")
     ckpt = tempfile.mkdtemp(prefix="spark_graft_cdc_ckpt_")
     _STAGING_DIRS.extend((state_dir, ckpt))  # reaped at exit
-    with _stream_parts(spark, sf_dir):
-        cdc_apply_to_parquet(
-            changes, state_dir, ckpt,
-            key_cols=["user_id"], order_cols=["ts", "event_id"],
-        )
+    cdc_apply_to_parquet(
+        changes, state_dir, ckpt,
+        key_cols=["user_id"], order_cols=["ts", "event_id"],
+        parts=events_parts(sf_dir),
+    )
     return read_cdc_state(spark, state_dir).select(
         "user_id",
         F.col("event_type").alias("last_type"),
@@ -9420,22 +9378,20 @@ def q_stream_window_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     with availableNow it must equal batch COUNT(DISTINCT), the
     oracle."""
     from pagerank_hadoop_spark.streaming.windows import (
-        run_to_memory,
+        drain,
+        events_parts,
         windowed_distinct_users,
     )
 
     stream = _stream_events(spark, sf_dir)
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_wdistinct_{_STREAM_SEQ['n']}"
-    with _stream_parts(spark, sf_dir):
-        # complete mode: append would withhold every window younger
-        # than the final watermark on a bounded drain (the punctuation
-        # problem); the aggregation state here is window-count rows,
-        # small enough to re-emit in full
-        run_to_memory(
-            windowed_distinct_users(stream), name, output_mode="complete"
-        )
-    return spark.table(name).select(
+    # complete mode: append would withhold every window younger than
+    # the final watermark on a bounded drain (the punctuation
+    # problem); the aggregation state here is window-count rows, small
+    # enough to re-emit in full
+    drained = drain(
+        windowed_distinct_users(stream), "complete", parts=events_parts(sf_dir)
+    )
+    return drained.select(
         F.unix_timestamp("wstart").alias("wstart"), "n_users"
     )
 
@@ -11911,6 +11867,7 @@ def q_stream_pysource_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     do not support Trigger.AvailableNow — Spark logs the fallback;
     the bounded ledger gives the same determinism)."""
     from pagerank_hadoop_spark.sources.pystream import register_detevents
+    from pagerank_hadoop_spark.streaming.windows import drain
 
     register_detevents(spark)
     src = (
@@ -11929,28 +11886,10 @@ def q_stream_pysource_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "ub")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv"))
     )
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_pysource_{_STREAM_SEQ['n']}"
     # state-store instances scale with shuffle partitions; 8 is plenty
-    # for a 5-key complete-mode aggregate (fresh checkpoint per run,
-    # so the narrowed value never leaks into another query's state)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # for a 5-key complete-mode aggregate
     return (
-        spark.table(name)
+        drain(agg, "complete", parts=8, all_available=True)
         .select(
             F.unix_timestamp(F.col("w.start")).alias("wstart"),
             F.col("ub").cast("long").alias("ub"),
@@ -14658,7 +14597,7 @@ def q_stream_flac_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pagerank_hadoop_spark.operators.flac import flac_sample_stats
     from pagerank_hadoop_spark.operators.multimodal import attach_media
-    from pagerank_hadoop_spark.streaming.windows import run_to_memory
+    from pagerank_hadoop_spark.streaming.windows import drain
 
     stage = os.path.join(
         tempfile.gettempdir(),
@@ -14672,10 +14611,7 @@ def q_stream_flac_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = flac_sample_stats(
         attach_media(stream, F.col("payload"), media_type="audio/flac")
     )
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_flac_energy_{_STREAM_SEQ['n']}"
-    run_to_memory(stats, name, output_mode="append")
-    return spark.table(name).orderBy("media_id")
+    return drain(stats).orderBy("media_id")
 
 
 def _mp4_pskip_fixture(spark: SparkSession, n: int = 120) -> DataFrame:
@@ -15567,7 +15503,7 @@ def q_stream_audio_fp_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pagerank_hadoop_spark.operators.flac import flac_window_fingerprint
     from pagerank_hadoop_spark.operators.multimodal import attach_media
-    from pagerank_hadoop_spark.streaming.windows import run_to_memory
+    from pagerank_hadoop_spark.streaming.windows import drain
 
     stage = os.path.join(
         tempfile.gettempdir(),
@@ -15581,10 +15517,7 @@ def q_stream_audio_fp_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     fps = flac_window_fingerprint(
         attach_media(stream, F.col("payload"), media_type="audio/flac")
     )
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_audio_fp_index_{_STREAM_SEQ['n']}"
-    run_to_memory(fps, name, output_mode="append")
-    return spark.table(name).orderBy("media_id", "window_idx")
+    return drain(fps).orderBy("media_id", "window_idx")
 
 
 def _flac_seek_fixture(spark: SparkSession, n: int = 240) -> DataFrame:
@@ -17224,7 +17157,7 @@ def q_stream_video_motion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pagerank_hadoop_spark.operators.h264 import mp4_motion_summary
     from pagerank_hadoop_spark.operators.multimodal import attach_media
-    from pagerank_hadoop_spark.streaming.windows import run_to_memory
+    from pagerank_hadoop_spark.streaming.windows import drain
 
     stage = os.path.join(
         tempfile.gettempdir(),
@@ -17238,10 +17171,7 @@ def q_stream_video_motion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = mp4_motion_summary(
         attach_media(stream, F.col("payload"), media_type="video/mp4")
     )
-    _STREAM_SEQ["n"] += 1
-    name = f"stream_video_motion_index_{_STREAM_SEQ['n']}"
-    run_to_memory(stats, name, output_mode="append")
-    return spark.table(name).orderBy("media_id", "frame_idx")
+    return drain(stats).orderBy("media_id", "frame_idx")
 
 
 def _mp4_fade_fixture(spark: SparkSession, n: int = 120) -> DataFrame:

@@ -8,11 +8,18 @@ config choices below are the ones that matter on a real cluster too:
 * ``spark.sql.shuffle.partitions`` sized to cores locally; on a 1000-
   executor cluster this is overridden upward (AQE coalesces down).
 * Arrow enabled so any Pandas-UDF path is batch-vectorized.
+
+After the session starts, the engine changes its SQL conf in one place
+only, :func:`conf_scope`: the loop-width scope
+(``operators/pagerank._loop_shuffle_scope``) and the stream drain
+(``streaming/windows.drain``) both open it.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -67,6 +74,54 @@ def get_spark(app_name: str = "pagerank-hadoop-spark") -> SparkSession:
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     return builder.getOrCreate()
+
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+# held while a conf_scope is open, and while a caller decides what to
+# scope from the session's values; re-entrant, so scopes nest
+CONF_LOCK = threading.RLock()
+
+
+def shuffle_partitions(spark) -> int:
+    """The session's ``spark.sql.shuffle.partitions``; 32 when it is
+    not an integer (e.g. ``auto`` on auto-tuning platforms)."""
+    try:
+        return int(spark.conf.get(SHUFFLE_PARTITIONS, "32"))
+    except (ValueError, TypeError):
+        return 32
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, settings: dict[str, str]):
+    """Set ``settings`` on the session's SQL conf for the body, then
+    restore every value read, unsetting a key the session had not set.
+    The restore runs even when a set or the body raises.
+
+    The conf is session-global, so the scope holds :data:`CONF_LOCK`
+    while it is open: a scope in another thread waits until this one
+    closes, so every scope reads and restores the session's own
+    values, and nested scopes in one thread stack. A caller whose
+    settings depend on the session's values (a width that may only
+    narrow) reads them under the same lock. A query in another thread
+    that opens no scope still plans on the scoped values: its exact
+    aggregates cannot move (the engine scopes only physical knobs), but
+    a wide query runs under-parallel and a float sum may change in its
+    last ulp. Run such a query in a child session
+    (``spark.newSession()``), which has its own conf."""
+    with CONF_LOCK:
+        saved: dict[str, str | None] = {}
+        try:
+            for key, value in settings.items():
+                saved[key] = spark.conf.get(key, None)
+                spark.conf.set(key, value)
+            yield
+        finally:
+            for key, value in saved.items():
+                if value is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, value)
 
 
 def plan_bytes(df: DataFrame) -> int | None:

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pagerank_hadoop_spark.streaming.windows import drain
+
 
 def stream_index_ingest(
     spark: SparkSession,
@@ -31,8 +33,9 @@ def stream_index_ingest(
     """readStream over an embeddings parquet directory, encode each
     micro-batch against the frozen ``model``
     (:func:`...similarity.ivf_pq_encode` — shuffle-free Arrow map),
-    append to a cell-partitioned parquet index, drain, and return the
-    index DataFrame read back from ``out_dir``.
+    append to a cell-partitioned parquet index, drain
+    (:func:`...windows.drain`), and return the index DataFrame read
+    back from ``out_dir``.
 
     ``maxFilesPerTrigger=1`` forces multiple real micro-batches so the
     test actually exercises cross-batch append semantics, not one big
@@ -59,16 +62,11 @@ def stream_index_ingest(
         # (file-listing + open cost on every later index read)
         spread=False,
     )
-    q = (
-        enc.writeStream.format("parquet")
+    drain(
+        enc,
+        sink=lambda w: w.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("cell")
-        .outputMode("append")
-        .start()
+        .partitionBy("cell"),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(out_dir)

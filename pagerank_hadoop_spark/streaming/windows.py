@@ -15,14 +15,26 @@ escape hatch (see ``stateful_dedup_stream``).
 from __future__ import annotations
 
 import atexit
+import itertools
+import os
+import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
     StructType,
     TimestampType,
+)
+
+from pagerank_hadoop_spark.session import (
+    CONF_LOCK,
+    SHUFFLE_PARTITIONS,
+    conf_scope,
+    shuffle_partitions,
 )
 
 # staging dirs created by punctuated_events_dir, reaped at exit so
@@ -127,18 +139,93 @@ def session_agg(
     )
 
 
-def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
-    """Drain a stream into an in-memory table with availableNow (test
-    harness; production would writeStream to a sink with checkpointing)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return q
+# a drain that has not finished by then is stopped and raises
+DRAIN_TIMEOUT_S = 120
+_MEMORY_TABLES = itertools.count(1)
+
+
+def events_parts(sf_dir: str) -> int:
+    """State width for a stream over ``sf_dir``'s events table: one
+    partition per 16 MiB of ``events.parquet``, at least 8 so the test
+    shape keeps real parallelism; :func:`drain` caps it at the
+    session's width. A streaming aggregation's shuffle partition count
+    is frozen into the state store at the first checkpoint, and every
+    micro-batch then pays per-partition state-store open/commit
+    overhead: with the session's batch-oriented 32 partitions over a
+    small stream that fixed cost dominates (measured 3.9 s -> 0.9 s on
+    the sf0.1 tumbling query at 8 partitions). Production sizing
+    tracks sustained events/sec instead of a file size: state-store
+    count does NOT resize later without a state rebuild, so pick for
+    peak."""
+    size = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
+    return max(8, -(-size // (16 << 20)))
+
+
+def drain(
+    stream_df: DataFrame,
+    output_mode: str = "append",
+    *,
+    parts: int | None = None,
+    sink: Callable[[DataStreamWriter], DataStreamWriter] | None = None,
+    all_available: bool = False,
+) -> DataFrame | None:
+    """Run a bounded stream to its end and stop it: the one place the
+    engine starts a streaming query.
+
+    With ``sink`` None the rows go to a fresh in-memory table, which is
+    returned; otherwise ``sink`` configures the writer (``foreachBatch``
+    or a file sink, with its checkpoint) and None is returned. The
+    query runs with ``availableNow``; ``all_available`` runs it with
+    the default trigger and ``processAllAvailable`` instead, for
+    sources that cannot take ``availableNow`` (Python data sources).
+
+    The drain runs inside :func:`session.conf_scope`, so it holds the
+    session's conf lock throughout: a loop scope or another drain in
+    another thread waits for it, and this drain plans and freezes its
+    state store at the session's own values. With ``parts`` below the
+    session's ``spark.sql.shuffle.partitions`` the scope narrows it to
+    ``parts``; it never widens.
+
+    A drain still running after :data:`DRAIN_TIMEOUT_S` seconds is
+    stopped and raises ``TimeoutError``. On every path the query is
+    stopped before the drain returns or raises.
+
+    A ``foreachBatch`` callback runs on a py4j thread while the drain
+    holds the lock, so it must not open a conf scope (no loop scope,
+    no drain): it would wait on a lock its own drain holds."""
+    spark = stream_df.sparkSession
+    with CONF_LOCK:
+        narrow = parts is not None and parts < shuffle_partitions(spark)
+        with conf_scope(spark, {SHUFFLE_PARTITIONS: str(parts)} if narrow else {}):
+            writer = stream_df.writeStream.outputMode(output_mode)
+            if sink is None:
+                name = f"drained_{next(_MEMORY_TABLES)}"
+                writer = writer.format("memory").queryName(name)
+            else:
+                writer = sink(writer)
+            if not all_available:
+                writer = writer.trigger(availableNow=True)
+            q = writer.start()
+            try:
+                if all_available:
+                    # processAllAvailable takes no timeout: stopping the
+                    # query ends it, and the query is then inactive
+                    timer = threading.Timer(DRAIN_TIMEOUT_S, q.stop)
+                    timer.start()
+                    try:
+                        q.processAllAvailable()
+                    finally:
+                        timer.cancel()
+                    finished = q.isActive
+                else:
+                    finished = q.awaitTermination(DRAIN_TIMEOUT_S)
+            finally:
+                q.stop()
+    if not finished:
+        raise TimeoutError(
+            f"stream drain did not finish within {DRAIN_TIMEOUT_S}s"
+        )
+    return spark.table(name) if sink is None else None
 
 
 def stream_stream_band_join(
@@ -186,8 +273,7 @@ def stream_to_parquet_idempotent(
     a ``batch_id=N`` parquet partition with overwrite — re-processing
     a batch after failure rewrites the same directory, so the sink is
     exactly-once end-to-end (checkpoint tracks offsets, the overwrite
-    makes the write idempotent). availableNow-triggered; returns the
-    drained query.
+    makes the write idempotent). Runs through :func:`drain`.
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -195,14 +281,12 @@ def stream_to_parquet_idempotent(
             f"{path}/batch_id={batch_id}"
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream_df,
+        sink=lambda w: w.foreachBatch(write_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
     )
-    q.awaitTermination(120)
-    return q
 
 
 def chained_windowed_agg(
@@ -237,39 +321,6 @@ def chained_windowed_agg(
     )
 
 
-from contextlib import contextmanager  # noqa: E402
-
-
-@contextmanager
-def stream_shuffle_partitions(spark: SparkSession, source_bytes: int):
-    """Right-size streaming state partitioning to the source, for the
-    duration of one stream start+drain.
-
-    A streaming aggregation's shuffle partition count is frozen into
-    the state store at the first checkpoint, and every micro-batch
-    then pays per-partition state-store open/commit overhead — with
-    the session's batch-oriented 32 partitions over a small stream,
-    that fixed cost dominates (measured 3.9 s → 0.9 s on the sf0.1
-    tumbling query at 8 partitions). Same principle as the graph
-    loops' ``loop_partitions``: task count follows data, floor 8 so
-    the test shape keeps real parallelism, session default as the
-    ceiling for big sources. Production sizing tracks sustained
-    events/sec instead of a file size — state-store count is the
-    knob that does NOT resize later without a state rebuild, so pick
-    for peak.
-    """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # floor 8 — but never ABOVE the session default (a session already
-    # configured below 8 keeps its own, smaller, setting)
-    floor = min(8, int(prev))
-    need = max(floor, min(int(prev), -(-source_bytes // (16 << 20))))
-    spark.conf.set("spark.sql.shuffle.partitions", str(need))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
 def punctuated_events_dir(sf_dir: str, ts_dtype: str) -> str:
     """Stage a streaming source directory: the real events file plus
     two far-future PUNCTUATION files (one purchase + one error row
@@ -300,7 +351,6 @@ def punctuated_events_dir(sf_dir: str, ts_dtype: str) -> str:
     punctuation rows are deleted before they ever reach the
     watermark operator — and the flush silently stops happening.
     """
-    import os
     import tempfile
     import time
 
@@ -378,7 +428,6 @@ def ts_split_events_dir(sf_dir: str, n_files: int = 3) -> str:
     Same pyarrow write path as :func:`punctuated_events_dir` (no
     ``_SUCCESS`` markers burning trigger file budget); the staging
     dir is reaped at interpreter exit."""
-    import os
     import tempfile
     import time
 
@@ -405,6 +454,7 @@ def cdc_apply_to_parquet(
     checkpoint_dir: str,
     key_cols: list[str],
     order_cols: list[str],
+    parts: int | None = None,
 ):
     """Streaming CDC apply: fold a change stream into a keyed state
     table, keeping the latest row per key (total order given by
@@ -429,9 +479,10 @@ def cdc_apply_to_parquet(
     body for MERGE INTO against a table format with file-level
     pruning; the batch-collapse window and idempotency contract stay
     identical.
-    """
-    import os
 
+    Runs through :func:`drain` at width ``parts``: a drain past its
+    bound raises rather than hand the caller stale mid-run state.
+    """
     from pyspark.sql.window import Window
 
     def latest(df: DataFrame) -> DataFrame:
@@ -484,22 +535,16 @@ def cdc_apply_to_parquet(
                         os.path.join(state_dir, name), ignore_errors=True
                     )
 
-    q = (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        changes,
+        parts=parts,
+        sink=lambda w: w.foreachBatch(apply_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
     )
-    if not q.awaitTermination(120):
-        # a silent timeout would hand the caller stale mid-run state
-        q.stop()
-        raise TimeoutError("CDC drain did not finish within 120s")
-    return q
 
 
 def read_cdc_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    import os
-
     marker = os.path.join(state_dir, "_LATEST")
     with open(marker) as fh:
         latest_v = fh.read().strip()

@@ -505,6 +505,55 @@ def test_k_truss_precore_equivalence(spark):
     assert k_truss(empty, k=4, precore=True).count() == 0
 
 
+def test_conf_scope_restores_every_value_it_read(spark):
+    """``session.conf_scope`` sets its keys for the body and restores
+    each value it read (unsetting a key the session had not set), also
+    when the body or a set raises; while open it holds the conf lock,
+    so another thread cannot take it."""
+    import threading
+
+    import pytest as _pytest
+
+    from pagerank_hadoop_spark.session import CONF_LOCK, conf_scope
+
+    key = "spark.sql.shuffle.partitions"
+    unset_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key)
+    assert spark.conf.get(unset_key, None) is None
+
+    def lock_free_elsewhere() -> bool:
+        got = []
+
+        def probe():
+            if CONF_LOCK.acquire(blocking=False):
+                CONF_LOCK.release()
+                got.append(True)
+
+        t = threading.Thread(target=probe)
+        t.start()
+        t.join(10)
+        return got == [True]
+
+    with conf_scope(spark, {key: "3", unset_key: "1m"}):
+        assert spark.conf.get(key) == "3"
+        assert spark.conf.get(unset_key) == "1m"
+        assert not lock_free_elsewhere()
+    assert lock_free_elsewhere()
+    assert spark.conf.get(key) == before
+    assert spark.conf.get(unset_key, None) is None
+    with _pytest.raises(RuntimeError, match="boom"):
+        with conf_scope(spark, {key: "3"}):
+            raise RuntimeError("boom")
+    assert spark.conf.get(key) == before
+    # a static conf cannot be set at runtime: the set raises, and the
+    # key set before it is restored
+    with _pytest.raises(Exception):
+        with conf_scope(spark, {key: "3", "spark.sql.warehouse.dir": "/x"}):
+            pass
+    assert spark.conf.get(key) == before
+    assert lock_free_elsewhere()
+
+
 def test_loop_shuffle_scope_semantics(spark):
     """The loop-width scope narrows, never widens; restores on error;
     tolerates non-integer session values."""
@@ -570,13 +619,15 @@ def test_loop_shuffle_scope_semantics(spark):
 def test_loop_shuffle_scope_serializes_threads(spark):
     """A scope opened in a second thread while the first thread's is
     open waits for it to close, so each restores the session's own
-    values: thread A narrows an 8-wide session to 2, thread B asks for
-    1 inside A's scope, and afterwards the session is 8-wide with AQE
-    on again. Unserialized, B would read A's 2 and restore it last."""
+    values: thread A's loop scope narrows an 8-wide session to 2,
+    thread B opens the one conf scope at 1 inside A's scope, and
+    afterwards the session is 8-wide with AQE on again. Unserialized,
+    B would read A's 2 and restore it last."""
     import threading
     import time
 
     from pagerank_hadoop_spark.operators.pagerank import _loop_shuffle_scope
+    from pagerank_hadoop_spark.session import conf_scope
 
     key, aqe_key = "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
     before = spark.conf.get(key), spark.conf.get(aqe_key)
@@ -594,7 +645,7 @@ def test_loop_shuffle_scope_serializes_threads(spark):
     def thread_b():
         a_in.wait(10)
         b_trying.set()
-        with _loop_shuffle_scope(spark, 1):
+        with conf_scope(spark, {key: "1"}):
             seen["b"] = spark.conf.get(key)
             a_out.wait(10)  # outlive A's scope
         seen["b_after_a"] = a_out.is_set()

@@ -467,3 +467,24 @@ def test_rank_runs_outside_the_one_task_rule_stay_distributed(
     finally:
         spark.conf.set(key, before)
     assert calls == []
+
+
+def test_rank_run_at_full_session_width_leaves_no_cache_entry(spark):
+    """A rank run whose layout is as wide as the session (here 1)
+    leaves the session's cache manager as it found it: the layout is
+    checkpointed, not cached."""
+    from pagerank_hadoop_spark.operators.pagerank import pagerank_with_n
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
+    )
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.catalog.clearCache()
+    try:
+        spark.conf.set(key, "1")
+        ranks, n = pagerank_with_n(edges, n_iter=2)
+        assert (n, ranks.count()) == (4, 4)
+    finally:
+        spark.conf.set(key, before)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -9,7 +9,9 @@ CORRECTNESS even when its values are correct (round-4:
 the reshaped (vec_id, pos, val) outputs and emulate the driver canon.
 scripts/check_oracle.py applies the same lint to every oracle-backed
 query it runs. The hand-run scripts (``bench.py``, ``scripts/*.py``)
-are byte-compiled, since no other test imports them.
+are byte-compiled, since no other test imports them. The engine's
+session-conf changes and stream starts each have one owner, checked
+by a source scan.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ from __future__ import annotations
 import glob
 import os
 import py_compile
+import re
 
 import pandas as pd
 import pytest
@@ -133,3 +136,29 @@ def test_script_byte_compiles(path, tmp_path):
     py_compile.compile(
         os.path.join(_ROOT, path), cfile=str(tmp_path / "out.pyc"), doraise=True
     )
+
+
+_PACKAGE = os.path.join(os.path.dirname(__file__), "..", "pagerank_hadoop_spark")
+
+
+def _package_files_matching(pattern: str) -> list[str]:
+    hits = []
+    for path in glob.glob(os.path.join(_PACKAGE, "**", "*.py"), recursive=True):
+        with open(path) as fh:
+            if re.search(pattern, fh.read()):
+                hits.append(os.path.relpath(path, _PACKAGE))
+    return sorted(hits)
+
+
+def test_only_session_changes_the_session_conf():
+    """``session.conf_scope`` is the engine's one save/set/restore of
+    the SQL conf, under the one conf lock."""
+    assert _package_files_matching(r"conf\.(un)?set\(") == ["session.py"]
+
+
+def test_only_the_drain_starts_a_stream():
+    """``windows.drain`` is the one place a streaming query starts, so
+    every stream is bounded, stopped and run under the conf lock."""
+    assert _package_files_matching(r"\.writeStream\b") == [
+        os.path.join("streaming", "windows.py")
+    ]

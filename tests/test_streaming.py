@@ -1,24 +1,30 @@
 """Structured Streaming tests ([EXT] E6): watermark, windows, late data.
 
 File-source streams built from JSON drops in a temp dir; drained with
-availableNow triggers into memory sinks. The watermark/late-drop test
-uses two sequential drops so the watermark from batch 1 gates batch 2.
+availableNow triggers into memory sinks (``windows.drain``). The
+watermark/late-drop test uses two sequential drops so the watermark
+from batch 1 gates batch 2.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
+import time
 
 import pytest
 
+from pagerank_hadoop_spark.streaming import windows as W
 from pagerank_hadoop_spark.streaming.windows import (
+    drain,
     read_events_stream,
-    run_to_memory,
     session_agg,
     sliding_agg,
     tumbling_agg,
 )
+
+KEY = "spark.sql.shuffle.partitions"
 
 
 def _write_drop(dirpath: str, name: str, rows: list[dict]) -> None:
@@ -45,16 +51,16 @@ def test_tumbling_counts(spark, drop_dir):
     ])
     stream = read_events_stream(spark, drop_dir)
     assert stream.isStreaming
-    run_to_memory(tumbling_agg(stream), "t_tumble", output_mode="complete")
-    rows = {(str(r["wstart"]), r["cnt"]) for r in spark.table("t_tumble").collect()}
+    drained = drain(tumbling_agg(stream), "complete")
+    rows = {(str(r["wstart"]), r["cnt"]) for r in drained.collect()}
     assert rows == {("2024-01-01 00:00:00", 2), ("2024-01-01 00:10:00", 1)}
 
 
 def test_sliding_each_event_in_two_windows(spark, drop_dir):
     _write_drop(drop_dir, "a.json", [_ev(1, "2024-01-01T00:06:00Z")])
     stream = read_events_stream(spark, drop_dir)
-    run_to_memory(sliding_agg(stream), "t_slide", output_mode="complete")
-    starts = sorted(str(r["wstart"]) for r in spark.table("t_slide").collect())
+    drained = drain(sliding_agg(stream), "complete")
+    starts = sorted(str(r["wstart"]) for r in drained.collect())
     assert starts == ["2024-01-01 00:00:00", "2024-01-01 00:05:00"]
 
 
@@ -66,9 +72,9 @@ def test_session_window_gap_merge(spark, drop_dir):
         _ev(4, "2024-01-01T00:00:00Z", user=8),
     ])
     stream = read_events_stream(spark, drop_dir)
-    run_to_memory(session_agg(stream), "t_sess", output_mode="complete")
+    drained = drain(session_agg(stream), "complete")
     rows = {(r["user_id"], str(r["session_start"]), r["n_events"])
-            for r in spark.table("t_sess").collect()}
+            for r in drained.collect()}
     assert rows == {
         (7, "2024-01-01 00:00:00", 2),
         (7, "2024-01-01 02:00:00", 1),
@@ -164,25 +170,129 @@ def test_foreachbatch_parquet_sink_idempotent(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == src_count
 
 
-def test_stream_shuffle_partitions_scopes_and_restores(spark):
-    from pagerank_hadoop_spark.streaming.windows import (
-        stream_shuffle_partitions,
-    )
+def _events_dir(path, n_bytes: int) -> str:
+    """A directory whose ``events.parquet`` is a sparse file of
+    ``n_bytes``: :func:`W.events_parts` reads only its size."""
+    os.makedirs(path, exist_ok=True)
+    with open(os.path.join(path, "events.parquet"), "wb") as fh:
+        fh.truncate(n_bytes)
+    return str(path)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    with stream_shuffle_partitions(spark, 1 << 20):  # 1 MiB source
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    # big source: capped at the session default, never above
-    with stream_shuffle_partitions(spark, 1 << 40):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    # restore survives an exception inside the scope
+
+def test_drain_scopes_width_and_restores(spark, drop_dir, tmp_path):
+    """The drain runs a stream at its source's width, never above the
+    session's, inside the one conf scope: the session's width is back
+    after the drain, also when a micro-batch raises."""
+    _write_drop(drop_dir, "a.json", [_ev(1, "2024-01-01T00:01:00Z")])
+    stream = read_events_stream(spark, drop_dir)
+
+    def width_in_drain(parts: int, fail: bool = False) -> list[str]:
+        seen = []
+
+        def record(batch_df, batch_id):
+            seen.append(spark.conf.get(KEY))
+            if fail:
+                raise RuntimeError("boom")
+
+        drain(stream, parts=parts, sink=lambda w: w.foreachBatch(record))
+        return seen
+
+    before = spark.conf.get(KEY)
+    spark.conf.set(KEY, "32")
     try:
-        with stream_shuffle_partitions(spark, 1 << 20):
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+        small = W.events_parts(_events_dir(tmp_path / "small", 1 << 20))
+        big = W.events_parts(_events_dir(tmp_path / "big", 1 << 40))
+        assert (small, big) == (8, 1 << 16)
+        # 1 MiB source: narrowed to the floor of 8 inside, restored after
+        assert width_in_drain(small) == ["8"]
+        assert spark.conf.get(KEY) == "32"
+        # big source: capped at the session's width, never above
+        assert width_in_drain(big) == ["32"]
+        assert spark.conf.get(KEY) == "32"
+        # restore survives an exception inside the scope
+        with pytest.raises(Exception, match="boom"):
+            width_in_drain(small, fail=True)
+        assert spark.conf.get(KEY) == "32"
+    finally:
+        spark.conf.set(KEY, before)
+
+
+def test_drain_waits_for_a_loop_scope_in_another_thread(spark, drop_dir):
+    """A loop scope open in thread A narrows an 8-wide session to 4
+    with AQE, bloom and broadcast off; a drain at width 2 starts in
+    thread B meanwhile. B waits for A's scope to close, so afterwards
+    the session's four values are what they were. Unserialized, B
+    would read A's 4 and restore it after A's restore."""
+    from pagerank_hadoop_spark.operators.pagerank import _loop_shuffle_scope
+
+    keys = (
+        KEY,
+        "spark.sql.adaptive.enabled",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled",
+        "spark.sql.autoBroadcastJoinThreshold",
+    )
+    _write_drop(drop_dir, "a.json", [_ev(1, "2024-01-01T00:01:00Z")])
+    stream = read_events_stream(spark, drop_dir)
+    a_in, b_starting = threading.Event(), threading.Event()
+    errors = []
+
+    def thread_a():
+        with _loop_shuffle_scope(spark, 4):
+            a_in.set()
+            b_starting.wait(10)
+            time.sleep(1.0)  # B is now blocked entering its drain
+
+    def thread_b():
+        a_in.wait(10)
+        b_starting.set()
+        try:
+            drain(tumbling_agg(stream), "complete", parts=2)
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    before = spark.conf.get(KEY)
+    spark.conf.set(KEY, "8")
+    try:
+        want = {k: spark.conf.get(k) for k in keys}
+        threads = [threading.Thread(target=f) for f in (thread_a, thread_b)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+        assert not any(t.is_alive() for t in threads)
+        after = {k: spark.conf.get(k) for k in keys}
+    finally:
+        spark.conf.set(KEY, before)
+    assert errors == []
+    assert after == want
+
+
+@pytest.mark.parametrize("all_available", [False, True])
+def test_drain_past_its_bound_stops_and_raises(
+    spark, drop_dir, monkeypatch, all_available
+):
+    """A drain still running at :data:`W.DRAIN_TIMEOUT_S` raises
+    ``TimeoutError`` and leaves no query active, on both triggers: a
+    three-file stream read one file per micro-batch, and the Python
+    data source drained with ``processAllAvailable``."""
+    if all_available:
+        from pagerank_hadoop_spark.sources.pystream import register_detevents
+
+        register_detevents(spark)
+        stream = (
+            spark.readStream.format("detevents")
+            .option("n_total", 8192)
+            .option("rows_per_batch", 1024)
+            .load()
+        )
+    else:
+        for i in range(3):
+            _write_drop(drop_dir, f"{i}.json", [_ev(i, f"2024-01-01T00:0{i}:00Z")])
+        stream = read_events_stream(spark, drop_dir, max_files_per_trigger=1)
+    monkeypatch.setattr(W, "DRAIN_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError):
+        drain(stream, all_available=all_available)
+    assert spark.streams.active == []
 
 
 def test_left_outer_band_join_needs_punctuation_to_flush(spark, tmp_path):
@@ -195,7 +305,6 @@ def test_left_outer_band_join_needs_punctuation_to_flush(spark, tmp_path):
 
     from pagerank_hadoop_spark.streaming.windows import (
         punctuated_events_dir,
-        run_to_memory,
         stream_stream_band_join,
     )
 
@@ -222,7 +331,7 @@ def test_left_outer_band_join_needs_punctuation_to_flush(spark, tmp_path):
     sf.mkdir()
     pq.write_table(pa.table(rows, schema=schema), sf / "events.parquet")
 
-    def run(src_dir: str, name: str):
+    def run(src_dir: str):
         src = (
             spark.readStream.schema(
                 "event_id long, ts timestamp, user_id long, "
@@ -248,19 +357,16 @@ def test_left_outer_band_join_needs_punctuation_to_flush(spark, tmp_path):
         # streaming plan: Catalyst pushes it into the source scan,
         # which deletes the punctuation rows before they can advance
         # the watermark (punctuated_events_dir docstring)
-        run_to_memory(j, name)
         return {
             (r["p_event_id"], r["e_event_id"])
-            for r in spark.table(name)
-            .where(F.col("p_user_id") >= 0)
-            .collect()
+            for r in drain(j).where(F.col("p_user_id") >= 0).collect()
         }
 
     # bare drain: matched pair emits, unmatched purchase 3 is withheld
-    assert run(str(sf), "t_louter_bare") == {(1, 2)}
+    assert run(str(sf)) == {(1, 2)}
     # punctuated drain: everything flushes
     punct = punctuated_events_dir(str(sf), "timestamp")
-    assert run(punct, "t_louter_punct") == {(1, 2), (3, None)}
+    assert run(punct) == {(1, 2), (3, None)}
 
     # DIRECTORY-layout events table (Spark-written, part files +
     # _SUCCESS): the r9 scale find — a verbatim symlink made the real
@@ -279,7 +385,7 @@ def test_left_outer_band_join_needs_punctuation_to_flush(spark, tmp_path):
     pq.write_table(pa.table(rest, schema=schema), ev_dir / "part-00001.parquet")
     (ev_dir / "_SUCCESS").touch()
     punct_dir = punctuated_events_dir(str(sf_dir), "timestamp")
-    assert run(punct_dir, "t_louter_punct_dir") == {(1, 2), (3, None)}
+    assert run(punct_dir) == {(1, 2), (3, None)}
 
 
 def test_cdc_apply_multi_batch_and_replay_idempotent(spark, tmp_path):
