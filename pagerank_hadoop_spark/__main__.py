@@ -8,22 +8,28 @@ iteration 8 (``PageRank.java:480-487,492-497``) as tab-separated
 
 Here: ``python -m pagerank_hadoop_spark <input-dir> <output-dir>``
 runs the same DAG — XML page source, link extraction, red-link
-semi-join, PageRank (parity semantics: 1/N seed, 0.15/N teleport,
+removal (the reference's tagged union, one shuffle on the link
+target), PageRank (parity semantics: 1/N seed, 0.15/N teleport,
 dangling mass lost), the ``rank > 5/N`` cut
 (``PageRank.java:336,346``), descending sort — as ONE 8-round rank
 run over one adjacency layout, like the reference's
 (``pagerank_snapshots``: the iteration-1 snapshot is taken after
 round 1 and rounds 2-8 resume from it), and writes
-``PageRank.iter1.out`` / ``PageRank.iter8.out`` TSV directories plus
-a combined Parquet result (the scale-appropriate sink; TSV kept for
-byte-level reference parity).
+``PageRank.iter1.out`` / ``PageRank.iter8.out`` text directories
+(bare ``page \\t rank`` lines, for byte-level reference parity) plus
+one Parquet rank table per snapshot, ``pagerank_iter1.parquet`` /
+``pagerank_iter8.parquet`` (the scale-appropriate sink). The four
+writes start together once the rank run has ended.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import functions as F
 
 from pagerank_hadoop_spark.functions.wikitext import extract_links, remove_red_links
@@ -103,27 +109,50 @@ def main(argv: list[str]) -> int:
     input_dir, output_dir = argv
     spark = get_spark("pagerank-cli")
     parsed = parse_pages(read_pages(spark, input_dir))
-    edges = remove_red_links(extract_links(parsed), parsed).cache()
-
-    for iters, ranks, n in pagerank_snapshots(edges, SNAPSHOT_ITERS):
+    # read once on the driver path; the distributed path caches its own
+    edges = remove_red_links(extract_links(parsed), parsed)
+    # the rank run ends before any write plans, so no loop scope is
+    # open while the writes run
+    snapshots = list(pagerank_snapshots(edges, SNAPSHOT_ITERS))
+    writes = []
+    for iters, ranks, n in snapshots:
         # no kept link (N = 0): the reference's 5.0/N is +Infinity,
         # which keeps no row, so both snapshots are written empty
         threshold = THRESHOLD_NUM / n if n else float("inf")
-        # cached: both snapshots below are written from one computation
-        out = top_ranks(ranks, n, threshold=threshold).cache()
-        tsv_dir = os.path.join(output_dir, f"PageRank.iter{iters}.out")
-        # bare ``title\trank`` text lines, as the reference writes them
-        # (a CSV writer would quote and escape titles holding '"');
-        # coalesce(1): the reference's ordered snapshot is one file; at
-        # real scale drop this and keep the range-partitioned sort output
-        line = F.concat_ws("\t", "id", F.col("rank").cast("string"))
-        out.select(line).coalesce(1).write.mode("overwrite").text(tsv_dir)
-        out.write.mode("overwrite").parquet(
-            os.path.join(output_dir, f"pagerank_iter{iters}.parquet")
-        )
-        out.unpersist()
-    edges.unpersist()
+        # materialized once (one job): both writes below read it
+        out = top_ranks(ranks, n, threshold=threshold).localCheckpoint(eager=True)
+        writes += _writes(output_dir, iters, out)
+    _write_all(spark, writes)
     return 0
+
+
+def _writes(output_dir: str, iters: int, out):
+    """A snapshot's two writes: the bare-text snapshot and its Parquet
+    rank table."""
+    tsv_dir = os.path.join(output_dir, f"PageRank.iter{iters}.out")
+    # bare ``title\trank`` text lines, as the reference writes them
+    # (a CSV writer would quote and escape titles holding '"');
+    # coalesce(1): the reference's ordered snapshot is one file; at
+    # real scale drop this and keep the range-partitioned sort output
+    line = F.concat_ws("\t", "id", F.col("rank").cast("string"))
+    text = out.select(line).coalesce(1).write.mode("overwrite")
+    table = out.write.mode("overwrite")
+    return [
+        partial(text.text, tsv_dir),
+        partial(table.parquet, os.path.join(output_dir, f"pagerank_iter{iters}.parquet")),
+    ]
+
+
+def _write_all(spark, writes) -> None:
+    """Run ``writes`` at once, one thread each, and re-raise the first
+    error (in ``writes``' order) once every write has ended. A small
+    write costs about the same whatever its size, so running them at
+    once shortens the call; each thread runs under the caller's job
+    group and local properties (``inheritable_thread_target``)."""
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]
+    for f in futures:
+        f.result()
 
 
 if __name__ == "__main__":

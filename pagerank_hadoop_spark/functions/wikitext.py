@@ -2,7 +2,9 @@
 
 All pure Column expressions — JVM-side, whole-stage-codegen friendly;
 no Python UDFs in this hot path (this runs over every page of a 100 TB
-dump).
+dump). The lambdas over a page's link array (``transform``,
+``filter``) are Catalyst higher-order functions: they run in the JVM,
+interpreted inside the stage's generated code.
 """
 
 from __future__ import annotations
@@ -44,28 +46,44 @@ def extract_links(
     One row in → many rows out, the reference's ``OutLinkMap`` flatMap
     (``PageRank.java:81-101``): regexp find-all, alias split on ``|``
     (``:87``), trim (``:87``), validity filter (``:90``), underscore
-    normalization (``:92``), per-page dedup (``:91-93``).
+    normalization (``:92``), per-page dedup (``:91-93``). The dedup is
+    the reference's per-page HashSet: ``array_distinct`` over the
+    page's own targets, so extraction runs in the scan's stage with no
+    shuffle. Two pages that share a title may still give the same
+    ``(src, dst)`` twice; :func:`remove_red_links` merges them.
     """
-    raw = F.explode(
-        F.regexp_extract_all(F.col(text_col), F.lit(LINK_PATTERN), F.lit(1))
-    ).alias("raw_link")
-    target = F.trim(F.split(F.col("raw_link"), r"\|").getItem(0))
-    edges = (
-        parsed_pages.select(F.col(title_col).alias("src"), raw)
-        .select("src", normalize_title(target).alias("dst"))
-        .where(valid_wiki_link(F.col("dst")))
+    targets = F.transform(
+        F.regexp_extract_all(F.col(text_col), F.lit(LINK_PATTERN), F.lit(1)),
+        lambda raw: normalize_title(F.trim(F.split(raw, r"\|").getItem(0))),
     )
-    return edges.dropDuplicates(["src", "dst"])
+    kept = F.array_distinct(F.filter(targets, valid_wiki_link))
+    return parsed_pages.select(F.col(title_col).alias("src"), F.explode(kept).alias("dst"))
 
 
 def remove_red_links(edges: DataFrame, pages: DataFrame, title_col: str = "title") -> DataFrame:
-    """Keep only edges whose target is an existing page (reference J1).
+    """Keep only edges whose target is an existing page (reference J1),
+    each distinct ``(src, dst)`` once.
 
-    The reference fakes this semi-join with a tagged union + ``"!"``
-    marker rows in a single-reducer shuffle (``PageRank.java:80,130-157``
-    with ``setNumReduceTasks(1)`` at ``:442`` — a scale bug). Spark form:
-    a real ``left_semi`` join; Catalyst broadcasts the page-title side
-    when it fits, else plans a shuffled hash semi-join.
+    The reference's tagged union (``PageRank.java:80,130-157``): link
+    rows ``(dst, src)`` and one ``"!"`` marker row per page title,
+    grouped once on ``dst``; every group that holds a marker keeps its
+    links. A marker here is a null ``src``. The reference ran this
+    shuffle on one reducer (``setNumReduceTasks(1)`` at ``:442`` — a
+    scale bug); here it is one hash shuffle on ``dst`` at the session's
+    width, with no broadcast and no separate ``distinct`` of the
+    titles. Each group's sources are merged into one set
+    (``collect_set``, partially aggregated before the shuffle), which
+    drops repeated edges.
+
+    Input contract: ``src`` is non-null, as :func:`extract_links` gives
+    it; a null ``src`` would read as a marker.
     """
-    titles = pages.select(F.col(title_col).alias("dst")).distinct()
-    return edges.join(titles, "dst", "left_semi").select("src", "dst")
+    links = edges.select("dst", "src")
+    markers = pages.select(
+        F.col(title_col).alias("dst"), F.lit(None).cast("string").alias("src")
+    )
+    groups = links.unionByName(markers).groupBy("dst").agg(
+        F.collect_set("src").alias("srcs"),
+        F.bool_or(F.isnull("src")).alias("is_page"),
+    )
+    return groups.where("is_page").select(F.explode("srcs").alias("src"), "dst")

@@ -90,6 +90,7 @@ from contextlib import contextmanager
 from functools import partial
 
 import numpy as np
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegralType, StringType
 
@@ -331,6 +332,20 @@ def _with_dangling(adjacency: DataFrame, vertices: DataFrame) -> DataFrame:
 
 
 @contextmanager
+def _cached(df: DataFrame, wanted: bool):
+    """Yield ``df``, cached while the block is open when ``wanted``. A
+    frame the caller has cached already is left as it is: its cache is
+    the caller's to drop."""
+    if not wanted or df.storageLevel != StorageLevel.NONE:
+        yield df
+        return
+    try:
+        yield df.cache()
+    finally:
+        df.unpersist()
+
+
+@contextmanager
 def _laid_out(adjacency: DataFrame):
     """Lay the static side of every round's join out once: partition
     on id, cache, count N (the driver-side scalar of
@@ -561,7 +576,9 @@ def _rank_runs(
     N counted once, and each stretch of rounds resumes from the previous
     snapshot's ranks on that same layout; resuming is exact. Each
     snapshot is materialized before it is yielded, and the layout's
-    cache is dropped when the run is exhausted or closed.
+    cache is dropped when the run is exhausted or closed. With no
+    ``vertices`` the layout build reads the edges twice, so they are
+    cached for it (:func:`_cached`) and dropped with the layout.
 
     A parity run with no ``vertices`` or ``init_ranks`` on an edge list
     that fits one task (:func:`_fits_one_task`, the rule cc and scc
@@ -577,10 +594,15 @@ def _rank_runs(
         for k in iters:
             yield k, out.where(F.col("k") == k).select("id", "rank"), n
         return
-    if vertices is None:
-        vertices = _vertices(edges)
-    layout = _laid_out(_with_dangling(adjacency_from_edges(edges), vertices))
-    with layout as (adjacency, n):
+    with (
+        _cached(edges, vertices is None),
+        _laid_out(
+            _with_dangling(
+                adjacency_from_edges(edges),
+                _vertices(edges) if vertices is None else vertices,
+            )
+        ) as (adjacency, n),
+    ):
         if n == 0:
             for k in iters:
                 yield k, edges.sparkSession.createDataFrame([], _NO_RANKS), 0

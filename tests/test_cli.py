@@ -16,7 +16,7 @@ def _page(title: str, body: str) -> str:
     )
 
 
-def test_cli_writes_ordered_snapshots(spark, tmp_path):
+def test_cli_writes_ordered_snapshots(spark, tmp_path, monkeypatch, pagerank_module):
     dump = tmp_path / "dump"
     dump.mkdir()
     # absorbing star: everybody (incl. Hub itself) links to Hub, so the
@@ -50,6 +50,73 @@ def test_cli_writes_ordered_snapshots(spark, tmp_path):
         assert rows[0][0] == "Hub"  # the only page above 5/N, or at least top
     pq = spark.read.parquet(str(out / "pagerank_iter8.parquet"))
     assert pq.columns == ["id", "rank"]
+
+    # the distributed path caches the edges for its layout and drops
+    # them with it
+    monkeypatch.setattr(pagerank_module, "_fits_one_task", lambda *a, **k: False)
+    assert main([str(dump), str(tmp_path / "distributed")]) == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _star_dump(path) -> None:
+    path.mkdir()
+    (path / "part0.xml").write_text(
+        _page("Hub", "[[Hub]]")
+        + "".join(_page(f"S{i}", "[[Hub]] [[Missing]]") for i in range(6))
+    )
+
+
+def test_cli_failed_write_raises_and_leaves_no_writer_thread(spark, tmp_path, monkeypatch):
+    """The four writes run at once; one that fails makes ``main``
+    raise its error after the others have ended, and no writer thread
+    outlives the call."""
+    import threading
+
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    dump = tmp_path / "dump"
+    _star_dump(dump)
+    out = tmp_path / "result"
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **k):
+        if path.endswith("pagerank_iter8.parquet"):
+            raise OSError("disk full")
+        return real(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    before = set(threading.enumerate())
+    with pytest.raises(OSError, match="disk full"):
+        main([str(dump), str(out)])
+    assert set(threading.enumerate()) - before == set()
+    for done in ("PageRank.iter1.out", "PageRank.iter8.out", "pagerank_iter1.parquet"):
+        assert glob.glob(os.path.join(out, done, "part-*")), done
+    assert not os.path.exists(out / "pagerank_iter8.parquet")
+
+
+# Jobs of one ``main`` call on ``_star_dump``: the edge collect's two
+# (the shuffle on the link target, then the result stage), one
+# materialization per snapshot, and the four writes.
+CLI_JOBS = 8
+
+
+def test_cli_jobs_land_in_the_callers_job_group(spark, tmp_path):
+    """Every job of ``main`` runs in the caller's job group, the
+    writes' jobs included, though they run in other threads."""
+    dump = tmp_path / "dump"
+    _star_dump(dump)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("cli-call", "one main call")
+    try:
+        assert main([str(dump), str(tmp_path / "result")]) == 0
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    assert len(tracker.getJobIdsForGroup("cli-call")) == CLI_JOBS
 
 
 def test_cli_snapshots_keep_titles_bare(spark, tmp_path):

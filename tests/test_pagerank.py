@@ -488,3 +488,27 @@ def test_rank_run_at_full_session_width_leaves_no_cache_entry(spark):
     finally:
         spark.conf.set(key, before)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_distributed_rank_run_leaves_a_callers_edge_cache(spark):
+    """A distributed rank run caches its edges for the layout build and
+    drops that cache with the layout, but an edge frame the caller has
+    cached stays cached."""
+    from pyspark import StorageLevel
+
+    from pagerank_hadoop_spark.operators.pagerank import pagerank_with_n
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
+    )
+    spark.catalog.clearCache()
+    ranks, n = pagerank_with_n(edges, n_iter=2, parity=False)
+    assert (n, ranks.count()) == (4, 4)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    edges.cache()
+    try:
+        ranks, n = pagerank_with_n(edges, n_iter=2, parity=False)
+        assert (n, ranks.count()) == (4, 4)
+        assert edges.storageLevel != StorageLevel.NONE
+    finally:
+        edges.unpersist()

@@ -10,12 +10,14 @@ the reshaped (vec_id, pos, val) outputs and emulate the driver canon.
 scripts/check_oracle.py applies the same lint to every oracle-backed
 query it runs. The hand-run scripts (``bench.py``, ``scripts/*.py``)
 are byte-compiled, since no other test imports them. The engine's
-session-conf changes and stream starts each have one owner, checked
-by a source scan.
+session-conf changes and stream starts each have one owner, and every
+callable it hands to another thread inherits the caller's local
+properties, checked by a source scan.
 """
 
 from __future__ import annotations
 
+import ast
 import glob
 import os
 import py_compile
@@ -162,3 +164,63 @@ def test_only_the_drain_starts_a_stream():
     assert _package_files_matching(r"\.writeStream\b") == [
         os.path.join("streaming", "windows.py")
     ]
+
+
+def _thread_handoffs(tree) -> list:
+    """``(call, callable)`` for each callable handed to another thread:
+    the first argument of ``submit`` and of an executor's ``map``, and
+    a ``Thread``'s or ``Timer``'s target."""
+    pools = {
+        item.optional_vars.id
+        for node in ast.walk(tree)
+        if isinstance(node, ast.With)
+        for item in node.items
+        if isinstance(item.optional_vars, ast.Name)
+        and "Executor" in ast.unparse(item.context_expr)
+    }
+    found = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+        receiver = ast.unparse(f.value) if isinstance(f, ast.Attribute) else ""
+        if name == "submit" or (name == "map" and receiver in pools):
+            found.append((name, node.args[0]))
+        elif name in ("Thread", "Timer"):
+            kw = {k.arg: k.value for k in node.keywords}
+            target = kw.get("target", kw.get("function"))
+            if target is None and name == "Timer":
+                target = node.args[1]
+            found.append((name, target))
+    return found
+
+
+def _inherits_properties(fn) -> bool:
+    """Whether ``fn`` is ``inheritable_thread_target(f)`` or
+    ``inheritable_thread_target(session)(f)``."""
+    while isinstance(fn, ast.Call):
+        if "inheritable_thread_target" in ast.unparse(fn.func):
+            return True
+        fn = fn.func
+    return False
+
+
+def test_threads_inherit_the_callers_local_properties():
+    """Every callable the engine hands to another thread goes through
+    ``inheritable_thread_target``, so its jobs run under the caller's
+    job group and local properties. The drain's ``threading.Timer``
+    is exempt: it only stops a query and runs no job."""
+    exempt = {(os.path.join("streaming", "windows.py"), "Timer")}
+    seen, bare = set(), []
+    for path in glob.glob(os.path.join(_PACKAGE, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, _PACKAGE)
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for kind, fn in _thread_handoffs(tree):
+            seen.add((rel, kind))
+            if (rel, kind) not in exempt and not _inherits_properties(fn):
+                bare.append((rel, kind, ast.unparse(fn)))
+    assert bare == []
+    # the scan sees the CLI's writes and the drain's timer
+    assert {("__main__.py", "submit"), *exempt} <= seen

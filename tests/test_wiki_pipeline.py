@@ -66,6 +66,66 @@ def test_red_link_semi_join(spark, parsed):
     assert clean.count() == 6
 
 
+# Two pages share the title Twin; Hub links to itself, to Leaf four
+# ways (plain, repeated, aliased, padded) and to ``leaf``, which differs
+# from a title only in case; Leaf's only link is red.
+RED_LINK_DUMP = "".join(
+    f"<page><title>{t}</title><revision><text>{body}</text></revision></page>"
+    for t, body in (
+        ("Hub", "[[Hub]] [[Leaf]] [[Leaf]] [[Leaf|again]] [[ Leaf ]] [[leaf]]"),
+        ("Leaf", "[[Nowhere]]"),
+        ("Twin", "[[Hub]] [[Leaf]]"),
+        ("Twin", "[[Hub]] [[Other Page]]"),
+        ("Other Page", "[[Twin]] [[Twin]] [[Image:x.png]] [[Twin#frag]]"),
+    )
+)
+
+
+def _reference_red_link_removal(parsed):
+    """Link extraction and red-link removal as a global
+    ``dropDuplicates`` and a ``left_semi`` join on the page titles."""
+    from pyspark.sql import functions as F
+
+    from pagerank_hadoop_spark.functions.wikitext import (
+        LINK_PATTERN,
+        normalize_title,
+        valid_wiki_link,
+    )
+
+    raw = F.explode(F.regexp_extract_all("text", F.lit(LINK_PATTERN), F.lit(1)))
+    target = normalize_title(F.trim(F.split("raw", r"\|").getItem(0)))
+    links = (
+        parsed.select(F.col("title").alias("src"), raw.alias("raw"))
+        .select("src", target.alias("dst"))
+        .where(valid_wiki_link(F.col("dst")))
+        .dropDuplicates(["src", "dst"])
+    )
+    titles = parsed.select(F.col("title").alias("dst")).distinct()
+    return links.join(titles, "dst", "left_semi").select("src", "dst")
+
+
+def test_red_link_removal_matches_semi_join_reference(spark, tmp_path):
+    """The tagged union keeps the edges a ``dropDuplicates`` plus
+    ``left_semi`` pipeline keeps, each once: the self-link, one edge
+    for the four spellings of Hub → Leaf and for the two Twin pages'
+    shared link, no edge for a target that matches a title only up to
+    case, and none from a page whose only link is red. The input
+    contract of ``remove_red_links``: ``src`` is non-null, as
+    ``extract_links`` gives it."""
+    dump = tmp_path / "dump.xml"
+    dump.write_text(RED_LINK_DUMP)
+    parsed = parse_pages(read_pages(spark, str(dump)))
+    got = [tuple(r) for r in remove_red_links(extract_links(parsed), parsed).collect()]
+    want = {tuple(r) for r in _reference_red_link_removal(parsed).collect()}
+    assert set(got) == want
+    assert len(got) == len(want)  # no edge twice
+    assert want == {
+        ("Hub", "Hub"), ("Hub", "Leaf"),
+        ("Twin", "Hub"), ("Twin", "Leaf"), ("Twin", "Other_Page"),
+        ("Other_Page", "Twin"),
+    }
+
+
 def test_adjacency_and_count(spark, parsed):
     edges = remove_red_links(extract_links(parsed), parsed)
     adj = adjacency_from_edges(edges)
